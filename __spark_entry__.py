@@ -35,6 +35,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query (ANSI, same column names/types)."""
-    from myaku_spark.driver_queries import ORACLE
+    from myaku_spark.driver_queries import ORACLE, ORACLE_BUILDERS
 
-    return dict(ORACLE)
+    return dict(ORACLE) | {k: build() for k, build in ORACLE_BUILDERS.items()}

@@ -87,7 +87,7 @@ def run_single(name: str) -> None:
     start, the standard bm25 warmup, then the named query timed
     min-of-3. Prints one JSON line."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = get_spark("myaku_spark_bench_single", parallelism=cpus)
     force(q_bm25_topk(spark, sf_dir))
     runs = []
@@ -131,7 +131,9 @@ def run_isolated(names: list[str]) -> None:
                 "sf_dir": os.environ.get(
                     "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
                 ),
-                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+                "cpus": int(
+                    os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count())
+                ),
                 "canary_start_sec": round(canary_start, 3),
                 "canary_end_sec": round(canary_end, 3),
                 "canary_ref_sec": CANARY_REF_SEC,
@@ -147,7 +149,7 @@ def run_isolated(names: list[str]) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     canary_start = canary_sec()  # before the JVM exists
     spark = get_spark("myaku_spark_bench", parallelism=cpus)
 

@@ -49,7 +49,7 @@ def noop_force(df) -> None:
 
 def warmrep(n: int) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = get_spark("bench_extra_warmrep", parallelism=cpus)
     sc = spark.sparkContext
     noop_force(q_bm25_topk(spark, sf_dir))  # JVM + python-worker warmup
@@ -78,7 +78,7 @@ def warmrep(n: int) -> None:
 
 def tokenize_ab() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = get_spark("bench_extra_tokenize", parallelism=cpus)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"

@@ -2,8 +2,9 @@
 paired with an ANSI-SQL DuckDB oracle over the same parquet tables.
 
 Each query is a (spark, sf_dir) -> DataFrame callable; ORACLE[name] is the
-equivalent DuckDB SQL. Column names and types are aligned on both sides
-(the driver sorts columns by name and value-hashes). Floating-point
+equivalent DuckDB SQL, or ORACLE_BUILDERS[name]() builds it for the oracles
+computed from pure-Python twins. Column names and types are aligned on both
+sides (the driver sorts columns by name and value-hashes). Floating-point
 results are rounded (3-4 dp) with identical expression shapes on both
 sides so IEEE doubles agree.
 
@@ -21,6 +22,11 @@ from myaku_spark.functions.tokenize import explode_whitespace_tokens
 from myaku_spark.operators import bm25 as bm25_ops
 from myaku_spark.operators import postings as post_ops
 from myaku_spark.operators import scoring
+from myaku_spark.operators.dedup import (
+    connected_components,
+    lsh_candidate_pairs,
+    simhash_near_dups,
+)
 
 # Fixed query terms drawn from the synthetic vocabulary.
 Q_AND_TERMS = ["spark", "join"]
@@ -524,58 +530,22 @@ def q_minhash_signature(spark, sf_dir):
     return t.groupBy("doc_id").agg(*aggs)
 
 
-MH_MAX_BUCKET = 50  # degenerate-bucket cap (production twin: dedup.py)
+MH_MAX_BUCKET = 50  # degenerate-bucket cap (dedup.lsh_candidate_pairs)
 
 
 def q_minhash_lsh_pairs(spark, sf_dir):
-    """Near-dup dedup stage 2: LSH band-bucket join → candidate pairs.
+    """Near-dup dedup stage 2: LSH band-bucket join → candidate pairs,
+    through the production operator (dedup.lsh_candidate_pairs).
 
-    Buckets larger than MH_MAX_BUCKET are DROPPED before the self-join —
-    the same degenerate-bucket cap the production path
-    (dedup.lsh_candidate_pairs) applies, which is what keeps the
-    band-join sub-quadratic at 100 TB. The oracle replays the cap."""
-    sig = q_minhash_signature(spark, sf_dir)
-    # Single-scan band fan-out (r7, the production lsh_candidate_pairs
-    # shape): an MH_BANDS-way union of per-band selects replicated the
-    # whole signature subplan (tokenize → distinct → 8-hash agg) per
-    # band AND per self-join side — 32 copies of the scan pipeline in
-    # the optimized plan. The explode computes signatures once and fans
-    # the band rows out in-projection; rows are identical.
-    per_band = len(MH_HASHES) // MH_BANDS
-    band_structs = []
-    for bnd in range(MH_BANDS):
-        cols = [f"mh{bnd * per_band + j}" for j in range(per_band)]
-        bucket = F.lit(0).cast("long")
-        for c in cols:
-            bucket = (bucket * 1_000_003 + F.col(c)) % MH_P
-        band_structs.append(
-            F.struct(F.lit(bnd).alias("band"), bucket.alias("bucket"))
-        )
-    allb = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc_id", F.col("bb.band").alias("band"),
-             F.col("bb.bucket").alias("bucket"))
-    sizes = allb.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("n"))
-    allb = allb.join(
-        sizes.filter(F.col("n") <= MH_MAX_BUCKET).select("band", "bucket"),
-        ["band", "bucket"],
-        "left_semi",
+    Buckets larger than MH_MAX_BUCKET are dropped before the self-join,
+    which is what keeps the band join sub-quadratic at 100 TB. The
+    oracle replays the cap."""
+    return lsh_candidate_pairs(
+        q_minhash_signature(spark, sf_dir),
+        n_hashes=len(MH_HASHES),
+        n_bands=MH_BANDS,
+        max_bucket=MH_MAX_BUCKET,
     )
-    left = allb.alias("l")
-    right = allb.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    return pairs
 
 
 def q_dup_clusters(spark, sf_dir):
@@ -585,8 +555,6 @@ def q_dup_clusters(spark, sf_dir):
     graph). cluster_id = min doc_id of the component; cluster_size gives
     the retention decision (keep cluster_id, drop size-1 ... n-1 rest).
     Oracle: DuckDB recursive min-label propagation over the same pairs."""
-    from myaku_spark.operators.dedup import connected_components
-
     cc = connected_components(q_minhash_lsh_pairs(spark, sf_dir))
     sizes = cc.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size")
@@ -759,16 +727,15 @@ def q_quality_filter(spark, sf_dir):
 
 
 def q_simhash_pairs(spark, sf_dir):
-    """SimHash near-dup pairs, DuckDB-oracled gate twin.
+    """SimHash near-dup pairs, DuckDB-oracled.
 
     16-bit arithmetic SimHash (bit j = sign of Σ tf·(±1) where the sign
-    is the parity of a linear hash of the md5 term id), 4-bit pigeonhole
-    bands for the candidate join, exact hamming ≤ 3 verify via
-    bit_count(xor) — every step shared-literal arithmetic so the oracle
-    replays it. The production 64-bit xxhash64 SimHash
-    (operators/dedup.py) keeps the same plan shape and is pytest-covered;
-    near-dup power comes from mutated twins (doc+100000 = first token
-    dropped)."""
+    is the parity of a linear hash of the md5 term id) — shared-literal
+    arithmetic the oracle replays, in place of the production 64-bit
+    xxhash64 signature (dedup.simhash). The 4-bit pigeonhole band join
+    and the exact hamming ≤ 3 verify are the production operator
+    (dedup.simhash_near_dups). Near-dup power comes from mutated twins
+    (doc+100000 = first token dropped)."""
     docs = (
         _docs(spark, sf_dir)
         .filter(F.col("doc_id") < SH_SAMPLE)
@@ -792,40 +759,8 @@ def q_simhash_pairs(spark, sf_dir):
     for j in range(SH_BITS):
         sh = sh + F.when(F.col(f"v{j}") > 0, F.lit(1 << j).cast("long")).otherwise(0)
     sig = v.select("doc_id", sh.alias("simhash"))
-    # Single-scan band fan-out (r7, see q_minhash_lsh_pairs): explode
-    # replaces the 4-way union that replicated the SimHash aggregation
-    # subplan per band and per self-join side; rows are identical.
-    band_structs = [
-        F.struct(
-            F.lit(bnd).alias("band"),
-            (F.shiftright(F.col("simhash"), bnd * 4) % 16).alias("bval"),
-        )
-        for bnd in range(4)
-    ]
-    allb = sig.select(
-        "doc_id", "simhash", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc_id", "simhash", F.col("bb.band").alias("band"),
-             F.col("bb.bval").alias("bval"))
-    pairs = (
-        allb.alias("l")
-        .join(
-            allb.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bval") == F.col("r.bval"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.expr("l.simhash ^ r.simhash")
-            ).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= SH_MAX_HAMMING)
-    )
-    return pairs.select(
-        "doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming")
+    return simhash_near_dups(
+        sig, max_hamming=SH_MAX_HAMMING, n_bands=4, bits=SH_BITS
     )
 
 
@@ -1312,11 +1247,15 @@ def _fli_rollup_values() -> str:
         for t in tokenize_ja_text(p["text"]):
             e = per_term.setdefault(t["term"], {"pos": set(), "interps": set()})
             e["pos"].add((t["start"], t["length"]))
+            # Interp identity as in fli_docs.build_fli_documents: the
+            # conjugation type/form are part of it.
             e["interps"].add(
                 (
                     ",".join(str(s) for s in t["sources"]),
                     t.get("entry_id") or "",
                     t.get("pos") or "",
+                    t.get("conj_type") or "",
+                    t.get("conj_form") or "",
                 )
             )
         n_flis = len(per_term)
@@ -1583,222 +1522,6 @@ def q_event_sessions(spark, sf_dir):
     return sess.groupBy("user_id", "session_no").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.min("ts").alias("session_start"),
-    )
-
-
-def _tbl(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def q_tpch_pricing_summary(spark, sf_dir):
-    """TPC-H Q1-shaped pricing summary (general relational breadth)."""
-    li = _tbl(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("2026-06-01"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").cast("long").alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.count(F.lit(1)).cast("long").alias("count_order"),
-        )
-    )
-
-
-def q_tpch_revenue_topk(spark, sf_dir):
-    """TPC-H Q3-shaped join + top-k: revenue by order over a 3-way join
-    (broadcast dims, shuffle fact)."""
-    li = _tbl(spark, sf_dir, "lineitem")
-    o = _tbl(spark, sf_dir, "orders")
-    c = _tbl(spark, sf_dir, "customer")
-    rev = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-    )
-    # TakeOrderedAndProject (orderBy+limit) instead of an unpartitioned
-    # window: the full aggregated fact never funnels through a single
-    # partition — each task keeps a local top-10, the driver merges 10
-    # rows per partition. The rank window then runs over 10 rows total.
-    top = rev.orderBy(F.desc("revenue"), F.desc("l_orderkey")).limit(10)
-    w = Window.orderBy(F.desc("revenue"), F.desc("l_orderkey"))
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        "l_orderkey", "o_orderdate", "revenue",
-        F.col("rank").cast("int").alias("rank"),
-    )
-
-
-def q_tpch_filter_revenue(spark, sf_dir):
-    """Q6-shape: pure filter + aggregate — every predicate must reach
-    the parquet scan (PushedFilters), no join, no shuffle beyond the
-    single partial/final agg pair. DECIMAL-exact product sum."""
-    li = _tbl(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= "1996-01-01")
-            & (F.col("l_shipdate") < "1997-01-01")
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.sum(
-                F.col("l_extendedprice").cast("decimal(18,2)")
-                * F.col("l_discount").cast("decimal(18,2)")
-            ).cast("double").alias("revenue"),
-            F.count(F.lit(1)).cast("long").alias("n_items"),
-        )
-    )
-
-
-def q_tpch_order_priority(spark, sf_dir):
-    """Q4-shape: order counts per priority for orders in a window that
-    have at least one returned lineitem — the EXISTS becomes a LEFT
-    SEMI join against the (distinct) matching fact keys, never a
-    row-multiplying inner join."""
-    o = _tbl(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1997-01-01")
-    )
-    li = _tbl(spark, sf_dir, "lineitem").filter(
-        F.col("l_returnflag") == "R"
-    ).select("l_orderkey")
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey, "leftsemi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).cast("long").alias("order_count"))
-    )
-
-
-def q_tpch_returned_topk(spark, sf_dir):
-    """Q10-shape: top-20 customers by returned-item revenue in a
-    quarter (fact filter + broadcast dims + TakeOrderedAndProject)."""
-    li = _tbl(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    o = _tbl(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1996-04-01")
-    )
-    c = _tbl(spark, sf_dir, "customer")
-    n = _tbl(spark, sf_dir, "nation")
-    rev = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        # exact decimal arithmetic at scale 4, NO scale reduction: the
-        # float sum was order-dependent, and even a decimal cast down to
-        # 2dp tie-rounds differently across engines (HALF_UP vs not)
-        .agg(
-            F.sum(
-                F.col("l_extendedprice").cast("decimal(18,2)")
-                * (F.lit(1).cast("decimal(18,2)")
-                   - F.col("l_discount").cast("decimal(18,2)"))
-            ).cast("double").alias("revenue")
-        )
-    )
-    return rev.orderBy(F.desc("revenue"), "c_custkey").limit(20)
-
-
-def q_region_rollup(spark, sf_dir):
-    """Dimension join rollup: customers + balances per region (broadcast
-    snowflake joins, J2-style)."""
-    c = _tbl(spark, sf_dir, "customer")
-    n = _tbl(spark, sf_dir, "nation")
-    r = _tbl(spark, sf_dir, "region")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_customers"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_acctbal"),
-        )
-    )
-
-
-def q_tpch_local_supplier_volume(spark, sf_dir):
-    """Q5-shape: 6-way join revenue by nation where customer and
-    supplier share the nation (broadcast dims, one fact shuffle)."""
-    li = _tbl(spark, sf_dir, "lineitem")
-    o = _tbl(spark, sf_dir, "orders")
-    c = _tbl(spark, sf_dir, "customer")
-    s = _tbl(spark, sf_dir, "supplier")
-    n = _tbl(spark, sf_dir, "nation")
-    r = _tbl(spark, sf_dir, "region")
-    j = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .filter(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-    )
-    return j.groupBy("r_name", "n_name").agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-        ).alias("revenue"),
-        F.count(F.lit(1)).cast("long").alias("n_lineitems"),
-    )
-
-
-def q_tpch_large_orders(spark, sf_dir):
-    """Q18-shape: orders whose total quantity exceeds a threshold,
-    hydrated with the customer (HAVING over a fact aggregate)."""
-    li = _tbl(spark, sf_dir, "lineitem")
-    o = _tbl(spark, sf_dir, "orders")
-    c = _tbl(spark, sf_dir, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").cast("long").alias("total_qty"))
-        .filter(F.col("total_qty") > 150)
-    )
-    return (
-        big.join(o, big.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .select(
-            "l_orderkey",
-            "c_name",
-            "o_orderdate",
-            F.round("o_totalprice", 2).alias("o_totalprice_r"),
-            "total_qty",
-        )
-    )
-
-
-def q_tpch_top_suppliers(spark, sf_dir):
-    """Q15-shape: per-supplier revenue over a shipdate window; emit the
-    supplier(s) with max revenue per nation (window rank over an agg)."""
-    li = _tbl(spark, sf_dir, "lineitem")
-    s = _tbl(spark, sf_dir, "supplier")
-    n = _tbl(spark, sf_dir, "nation")
-    rev = (
-        li.filter(F.col("l_shipdate") >= "1999-01-01")
-        .groupBy("l_suppkey")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-    )
-    j = rev.join(F.broadcast(s), rev.l_suppkey == s.s_suppkey).join(
-        F.broadcast(n), s.s_nationkey == n.n_nationkey
-    )
-    w = Window.partitionBy("n_name").orderBy(
-        F.desc("revenue"), F.desc("l_suppkey")
-    )
-    return (
-        j.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("n_name", F.col("s_name"), "revenue")
     )
 
 
@@ -2541,12 +2264,6 @@ def q_corpus_quantiles(spark, sf_dir):
 
 
 QUERIES = {
-    # The driver's correctness gate reports the first 50 entries in dict
-    # order; with 70 queries the surface is rotated round-to-round so every
-    # key gets an externally-verified row on a recorded cadence (the
-    # per-round report matrix lives in COVERAGE.md §driver-report-ledger).
-    # These 15 were green-but-unreported in CORRECTNESS_r04 (independently
-    # verified via scripts/check_oracle.py), so round 5 leads with them.
     "gopher_quality": q_gopher_quality,
     "pagerank_topk": q_pagerank_topk,
     "kmeans_clusters": q_kmeans_clusters,
@@ -2564,31 +2281,16 @@ QUERIES = {
     "interp_position_map": q_interp_position_map,
     "fli_rollup": q_fli_rollup,
     "fli_field_families": q_fli_field_families,
-    # New in round 5 — inside the report window on first appearance.
     "segment_search_e2e": q_segment_search_e2e,
     "fuzzy_terms": q_fuzzy_terms,
     "substring_spans": q_substring_spans,
     "semantic_dedup": q_semantic_dedup,
     "line_dedup": q_line_dedup,
     "prefix_terms": q_prefix_terms,
-    # Previously-reported keys follow in their r4 order; the last 16 of
-    # them rotate out of this round's window (all green in
-    # CORRECTNESS_r04.json).
     "blog_rollup": q_blog_rollup,
     "pagination_page2": q_pagination_page2,
     "source_stats": q_source_stats,
     "event_sessions": q_event_sessions,
-    "tpch_pricing_summary": q_tpch_pricing_summary,
-    "tpch_local_supplier_volume": q_tpch_local_supplier_volume,
-    "tpch_large_orders": q_tpch_large_orders,
-    "tpch_top_suppliers": q_tpch_top_suppliers,
-    "tpch_revenue_topk": q_tpch_revenue_topk,
-    "tpch_order_priority": q_tpch_order_priority,
-    "tpch_filter_revenue": q_tpch_filter_revenue,
-    "tpch_returned_topk": q_tpch_returned_topk,
-    "region_rollup": q_region_rollup,
-    # New in round 4 — placed inside the 50-query report window so it
-    # gets a driver-verified row on its first appearance.
     "conj_interp_rollup": q_conj_interp_rollup,
     "rrf_fusion": q_rrf_fusion,
     "token_positions": q_token_positions,
@@ -2626,6 +2328,9 @@ QUERIES = {
     "pii_redaction": q_pii_redaction,
     "weighted_sample": q_weighted_sample,
     "pack_sequences": q_pack_sequences,
+    "corpus_quantiles": q_corpus_quantiles,
+    "paragraph_dedup": q_paragraph_dedup,
+    "doc_chunks": q_doc_chunks,
 }
 
 
@@ -3193,40 +2898,6 @@ SELECT user_id, CAST(session_no AS BIGINT) AS session_no,
        CAST(count(*) AS BIGINT) AS n_events, min(ts) AS session_start
 FROM sess GROUP BY user_id, session_no
 """,
-    "tpch_pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       round(avg(l_quantity), 4) AS avg_qty,
-       CAST(count(*) AS BIGINT) AS count_order
-FROM lineitem WHERE l_shipdate <= '2026-06-01'
-GROUP BY l_returnflag, l_linestatus
-""",
-    "tpch_revenue_topk": """
-WITH rev AS (
-  SELECT l_orderkey, o_orderdate,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-                JOIN customer ON o_custkey = c_custkey
-  WHERE c_mktsegment = 'BUILDING'
-  GROUP BY l_orderkey, o_orderdate
-),
-ranked AS (
-  SELECT l_orderkey, o_orderdate, revenue,
-         row_number() OVER (ORDER BY revenue DESC, l_orderkey DESC) AS rank
-  FROM rev
-)
-SELECT l_orderkey, o_orderdate, revenue, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= 10
-""",
-    "region_rollup": """
-SELECT r_name, CAST(count(*) AS BIGINT) AS n_customers,
-       round(sum(c_acctbal), 2) AS total_acctbal
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-              JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name
-""",
     "incremental_merge": """
 WITH combined AS (
   SELECT doc_id, text FROM documents
@@ -3238,44 +2909,6 @@ r AS (SELECT h, doc_id, row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn
       FROM h)
 SELECT h, doc_id AS keeper_doc_id FROM r WHERE rn = 1
 """,
-    "tpch_local_supplier_volume": """
-SELECT r_name, n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_lineitems
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-GROUP BY r_name, n_name
-""",
-    "tpch_large_orders": """
-WITH big AS (
-  SELECT l_orderkey, CAST(sum(l_quantity) AS BIGINT) AS total_qty
-  FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 150
-)
-SELECT l_orderkey, c_name, o_orderdate,
-       round(o_totalprice, 2) AS o_totalprice_r, total_qty
-FROM big JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-""",
-    "tpch_top_suppliers": """
-WITH rev AS (
-  SELECT l_suppkey,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-  FROM lineitem WHERE l_shipdate >= '1999-01-01'
-  GROUP BY l_suppkey
-),
-ranked AS (
-  SELECT n_name, s_name, revenue,
-         row_number() OVER (PARTITION BY n_name
-                            ORDER BY revenue DESC, l_suppkey DESC) AS rk
-  FROM rev JOIN supplier ON l_suppkey = s_suppkey
-           JOIN nation ON s_nationkey = n_nationkey
-)
-SELECT n_name, s_name, revenue FROM ranked WHERE rk = 1
-""",
     "simhash_pairs": f"""
 WITH {_SQL_SH}
 SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
@@ -3284,15 +2917,21 @@ FROM bands l JOIN bands r
   ON l.band = r.band AND l.bval = r.bval AND l.doc_id < r.doc_id
 WHERE bit_count(xor(l.simhash, r.simhash)) <= {SH_MAX_HAMMING}
 """,
-    "interp_position_map": _interp_position_map_values(),
-    "conj_interp_rollup": _conj_interp_rollup_values(),
-    "fli_rollup": _fli_rollup_values(),
-    "fli_field_families": _fli_field_families_values(),
-    "blog_rollup": _blog_rollup_values(),
-    "lang_id": _lang_id_sql(),
-    "extraction_parity": _extraction_parity_values(),
-    "ja_index_postings": _ja_postings_values(),
-    "media_features": _media_features_values(),
+}
+
+# Oracles computed from the pure-Python twins (synth_page, the tokenizer,
+# the image codec): built on lookup by __spark_entry__.oracle_sql(), so
+# importing this module runs none of them.
+ORACLE_BUILDERS = {
+    "interp_position_map": _interp_position_map_values,
+    "conj_interp_rollup": _conj_interp_rollup_values,
+    "fli_rollup": _fli_rollup_values,
+    "fli_field_families": _fli_field_families_values,
+    "blog_rollup": _blog_rollup_values,
+    "lang_id": _lang_id_sql,
+    "extraction_parity": _extraction_parity_values,
+    "ja_index_postings": _ja_postings_values,
+    "media_features": _media_features_values,
 }
 
 # Full-probe IVF is rank-identical to brute force → same exact oracle.
@@ -3582,41 +3221,6 @@ pack(shard, rn, doc_id, n_tokens, seq_id, seq_fill) AS (
   FROM ordered o JOIN pack p ON o.shard = p.shard AND o.rn = p.rn + 1
 )
 SELECT shard, doc_id, n_tokens, seq_id, seq_fill FROM pack
-"""
-
-ORACLE["tpch_filter_revenue"] = """
-SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-              * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_items
-FROM lineitem
-WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
-  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
-"""
-
-ORACLE["tpch_order_priority"] = """
-SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-FROM orders o
-WHERE o_orderdate >= '1996-01-01' AND o_orderdate < '1997-01-01'
-  AND EXISTS (SELECT 1 FROM lineitem l
-              WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
-GROUP BY 1
-"""
-
-ORACLE["tpch_returned_topk"] = """
-SELECT c_custkey, c_name, n_name,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(18,2))
-                   - CAST(l_discount AS DECIMAL(18,2))))
-            AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-WHERE l.l_returnflag = 'R'
-  AND o.o_orderdate >= '1996-01-01' AND o.o_orderdate < '1996-04-01'
-GROUP BY 1, 2, 3
-ORDER BY revenue DESC, c_custkey
-LIMIT 20
 """
 
 ORACLE["kmeans_clusters"] = _kmeans_sql(KM_K, KM_ITERS)
@@ -4113,33 +3717,6 @@ LIMIT {k}
 ORACLE["pagerank_topk"] = _pagerank_sql(PR_OUTLINKS, PR_ITERS, PR_K)
 
 
-# --- round-6 report-window rotation (COVERAGE.md §driver-report-ledger) ------
-# The driver reports the first 50 dict entries. Lead with the 21 keys
-# that had no CORRECTNESS_r05 row (rotated out last round, re-verified
-# locally) + the 2 new r6 queries, then the least-covered r05-window
-# keys; the tail is the veterans with 4-5 prior driver rows.
-_R06_LEAD = [
-    # new this round
-    "gopher_quality", "pagerank_topk",
-    # no r05 driver row (21)
-    "ann_lsh_topk", "decontaminate", "doc_fingerprint", "dup_clusters",
-    "embedding_near_dup", "embedding_topk", "events_windowed",
-    "incremental_merge", "ivf_topk", "lang_distribution",
-    "minhash_lsh_pairs", "minhash_signature", "ngram_jaccard_pairs",
-    "pack_sequences", "pii_redaction", "quality_filter",
-    "quality_signals", "repetition_signals", "simhash_pairs",
-    "token_counts", "weighted_sample",
-    # least-covered keys from the r05 window (fill to 50)
-    "fuzzy_terms", "line_dedup", "prefix_terms", "segment_search_e2e",
-    "semantic_dedup", "substring_spans", "blog_rollup", "boilerplate",
-    "cluster_sample", "conj_interp_rollup", "curation_funnel",
-    "fli_field_families", "fli_rollup", "interp_position_map",
-    "kmeans_clusters", "lang_id", "lm_perplexity", "media_features",
-    "pagination_page2", "phrase_search", "pq_adc_topk",
-    "proximity_search", "rrf_fusion", "tpch_filter_revenue",
-    "tpch_order_priority", "tpch_returned_topk", "extraction_parity",
-]
-QUERIES["corpus_quantiles"] = q_corpus_quantiles
 ORACLE["corpus_quantiles"] = f"""
 WITH q AS (
   SELECT lang,
@@ -4152,8 +3729,6 @@ SELECT lang,
        round(qs[i], 4) AS n_chars_q
 FROM q, generate_series(1, {len(CQ_PROBS)}) AS t(i)
 """
-# swap into the round-6 report window in place of the most-covered
-# veteran in the lead list (extraction_parity: 4 prior driver rows)
 
 
 # Paragraph dedup (q_paragraph_dedup): seeded-corpus mirror + full
@@ -4214,7 +3789,6 @@ SELECT doc_id,
     AS n_removed
 FROM marked GROUP BY doc_id
 """
-QUERIES["paragraph_dedup"] = q_paragraph_dedup
 
 
 # Document chunking (q_doc_chunks): per-doc ordered token offsets
@@ -4256,15 +3830,3 @@ SELECT doc_id,
   ) AS chunk_text
 FROM chunks
 """
-QUERIES["doc_chunks"] = q_doc_chunks
-
-
-# Final report-window assembly (runs LAST so every query defined above
-# is registered before the one rebuild; see _R06_LEAD for the policy).
-_R06_LEAD[_R06_LEAD.index("extraction_parity")] = "corpus_quantiles"
-_R06_LEAD[_R06_LEAD.index("tpch_returned_topk")] = "paragraph_dedup"
-_R06_LEAD[_R06_LEAD.index("tpch_order_priority")] = "doc_chunks"
-assert set(_R06_LEAD) <= set(QUERIES), sorted(set(_R06_LEAD) - set(QUERIES))
-QUERIES = {k: QUERIES[k] for k in _R06_LEAD} | {
-    k: v for k, v in QUERIES.items() if k not in set(_R06_LEAD)
-}

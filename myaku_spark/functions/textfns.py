@@ -14,7 +14,7 @@ import hashlib
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StringType
+from pyspark.sql.types import LongType
 
 # --- alnum count (P7: /root/reference/myaku/utils/__init__.py:410-412) ------
 
@@ -33,16 +33,6 @@ def alnum_count_udf(col: pd.Series) -> pd.Series:
     return col.str.count(r"[^\W_]").astype("Int64")
 
 
-def alnum_count_col(col: Column) -> Column:
-    """JVM fast path: count of Unicode letter/number chars.
-
-    Matches Python ``str.isalnum`` for all of L*, N* — the only divergence
-    is exotic codepoints with Numeric_Type but no N* category, which do not
-    occur in the corpus. Use ``alnum_count_udf`` for byte-parity checks.
-    """
-    return F.length(F.regexp_replace(col, r"[^\p{L}\p{N}]", ""))
-
-
 # --- text hash (P8: /root/reference/myaku/datatypes.py:210-222) -------------
 
 
@@ -53,14 +43,6 @@ def text_hash_col(col: Column) -> Column:
 
 def text_hash_py(s: str) -> str:
     return hashlib.sha256(s.encode("utf-8")).hexdigest()
-
-
-# --- JST→UTC (P14: /root/reference/myaku/utils/__init__.py:393-407) ---------
-
-
-def jst_to_utc_col(ts: Column) -> Column:
-    """Naive JST timestamp → naive UTC (fixed +09:00, no DST in Japan)."""
-    return F.to_utc_timestamp(ts, "Asia/Tokyo")
 
 
 # --- whitespace collapse (P13: article_preview.py:26-34) --------------------
@@ -116,23 +98,6 @@ def find_sentence_end(text: str, pos: int) -> int:
     return min(candidates)
 
 
-@F.pandas_udf(StringType())
-def sentence_at_udf(text: pd.Series, pos: pd.Series) -> pd.Series:
-    """Extract the sentence containing char position ``pos`` (preview op)."""
-
-    def _one(t, p):
-        if t is None or p is None:
-            return None
-        p = int(min(max(p, 0), len(t) - 1)) if t else 0
-        if not t:
-            return ""
-        s = find_sentence_start(t, p)
-        e = find_sentence_end(t, p)
-        return t[s : e + 1]
-
-    return pd.Series([_one(t, p) for t, p in zip(text, pos)])
-
-
 # --- order-preserving unique (utils/__init__.py:247-259) --------------------
 
 
@@ -142,15 +107,3 @@ def unique_preserving(items: list) -> list:
         if it not in out:
             out.append(it)
     return out
-
-
-# --- url helpers (P15: utils/__init__.py:345-390) ---------------------------
-
-
-def strip_url_query_and_frag_col(url: Column) -> Column:
-    return F.regexp_replace(url, r"[?#].*$", "")
-
-
-@F.pandas_udf(IntegerType())
-def char_len_udf(col: pd.Series) -> pd.Series:
-    return col.map(lambda s: None if s is None else len(s))

@@ -1,6 +1,6 @@
 """Tokenization → (term, start, len) token streams with exact char offsets.
 
-Two engines, one output contract (the ``token`` struct):
+Two engines, one output contract (term, start, len token rows):
 
 1. ``tokenize_whitespace_col`` — pure Catalyst (no Python): split on a
    single space and compute running char offsets with the ``aggregate``
@@ -8,7 +8,8 @@ Two engines, one output contract (the ``token`` struct):
    driver tables; every stage is SQL-expressible, so the DuckDB oracle
    can replay it.
 
-2. ``ja_tokens_udf`` — Arrow-vectorized pandas UDF for Japanese text.
+2. ``explode_ja_tokens`` — Arrow-batched ``mapInPandas`` kernel for
+   Japanese text.
    Reproduces the reference *pipeline* (T1 block split with running
    offsets, japanese_analysis.py:172-211; MeCab-style dictionary
    tokenization with base forms T2, japanese_analysis.py:919-1059;
@@ -42,18 +43,10 @@ from __future__ import annotations
 
 import functools as _functools
 import re as _re
-import unicodedata
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from myaku_spark.functions.ja_lexicon import (  # noqa: F401 (re-export)
     JA_FUNCTION_WORDS,
@@ -63,19 +56,6 @@ from myaku_spark.functions.ja_lexicon import (  # noqa: F401 (re-export)
     resolve_dictionary,
 )
 from myaku_spark.functions.widthnorm import normalize_char_width
-
-TOKEN_SCHEMA = StructType(
-    [
-        StructField("surface", StringType()),
-        StructField("term", StringType()),
-        StructField("base", StringType()),
-        StructField("start", IntegerType()),
-        StructField("len", IntegerType()),
-        StructField("pos", StringType()),
-        StructField("sources", ArrayType(IntegerType())),
-        StructField("entry_id", StringType()),
-    ]
-)
 
 # ---------------------------------------------------------------------------
 # 1. Whitespace tokenizer — pure Catalyst, offsets via aggregate() HOF.
@@ -385,60 +365,6 @@ def tokenize_ja_block_slow(
     return tokens
 
 
-def _within_jmdict_max_len(span: list[dict], jm: JMdictSubset) -> bool:
-    """Reference length gate (japanese_analysis.py:280-310): a span is
-    probe-worthy if ANY measure (item count, base-form len, surface len)
-    is within the corresponding max over the loaded JMdict entries."""
-    if len(span) <= jm.max_decomp_len:
-        return True
-    if sum(len(t["base"]) for t in span) <= jm.max_text_form_len:
-        return True
-    if sum(len(t["surface"]) for t in span) <= jm.max_text_form_len:
-        return True
-    return False
-
-
-def _lookup_meta(span: list[dict], jm: JMdictSubset) -> list[dict]:
-    """Three-key JMdict probe of one base-item span (≥2 items), the
-    exact analog of _lookup_meta_lexical_item (japanese_analysis.py:
-    318-369): decomp map by base-form tuple (source 2), entry map by
-    surface concat (3) and by base concat (4). Emitted base_form is the
-    ENTRY text form, position is (first item start, surface len)."""
-    decomp = tuple(t["base"] for t in span)
-    decomp_entries = jm.decomp_map.get(decomp, ())
-    surface = "".join(t["surface"] for t in span)
-    surface_entries = jm.entry_map.get(surface, ())
-    base = "".join(decomp)
-    base_entries = jm.entry_map.get(base, ())
-    if not (decomp_entries or surface_entries or base_entries):
-        return []
-    items = []
-    seen = set()
-    for ent in list(decomp_entries) + list(surface_entries) + list(base_entries):
-        if ent in seen:
-            continue
-        seen.add(ent)
-        sources = []
-        if ent in decomp_entries:
-            sources.append(2)
-        if ent in surface_entries:
-            sources.append(3)
-        if ent in base_entries:
-            sources.append(4)
-        items.append(
-            dict(
-                surface=surface,
-                base=ent[1],
-                start=span[0]["start"],
-                length=len(surface),
-                pos=None,
-                sources=sources,
-                entry_id=ent[0],
-            )
-        )
-    return items
-
-
 def _jmdict_meta_items(toks: list[dict], jm: JMdictSubset) -> list[dict]:
     """Scan all list-adjacent spans of ≥2 items, like
     _find_meta_lexical_items (japanese_analysis.py:248-279). Runs over
@@ -570,34 +496,6 @@ def tokenize_ja_text(
 @_functools.lru_cache(maxsize=1 << 16)
 def _norm_cached(s: str) -> str:
     return normalize_char_width(s)
-
-
-def make_ja_tokens_udf(lexicon=None):
-    """pandas UDF: text → array<token struct> (Arrow-batched, no per-row
-    Python at the Spark API level; the per-doc loop runs inside the batch)."""
-
-    @F.pandas_udf(ArrayType(TOKEN_SCHEMA))
-    def ja_tokens(col: pd.Series) -> pd.Series:
-        def run(s):
-            if s is None:
-                return None
-            return [
-                (
-                    t["surface"],
-                    t["term"],
-                    t["base"],
-                    t["start"],
-                    t["length"],
-                    t["pos"],
-                    t.get("sources", [1]),
-                    t.get("entry_id"),
-                )
-                for t in tokenize_ja_text(s, lexicon=lexicon)
-            ]
-
-        return col.map(run)
-
-    return ja_tokens
 
 
 def explode_ja_tokens(
@@ -748,11 +646,3 @@ def ja_posting_rows(
     return df.select(
         F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)
     ).mapInArrow(gen, schema)
-
-
-def is_katakana(s: str) -> bool:
-    return all(_script_class(c) in ("kata",) for c in s)
-
-
-def nfkc(s: str) -> str:
-    return unicodedata.normalize("NFKC", s)

@@ -23,11 +23,6 @@ Applied symmetrically at index time (term base forms,
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
-
 # --- h2z kana tables -------------------------------------------------------
 
 # Half-width katakana (U+FF61..U+FF9F) → full-width equivalents.
@@ -94,13 +89,3 @@ def z2h_ascii_digit(s: str) -> str:
 def normalize_char_width(s: str) -> str:
     """Exact reimplementation of the reference normalization (P6)."""
     return z2h_ascii_digit(h2z_kana(s))
-
-
-@F.pandas_udf(StringType())
-def normalize_char_width_udf(col: pd.Series) -> pd.Series:
-    return col.map(lambda s: None if s is None else normalize_char_width(s))
-
-
-def normalize_char_width_col(col: Column) -> Column:
-    """Column-level width normalization (Arrow-vectorized)."""
-    return normalize_char_width_udf(col)

@@ -1,4 +1,4 @@
-"""BM25 scoring + top-k retrieval, and the Myaku rank-key mode.
+"""BM25 scoring + top-k retrieval.
 
 BM25 (Robertson/Sparck-Jones, the Lucene-standard formulation):
 
@@ -10,12 +10,6 @@ All scoring is pure Catalyst column arithmetic — postings join the
 term is a window ``row_number`` (TakeOrderedAndProject when a global
 LIMIT applies); the WAND evaluator (wand.py) must agree with this
 exhaustive path on every query — that is the correctness oracle.
-
-Myaku rank mode reproduces the reference's ranked retrieval contract:
-ORDER BY (quality_score DESC, doc_ts DESC, doc_id DESC)
-(/root/reference/myaku/datastore/database.py:312-323, ArticleRankKey
- /root/reference/myaku/datatypes.py:134-148), page size 10
-(/root/reference/myaku/datastore/__init__.py:22).
 """
 
 from __future__ import annotations
@@ -80,47 +74,4 @@ def topk_per_term(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-    )
-
-
-def topk_per_term_myaku(
-    scored: DataFrame, k: int = PAGE_SIZE
-) -> DataFrame:
-    """Myaku rank-key mode: (score DESC, doc_ts DESC, doc_id DESC)."""
-    w = Window.partitionBy("term").orderBy(
-        F.desc("score"), F.desc("doc_ts"), F.desc("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def search_terms(
-    spark,
-    scored_postings: DataFrame,
-    terms: list[str],
-    k: int = PAGE_SIZE,
-    mode: str = "or",
-    score_col: str = "bm25",
-) -> DataFrame:
-    """Multi-term query: broadcast the query terms, AND/OR combine, top-k.
-
-    OR: per-doc sum of matched-term scores.
-    AND (posting-list intersection): docs matching ALL terms — the
-    relational formulation of the WAND conjunction; wand.py provides the
-    skipping evaluator that must return the same rows.
-    """
-    qdf = F.broadcast(
-        spark.createDataFrame([(t,) for t in terms], ["term"])
-    )
-    matched = scored_postings.join(qdf, "term")
-    agg = matched.groupBy("doc_id").agg(
-        F.sum(score_col).alias("query_score"),
-        F.count(F.lit(1)).alias("n_matched"),
-    )
-    if mode == "and":
-        agg = agg.filter(F.col("n_matched") == len(set(terms)))
-    return (
-        agg.orderBy(F.desc("query_score"), F.desc("doc_id")).limit(k)
     )

@@ -252,19 +252,21 @@ def simhash(
 
 
 def simhash_near_dups(
-    sim: DataFrame, max_hamming: int = 3, n_bands: int = 4
+    sim: DataFrame, max_hamming: int = 3, n_bands: int = 4, bits: int = 64
 ) -> DataFrame:
     """Near-dup pairs by simhash hamming distance <= max_hamming.
 
-    Pigeonhole banding: split the 64 bits into n_bands 16-bit bands; any
-    pair within hamming d < n_bands shares at least one exact band →
-    band-bucket join then exact hamming filter via bit_count(xor)."""
+    Pigeonhole banding: split the ``bits``-wide signature into n_bands
+    equal bands; any pair within hamming d < n_bands shares at least one
+    exact band → band-bucket join then exact hamming filter via
+    bit_count(xor)."""
     # Single-scan band fan-out (see lsh_candidate_pairs): the simhash
     # aggregation upstream runs once, not once per band branch.
+    width = bits // n_bands
+    mask = (1 << width) - 1
     band_structs = []
     for bnd in range(n_bands):
-        shift = bnd * (64 // n_bands)
-        mask = (1 << (64 // n_bands)) - 1
+        shift = bnd * width
         band_structs.append(
             F.struct(
                 F.lit(bnd).alias("band"),

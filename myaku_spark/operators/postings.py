@@ -8,7 +8,7 @@ same artifacts are explicit DataFrames:
 
 - ``build_postings``      (term, doc_id) → tf + sorted positions     [A1]
 - ``doc_stats``           doc_id → dl (+ corpus N, avgdl)            [BM25]
-- ``term_stats``          term → df, cf, max rank key                [A2/A4]
+- ``term_stats``          term → df, cf                             [A2]
 - ``term_posting_arrays`` term → sorted array of (doc_id, tf, score) [K1]
 
 Shuffle/skew notes (the 100 TB design point):
@@ -72,21 +72,6 @@ def term_stats(postings: DataFrame) -> DataFrame:
     """
     return postings.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
-    )
-
-
-def term_max_rank_key(scored_postings: DataFrame) -> DataFrame:
-    """term → max (score, ts, doc_id) rank key (A4, index_build.py:29-42).
-
-    Struct max is partial-aggregatable → skew-safe. This doubles as the
-    per-term max-score metadata feeding block-max WAND upper bounds.
-    """
-    return scored_postings.groupBy("term").agg(
-        F.max(
-            F.struct(F.col("score"), F.col("doc_ts"), F.col("doc_id"))
-        ).alias("max_rank_key"),
-        F.max("score").alias("max_score"),
-        F.count(F.lit(1)).alias("article_count"),
     )
 
 

@@ -23,7 +23,6 @@ from myaku_spark.functions.textfns import (
     collapse_whitespace_col,
     find_sentence_end,
     find_sentence_start,
-    sentence_at_udf,
 )
 
 # article_preview.py:15-18
@@ -157,21 +156,6 @@ def _best_sentence_udf():
         )
 
     return best_sentence
-
-
-def attach_previews(
-    hydrated: DataFrame,
-    texts: DataFrame,
-    first_pos_col: str = "first_start",
-    text_col: str = "text",
-) -> DataFrame:
-    """Single-position fallback: results (doc_id, ..., first_start) ⋈
-    texts → + preview column (sentence at the position)."""
-    joined = hydrated.join(texts.select("doc_id", text_col), "doc_id", "left")
-    sent = sentence_at_udf(F.col(text_col), F.col(first_pos_col))
-    return joined.withColumn(
-        "preview", collapse_whitespace_col(sent)
-    ).drop(text_col)
 
 
 def attach_ranked_previews(

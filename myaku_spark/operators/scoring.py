@@ -217,16 +217,3 @@ def article_quality_score_col(
         + video * ARTICLE_FACTOR_WEIGHTS["video"]
         + recency_score_col(doc_ts, now) * ARTICLE_FACTOR_WEIGHTS["recency"]
     ).cast("int")
-
-
-def attach_quality_scores(postings, docs_scored):
-    """postings (term, doc_id, tf) ⋈ per-doc score → final score column.
-
-    score = article_quality_score + tf modifier (index_rescore.py:199-235:
-    quality_score_X = article_quality_score + quality_score_X_mod)."""
-    out = postings.join(
-        docs_scored.select("doc_id", "doc_score", "doc_ts"), "doc_id"
-    )
-    return out.withColumn("score_mod", tf_score_mod_col(F.col("tf"))).withColumn(
-        "score", (F.col("doc_score") + F.col("score_mod")).cast("int")
-    )

@@ -289,18 +289,6 @@ def read_term_segments(spark, path: str, terms: list[str]) -> DataFrame:
     return df.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
 
 
-def segment_catalog(segments: DataFrame, run_id: str) -> DataFrame:
-    """Catalog rows (FIXTURES.md §5): per-bucket segment stats + lineage."""
-    return segments.groupBy("bucket").agg(
-        F.min("term").alias("min_term"),
-        F.max("term").alias("max_term"),
-        F.countDistinct("term").alias("n_terms"),
-        F.sum("n_postings").cast("long").alias("n_postings"),
-        F.sum(F.length("blob")).cast("long").alias("bytes"),
-        F.count(F.lit(1)).alias("n_blocks"),
-    ).withColumn("created_by_run", F.lit(run_id))
-
-
 def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
     """k-way merge of same-(term, block_id) segment rows from multiple
     runs: decode, concat, newest-run-wins per doc_id, re-encode.

@@ -97,6 +97,16 @@ def extract_and_dedupe(pages: DataFrame, source_col=None) -> DataFrame:
     )
 
 
+def _observed(obs) -> dict:
+    """An Observation's metrics, or {} when the observed plan ran no
+    task: AQE folds a stage over empty input into an empty relation, and
+    the observation is then left holding an empty row, which
+    ``Observation.get`` cannot convert."""
+    if obs._jo.getRow().length() == 0:
+        return {}
+    return obs.get
+
+
 def build_group(
     spark: SparkSession,
     pages_group: DataFrame,
@@ -270,10 +280,10 @@ def build_group(
             f"{index_dir}/analysis/group={group}"
         )
 
-    seg_stats = seg_obs.get
-    doc_stats = doc_obs.get
-    n_docs = int(doc_stats["n_docs"] or 0)
-    sum_dl = int(doc_stats["sum_dl"] or 0)
+    seg_stats = _observed(seg_obs)
+    doc_stats = _observed(doc_obs)
+    n_docs = int(doc_stats.get("n_docs") or 0)
+    sum_dl = int(doc_stats.get("sum_dl") or 0)
     docs.unpersist()
     extracted.unpersist()
     postings.unpersist()
@@ -283,9 +293,9 @@ def build_group(
         "group": group,
         "status": "done",
         "docs": n_docs,
-        "terms": int(tst_obs.get["terms"] or 0),
-        "postings": int(seg_stats["postings"] or 0),
-        "bytes": int(seg_stats["bytes"] or 0),
+        "terms": int(_observed(tst_obs).get("terms") or 0),
+        "postings": int(seg_stats.get("postings") or 0),
+        "bytes": int(seg_stats.get("bytes") or 0),
         "sum_dl": int(sum_dl),
         "wall_ms": int((time.time() - t0) * 1000),
     }
@@ -394,15 +404,6 @@ def build_index(
     cp = spark.read.parquet(f"{index_dir}/checkpoints")
     cp.groupBy().agg(
         F.sum("docs").alias("n_docs"),
-        (F.sum("sum_dl") / F.sum("docs")).alias("avgdl"),
+        F.try_divide(F.sum("sum_dl"), F.sum("docs")).alias("avgdl"),
     ).write.mode("overwrite").parquet(paths["corpus_stats"])
     return metrics
-
-
-def read_corpus_stats(spark: SparkSession, index_dir: str):
-    from myaku_spark.plans import catalog
-
-    r = spark.read.parquet(
-        catalog.path_of(index_dir, "corpus_stats")
-    ).collect()[0]
-    return int(r.n_docs), float(r.avgdl)

@@ -153,19 +153,3 @@ def gc_names(index_dir: str, keep_names: set[str]) -> list[str]:
             shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
             removed.append(name)
     return removed
-
-
-def gc_versions(index_dir: str, keep_versions: set[int]) -> list[str]:
-    """Delete versioned dirs whose version is not in keep_versions
-    (callers keep at least {current, previous} for in-flight readers)."""
-    import re
-    import shutil
-
-    removed = []
-    pat = re.compile(r"^(segments|docs|tombstones|term_stats|corpus_stats)_v(\d+)$")
-    for name in os.listdir(index_dir):
-        m = pat.match(name)
-        if m and int(m.group(2)) not in keep_versions:
-            shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
-            removed.append(name)
-    return removed

@@ -16,172 +16,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-# SparkContext ids already JVM-warmed this process (warmup runs once per
-# context, not per get_spark call).
-_WARMED: set[int] = set()
 
-
-def _warm_jvm(spark: SparkSession) -> None:
-    """One-time synthetic warmup of the shared JVM/codegen runtime paths.
-
-    A fresh JVM executes every first query interpreted while the C2
-    compiler works through a ~200-CPU-second backlog (measured via
-    jstat: ~48k methods over one bench session); the first query to
-    exercise each runtime path (parquet reader, hash aggregate, sort,
-    exchange, joins, window, Arrow Python runner, janino compilation
-    pipeline itself) pays multi-second penalties that steady-state
-    production never sees. Long-running services warm these paths at
-    startup; this does the same with purely synthetic spark.range data —
-    it reads none of the input tables and caches no query results, so
-    every query still computes from its parquet inputs.
-
-    Cost: a few seconds at session start, once per JVM. Opt out with
-    SPARK_GRAFT_NO_WARMUP=1 (e.g. short-lived utility scripts).
-    """
-    sc = spark.sparkContext
-    if os.environ.get("SPARK_GRAFT_NO_WARMUP"):
-        return
-    ctx_id = id(sc._jsc)
-    if ctx_id in _WARMED:
-        return
-    _WARMED.add(ctx_id)
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    sc.setJobDescription("session warmup: JIT/codegen/runtime paths")
-    noop = lambda df: df.write.format("noop").mode("overwrite").save()  # noqa: E731
-    try:
-        par = sc.defaultParallelism
-        df = spark.range(0, 100_000, 1, max(par // 2, 2)).select(
-            F.col("id"),
-            F.pmod(F.col("id"), F.lit(97)).alias("k"),
-            F.concat(F.lit("w"), F.pmod(F.col("id"), F.lit(1013))).alias("s"),
-        )
-        # Parquet write + scan (filtered/projected) on a temp dir.
-        tmp = tempfile.mkdtemp(prefix="spark_warm_")
-        try:
-            df.write.mode("overwrite").parquet(tmp)
-            pq = spark.read.parquet(tmp)
-            # hash aggregate + exchange + sort + limit-collect
-            pq.filter(F.col("k") > 3).groupBy("k").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("id").alias("sid"),
-                F.collect_list(F.struct("id", "s")).alias("xs"),
-            ).select(
-                "k", "n", "sid", F.explode("xs").alias("x")
-            ).orderBy("k", "x.id").limit(5).collect()
-            small = spark.range(0, 97).select(
-                F.col("id").alias("k"), F.lit(1).alias("v")
-            )
-            # broadcast-hash and sort-merge join paths
-            noop(pq.join(F.broadcast(small), "k"))
-            noop(pq.join(small.hint("merge"), "k"))
-            # window (rank) over a keyed exchange
-            w = Window.partitionBy("k").orderBy("id")
-            noop(
-                pq.withColumn("rn", F.row_number().over(w)).filter(
-                    F.col("rn") <= 2
-                )
-            )
-
-            # ObjectHashAggregate (collect_list) + higher-order
-            # functions + posexplode — the posting/segment agg shape.
-            noop(
-                pq.groupBy("k")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(F.struct("id", "s"))
-                    ).alias("xs")
-                )
-                .select(
-                    "k",
-                    F.expr("transform(xs, x -> x.id)").alias("ids"),
-                )
-                .select("k", F.posexplode("ids"))
-            )
-            # BroadcastNestedLoopJoin (broadcast crossJoin) + stack
-            # expand — the LM-score and funnel-metrics shapes.
-            one = spark.range(1).select(F.count(F.lit(1)).alias("v"))
-            noop(
-                pq.crossJoin(F.broadcast(one)).selectExpr(
-                    "stack(2, 'a', id, 'b', v) as (sk, sv)"
-                )
-            )
-
-            # Arrow Python runner both directions + worker numpy/pandas
-            # import storm (one task per core).
-            def _echo(batches):
-                import numpy as np  # noqa: F401
-                import pandas as pd  # noqa: F401
-                import pyarrow  # noqa: F401
-
-                # Pre-import the kernel modules later queries run inside
-                # reused Python workers (spark.python.worker.reuse):
-                # the first timed query touching each module otherwise
-                # pays its import once per worker.
-                from myaku_spark.operators import codec, wand  # noqa: F401
-                from myaku_spark.functions import tokenize  # noqa: F401
-
-                for rb in batches:
-                    yield rb
-
-            noop(
-                pq.repartition(par)
-                .mapInArrow(_echo, "id long, k bigint, s string")
-            )
-
-            # Grouped-map Python runner (applyInPandas) — the batched
-            # WAND / sequence-packing shape.
-            def _gm(pdf):
-                return pdf.head(1)
-
-            noop(
-                pq.limit(1000)
-                .groupBy("k")
-                .applyInPandas(_gm, "id long, k bigint, s string")
-            )
-
-            # Miniature synthetic index build (~64 pages → temp dir):
-            # the build pipeline's generated classes (extract UDF
-            # projection, sha2 + dedup window, repartitionByRange +
-            # localCheckpoint, blog-score expressions, posting
-            # mapInPandas, segment ObjectHashAggregate + transform
-            # peel, codec mapInArrow, partitioned parquet write,
-            # checkpoint append) are distinct plan shapes the generic
-            # warmup above never compiles — a fresh JVM otherwise pays
-            # their first C2/janino pass inside the first real build.
-            # Synthetic spark.range-derived data only; the output is
-            # deleted immediately — nothing is precomputed or cached.
-            from myaku_spark.plans.build_index import build_index
-            from myaku_spark.sources.blogs import (
-                synth_blog_map_df,
-                synth_blogs_df,
-            )
-            from myaku_spark.sources.pages import synth_pages_df
-
-            wtmp = tempfile.mkdtemp(prefix="spark_warm_idx_")
-            try:
-                build_index(
-                    spark,
-                    synth_pages_df(spark, 64, partitions=8),
-                    wtmp,
-                    n_groups=1,
-                    blogs=synth_blogs_df(spark),
-                    blog_map=synth_blog_map_df(spark, 64),
-                    head_df_threshold=8,
-                    block_doc_range=8,
-                )
-            finally:
-                shutil.rmtree(wtmp, ignore_errors=True)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    except Exception:  # noqa: BLE001 — warmup must never break a session
-        pass
-    finally:
-        sc.setJobDescription(None)
+def _driver_memory() -> str:
+    """Driver heap: $SPARK_DRIVER_MEM, else 40% of physical RAM. The heap
+    is committed up front (-Xms = -Xmx, pre-touched), so the default must
+    leave room for the Python workers and the OS."""
+    mem = os.environ.get("SPARK_DRIVER_MEM")
+    if mem:
+        return mem
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{int(ram * 0.4) >> 20}m"
 
 
 def get_spark(
@@ -192,11 +36,12 @@ def get_spark(
     """Build (or fetch) a SparkSession tuned for the index-build workload.
 
     Args:
-        parallelism: local core count; defaults to $SPARK_GRAFT_CPUS or 32.
+        parallelism: local core count; defaults to $SPARK_GRAFT_CPUS or
+            ``os.cpu_count()``.
         extra_conf: overrides applied last.
     """
     if parallelism is None:
-        parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     # Make the package importable on executor Python workers regardless of
     # the driver's cwd (equivalent of spark-submit --py-files for local
     # mode; on a cluster, ship a zip of myaku_spark via --py-files).
@@ -219,6 +64,7 @@ def get_spark(
     }
     for _k, _v in _malloc_env.items():
         os.environ.setdefault(_k, _v)
+    driver_mem = _driver_memory()
     builder = SparkSession.builder.appName(app_name)
     # Under spark-submit (gateway already launched with --master from the
     # CLI — a real cluster or explicit local[N]) the submitted master
@@ -252,7 +98,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_",
                 os.environ["MALLOC_MMAP_THRESHOLD_"])
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_",
@@ -277,7 +123,7 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             (
                 "-XX:ReservedCodeCacheSize=512m "
-                f"-Xms{os.environ.get('SPARK_DRIVER_MEM', '16g')} "
+                f"-Xms{driver_mem} "
                 "-XX:+UseTransparentHugePages -XX:+AlwaysPreTouch "
                 + os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")
             ).strip(),
@@ -296,6 +142,4 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    _warm_jvm(spark)
-    return spark
+    return builder.getOrCreate()

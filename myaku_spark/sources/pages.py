@@ -11,20 +11,21 @@ sandbox, so ``read_pages``/``write_pages`` fall back to parquet with an
 identical schema; every downstream operator is format-agnostic.
 
 Synthesis is fully deterministic (seeded counter-based PRNG — no
-wall-clock, no global random state): sentences are drawn from the
-public-domain 桜の森の満開の下 corpus used by the reference's own tests
-(/root/reference/myaku/sample_text.py) and wrapped in Kakuyomu-style
-episode HTML (matching myaku/tests/end_to_end/test_html/kakuyomu/*) so
-the extraction UDF must do real work, and the expected ``text`` column
-is produced by construction for byte-identical verification.
+wall-clock, no global random state): sentences are drawn from a fixed
+pool composed of the packaged dictionary fragments' surfaces
+(``functions/ipadic_fragment.csv`` and ``functions/jmdict_fragment.xml``)
+so every synthetic token is a dictionary entry, and wrapped in
+Kakuyomu-style episode HTML so the extraction UDF must do real work; the
+expected ``text`` column is produced by construction for byte-identical
+verification.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import hashlib
 import html as html_mod
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +35,15 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampType,
+)
+
+from myaku_spark.functions.ipadic_csv import (
+    default_fragment_bytes,
+    parse_ipadic_csv,
+)
+from myaku_spark.functions.jmdict_xml import (
+    default_fragment_text,
+    parse_jmdict_xml,
 )
 
 PAGES_SCHEMA = StructType(
@@ -46,35 +56,53 @@ PAGES_SCHEMA = StructType(
     ]
 )
 
-_SAMPLE_PATH = "/root/reference/myaku/sample_text.py"
 _BASE_TS = dt.datetime(2026, 1, 1, 0, 0, 0)
+_POOL_SIZE = 256
+# Endings appended to a conjugated verb/adjective row, by its part of
+# speech and 活用形; every ending is itself a fragment surface.
+_ENDINGS = {
+    ("動詞", "基本形"): ("",),
+    ("動詞", "連用形"): ("ました", "ません"),
+    ("動詞", "連用タ接続"): ("た", "ていた"),
+    ("動詞", "未然形"): ("ない",),
+    ("形容詞", "基本形"): ("",),
+    ("形容詞", "連用タ接続"): ("た",),
+    ("形容詞", "連用テ接続"): ("ない",),
+}
+_COPULAS = ("です", "でした", "だ")
+_CASE_PARTICLES = ("は", "が", "を", "に", "で", "と", "も", "へ", "から", "まで")
 
 
-def _load_sample_sentences() -> list[str]:
-    """Public-domain Japanese sentences from the reference sample corpus."""
-    src = open(_SAMPLE_PATH, encoding="utf-8").read()
-    m = re.search(r'SAMPLE_TEXT = """(.*?)"""', src, re.S)
-    text = m.group(1)
-    sents = []
-    for line in text.splitlines():
-        line = line.strip()
-        if not line:
-            continue
-        for s in re.split(r"(?<=[。？！])", line):
-            s = s.strip("　")
-            if len(s) >= 8:
-                sents.append(s)
-    return sents
-
-
-_SENTENCES: list[str] | None = None
-
-
+@functools.cache
 def _sentences() -> list[str]:
-    global _SENTENCES
-    if _SENTENCES is None:
-        _SENTENCES = _load_sample_sentences()
-    return _SENTENCES
+    """Pool of ``[接続詞、]noun particle noun particle predicate。``
+    sentences over the packaged dictionary fragments."""
+    rows = parse_ipadic_csv(("ipadic_fragment.csv", default_fragment_bytes()))
+    nouns = [
+        r.surface for r in rows
+        if r.pos[:2] in (("名詞", "一般"), ("名詞", "サ変接続"), ("名詞", "代名詞"))
+    ] + [
+        e.text_form for e in parse_jmdict_xml(default_fragment_text())
+        if any(p.startswith("noun") for p in e.parts_of_speech)
+    ]
+    predicates = [
+        r.surface + end
+        for r in rows
+        for end in _ENDINGS.get((r.pos[0], r.conj_form), ())
+    ] + [n + c for n in nouns for c in _COPULAS]
+    openers = [""] + [r.surface + "、" for r in rows if r.pos[0] == "接続詞"]
+
+    def pick(options, k, slot):
+        # Negative counters keep the pool's draws apart from synth_page's.
+        return options[_prng(-1 - k, slot) % len(options)]
+
+    return [
+        pick(openers, k, 0)
+        + pick(nouns, k, 1) + pick(_CASE_PARTICLES, k, 2)
+        + pick(nouns, k, 3) + pick(_CASE_PARTICLES, k, 4)
+        + pick(predicates, k, 5) + "。"
+        for k in range(_POOL_SIZE)
+    ]
 
 
 def _prng(i: int, j: int) -> int:

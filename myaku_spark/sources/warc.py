@@ -226,13 +226,6 @@ def iter_warc_records(path: str, data: bytes):
     return _parse_stream(path, chunks)
 
 
-def parse_warc_records(path: str, data: bytes) -> list[tuple]:
-    """All records of one WARC payload, materialized (small shards /
-    tests; the Spark reader drains ``iter_warc_records`` in bounded
-    batches instead)."""
-    return list(iter_warc_records(path, data))
-
-
 # read_warc ships one Arrow batch per ~this much inflated body data, so
 # a worker's live set is compressed blob + ONE batch — not compressed +
 # the whole inflated shard (~5x on web text). 64 MB ≈ Spark's own

@@ -11,8 +11,21 @@ import ast
 import os
 from functools import lru_cache
 
+import pytest
+
 REF_TEST = "/root/reference/myaku/tests/end_to_end/test_crawl.py"
 REF_TEST_DIR = "/root/reference/myaku/tests/end_to_end"
+
+
+@lru_cache(maxsize=1)
+def _ref_tree() -> ast.Module:
+    """The reference test module, parsed once. Every golden loader goes
+    through here, so a test that needs golden data skips (with one
+    reason) when the reference corpus is absent."""
+    if not os.path.exists(REF_TEST):
+        pytest.skip("reference corpus not present")
+    with open(REF_TEST, encoding="utf-8") as f:
+        return ast.parse(f.read())
 
 
 def _const(node):
@@ -65,7 +78,7 @@ def golden_blog_docs() -> tuple[list[dict], list[dict]]:
     """(initial, update) expected blog docs (test_crawl.py:64-190):
     the update stage REPLACES entries [0]/[2] (re-crawled series with new
     ratings) and appends Series 4."""
-    tree = ast.parse(open(REF_TEST, encoding="utf-8").read())
+    tree = _ref_tree()
     initial: list[dict] = []
     replacements: dict[int, dict] = {}
     appended: list[dict] = []
@@ -110,7 +123,7 @@ def golden_article_meta() -> tuple[list[dict], list[dict]]:
     """(initial, update-only) article docs with ALL scalar fields kept
     (title, source_name, blog_oid, order nums, has_video, alnum_count,
     quality_score, last_updated_datetime ISO string, ...)."""
-    tree = ast.parse(open(REF_TEST, encoding="utf-8").read())
+    tree = _ref_tree()
     initial: list[dict] = []
     update: list[dict] = []
     for node in ast.walk(tree):
@@ -165,7 +178,7 @@ def load_golden():
     """Returns (initial_docs, update_docs, url_map) where url_map merges
     the initial and update response maps (update wins for re-crawled
     urls, matching the UPDATE stage)."""
-    tree = ast.parse(open(REF_TEST, encoding="utf-8").read())
+    tree = _ref_tree()
     initial_docs: list[dict] = []
     update_docs: list[dict] = []
     initial_map: dict[str, str] = {}
@@ -260,7 +273,7 @@ def golden_fli_expectations() -> dict[str, list[dict]]:
     """term → [{title, positions, interp_sources, interp_position_map?}],
     merged initial + update stage (the reference's exhaustive FLI query
     expectations, test_crawl.py:856-1653)."""
-    tree = ast.parse(open(REF_TEST, encoding="utf-8").read())
+    tree = _ref_tree()
     flis: dict[str, list[dict]] = {}
     for node in ast.walk(tree):
         if isinstance(node, ast.Assign) and node.targets:
@@ -302,7 +315,7 @@ def golden_fli_expectations() -> dict[str, list[dict]]:
 def golden_article_texts() -> dict[str, str]:
     """title → full_text for initial+update golden articles (title ==
     the symbolic article_oid used by the FLI expectations)."""
-    tree = ast.parse(open(REF_TEST, encoding="utf-8").read())
+    tree = _ref_tree()
     texts: dict[str, str] = {}
 
     def grab(list_node):
@@ -350,7 +363,7 @@ def source_of(url: str) -> str:
 def golden_pages(stage: str = "both") -> list[dict]:
     """[{url, html(bytes), source, full_text, text_hash, alnum_count}] for
     every golden article whose fixture exists in the url map."""
-    tree = ast.parse(open(REF_TEST, encoding="utf-8").read())
+    tree = _ref_tree()
     initial_map: dict[str, str] = {}
     update_map: dict[str, str] = {}
     for node in ast.walk(tree):
@@ -399,7 +412,7 @@ def golden_pages(stage: str = "both") -> list[dict]:
 def golden_fli_score_docs() -> dict[str, list[dict]]:
     """term → raw golden FLI docs (with quality scores and article
     last_updated ISO strings) — the rank-identity oracle."""
-    tree = ast.parse(open(REF_TEST, encoding="utf-8").read())
+    tree = _ref_tree()
     out: dict[str, list[dict]] = {}
     for node in ast.walk(tree):
         if isinstance(node, ast.Dict):

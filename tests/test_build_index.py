@@ -259,3 +259,22 @@ def test_pages_avro_roundtrip_gated(spark, tmp_path):
         for r in read_pages(spark, p, fmt="avro").collect()
     }
     assert got == expect
+
+
+def test_empty_single_group_build(spark, tmp_path):
+    """n_groups=1 skips the emptiness probe, so an empty corpus goes
+    through build_group itself: it must commit a zeroed checkpoint row
+    and write zero docs."""
+    from myaku_spark.sources.pages import PAGES_SCHEMA
+
+    d = str(tmp_path / "idx")
+    empty = spark.createDataFrame([], PAGES_SCHEMA)
+    metrics = build_index(spark, empty, d, n_groups=1, now=NOW)
+    zeroed = {"group": 0, "status": "done", "docs": 0, "terms": 0,
+              "postings": 0, "bytes": 0, "sum_dl": 0}
+    assert len(metrics) == 1
+    assert {k: metrics[0][k] for k in zeroed} == zeroed
+    cp = spark.read.parquet(f"{d}/checkpoints").collect()
+    assert len(cp) == 1
+    assert {k: cp[0][k] for k in zeroed} == zeroed
+    assert spark.read.parquet(f"{d}/docs").count() == 0

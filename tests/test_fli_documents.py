@@ -132,12 +132,12 @@ def test_fli_documents_match_golden(fli_docs):
 def test_fli_documents_scores_match_golden(fli_docs):
     # article_quality_score, the tf modifier, and the three quality
     # scores from the golden docs (test_crawl.py carries all of them).
-    from golden import REF_TEST
     import ast
 
     # Pull the score fields out of the raw golden FLI dicts.
-    tree = ast.parse(open(REF_TEST, encoding="utf-8").read())
-    from golden import _dict_to_doc  # reuse the AST value extractor
+    from golden import _dict_to_doc, _ref_tree  # reuse the AST value extractor
+
+    tree = _ref_tree()
 
     want = {}
     for node in ast.walk(tree):

@@ -817,29 +817,6 @@ def test_pq_adc_matches_numpy_twin(spark):
         assert out[(qi, 1)][0] == qi or dist[qi] == dist[out[(qi, 1)][0]]
 
 
-def test_tpch_new_shapes_plans(spark):
-    """Plan-shape evidence for the round-3 TPC-H additions: Q4's EXISTS
-    must be a LEFT SEMI join (no row multiplication), Q10's top-k must
-    be TakeOrderedAndProject (no unpartitioned window), dims broadcast."""
-    from myaku_spark.driver_queries import (
-        q_tpch_order_priority,
-        q_tpch_returned_topk,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    p4 = (
-        q_tpch_order_priority(spark, sf)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "LeftSemi" in p4
-    df10 = q_tpch_returned_topk(spark, sf)
-    p10 = df10._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in p10
-    assert "BroadcastHashJoin" in p10
-    assert "Window" not in p10
-    assert df10.count() == 20
-
-
 def test_ann_multiprobe_recall(spark):
     import numpy as np
 
@@ -878,16 +855,6 @@ def test_ann_multiprobe_recall(spark):
     # must appear once per (q, vec)
     rows = ann_topk(cand, qs, k=1000, multiprobe=1).collect()
     assert len({(r.q_id, r.vec_id) for r in rows}) == len(rows)
-
-
-def test_tpch_q6_pushdown(spark):
-    from myaku_spark.driver_queries import q_tpch_filter_revenue
-
-    df = q_tpch_filter_revenue(spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "l_shipdate" in plan
-    assert "Join" not in plan
-    assert df.count() == 1
 
 
 def test_curation_funnel_randomized_twin(spark):

@@ -1,0 +1,35 @@
+"""Start-up contract: the session sizes itself from the machine, and
+importing the driver queries does no work."""
+
+import os
+import subprocess
+import sys
+
+from myaku_spark import session
+
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_default_driver_memory_is_at_most_half_of_ram(monkeypatch):
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    mem = session._driver_memory()
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    assert mem.endswith("m")
+    assert 0 < int(mem[:-1]) << 20 <= ram // 2
+
+
+def test_driver_memory_env_override(monkeypatch):
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
+    assert session._driver_memory() == "3g"
+
+
+def test_import_driver_queries_synthesizes_nothing():
+    # A fresh interpreter: the module may already be imported here.
+    code = (
+        "import myaku_spark.sources.pages as pages\n"
+        "def boom(*a, **k):\n"
+        "    raise AssertionError('synth_page called at import')\n"
+        "pages.synth_page = boom\n"
+        "import myaku_spark.driver_queries\n"
+    )
+    subprocess.run([sys.executable, "-c", code], cwd=REPO_DIR, check=True)
