@@ -166,7 +166,10 @@ def _joined_blocks(
     # query_id lets BOTH aggregations run on the same exchange
     # (hash(query_id) clusters (query_id, term) too); shuffle volume is
     # unchanged — collect_list partials ship every block range either
-    # way — so this is strictly one exchange cheaper at any scale.
+    # way. The price is skew: the first aggregation's parallelism is the
+    # number of distinct query ids, so a batch of one or a few
+    # conjunctive head-term queries funnels each query's block ranges
+    # through one reducer.
     meta = base.select("term", "n_postings", "min_doc", "max_doc").join(
         F.broadcast(qterms.select("query_id", "term")), "term"
     )

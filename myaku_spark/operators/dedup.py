@@ -27,10 +27,14 @@ directly with xxhash64 — no driver-side state at any scale.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from myaku_spark.operators.textstats import WS_SPLIT
+
+log = logging.getLogger(__name__)
 
 MH_PRIME = 2147483647
 
@@ -695,7 +699,12 @@ def repeated_substring_spans(
                     .sizeInBytes()
                 )
             )
-        except Exception:  # noqa: BLE001 — no _jdf (Connect) etc.
+        except Exception as e:  # noqa: BLE001 — no _jdf (Connect) etc.
+            log.warning(
+                "substring dedup gram_key=auto: plan statistics "
+                "unavailable (%r); hash grams",
+                e,
+            )
             est = SUBSTRING_HASH_GRAM_BYTES + 1  # unknown ⇒ shuffle-safe
         gram_key = (
             "hash" if est > SUBSTRING_HASH_GRAM_BYTES else "raw"

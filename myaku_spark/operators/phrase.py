@@ -21,10 +21,14 @@ window.
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 POSTINGS_SCHEMA = (
     "term string, doc_id long, tf long, starts array<int>, lens array<int>"
@@ -400,7 +404,12 @@ def _resolve_prune(
                     .sizeInBytes()
                 )
                 return size >= PRUNE_MIN_SEGMENT_BYTES
-            except Exception:  # pragma: no cover — non-py4j sessions
+            except Exception as e:  # non-py4j sessions have no _jdf
+                log.warning(
+                    "phrase prune=auto: plan statistics unavailable (%r); "
+                    "assume large and prune",
+                    e,
+                )
                 return True
         return True
     from myaku_spark.operators.batch_search import _segments_at_least

@@ -3,8 +3,9 @@
 The Spark re-architecture of the reference search path
 (/root/reference/myaku/datastore/index_search.py:207-248): K1 ranked
 posting scan becomes WAND over term-partition-pruned segments; K2
-pagination is a slice of the returned top-k; J1/J2 hydration is a
-broadcast join of the (≤ k·pages) result doc_ids against the docs table.
+pagination is a slice of the returned top-k; J1/J2 hydration is one
+pushed-down ``doc_id IN (…)`` scan of the docs table for the (≤ k·pages)
+result doc_ids.
 Queries are width-normalized with the same P6 function used at index
 time (symmetry contract, views.py:305-310).
 
@@ -118,12 +119,17 @@ class SegmentBlobStore:
         buckets = sorted({term_bucket(t, N_BUCKETS) for t in terms})
         return F.col("bucket").isin(buckets)
 
+    def term_segments(self, terms: list[str]) -> DataFrame:
+        """The segment rows of ``terms`` (bucket pruning + term pushdown)."""
+        return self._seg_df().filter(
+            self._bucket_filter(terms) & F.col("term").isin(terms)
+        )
+
     def ensure_terms(self, terms: list[str]) -> None:
         missing = [t for t in terms if t not in self.meta]
         if missing:
             rows = (
-                self._seg_df()
-                .filter(self._bucket_filter(missing) & F.col("term").isin(missing))
+                self.term_segments(missing)
                 .select(*_META_COLS)
                 .collect()
             )
@@ -322,6 +328,16 @@ class UserPageCache:
 
 
 class IndexSearcher:
+    """Interactive search over one catalog snapshot of an index.
+
+    Each component's parquet relation (segments, docs, term_stats) is
+    resolved once, on first use, and reused by every later request:
+    its file listing is the one taken at that first use. An
+    ``incremental_update`` appends ``group=G`` dirs in place, so a
+    searcher that has already served requests keeps answering from the
+    groups (and the tombstones, read at construction) it started with;
+    a new searcher sees the update."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -378,7 +394,7 @@ class IndexSearcher:
         else:
             self.deleted = None
         self._deleted_bc = None  # lazily created, cached per searcher
-        self._docs_path = self._paths["docs"]
+        self._relations: dict[str, DataFrame] = {}
         self.store = SegmentBlobStore(
             spark,
             self._paths["segments"],
@@ -407,11 +423,22 @@ class IndexSearcher:
             r = spark.read.parquet(self._paths["corpus_stats"]).collect()[0]
             self.n_docs, self.avgdl = int(r.n_docs), float(r.avgdl)
 
+    def _relation(self, component: str) -> DataFrame:
+        """``component``'s parquet relation, read on first use and then
+        reused: a fresh read pays a schema-footer job (and a listing job
+        past 32 partition dirs) before any data is scanned."""
+        df = self._relations.get(component)
+        if df is None:
+            df = self._relations[component] = self.spark.read.parquet(
+                self._paths[component]
+            )
+        return df
+
     def _scorer_factory(self, terms: list[str]):
         if self.mode == "myaku":
             return lambda term: MyakuScorer()
         tstats = (
-            self.spark.read.parquet(self._paths["term_stats"])
+            self._relation("term_stats")
             .filter(F.col("term").isin(terms))
             .groupBy("term")
             .agg(F.sum("df").alias("df"))
@@ -455,15 +482,12 @@ class IndexSearcher:
             decode_postings,
             phrase_match,
         )
-        from myaku_spark.operators.segments import read_term_segments
 
         if isinstance(query, str):
             terms = [normalize_char_width(t) for t in query.split()]
         else:
             terms = [normalize_char_width(t) for t in query]
-        segments = read_term_segments(
-            self.spark, self._paths["segments"], terms
-        )
+        segments = self.store.term_segments(terms)
         # one broadcast per SEARCHER, not per call (self.deleted is
         # immutable by the snapshot contract) — repeated interactive
         # phrase queries must not leak a broadcast each
@@ -544,15 +568,34 @@ class IndexSearcher:
         return wand_topk_or(cursors, k)
 
     def hydrate(self, results: list[tuple[float, int]]) -> DataFrame:
-        """J1: join result doc_ids back to the docs table (broadcast)."""
+        """J1: the docs rows of ``results`` (score, doc_id) plus their
+        ``score`` and 1-based ``rank``, in rank order.
+
+        One scan, one job: ``doc_id IN (ids)`` is pushed down to parquet,
+        and score/rank attach by the doc's position in a literal id
+        array — no local relation to broadcast, and a one-partition
+        sort instead of a range-partitioned ``orderBy`` (sample job +
+        shuffle)."""
         if not results:
             return self.spark.createDataFrame([], "doc_id long, score double")
-        rdf = self.spark.createDataFrame(
-            [(int(d), float(s), i + 1) for i, (s, d) in enumerate(results)],
-            ["doc_id", "score", "rank"],
+        ids = [int(d) for _, d in results]
+        rank = F.array_position(
+            F.array(*[F.lit(d) for d in ids]).cast("array<bigint>"),
+            F.col("doc_id"),
         )
-        docs = self.spark.read.parquet(self._docs_path)
-        return docs.join(F.broadcast(rdf), "doc_id").orderBy("rank")
+        scores = F.array(*[F.lit(float(s)) for s, _ in results])
+        docs = self._relation("docs")
+        return (
+            docs.filter(F.col("doc_id").isin(ids))
+            .select(
+                "doc_id",
+                *[c for c in docs.columns if c != "doc_id"],
+                F.element_at(scores, rank.cast("int")).alias("score"),
+                rank.alias("rank"),
+            )
+            .coalesce(1)
+            .sortWithinPartitions("rank")
+        )
 
     def search_page(
         self,

@@ -236,6 +236,45 @@ def test_incremental_after_compact_reaches_readers(spark, tmp_path):
     assert s2.search([delta_term], k=50) == hits
 
 
+def test_searcher_snapshot_across_incremental_update(spark, tmp_path):
+    # A searcher reads each component's file listing on first use: after
+    # an incremental_update appends a delta group in place, a searcher
+    # that already served search + hydrate + phrase answers exactly as
+    # before, and only a NEW searcher sees the delta docs.
+    d = str(tmp_path / "snap")
+    build_index(spark, synth_pages_df(spark, 20, partitions=2), d,
+                n_groups=1, now=NOW)
+    top_term = (
+        spark.read.parquet(f"{d}/term_stats")
+        .orderBy(F.desc("df"), "term")
+        .limit(1)
+        .collect()[0]
+        .term
+    )
+
+    def serve(s):
+        hits = s.search([top_term], k=50)
+        return (
+            hits,
+            [tuple(r) for r in s.hydrate(hits).collect()],
+            s.search_phrase([top_term], k=50),
+        )
+
+    old = IndexSearcher(spark, d, mode="myaku")
+    before = serve(old)
+    mod = spark.createDataFrame(_modified_pages(spark), PAGES_SCHEMA)
+    assert incremental_update(spark, d, mod, now=NOW)["docs"] == 5
+    assert serve(old) == before
+
+    hits, rows, phrase = serve(IndexSearcher(spark, d, mode="myaku"))
+    delta = {doc for _, doc in hits if (doc >> 40) >= 10_000}
+    assert delta
+    assert delta <= {r[0] for r in rows}
+    assert delta <= {doc for doc, _, _ in phrase}
+    tombs = load_tombstones(spark, d)
+    assert len(tombs) == 3 and not tombs & {doc for _, doc in hits}
+
+
 def test_docs_needing_rescore(spark):
     rows = [
         (1, dt.datetime(2026, 7, 26)),  # 6d old → crosses 7d boundary

@@ -709,3 +709,16 @@ def test_single_phrase_prune_true_forces_below_threshold(spark, monkeypatch):
     assert auto == want
     assert calls == []
     segs.unpersist()
+
+
+def test_resolve_prune_logs_stats_fallback(caplog):
+    # A source without py4j plan statistics (no ``_jdf``, as under Spark
+    # Connect) falls back to "assume large" — and says so in the log.
+    import logging
+
+    from myaku_spark.operators.phrase import _resolve_prune
+
+    with caplog.at_level(logging.WARNING, "myaku_spark.operators.phrase"):
+        assert _resolve_prune("auto", None, segments=object()) is True
+    msgs = [r.getMessage() for r in caplog.records]
+    assert any("assume large" in m and "_jdf" in m for m in msgs), msgs

@@ -104,6 +104,57 @@ def test_metadata_scan_excludes_blob_column(spark, head_idx):
     assert scan_lines and all("blob" not in ln for ln in scan_lines)
 
 
+def _broadcast_join_hydrate(spark, docs_path, results):
+    """The previous hydrate plan: a local result relation broadcast-
+    joined to a fresh docs read, ordered by a global sort."""
+    rdf = spark.createDataFrame(
+        [(int(d), float(s), i + 1) for i, (s, d) in enumerate(results)],
+        ["doc_id", "score", "rank"],
+    )
+    docs = spark.read.parquet(docs_path)
+    return docs.join(F.broadcast(rdf), "doc_id").orderBy("rank")
+
+
+def _jobs_run_by(spark, fn):
+    """Number of Spark jobs ``fn()`` starts, from the status tracker."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("hydrate-contract", "count hydrate jobs")
+    try:
+        before = set(tracker.getJobIdsForGroup("hydrate-contract"))
+        fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        after = set(tracker.getJobIdsForGroup("hydrate-contract"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return len(after - before)
+
+
+def test_hydrate_contract_one_scan(spark, head_idx):
+    s = IndexSearcher(spark, head_idx, mode="myaku")
+    results = s.search(["head"], k=7, combine="or")
+    assert len(results) == 7
+    got = s.hydrate(results)
+    want = _broadcast_join_hydrate(spark, f"{head_idx}/docs", results)
+    assert got.columns == want.columns
+    assert got.dtypes == want.dtypes
+    assert dict(got.dtypes)["score"] == "double"
+    assert dict(got.dtypes)["rank"] == "bigint"
+    rows = got.collect()
+    assert [tuple(r) for r in rows] == [tuple(r) for r in want.collect()]
+    assert [r.rank for r in rows] == list(range(1, 8))
+    assert [(r.score, r.doc_id) for r in rows] == results
+    # Empty results keep the old two-column schema.
+    empty = s.hydrate([])
+    assert empty.dtypes == [("doc_id", "bigint"), ("score", "double")]
+    assert empty.collect() == []
+    # Warm: the docs relation is resolved, so a request is one scan job.
+    page = s.search(["head"], k=3, combine="or")
+    assert _jobs_run_by(spark, lambda: s.hydrate(page).collect()) == 1
+
+
 def test_user_page_cache_semantics():
     t = [0.0]
     c = UserPageCache(clock=lambda: t[0])

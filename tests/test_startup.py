@@ -33,3 +33,35 @@ def test_import_driver_queries_synthesizes_nothing():
         "import myaku_spark.driver_queries\n"
     )
     subprocess.run([sys.executable, "-c", code], cwd=REPO_DIR, check=True)
+
+
+
+def test_every_package_definition_is_referenced():
+    # No top-level def/class in the package may be named only by its own
+    # definition: each name must occur somewhere else in the repo's .py
+    # files (a caller, a test, a registry entry, an import).
+    import ast
+    import re
+    from collections import Counter
+
+    sources = {}
+    for root, dirs, files in os.walk(REPO_DIR):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "__"))]
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(root, f), encoding="utf-8") as fh:
+                    sources[os.path.join(root, f)] = fh.read()
+    pkg = os.path.join(REPO_DIR, "myaku_spark") + os.sep
+    defs = Counter(
+        node.name
+        for path, src in sources.items()
+        if path.startswith(pkg)
+        for node in ast.parse(src).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+    )
+    assert len(defs) > 100  # the scan found the package
+    words = Counter(
+        w for src in sources.values() for w in re.findall(r"\w+", src)
+    )
+    dead = sorted(n for n, k in defs.items() if words[n] <= k)
+    assert dead == [], f"{len(dead)} of {len(defs)} definitions unreferenced"
