@@ -279,7 +279,7 @@ def main() -> None:
     wand_jobs = int(lazy.store.fetch_jobs)
 
     # Batched WAND: 128 queries in ONE Spark job (explode → segment join
-    # → per-query applyInPandas WAND) vs the serial driver loop above.
+    # → per-query applyInArrow WAND) vs the serial driver loop above.
     from myaku_spark.operators.batch_search import batch_search
 
     all_terms = [

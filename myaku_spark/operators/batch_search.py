@@ -3,13 +3,27 @@
 The interactive path (operators/search.py) runs WAND on the driver with
 lazy two-phase blob fetches — right for a single query, but a batch of
 N queries pays N serial driver round-trips. Here the whole batch is one
-shuffle + one applyInPandas pass:
+hash exchange on query_id, then one applyInArrow stage over it:
 
-    queries (query_id, terms[]) --explode--> (query_id, term)
+    queries (query_id, terms[]) --explode--> (query_id, n_terms, term)
         ⋈ term segments (bucket partition pruning + parquet term
           pushdown — only the batch's terms are scanned)
-        --groupBy(query_id)--> applyInPandas: block-max WAND per query
+        --[local master: repartition(defaultParallelism, query_id)]
+        --groupBy(query_id)--> applyInArrow: block-max WAND per query
         --> (query_id, rank, doc_id, score)
+
+A list of queries is built through Arrow as a LocalRelation, so
+broadcasting it runs a one-task JVM job instead of a job on the Python
+workers. Stage width: on a local master the exchange is a repartition
+BY NUMBER into ``defaultParallelism`` partitions (one WAND task per
+core), which AQE does not coalesce — a batch's blob shuffle is small
+(about 150 KB for 128 queries over 480 blocks), and coalescing by bytes
+would put every query in one Python task. The group-by reuses that
+partitioning, so no second exchange is added. On a cluster master the
+group-by's own exchange stays, sized by AQE and
+``spark.sql.shuffle.partitions``: ``defaultParallelism`` there is the
+cores registered at call time (few, under dynamic allocation), and the
+fixed width was measured only on a local master.
 
 Each query's candidate blocks ship to exactly one task, where the SAME
 WAND evaluator the driver uses (operators/wand.py — one code path, one
@@ -28,10 +42,13 @@ the shape the north rule's 10^12-doc batch evaluation needs.
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -42,6 +59,9 @@ from pyspark.sql.types import (
 )
 
 from myaku_spark.functions.widthnorm import normalize_char_width
+from myaku_spark.session import local_frame
+
+log = logging.getLogger(__name__)
 
 BATCH_RESULT_SCHEMA = StructType(
     [
@@ -51,6 +71,7 @@ BATCH_RESULT_SCHEMA = StructType(
         StructField("score", DoubleType()),
     ]
 )
+_RESULT_ARROW = to_arrow_schema(BATCH_RESULT_SCHEMA)
 
 _SEG_COLS = [
     "term", "group", "block_id", "n_postings", "min_doc", "max_doc",
@@ -59,9 +80,9 @@ _SEG_COLS = [
 
 
 def _make_runner(k: int, combine: str, mode: str, deleted_bc, bm25_stats):
-    """applyInPandas kernel: one query's joined segment rows → top-k."""
+    """applyInArrow kernel: one query's joined segment rows → top-k."""
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(table: pa.Table) -> pa.Table:
         from myaku_spark.operators.wand import (
             BM25Scorer,
             MyakuScorer,
@@ -71,31 +92,26 @@ def _make_runner(k: int, combine: str, mode: str, deleted_bc, bm25_stats):
             wand_topk_or,
         )
 
-        empty = pd.DataFrame(
-            {"query_id": pd.Series(dtype=object),
-             "rank": pd.Series(dtype="int32"),
-             "doc_id": pd.Series(dtype="int64"),
-             "score": pd.Series(dtype="float64")}
-        )
-        if len(pdf) == 0:
+        empty = _RESULT_ARROW.empty_table()
+        if table.num_rows == 0:
             return empty
-        qid = pdf["query_id"].iloc[0]
-        n_terms = int(pdf["n_terms"].iloc[0])
-        present = pdf["term"].nunique()
+        qid = table.column("query_id")[0].as_py()
+        n_terms = table.column("n_terms")[0].as_py()
+        present = len(table.column("term").unique())
         # Conjunctive contract: a term with no postings at all means no
         # document can match (search.py:321 parity).
         if combine == "and" and present < n_terms:
             return empty
         deleted = deleted_bc.value if deleted_bc is not None else None
-        if "del_ids" in pdf.columns:
+        if "del_ids" in table.column_names:
             # df-mode tombstones (delete vector beyond driver size):
             # per-block deleted ids arrived IN the rows via the binned
             # interval join (tombstone_block_patches) — union this
             # query's slices into the sorted array the cursors expect.
             arrs = [
                 np.asarray(a, dtype=np.int64)
-                for a in pdf["del_ids"]
-                if isinstance(a, (list, np.ndarray)) and len(a)
+                for a in table.column("del_ids").to_pylist()
+                if a
             ]
             if arrs:
                 deleted = np.unique(np.concatenate(arrs))
@@ -106,7 +122,7 @@ def _make_runner(k: int, combine: str, mode: str, deleted_bc, bm25_stats):
             scorer_for_term = lambda term: BM25Scorer(  # noqa: E731
                 idf=stats_for_bm25(n_docs, df_map.get(term, 0)), avgdl=avgdl
             )
-        rows = pdf[_SEG_COLS].to_dict("records")
+        rows = table.select(_SEG_COLS).to_pylist()
         cursors = list(
             cursors_from_segments(rows, scorer_for_term, deleted=deleted).values()
         )
@@ -117,13 +133,14 @@ def _make_runner(k: int, combine: str, mode: str, deleted_bc, bm25_stats):
         )
         if not top:
             return empty
-        return pd.DataFrame(
-            {
-                "query_id": [qid] * len(top),
-                "rank": np.arange(1, len(top) + 1, dtype="int32"),
-                "doc_id": np.array([d for _, d in top], dtype="int64"),
-                "score": np.array([s for s, _ in top], dtype="float64"),
-            }
+        return pa.table(
+            [
+                [qid] * len(top),
+                list(range(1, len(top) + 1)),
+                [d for _, d in top],
+                [s for s, _ in top],
+            ],
+            schema=_RESULT_ARROW,
         )
 
     return run
@@ -201,13 +218,15 @@ def _joined_blocks(
 PREFILTER_MIN_SEGMENT_BYTES = 256 * 1024 * 1024
 
 
-def _segments_at_least(path: str, threshold: int) -> bool:
-    """Early-exit local-dir size probe; non-local stores (no listable
-    dir) assume large — at real cluster scale the prefilter always pays."""
+def _segment_bytes(path: str, cap: int) -> int | None:
+    """Parquet bytes under a local segments dir, counted until they reach
+    ``cap`` (early exit). None for a non-local store (no listable dir):
+    callers assume large — at real cluster scale the prefilter always
+    pays."""
     import os
 
     if not os.path.isdir(path):
-        return True
+        return None
     total = 0
     for root, _dirs, files in os.walk(path):
         for f in files:
@@ -216,9 +235,25 @@ def _segments_at_least(path: str, threshold: int) -> bool:
                     total += os.path.getsize(os.path.join(root, f))
                 except OSError:
                     continue
-                if total >= threshold:
-                    return True
-    return False
+                if total >= cap:
+                    return total
+    return total
+
+
+def _auto_prefilter(segments_path: str) -> bool:
+    """``prefilter_and="auto"``: prefilter when the segment footprint
+    reaches PREFILTER_MIN_SEGMENT_BYTES; logs the decision and why."""
+    seen = _segment_bytes(segments_path, PREFILTER_MIN_SEGMENT_BYTES)
+    on = seen is None or seen >= PREFILTER_MIN_SEGMENT_BYTES
+    log.info(
+        "batch prefilter_and=auto -> %s: segment footprint %s against "
+        "PREFILTER_MIN_SEGMENT_BYTES=%d B",
+        on,
+        "unknown (not a local dir; assume large)" if seen is None
+        else f"{'>= ' if on else ''}{seen} B",
+        PREFILTER_MIN_SEGMENT_BYTES,
+    )
+    return on
 
 
 def batch_search(
@@ -245,9 +280,7 @@ def batch_search(
 
     _, paths = catalog.resolve(index_dir)
     if prefilter_and == "auto":
-        prefilter_and = _segments_at_least(
-            paths["segments"], PREFILTER_MIN_SEGMENT_BYTES
-        )
+        prefilter_and = _auto_prefilter(paths["segments"])
     terms: list[str] | None = None
     if not isinstance(queries, DataFrame):
         qlist = [
@@ -256,11 +289,13 @@ def batch_search(
         ]
         # List input: the distinct term set is already driver-local —
         # no Spark job needed to recover it (the DataFrame path below
-        # pays one collect).
+        # pays one collect). The Arrow-built frame is a LocalRelation:
+        # its broadcast reads it in one JVM task, not one Python-worker
+        # task per core.
         terms = sorted({t for _, ts in qlist for t in ts})
-        queries = spark.createDataFrame(
-            qlist, "query_id string, terms array<string>"
-        )
+        queries = local_frame(
+            spark, qlist, "query_id string, terms array<string>"
+        ).coalesce(1)
     qterms = queries.select(
         "query_id",
         F.size(F.array_distinct("terms")).alias("n_terms"),
@@ -271,7 +306,7 @@ def batch_search(
     if terms is None:
         terms = [r.term for r in qterms.select("term").distinct().collect()]
     if not terms:
-        return spark.createDataFrame([], BATCH_RESULT_SCHEMA)
+        return local_frame(spark, [], BATCH_RESULT_SCHEMA)
     joined = _joined_blocks(
         spark, paths, qterms, terms, combine, prefilter_and
     )
@@ -319,7 +354,11 @@ def batch_search(
             float(r.avgdl),
             {x.term: int(x.df) for x in df_rows},
         )
-    return joined.groupBy("query_id").applyInPandas(
+    sc = spark.sparkContext
+    if sc.master.startswith("local"):
+        # One WAND task per core: see the module docstring.
+        joined = joined.repartition(sc.defaultParallelism, "query_id")
+    return joined.groupBy("query_id").applyInArrow(
         _make_runner(k, combine, mode, deleted_bc, bm25_stats),
         BATCH_RESULT_SCHEMA,
     )

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from myaku_spark.session import local_frame
+
 
 def assign_doc_ids(
     df: DataFrame,
@@ -70,7 +72,8 @@ def assign_doc_ids(
         offsets[k] = acc
         acc += counts[k]
     offs_df = F.broadcast(
-        df.sparkSession.createDataFrame(
+        local_frame(
+            df.sparkSession,
             [(int(k), int(v)) for k, v in offsets.items()],
             "_bucket int, _off long",
         )

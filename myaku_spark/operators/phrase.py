@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from myaku_spark.session import local_frame
+
 log = logging.getLogger(__name__)
 
 POSTINGS_SCHEMA = (
@@ -412,9 +414,10 @@ def _resolve_prune(
                 )
                 return True
         return True
-    from myaku_spark.operators.batch_search import _segments_at_least
+    from myaku_spark.operators.batch_search import _segment_bytes
 
-    return _segments_at_least(segments_path, PRUNE_MIN_SEGMENT_BYTES)
+    seen = _segment_bytes(segments_path, PRUNE_MIN_SEGMENT_BYTES)
+    return seen is None or seen >= PRUNE_MIN_SEGMENT_BYTES
 
 
 def phrase_search(
@@ -712,7 +715,8 @@ def batch_phrase_search(
     postings = decode_postings(segments, deleted=deleted_bc)
     if tombs_df is not None:
         postings = postings.join(tombs_df, "doc_id", "left_anti")
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(str(qid), [str(t) for t in terms]) for qid, terms in queries],
         "query_id string, terms array<string>",
     )

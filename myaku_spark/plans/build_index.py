@@ -38,6 +38,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from myaku_spark.functions.html_extract import extract_text_udf
 from myaku_spark.functions.textfns import alnum_count_udf, text_hash_col
@@ -48,6 +49,7 @@ from myaku_spark.operators.scoring import (
     tf_score_mod_col,
 )
 from myaku_spark.operators.segments import build_segments, write_segments
+from myaku_spark.session import local_frame
 
 MAX_DOC_LEN = 65536  # MAX_ALLOWED_ARTICLE_LEN, index_build.py:48
 
@@ -301,6 +303,39 @@ def build_group(
     }
 
 
+# A checkpoint row's columns, in the sorted-key order and with the types
+# that dict-row inference gave them when rows were pickled: every build,
+# update and copy appends to the same ``checkpoints`` dir.
+CHECKPOINT_SCHEMA = StructType(
+    [
+        StructField(c, StringType() if c in ("run_id", "status") else LongType())
+        for c in ("bytes", "docs", "group", "postings", "run_id", "status",
+                  "sum_dl", "terms", "wall_ms")
+    ]
+)
+
+
+def append_checkpoint(spark: SparkSession, index_dir: str, row: dict) -> None:
+    """Append one checkpoint row, stamped with ``completed_ts``."""
+    local_frame(
+        spark, [tuple(row[f.name] for f in CHECKPOINT_SCHEMA.fields)],
+        CHECKPOINT_SCHEMA,
+    ).withColumn("completed_ts", F.current_timestamp()).write.mode(
+        "append"
+    ).parquet(f"{index_dir}/checkpoints")
+
+
+def write_build_meta(
+    spark: SparkSession, index_dir: str, n_groups: int, now: str, mode: str,
+    run_id: str,
+) -> None:
+    """Persist the build config read by the incremental and rescore plans."""
+    local_frame(
+        spark, [(int(n_groups), str(now), mode, run_id)],
+        "n_groups long, now string, mode string, run_id string",
+    ).write.mode("overwrite").parquet(f"{index_dir}/build_meta")
+
+
 def completed_groups(spark: SparkSession, index_dir: str) -> set[int]:
     from myaku_spark.plans import catalog
 
@@ -329,11 +364,7 @@ def build_index(
 ) -> list[dict]:
     """Full resumable build. Returns per-group metrics (also persisted)."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    # Persist build config (read by incremental/rescore plans).
-    spark.createDataFrame(
-        [(n_groups, str(now), mode, run_id)],
-        ["n_groups", "now", "mode", "run_id"],
-    ).write.mode("overwrite").parquet(f"{index_dir}/build_meta")
+    write_build_meta(spark, index_dir, n_groups, now, mode, run_id)
     done = completed_groups(spark, index_dir)
     # Stage 0 (corpus-wide, checkpointed): extract + dedupe ONCE over the
     # whole pages input, so content dedup is db-wide first-writer-wins
@@ -375,9 +406,7 @@ def build_index(
                 "sum_dl": 0, "wall_ms": 0,
             }
             metrics.append(row)
-            spark.createDataFrame([row]).withColumn(
-                "completed_ts", F.current_timestamp()
-            ).write.mode("append").parquet(f"{index_dir}/checkpoints")
+            append_checkpoint(spark, index_dir, row)
             continue
         row = build_group(
             spark,
@@ -397,9 +426,7 @@ def build_index(
             paths=paths,
         )
         metrics.append(row)
-        spark.createDataFrame([row]).withColumn(
-            "completed_ts", F.current_timestamp()
-        ).write.mode("append").parquet(f"{index_dir}/checkpoints")
+        append_checkpoint(spark, index_dir, row)
     # Refresh corpus stats from checkpoints (cheap, tiny).
     cp = spark.read.parquet(f"{index_dir}/checkpoints")
     cp.groupBy().agg(

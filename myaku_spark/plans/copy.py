@@ -72,6 +72,7 @@ def copy_index(
     Returns {'copied', 'skipped', 'collisions', 'group'}."""
     from myaku_spark.operators.segments import build_segments, write_segments
     from myaku_spark.plans import catalog
+    from myaku_spark.plans.build_index import append_checkpoint
     from myaku_spark.plans.incremental import load_tombstones
 
     src_meta = spark.read.parquet(f"{src_dir}/build_meta").collect()[0]
@@ -212,9 +213,7 @@ def copy_index(
         "sum_dl": 0,
         "wall_ms": 0,
     }
-    spark.createDataFrame([row]).withColumn(
-        "completed_ts", F.current_timestamp()
-    ).write.mode("append").parquet(f"{dst_dir}/checkpoints")
+    append_checkpoint(spark, dst_dir, row)
     to_copy.unpersist()
     joined_docs.unpersist()
     return {

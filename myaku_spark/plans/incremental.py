@@ -45,7 +45,12 @@ from myaku_spark.operators.scoring import (
     RECENCY_BUCKETS,
     recency_score_col,
 )
-from myaku_spark.plans.build_index import build_group, extract_and_dedupe
+from myaku_spark.plans.build_index import (
+    append_checkpoint,
+    build_group,
+    extract_and_dedupe,
+    write_build_meta,
+)
 
 DELTA_GROUP_BASE = 10_000  # delta groups live above base group ids
 
@@ -147,9 +152,7 @@ def incremental_update(
         paths=paths,
     )
     row["status"] = "incremental"
-    spark.createDataFrame([row]).withColumn(
-        "completed_ts", F.current_timestamp()
-    ).write.mode("append").parquet(f"{index_dir}/checkpoints")
+    append_checkpoint(spark, index_dir, row)
     tomb.write.mode("append").parquet(paths["tombstones"])
     # Refresh corpus stats from LIVE docs (docs minus tombstones), the
     # same way compact_index does — summing checkpoint rows would keep
@@ -481,11 +484,10 @@ def rescore_index(
                 .parquet(f"{index_dir}/{seg_rel}")
             )
     catalog.publish(index_dir, entry)
-    spark.createDataFrame(
-        [(int(meta.n_groups), str(new_now), meta.mode,
-          f"rescore-{int(time.time())}")],
-        ["n_groups", "now", "mode", "run_id"],
-    ).write.mode("overwrite").parquet(f"{index_dir}/build_meta")
+    write_build_meta(
+        spark, index_dir, meta.n_groups, new_now, meta.mode,
+        f"rescore-{int(time.time())}",
+    )
     if gc_old:
         keep = set()
         for e in (entry, cat):

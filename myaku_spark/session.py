@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _driver_memory() -> str:
@@ -74,7 +74,18 @@ def get_spark(
         or "--master" in os.environ.get("PYSPARK_SUBMIT_ARGS", "")
     )
     if not under_spark_submit:
-        builder = builder.master(f"local[{parallelism}]")
+        # Partition discovery lists a level of more than 32 dirs (Spark's
+        # parallelPartitionDiscovery.threshold) with a Spark job, and a
+        # segments dir has 64 ``bucket=`` dirs per group, so at the
+        # default every read of it runs a 64-task listing job. On a local
+        # master those tasks list the same disk from the same cores, with
+        # scheduling on top: listing serially on the driver is faster.
+        # 1024 is above any level of the index layout. A submitted master
+        # keeps Spark's default (or its own --conf), where the listing
+        # fans out to remote storage.
+        builder = builder.master(f"local[{parallelism}]").config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "1024"
+        )
     builder = (
         builder
         .config("spark.sql.shuffle.partitions", str(max(parallelism, 8)))
@@ -143,3 +154,29 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A driver-local DataFrame that plans as a LocalRelation.
+
+    ``spark.createDataFrame(<list>)`` parallelizes pickled rows into a
+    Python RDD, so whatever consumes the frame (a broadcast, a write)
+    runs its tasks through the Python workers, one per core. An Arrow
+    table below ``spark.sql.execution.arrow.localRelationThreshold``
+    becomes a LocalRelation instead: its rows already sit in the JVM, no
+    Python worker runs, and a one-row write is one task and one file.
+
+    ``rows``: tuples in ``schema`` field order. ``schema``: a StructType
+    or a DDL string; it fixes the frame's column names, order and types.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [list(c) for c in cols], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)

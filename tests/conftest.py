@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -19,3 +20,38 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def jobs_run_by(spark):
+    """``jobs_run_by(fn)`` runs ``fn()`` and returns the Spark jobs it
+    started, from the status tracker: {job_id: [task count of each stage
+    that ran]}. A stage skipped because its shuffle output is reused ran
+    no task and is left out."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    groups = itertools.count()
+
+    def run(fn) -> dict[int, list[int]]:
+        group = f"jobs-run-by-{next(groups)}"
+        sc.setJobGroup(group, "count the jobs of one call")
+        try:
+            fn()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            ids = sorted(tracker.getJobIdsForGroup(group))
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        out = {}
+        for j in ids:
+            stages = [
+                tracker.getStageInfo(s) for s in tracker.getJobInfo(j).stageIds
+            ]
+            out[j] = [
+                st.numTasks for st in stages
+                if st is not None and st.numCompletedTasks + st.numFailedTasks
+            ]
+        return out
+
+    return run

@@ -164,3 +164,62 @@ def test_conjunctive_block_prefilter(spark, bidx):
         spark, paths, qterms, [head, rare], "and", False
     ).count()
     assert n_on < n_off  # head-term blocks outside the rare ranges dropped
+
+
+def test_batch_plan_contract(spark, bidx, jobs_run_by):
+    # List input: the query frame is a LocalRelation (no scan of pickled
+    # rows, whose broadcast ran a job on the Python workers), and the WAND
+    # stage runs one task per core behind a repartition by number, which
+    # AQE does not coalesce into one task.
+    import re
+
+    terms = _terms_by_df(spark, bidx)
+    queries = [(f"q{i}", [terms[i], terms[i + 3]]) for i in range(16)]
+    width = spark.sparkContext.defaultParallelism
+    out = batch_search(spark, bidx, queries, k=10, combine="and")
+    rows = []
+    jobs = jobs_run_by(lambda: rows.extend(out.collect()))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    exchanges = re.findall(
+        r"Exchange hashpartitioning\(query_id#\d+, (\d+)\)", plan
+    )
+    # (The string holds the final and the initial plan.)
+    assert exchanges and set(exchanges) == {str(width)}, plan
+    # The last job runs the WAND stage alone (its input shuffle ran in
+    # an earlier job), one task per partition.
+    assert jobs[max(jobs)] == [width], jobs
+    # Same results as the per-query driver WAND.
+    got = {}
+    for r in rows:
+        got.setdefault(r.query_id, []).append((r.rank, r.score, r.doc_id))
+    s = IndexSearcher(spark, bidx, mode="myaku")
+    assert any(got.values())
+    for qid, qterms in queries:
+        expect = s.search(qterms, k=10, combine="and")
+        batch = [(s_, d_) for _, s_, d_ in sorted(got.get(qid, []))]
+        assert batch == expect, qid
+
+
+def test_batch_auto_prefilter_is_logged(spark, bidx, caplog):
+    import logging
+
+    from myaku_spark.operators.batch_search import (
+        PREFILTER_MIN_SEGMENT_BYTES,
+        _auto_prefilter,
+    )
+
+    terms = _terms_by_df(spark, bidx)
+    with caplog.at_level(logging.INFO, "myaku_spark.operators.batch_search"):
+        batch_search(spark, bidx, [("q", [terms[0]])], k=10, combine="and")
+        # A store that is not a local dir cannot be measured: assume large.
+        assert _auto_prefilter("s3a://bucket/idx/segments") is True
+    msgs = [r.getMessage() for r in caplog.records]
+    assert len(msgs) == 2, msgs
+    small, remote = msgs
+    assert small.startswith("batch prefilter_and=auto -> False"), small
+    footprint = int(small.split("segment footprint ")[1].split(" B")[0])
+    assert 0 < footprint < PREFILTER_MIN_SEGMENT_BYTES
+    assert f"PREFILTER_MIN_SEGMENT_BYTES={PREFILTER_MIN_SEGMENT_BYTES}" in small
+    assert remote.startswith("batch prefilter_and=auto -> True"), remote
+    assert "assume large" in remote

@@ -46,6 +46,18 @@ def test_checkpoints_and_metrics(spark, index_dir):
     assert all(r.terms > 0 and r.bytes > 0 and r.wall_ms >= 0 for r in rows)
     n_docs = spark.read.parquet(f"{index_dir}/docs").count()
     assert sum(r.docs for r in rows) == n_docs
+    # Builds, updates and copies append to one checkpoints dir, so every
+    # writer keeps the column order and types of the rows already there.
+    assert cp.dtypes == [
+        ("bytes", "bigint"), ("docs", "bigint"), ("group", "bigint"),
+        ("postings", "bigint"), ("run_id", "string"), ("status", "string"),
+        ("sum_dl", "bigint"), ("terms", "bigint"), ("wall_ms", "bigint"),
+        ("completed_ts", "timestamp"),
+    ]
+    assert spark.read.parquet(f"{index_dir}/build_meta").dtypes == [
+        ("n_groups", "bigint"), ("now", "string"), ("mode", "string"),
+        ("run_id", "string"),
+    ]
 
 
 def test_resume_skips_completed_groups(spark, index_dir):

@@ -115,24 +115,7 @@ def _broadcast_join_hydrate(spark, docs_path, results):
     return docs.join(F.broadcast(rdf), "doc_id").orderBy("rank")
 
 
-def _jobs_run_by(spark, fn):
-    """Number of Spark jobs ``fn()`` starts, from the status tracker."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    sc.setJobGroup("hydrate-contract", "count hydrate jobs")
-    try:
-        before = set(tracker.getJobIdsForGroup("hydrate-contract"))
-        fn()
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        after = set(tracker.getJobIdsForGroup("hydrate-contract"))
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    return len(after - before)
-
-
-def test_hydrate_contract_one_scan(spark, head_idx):
+def test_hydrate_contract_one_scan(spark, head_idx, jobs_run_by):
     s = IndexSearcher(spark, head_idx, mode="myaku")
     results = s.search(["head"], k=7, combine="or")
     assert len(results) == 7
@@ -152,7 +135,7 @@ def test_hydrate_contract_one_scan(spark, head_idx):
     assert empty.collect() == []
     # Warm: the docs relation is resolved, so a request is one scan job.
     page = s.search(["head"], k=3, combine="or")
-    assert _jobs_run_by(spark, lambda: s.hydrate(page).collect()) == 1
+    assert len(jobs_run_by(lambda: s.hydrate(page).collect())) == 1
 
 
 def test_user_page_cache_semantics():

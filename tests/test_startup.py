@@ -1,5 +1,6 @@
-"""Start-up contract: the session sizes itself from the machine, and
-importing the driver queries does no work."""
+"""Start-up contract: the session sizes itself from the machine, a local
+session lists partition dirs on the driver, and importing the driver
+queries does no work."""
 
 import os
 import subprocess
@@ -65,3 +66,41 @@ def test_every_package_definition_is_referenced():
     )
     dead = sorted(n for n, k in defs.items() if words[n] <= k)
     assert dead == [], f"{len(dead)} of {len(defs)} definitions unreferenced"
+
+
+def test_local_session_lists_segments_on_the_driver(
+    spark, tmp_path, jobs_run_by
+):
+    # A segments dir holds up to N_BUCKETS ``bucket=`` dirs per group,
+    # more than Spark's default parallel partition discovery threshold
+    # (32). On a local master, reading it must not submit a listing job
+    # (one task per dir).
+    import glob
+
+    from pyspark.sql import functions as F
+
+    from myaku_spark.operators.segments import N_BUCKETS
+    from myaku_spark.plans import catalog
+    from myaku_spark.plans.build_index import build_index
+    from myaku_spark.sources.pages import synth_pages_df
+
+    assert spark.sparkContext.master.startswith("local")
+    d = str(tmp_path / "idx")
+    build_index(
+        spark, synth_pages_df(spark, 40, partitions=4), d, n_groups=1,
+        head_df_threshold=16, block_doc_range=16,
+    )
+    seg = catalog.resolve(d)[1]["segments"]
+    dirs = sorted(glob.glob(f"{seg}/group=*/bucket=*"))
+    assert len(dirs) > 32
+    bucket = int(dirs[0].rsplit("=", 1)[1])
+    rows = []
+    jobs = jobs_run_by(
+        lambda: rows.extend(
+            spark.read.parquet(seg).filter(F.col("bucket") == bucket)
+            .select("term").collect()
+        )
+    )
+    assert rows
+    widest = max((n for tasks in jobs.values() for n in tasks), default=0)
+    assert widest < len(dirs) <= N_BUCKETS, jobs
