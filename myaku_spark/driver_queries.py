@@ -835,13 +835,11 @@ def q_ann_lsh_topk(spark, sf_dir):
 
 
 def q_embedding_near_dup(spark, sf_dir):
-    """Embedding near-duplicate pairs, DuckDB-oracled gate twin of
-    similarity.embedding_near_dup_pairs: LSH-bucket self-join (never
-    all-pairs) + exact cosine verify ≥ threshold. Hyperplanes are the
-    md5 cross-engine hash (as in ann_lsh_topk); ×2-scaled twins
-    (vec_id+100000, cosine exactly 1.0 with their source) seed
-    guaranteed near-dups so the gate is non-vacuous. Production
-    xxhash64 planes are pytest-covered (test_embedding_near_dups)."""
+    """Embedding near-duplicate pairs, DuckDB-oracled: LSH-bucket
+    self-join (never all-pairs) + exact cosine verify ≥ threshold.
+    Hyperplanes are the md5 cross-engine hash (as in ann_lsh_topk);
+    ×2-scaled twins (vec_id+100000, cosine exactly 1.0 with their
+    source) seed guaranteed near-dups so the gate is non-vacuous."""
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     twins = emb.filter(F.col("vec_id") < 20).select(
         (F.col("vec_id") + 100_000).alias("vec_id"),

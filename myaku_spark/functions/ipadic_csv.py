@@ -89,10 +89,6 @@ class IpadicRow(NamedTuple):
         return "-".join(self.pos)
 
 
-def _none_star(v: str) -> str | None:
-    return None if v in ("*", "") else v
-
-
 def default_fragment_bytes() -> bytes:
     """Packaged fragment bytes, zip-safe: executors importing
     myaku_spark from a ``--py-files`` zip (scripts/run_search.py) have a
@@ -144,8 +140,9 @@ def parse_ipadic_csv(
         if text is None:
             raise ValueError(f"{path}: undecodable as utf-8 or euc_jp")
         # Hot loop: a real NEologd is millions of rows — bind the append
-        # and drop per-field helper calls (the _none_star function call
-        # alone was ~10% of parse time at 300k calls per 76k rows).
+        # and inline the per-field '*'/blank → None mapping (a helper
+        # call per field was ~10% of parse time at 300k calls per 76k
+        # rows).
         _append = rows.append
         _row = IpadicRow
         _drop = ("*", "")
@@ -190,14 +187,6 @@ def parse_ipadic_csv(
     return rows
 
 
-def _is_suffix(row: IpadicRow) -> bool:
-    return row.pos[: len(_SUFFIX_POS_PREFIX)] == _SUFFIX_POS_PREFIX
-
-
-def _is_bound_stem(row: IpadicRow) -> bool:
-    return row.conj_form == _GARU_CONJ_FORM
-
-
 def word_layer_from_rows(rows: list[IpadicRow]):
     """Compile parsed rows into (surface_map, conj_map).
 
@@ -216,10 +205,10 @@ def word_layer_from_rows(rows: list[IpadicRow]):
     stems: list[tuple[tuple[int, int], IpadicRow]] = []
     suffixes: list[tuple[tuple[int, int], IpadicRow]] = []
     conj_map: dict[tuple, tuple] = {}
-    # Hot loop (millions of rows on a real NEologd): inline the
-    # _is_bound_stem/_is_suffix predicates and the pos_joined property
-    # — per-row function/property-call overhead measurably dominated
-    # the compile on the 76k-row bench dictionary.
+    # Hot loop (millions of rows on a real NEologd): the bound-stem and
+    # suffix predicates and the pos_joined property are inlined —
+    # per-row function/property-call overhead measurably dominated the
+    # compile on the 76k-row bench dictionary.
     _setdefault = conj_map.setdefault
     _n_sufpre = len(_SUFFIX_POS_PREFIX)
     for order, row in enumerate(rows):

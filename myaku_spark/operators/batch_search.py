@@ -59,6 +59,7 @@ from pyspark.sql.types import (
 )
 
 from myaku_spark.functions.widthnorm import normalize_char_width
+from myaku_spark.operators.segments import read_term_segments
 from myaku_spark.session import local_frame
 
 log = logging.getLogger(__name__)
@@ -166,13 +167,7 @@ def _joined_blocks(
     the intersection. The rare ranges come off a metadata-only scan
     (blob column pruned) and broadcast back; results are provably
     unchanged (tests assert prefiltered == unfiltered == exhaustive)."""
-    from myaku_spark.functions.xxh import term_bucket
-    from myaku_spark.operators.segments import N_BUCKETS
-
-    buckets = sorted({term_bucket(t, N_BUCKETS) for t in terms})
-    base = spark.read.parquet(paths["segments"]).filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-    )
+    base = read_term_segments(spark, paths["segments"], terms)
     joined = base.select(*_SEG_COLS).join(F.broadcast(qterms), "term")
     if combine != "and" or not prefilter_and:
         return joined
@@ -323,19 +318,10 @@ def batch_search(
         # block), so the WAND kernels see exactly the deletes their
         # blocks can contain — the vector itself never leaves the
         # executors.
-        from myaku_spark.functions.xxh import term_bucket
-        from myaku_spark.operators.segments import N_BUCKETS
         from myaku_spark.plans.incremental import tombstone_block_patches
 
-        buckets = sorted({term_bucket(t, N_BUCKETS) for t in terms})
-        seg_meta = (
-            spark.read.parquet(paths["segments"])
-            .filter(
-                F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-            )
-            .select(
-                "group", "bucket", "term", "block_id", "min_doc", "max_doc"
-            )
+        seg_meta = read_term_segments(spark, paths["segments"], terms).select(
+            "group", "bucket", "term", "block_id", "min_doc", "max_doc"
         )
         patches = tombstone_block_patches(seg_meta, tpayload).drop("bucket")
         joined = joined.join(patches, ["group", "term", "block_id"], "left")

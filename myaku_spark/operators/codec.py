@@ -1,16 +1,22 @@
-"""Posting-list codec: delta + varint (LEB128) compression, numpy-vectorized.
+"""Posting-block codec: the one module that knows the block byte layout.
 
-Upgrades the reference's fixed-width little-endian cache codec
-(/root/reference/myaku/datastore/serialize.py:100-117 — 12-byte ids,
-2-byte scores, 2+1-byte positions, zlib(1) outer) to the north-rule
-layout: sorted docID deltas + varint, tf and quality-score streams,
-flattened (start,len) position varints, and per-block max-impact
-metadata carried alongside (segments.py). zlib level 1 is applied as the
-outer layer exactly as the reference does (serialize.py:16-17).
+A block is a zlib (level 1) frame over ONE LEB128 varint stream:
 
-Encoding/decoding is vectorized with numpy (no per-value Python in the
-hot loop beyond byte assembly) and runs inside Arrow-batched pandas
-UDFs; blobs live in parquet binary columns.
+    [n, doc-id deltas (n), tfs (n), 1, zigzag payloads (n),
+     has_positions, (start delta, len) pairs (sum(tf) of them)]
+
+Doc ids delta-encode within the block and position starts within each
+posting, so every head value is absolute. The two flags are single
+0x00/0x01 bytes, themselves valid 1-byte varints, which is what lets a
+batch of blocks be one value array cut at per-block offsets. The layout
+upgrades the reference's fixed-width cache codec (12-byte ids, 2-byte
+scores, 2+1-byte positions, zlib(1) outer; myaku/datastore/
+serialize.py:16-17,100-117); block-max metadata lives beside the blob
+in plain segment columns (segments.py).
+
+Encode and decode work on whole batches of blocks in numpy: callers
+pass and receive flat per-posting arrays plus per-block offsets, and
+per block the only Python work is one zlib call.
 """
 
 from __future__ import annotations
@@ -20,6 +26,7 @@ import zlib
 import numpy as np
 
 _ZLIB_LEVEL = 1
+_META_KEYS = ("n_postings", "min_doc", "max_doc", "max_tf", "max_score", "sum_tf")
 
 
 def _varint_bytes_and_lengths(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -51,16 +58,7 @@ def _varint_bytes_and_lengths(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return out, bl
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-encode a uint64 array (vectorized byte-plane assembly)."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    out, _ = _varint_bytes_and_lengths(v)
-    return out.tobytes()
-
-
-def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
+def _varint_decode(buf: bytes) -> np.ndarray:
     """Decode LEB128 bytes to a uint64 array (vectorized)."""
     b = np.frombuffer(buf, dtype=np.uint8)
     if b.size == 0:
@@ -77,103 +75,7 @@ def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
         values[sel] |= (b[idx] & np.uint64(0x7F)).astype(np.uint64) << np.uint64(
             7 * k
         )
-    if count is not None:
-        assert values.size == count, (values.size, count)
     return values
-
-
-def delta_encode(sorted_ids: np.ndarray) -> np.ndarray:
-    a = np.asarray(sorted_ids, dtype=np.uint64)
-    if a.size == 0:
-        return a
-    out = np.empty_like(a)
-    out[0] = a[0]
-    out[1:] = a[1:] - a[:-1]
-    return out
-
-
-def delta_decode(deltas: np.ndarray) -> np.ndarray:
-    return np.cumsum(np.asarray(deltas, dtype=np.uint64), dtype=np.uint64)
-
-
-def encode_block(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    scores: np.ndarray | None = None,
-    positions: list | None = None,
-) -> bytes:
-    """Encode one posting block (doc_ids MUST be sorted ascending).
-
-    Layout (before zlib): varint n; varint doc-deltas; varint tfs;
-    varint zig-zagged scores (optional flag byte); varint flattened
-    positions (start deltas within doc, len) when present.
-    """
-    doc_ids = np.asarray(doc_ids, dtype=np.uint64)
-    n = doc_ids.size
-    parts = [varint_encode(np.array([n], dtype=np.uint64))]
-    parts.append(varint_encode(delta_encode(doc_ids)))
-    parts.append(varint_encode(np.asarray(tfs, dtype=np.uint64)))
-    if scores is not None:
-        s = np.asarray(scores, dtype=np.int64)
-        zz = ((s << 1) ^ (s >> 63)).astype(np.uint64)  # zigzag
-        parts.append(b"\x01" + varint_encode(zz))
-    else:
-        parts.append(b"\x00")
-    if positions is not None:
-        flat = []
-        for plist in positions:
-            prev = 0
-            for start, ln in plist:
-                flat.append(start - prev)
-                flat.append(ln)
-                prev = start
-        parts.append(b"\x01" + varint_encode(np.array(flat, dtype=np.uint64)))
-    else:
-        parts.append(b"\x00")
-    return zlib.compress(b"".join(parts), _ZLIB_LEVEL)
-
-
-def encode_block_arrays(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    payload: np.ndarray | None,
-    flat_starts: np.ndarray | None = None,
-    flat_lens: np.ndarray | None = None,
-) -> bytes:
-    """Vectorized twin of encode_block: positions arrive pre-flattened as
-    (flat_starts, flat_lens) aligned with per-doc counts = tfs. Start
-    offsets are delta-encoded within each doc without a Python loop."""
-    doc_ids = np.asarray(doc_ids, dtype=np.uint64)
-    tfs = np.asarray(tfs, dtype=np.uint64)
-    n = doc_ids.size
-    parts = [varint_encode(np.array([n], dtype=np.uint64))]
-    parts.append(varint_encode(delta_encode(doc_ids)))
-    parts.append(varint_encode(tfs))
-    if payload is not None:
-        s = np.asarray(payload, dtype=np.int64)
-        zz = ((s << 1) ^ (s >> 63)).astype(np.uint64)
-        parts.append(b"\x01" + varint_encode(zz))
-    else:
-        parts.append(b"\x00")
-    if flat_starts is not None and n > 0:
-        starts = np.asarray(flat_starts, dtype=np.int64)
-        lens = np.asarray(flat_lens, dtype=np.uint64)
-        deltas = starts.copy()
-        deltas[1:] -= starts[:-1]
-        # Reset deltas at each doc's first position.
-        doc_heads = np.zeros(starts.size, dtype=bool)
-        head_idx = np.concatenate(
-            ([0], np.cumsum(tfs.astype(np.int64))[:-1])
-        )
-        doc_heads[head_idx] = True
-        deltas[doc_heads] = starts[doc_heads]
-        inter = np.empty(starts.size * 2, dtype=np.uint64)
-        inter[0::2] = deltas.astype(np.uint64)
-        inter[1::2] = lens
-        parts.append(b"\x01" + varint_encode(inter))
-    else:
-        parts.append(b"\x00")
-    return zlib.compress(b"".join(parts), _ZLIB_LEVEL)
 
 
 def encode_blocks_batch(
@@ -185,55 +87,59 @@ def encode_blocks_batch(
     pos_starts: np.ndarray | None = None,
     pos_lens: np.ndarray | None = None,
 ) -> tuple[list[bytes], dict[str, np.ndarray]]:
-    """Encode MANY posting blocks in one vectorized pass.
+    """Encode a batch of posting blocks in one vectorized pass.
 
-    Byte-identical to calling :func:`encode_block_arrays` per block
-    (parity-tested), but the varint byte-plane assembly runs ONCE over
-    the concatenation of every block's value stream instead of ~10
-    numpy kernel launches per block — at small block sizes (serving
-    tier, range-blocked head terms) per-block fixed cost dominates the
-    encode stage, and this removes it. Per block the only remaining
-    Python work is one ``zlib.compress`` over a memoryview slice.
-
-    The trick making one pass possible: the pre-zlib layout of a block
-    is a single varint stream ``[n, doc-deltas.., tfs.., 1, zigzag
-    scores.., flag, (start-delta, len)..]`` — the flag bytes are
-    themselves valid 1-byte varints — so the whole batch is one value
-    array with per-block boundaries, and per-value byte lengths give
-    each block's byte extent.
+    Every block's values go into one array, the varint byte plane is
+    built once over it, and per-value byte lengths give each block's
+    byte extent; per block only one ``zlib.compress`` over a memoryview
+    slice remains.
 
     Args:
         doc_off: int64 ``[B+1]`` offsets into the flat value arrays
-            (rebased to 0; blocks must be contiguous and in order).
+            (rebased to 0; blocks contiguous and in order).
         doc_vals/tf_vals/pay_vals: flat per-posting values (doc ids
             sorted ascending within each block).
-        pos_off: ``[B+1]`` offsets into pos_starts/pos_lens, or None
-            when positions are absent.
+        pos_off: ``[B+1]`` offsets into pos_starts/pos_lens (posting
+            order, ``tf`` entries per posting), or None when no block
+            has positions. A block with zero positions is written
+            without them; any other count but its ``sum(tf)`` raises
+            ValueError.
     Returns:
         (blobs, meta) where meta holds per-block ``n_postings``,
-        ``min_doc``, ``max_doc``, ``max_tf``, ``max_score``, ``sum_tf``.
+        ``min_doc``, ``max_doc``, ``max_tf``, ``max_score``, ``sum_tf``
+        (0 for an empty block).
     """
     doc_off = np.asarray(doc_off, dtype=np.int64)
     b_cnt = doc_off.size - 1
     if b_cnt <= 0:
-        return [], {
-            k: np.empty(0, dtype=np.int64)
-            for k in (
-                "n_postings", "min_doc", "max_doc",
-                "max_tf", "max_score", "sum_tf",
-            )
-        }
+        return [], {k: np.empty(0, dtype=np.int64) for k in _META_KEYS}
     dv = np.asarray(doc_vals, dtype=np.uint64)
-    tf_u = np.asarray(tf_vals, dtype=np.uint64)
+    tf_i = np.asarray(tf_vals, dtype=np.int64)
+    s = np.asarray(pay_vals, dtype=np.int64)
     n_per = np.diff(doc_off)
-    has_pos = pos_off is not None
-    if has_pos:
-        pos_off = np.asarray(pos_off, dtype=np.int64)
-        m_per = np.diff(pos_off)
-    else:
-        m_per = np.zeros(b_cnt, dtype=np.int64)
+    nz = n_per > 0
+    heads = doc_off[:-1][nz]
 
-    # Per-block value counts → value-stream offsets O[i] per block.
+    def per_block(ufunc, a):
+        out = np.zeros(b_cnt, dtype=np.int64)
+        if heads.size:
+            out[nz] = ufunc.reduceat(a, heads)
+        return out
+
+    sum_tf = per_block(np.add, tf_i)
+    if pos_off is None:
+        m_per = np.zeros(b_cnt, dtype=np.int64)
+    else:
+        m_per = np.diff(np.asarray(pos_off, dtype=np.int64))
+        bad = np.flatnonzero((m_per != 0) & (m_per != sum_tf))
+        if bad.size:
+            b = int(bad[0])
+            raise ValueError(
+                f"block {b}: {int(m_per[b])} positions, expected 0 or "
+                f"sum(tf)={int(sum_tf[b])}"
+            )
+
+    # Per-block value counts → value-stream offsets off[i] per block.
     c = 1 + 3 * n_per + 2 + 2 * m_per
     off = np.concatenate(([0], np.cumsum(c)))
     vals = np.empty(int(off[-1]), dtype=np.uint64)
@@ -241,82 +147,71 @@ def encode_blocks_batch(
     # [n]
     vals[off[:-1]] = n_per.astype(np.uint64)
     # segmented intra-block index per posting
-    intra = np.arange(dv.size, dtype=np.int64) - np.repeat(
-        doc_off[:-1], n_per
-    )
+    intra = np.arange(dv.size, dtype=np.int64) - np.repeat(doc_off[:-1], n_per)
     # doc deltas with block-head resets
     deltas = dv.copy()
     if dv.size:
         deltas[1:] = dv[1:] - dv[:-1]
-        deltas[doc_off[:-1]] = dv[doc_off[:-1]]
+        deltas[heads] = dv[heads]
     vals[np.repeat(off[:-1] + 1, n_per) + intra] = deltas
     # tfs
-    vals[np.repeat(off[:-1] + 1 + n_per, n_per) + intra] = tf_u
+    vals[np.repeat(off[:-1] + 1 + n_per, n_per) + intra] = tf_i.astype(np.uint64)
     # payload flag + zigzag payloads
     vals[off[:-1] + 1 + 2 * n_per] = 1
-    s = np.asarray(pay_vals, dtype=np.int64)
     zz = ((s << 1) ^ (s >> 63)).astype(np.uint64)
     vals[np.repeat(off[:-1] + 2 + 2 * n_per, n_per) + intra] = zz
-    # positions flag + interleaved (start-delta, len)
+    # positions flag + interleaved (start delta, len), per block
     pflag_idx = off[:-1] + 2 + 3 * n_per
-    if has_pos:
-        vals[pflag_idx] = 1
+    vals[pflag_idx] = (m_per > 0).astype(np.uint64)
+    if m_per.any():
         starts = np.asarray(pos_starts, dtype=np.int64)
-        lens_u = np.asarray(pos_lens, dtype=np.uint64)
         pdeltas = starts.copy()
-        if starts.size:
-            pdeltas[1:] -= starts[:-1]
-            # Reset at each posting's first position — same head rule
-            # as encode_block_arrays (heads from cumsum(tf) per block).
-            csum_tf = np.concatenate(
-                ([0], np.cumsum(tf_u.astype(np.int64)))
-            )
-            first_post = np.repeat(doc_off[:-1], n_per)
-            local = csum_tf[: dv.size] - csum_tf[first_post]
-            head = np.repeat(pos_off[:-1], n_per) + local
-            pdeltas[head] = starts[head]
+        pdeltas[1:] -= starts[:-1]
+        # Reset at each posting's first position: positions are laid out
+        # posting by posting, so a head sits at the running sum of the
+        # position counts (tf in blocks with positions, else 0).
+        ptf = np.where(np.repeat(m_per > 0, n_per), tf_i, 0)
+        post_head = np.concatenate(([0], np.cumsum(ptf)[:-1]))[ptf > 0]
+        pdeltas[post_head] = starts[post_head]
         inter = np.empty(starts.size * 2, dtype=np.uint64)
         inter[0::2] = pdeltas.astype(np.uint64)
-        inter[1::2] = lens_u
+        inter[1::2] = np.asarray(pos_lens, dtype=np.uint64)
+        pos_head = np.concatenate(([0], np.cumsum(m_per)[:-1]))
         intra_pos = np.arange(inter.size, dtype=np.int64) - np.repeat(
-            2 * pos_off[:-1], 2 * m_per
+            2 * pos_head, 2 * m_per
         )
         vals[np.repeat(pflag_idx + 1, 2 * m_per) + intra_pos] = inter
-    else:
-        vals[pflag_idx] = 0
 
     byte_plane, bl = _varint_bytes_and_lengths(vals)
-    byte_ends = np.concatenate(([0], np.cumsum(bl)))
-    blk_bytes = byte_ends[off]
-    buf = byte_plane.tobytes()
-    mv = memoryview(buf)
+    blk_bytes = np.concatenate(([0], np.cumsum(bl)))[off]
+    mv = memoryview(byte_plane.tobytes())
     blobs = [
         zlib.compress(mv[blk_bytes[i] : blk_bytes[i + 1]], _ZLIB_LEVEL)
         for i in range(b_cnt)
     ]
-    tf_i = np.asarray(tf_vals, dtype=np.int64)
+    min_doc = np.zeros(b_cnt, dtype=np.int64)
+    max_doc = np.zeros(b_cnt, dtype=np.int64)
+    min_doc[nz] = dv[heads].astype(np.int64)
+    max_doc[nz] = dv[doc_off[1:][nz] - 1].astype(np.int64)
     meta = {
         "n_postings": n_per,
-        "min_doc": np.asarray(doc_vals)[doc_off[:-1]].astype(np.int64),
-        "max_doc": np.asarray(doc_vals)[doc_off[1:] - 1].astype(np.int64),
-        "max_tf": np.maximum.reduceat(tf_i, doc_off[:-1]),
-        "max_score": np.maximum.reduceat(s, doc_off[:-1]),
-        "sum_tf": np.add.reduceat(tf_i, doc_off[:-1]),
+        "min_doc": min_doc,
+        "max_doc": max_doc,
+        "max_tf": per_block(np.maximum, tf_i),
+        "max_score": per_block(np.maximum, s),
+        "sum_tf": sum_tf,
     }
     return blobs, meta
 
 
 def decode_blocks_batch(blobs: list[bytes]) -> dict:
-    """Decode MANY posting blocks in one vectorized pass (the decode
+    """Decode a batch of posting blocks in one vectorized pass (the
     mirror of :func:`encode_blocks_batch`).
 
-    Per block the only Python work is one ``zlib.decompress``; the
-    concatenated raw streams are LEB128-decoded in ONE
-    ``varint_decode`` call (streams are self-describing, so the
-    concatenation decodes positionally), and block boundaries are then
-    walked in value space (one O(1) step per block) to slice out the
-    per-block sections. Doc ids and position starts are rebuilt with
-    segmented cumsums — no per-posting Python.
+    Per block the only Python work is one ``zlib.decompress`` and one
+    O(1) step walking block boundaries in value space; the concatenated
+    streams are LEB128-decoded in one call, and doc ids and position
+    starts are rebuilt with segmented cumsums.
 
     Returns flat arrays plus per-block offsets:
         n_per       int64 [B]     postings per block
@@ -326,7 +221,8 @@ def decode_blocks_batch(blobs: list[bytes]) -> dict:
         scores      int64 flat (zeros when a block has no payload)
         pos_off     int64 [B+1]   offsets into pos_starts/pos_lens
         pos_starts  int64 flat    (absolute within doc, per posting
-                                   groups of tf — empty when absent)
+                                   groups of tf — none for a block
+                                   without positions)
         pos_lens    int64 flat
     """
     b_cnt = len(blobs)
@@ -338,8 +234,7 @@ def decode_blocks_batch(blobs: list[bytes]) -> dict:
             "tfs": empty, "scores": empty, "pos_off": z,
             "pos_starts": empty, "pos_lens": empty,
         }
-    raws = [zlib.decompress(b) for b in blobs]
-    vals = varint_decode(b"".join(raws))
+    iv = _varint_decode(b"".join(zlib.decompress(b) for b in blobs))
     # Walk block boundaries in value space. Sections per block:
     # [n][deltas n][tfs n][flag][scores n?][flag][pos 2*sum(tf)?]
     n_per = np.empty(b_cnt, dtype=np.int64)
@@ -347,7 +242,6 @@ def decode_blocks_batch(blobs: list[bytes]) -> dict:
     s_start = np.empty(b_cnt, dtype=np.int64)  # -1 when absent
     p_start = np.empty(b_cnt, dtype=np.int64)  # -1 when absent
     m_per = np.zeros(b_cnt, dtype=np.int64)
-    iv = np.asarray(vals, dtype=np.uint64)
     i = 0
     for b in range(b_cnt):
         n = int(iv[i]); i += 1
@@ -362,10 +256,8 @@ def decode_blocks_batch(blobs: list[bytes]) -> dict:
             s_start[b] = -1
         has_pos = int(iv[i]); i += 1
         if has_pos:
-            # positions count = 2 * sum(tfs of this block)
-            tf_sum = int(
-                iv[d_start[b] + n : d_start[b] + 2 * n].sum()
-            )
+            # positions count = sum(tfs of this block)
+            tf_sum = int(iv[d_start[b] + n : d_start[b] + 2 * n].sum())
             p_start[b] = i
             m_per[b] = tf_sum
             i += 2 * tf_sum
@@ -374,9 +266,7 @@ def decode_blocks_batch(blobs: list[bytes]) -> dict:
     total_n = int(n_per.sum())
     doc_off = np.concatenate(([0], np.cumsum(n_per)))
     # Gather per-section flats with segmented index arithmetic.
-    intra = np.arange(total_n, dtype=np.int64) - np.repeat(
-        doc_off[:-1], n_per
-    )
+    intra = np.arange(total_n, dtype=np.int64) - np.repeat(doc_off[:-1], n_per)
     d_idx = np.repeat(d_start, n_per) + intra
     deltas = iv[d_idx].astype(np.int64)
     # Segmented cumsum: global cumsum minus the running total at each
@@ -395,10 +285,7 @@ def decode_blocks_batch(blobs: list[bytes]) -> dict:
     has_s = s_start >= 0
     if has_s.any():
         sel = np.repeat(has_s, n_per)
-        zz = iv[
-            np.repeat(np.where(has_s, s_start, 0), n_per)[sel]
-            + intra[sel]
-        ]
+        zz = iv[np.repeat(np.where(has_s, s_start, 0), n_per)[sel] + intra[sel]]
         scores[sel] = (zz >> np.uint64(1)).astype(np.int64) ^ -(
             zz & np.uint64(1)
         ).astype(np.int64)
@@ -411,13 +298,12 @@ def decode_blocks_batch(blobs: list[bytes]) -> dict:
         p_idx = np.repeat(p_start, m_per) + 2 * intra_m
         pdeltas = iv[p_idx].astype(np.int64)
         pos_lens = iv[p_idx + 1].astype(np.int64)
-        # starts restart at each POSTING boundary: global cumsum minus
-        # the cumsum value at each posting's first position.
-        gp = np.cumsum(pdeltas)
-        # Per-posting position counts: tf for blocks carrying
-        # positions, 0 otherwise. The encoder wrote an ABSOLUTE start
-        # at every posting head, so each posting's starts are its
+        # Starts restart at each posting: the encoder wrote an ABSOLUTE
+        # start at every posting head, so each posting's starts are its
         # global-cumsum slice minus the cumsum just before its head.
+        # Per-posting position counts: tf in blocks with positions,
+        # 0 otherwise.
+        gp = np.cumsum(pdeltas)
         ptf = np.where(np.repeat(p_start >= 0, n_per), tfs, 0)
         post_head = np.concatenate(([0], np.cumsum(ptf)[:-1]))
         base = np.where(post_head > 0, gp[np.maximum(post_head - 1, 0)], 0)
@@ -433,73 +319,10 @@ def decode_blocks_batch(blobs: list[bytes]) -> dict:
     }
 
 
-def decode_block(
-    blob: bytes, pos_arrays: bool = False, pos_flat: bool = False
-) -> dict:
-    """Inverse of encode_block → dict(doc_ids, tfs, scores?, positions?).
-
-    ``pos_arrays=True`` returns positions as parallel per-posting numpy
-    arrays ("pos_starts"/"pos_lens", np.split views — zero copies)
-    instead of per-position (start, len) tuple lists; the bulk-decode
-    path (decode_postings) uses this to skip millions of throwaway
-    tuples on head terms.
-
-    ``pos_flat=True`` skips even the split: "pos_starts_flat"/
-    "pos_lens_flat" are the UNSPLIT flat arrays (posting boundaries =
-    cumsum(tfs)), ready for Arrow ListArray assembly from offsets."""
-    raw = zlib.decompress(blob)
-    vals = varint_decode(raw)  # decode the full varint stream once
-    # Stream layout is self-describing except the two flag bytes, which
-    # are single 0x00/0x01 bytes — themselves valid 1-byte varints — so
-    # the combined stream decodes positionally.
-    i = 0
-    n = int(vals[i]); i += 1
-    deltas = vals[i : i + n]; i += n
-    doc_ids = delta_decode(deltas)
-    tfs = vals[i : i + n]; i += n
-    out = {"doc_ids": doc_ids, "tfs": tfs.astype(np.int64)}
-    has_scores = int(vals[i]); i += 1
-    if has_scores:
-        zz = vals[i : i + n]; i += n
-        s = (zz >> np.uint64(1)).astype(np.int64) ^ -(zz & np.uint64(1)).astype(
-            np.int64
-        )
-        out["scores"] = s
-    has_pos = int(vals[i]); i += 1
-    if has_pos:
-        total_pos = int(tfs.sum())
-        flat = vals[i : i + 2 * total_pos]; i += 2 * total_pos
-        # Vectorized segmented delta-decode: starts are a cumsum of
-        # deltas restarting at each posting — global cumsum minus the
-        # cumsum value at each posting's boundary (exclusive).
-        tf_i = tfs.astype(np.int64)
-        if tf_i.size == 0:
-            if pos_flat:
-                out["pos_starts_flat"] = np.empty(0, dtype=np.int64)
-                out["pos_lens_flat"] = np.empty(0, dtype=np.int64)
-            elif pos_arrays:
-                out["pos_starts"], out["pos_lens"] = [], []
-            else:
-                out["positions"] = []
-            return out
-        deltas = flat[0::2].astype(np.int64)
-        lens = flat[1::2].astype(np.int64)
-        s = np.cumsum(deltas)
-        gstart = np.concatenate(([0], np.cumsum(tf_i)[:-1]))
-        base = np.where(gstart > 0, s[np.maximum(gstart - 1, 0)], 0)
-        starts = s - np.repeat(base, tf_i)
-        bounds = np.cumsum(tf_i)[:-1]
-        if pos_flat:
-            out["pos_starts_flat"] = starts
-            out["pos_lens_flat"] = lens
-        elif pos_arrays:
-            out["pos_starts"] = np.split(starts, bounds)
-            out["pos_lens"] = np.split(lens, bounds)
-        else:
-            out["positions"] = [
-                list(zip(a.tolist(), b.tolist()))
-                for a, b in zip(
-                    np.split(starts, bounds), np.split(lens, bounds)
-                )
-            ]
-    return out
+def decode_block(blob: bytes) -> dict:
+    """One block's ``doc_ids``, ``tfs``, ``scores``, ``pos_starts`` and
+    ``pos_lens`` (posting i owns the next ``tfs[i]`` position entries,
+    none when the block has no positions): a view of
+    :func:`decode_blocks_batch` over a batch of one."""
+    dec = decode_blocks_batch([blob])
+    return {k: dec[k] for k in ("doc_ids", "tfs", "scores", "pos_starts", "pos_lens")}

@@ -12,8 +12,6 @@ this module provides both, all as shuffle-aware DataFrame programs:
 - lsh_candidate_pairs    band-bucket self-join → candidate pairs
 - ngram_jaccard          exact shingle-set Jaccard on candidate pairs
 - simhash                64-bit simhash + hamming-band near-dup buckets
-- embedding_near_dup     cosine-threshold pairs via LSH on random
-                         hyperplanes (similarity.py provides ANN top-k)
 - connected_components   candidate pairs → duplicate clusters
                          (alternating large-star/small-star), the
                          retention stage after any pair generator

@@ -1,11 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata, processed by Arrow-batched mapInPandas stages.
 
-The decode kernels themselves are STUBBED (image/audio libraries are not
-available in this environment — see ``set_decoder`` to plug real ones
-in); everything Spark-side is real and tested: schemas, batching,
-partition sizing, UDF signatures, and the deterministic fake decoder
-used by tests.
+Images decode for real (stdlib PNG/BMP); the audio/video decode kernel
+is STUBBED (no ffmpeg-class library is available). Everything
+Spark-side is real and tested: schemas, batching, partition sizing, UDF
+signatures, and the deterministic fake decoder used by tests.
 
 Design for 100 TB of media: binary payloads stay columnar (parquet/
 Iceberg binary columns read with spark.sql.files.maxPartitionBytes sized
@@ -17,7 +16,7 @@ index directly.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -82,22 +81,13 @@ def _default_decode(payload: bytes, kind: str) -> np.ndarray:
     """Image payloads decode FOR REAL (r4 verdict #6): PNG/BMP via the
     stdlib codec (functions/imagecodec.py), features projected from the
     decoded PIXELS, not the container bytes. Audio/video stay on the
-    declared byte-histogram stub (replace via set_decoder with a real
-    ffmpeg-backed kernel in production)."""
+    declared byte-histogram stub."""
     if kind == "image":
         from myaku_spark.functions.imagecodec import decode_image
 
         raster = decode_image(bytes(payload))  # ValueError on non-PNG/BMP
         return _feature_projection(raster.reshape(-1))
     return _fake_decode(payload, kind)
-
-
-_DECODER: Callable[[bytes, str], np.ndarray] = _default_decode
-
-
-def set_decoder(fn: Callable[[bytes, str], np.ndarray]) -> None:
-    global _DECODER
-    _DECODER = fn
 
 
 def extract_features(media: DataFrame, batch_hint: int = 256) -> DataFrame:
@@ -109,7 +99,7 @@ def extract_features(media: DataFrame, batch_hint: int = 256) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = [
-                _DECODER(bytes(p), k).tolist()
+                _default_decode(bytes(p), k).tolist()
                 for p, k in zip(pdf["payload"], pdf["kind"])
             ]
             yield pd.DataFrame(

@@ -29,10 +29,11 @@ from pyspark.sql import functions as F
 
 from myaku_spark.functions.widthnorm import normalize_char_width
 from myaku_spark.operators.bm25 import PAGE_SIZE
+from myaku_spark.operators.segments import term_rows
 from myaku_spark.operators.wand import (
     BM25Scorer,
     MyakuScorer,
-    cursors_from_blockmeta,
+    cursors_from_segments,
     exhaustive_topk,
     stats_for_bm25,
     wand_topk_and,
@@ -110,20 +111,9 @@ class SegmentBlobStore:
             self._df = self.spark.read.parquet(self.seg_path)
         return self._df
 
-    def _bucket_filter(self, terms: list[str]):
-        """Partition pruning via the driver-side xxhash64 twin (xxh.py) —
-        bucket computation costs arithmetic, not a Spark job."""
-        from myaku_spark.functions.xxh import term_bucket
-        from myaku_spark.operators.segments import N_BUCKETS
-
-        buckets = sorted({term_bucket(t, N_BUCKETS) for t in terms})
-        return F.col("bucket").isin(buckets)
-
     def term_segments(self, terms: list[str]) -> DataFrame:
         """The segment rows of ``terms`` (bucket pruning + term pushdown)."""
-        return self._seg_df().filter(
-            self._bucket_filter(terms) & F.col("term").isin(terms)
-        )
+        return term_rows(self._seg_df(), terms)
 
     def ensure_terms(self, terms: list[str]) -> None:
         missing = [t for t in terms if t not in self.meta]
@@ -167,10 +157,8 @@ class SegmentBlobStore:
         ]
         if not small:
             return
-        buckets = list({int(self.meta[t][0].bucket) for t in small})
         rows = (
-            self._seg_df()
-            .filter(F.col("bucket").isin(buckets) & F.col("term").isin(small))
+            self.term_segments(small)
             .select("term", "group", "block_id", "blob")
             .collect()
         )
@@ -191,19 +179,11 @@ class SegmentBlobStore:
         result is at most |opened postings| ids."""
         if self.tombstones_df is None or not new_blobs:
             return
-        import numpy as np
         import pandas as pd
 
-        from myaku_spark.operators.codec import decode_block
+        from myaku_spark.operators.codec import decode_blocks_batch
 
-        ids = np.unique(
-            np.concatenate(
-                [
-                    decode_block(b)["doc_ids"].astype(np.int64)
-                    for b in new_blobs
-                ]
-            )
-        )
+        ids = np.unique(decode_blocks_batch(new_blobs)["doc_ids"])
         ids_df = self.spark.createDataFrame(pd.DataFrame({"doc_id": ids}))
         hits = (
             self.tombstones_df.join(F.broadcast(ids_df), "doc_id", "leftsemi")
@@ -456,11 +436,11 @@ class IndexSearcher:
         they are stateful iterators — but metadata and already-fetched
         blobs are reused across queries)."""
         rows = self.store.meta_rows(terms)
-        return cursors_from_blockmeta(
+        return cursors_from_segments(
             rows,
             self._scorer_factory(terms),
-            self.store.blob,
             deleted=self.deleted,
+            fetch_blob=self.store.blob,
         )
 
     def search_phrase(

@@ -1,4 +1,4 @@
-"""Term-partitioned, block-compressed posting segments (+ merge).
+"""Term-partitioned, block-compressed posting segments.
 
 This is the explicit materialization of what MongoDB's compound indexes
 gave the reference implicitly (pre-sorted posting lists per term,
@@ -22,14 +22,13 @@ Segment row = one posting BLOCK:
 - Block metadata carries the block-max values WAND needs: exact
   ``max_score`` for the Myaku integer rank mode, and (max_tf, min_dl)
   for a sound BM25 upper bound at query time.
-- Blobs are delta+varint+zlib(1) (codec.py); scores stream carries the
+- Blobs are codec.py posting blocks; their payload stream carries the
   integer payload of the index mode (quality score or dl).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -40,8 +39,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-from myaku_spark.operators.codec import decode_block, encode_block
 
 N_BUCKETS = 64
 HEAD_DF_THRESHOLD = 4096
@@ -71,10 +68,9 @@ def term_bucket_col(term_col):
 def _encode_rows(batches):
     """mapInArrow: one input row per (term, block) with pre-aggregated
     primitive-list columns → one segment row. Flat value buffers + list
-    offsets come straight off the Arrow arrays; the whole batch of
-    blocks is varint-encoded in ONE vectorized pass
-    (codec.encode_blocks_batch) — per-block Python work is a single
-    zlib.compress over a byte slice, no per-posting Python objects."""
+    offsets come straight off the Arrow arrays, and the whole batch of
+    blocks encodes in ONE codec.encode_blocks_batch call — no
+    per-posting Python objects."""
     import pyarrow as pa
 
     from myaku_spark.operators.codec import encode_blocks_batch
@@ -169,7 +165,6 @@ def build_segments(
     head_df_threshold: int = HEAD_DF_THRESHOLD,
     block_doc_range: int = BLOCK_DOC_RANGE,
     with_positions: bool = True,
-    encode_partitions: int | None = None,
 ) -> DataFrame:
     """postings (term, doc_id, tf[, positions], payload[, dl]) → segment rows.
 
@@ -250,20 +245,14 @@ def build_segments(
     # NOTE: doc-range head blocking assumes DENSE doc ids (ids.py);
     # sparse/hashed ids would fragment head terms into 1-posting blocks.
     #
-    # Encode-stage parallelism (r7): by default the encode inherits the
-    # aggregation's partitioning — the groupBy(term, block_id) runs on
-    # the tstats join's term-hash exchange (no exchange of its own),
-    # and the batch-vectorized encoder (codec.encode_blocks_batch)
-    # amortizes per-task cost, so no extra exchange of the heavy
-    # array rows is needed: serving-path calls over a handful of query
-    # terms collapse to the join's few AQE-coalesced tasks, and full
-    # builds run at the configured shuffle width. Pass an explicit
-    # ``encode_partitions`` to force a fan-out when a deployment's
-    # shuffle width is far below its core count.
-    out = agg.select(*sel)
-    if encode_partitions is not None:
-        out = out.repartition(encode_partitions)
-    return out.mapInArrow(_encode_rows, SEGMENT_SCHEMA)
+    # Encode-stage parallelism: the encode inherits the aggregation's
+    # partitioning — the groupBy(term, block_id) runs on the tstats
+    # join's term-hash exchange (no exchange of its own), and the
+    # batch-vectorized encoder (codec.encode_blocks_batch) amortizes
+    # per-task cost. A fixed 2x-cores fan-out before the encode measured
+    # as a net loss: an extra exchange of the heavy array rows, +0.7 to
+    # 1.4 s at bench scale.
+    return agg.select(*sel).mapInArrow(_encode_rows, SEGMENT_SCHEMA)
 
 
 def write_segments(segments: DataFrame, path: str, mode: str = "overwrite"):
@@ -278,72 +267,19 @@ def write_segments(segments: DataFrame, path: str, mode: str = "overwrite"):
     )
 
 
-def read_term_segments(spark, path: str, terms: list[str]) -> DataFrame:
-    """Read only the buckets/rows of the query terms (partition pruning +
-    parquet predicate pushdown on term). Buckets are computed driver-side
-    with the pure-Python xxhash64 twin — no Spark job per lookup."""
+def term_rows(segments: DataFrame, terms: list[str]) -> DataFrame:
+    """Only the buckets/rows of ``terms`` in a segments relation
+    (partition pruning + parquet predicate pushdown on term). Buckets
+    are computed driver-side with the pure-Python xxhash64 twin — no
+    Spark job per lookup."""
     from myaku_spark.functions.xxh import term_bucket
 
     buckets = sorted({term_bucket(t, N_BUCKETS) for t in terms})
-    df = spark.read.parquet(path)
-    return df.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
-
-
-def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """k-way merge of same-(term, block_id) segment rows from multiple
-    runs: decode, concat, newest-run-wins per doc_id, re-encode.
-
-    Rows arrive with a ``run_order`` column (higher = newer)."""
-    if len(pdf) == 1:
-        return pdf.drop(columns=["run_order"])
-    pdf = pdf.sort_values("run_order")
-    by_doc: dict[int, tuple] = {}
-    for _, row in pdf.iterrows():
-        dec = decode_block(row["blob"])
-        pos = dec.get("positions")
-        for i, d in enumerate(dec["doc_ids"]):
-            by_doc[int(d)] = (
-                int(dec["tfs"][i]),
-                int(dec["scores"][i]) if "scores" in dec else 0,
-                pos[i] if pos is not None else None,
-            )
-    doc_ids = np.array(sorted(by_doc), dtype=np.uint64)
-    tfs = np.array([by_doc[d][0] for d in doc_ids], dtype=np.uint64)
-    scores = np.array([by_doc[d][1] for d in doc_ids], dtype=np.int64)
-    positions = None
-    if by_doc and by_doc[int(doc_ids[0])][2] is not None:
-        positions = [by_doc[int(d)][2] for d in doc_ids]
-    blob = encode_block(doc_ids, tfs, scores, positions)
-    first = pdf.iloc[-1]
-    return pd.DataFrame(
-        [
-            {
-                "bucket": int(first["bucket"]),
-                "term": first["term"],
-                "block_id": int(first["block_id"]),
-                "n_postings": len(doc_ids),
-                "min_doc": int(doc_ids.min()),
-                "max_doc": int(doc_ids.max()),
-                "max_tf": int(tfs.max()),
-                "min_dl": int(pdf["min_dl"].min()),
-                "max_score": int(scores.max()) if len(scores) else 0,
-                "sum_tf": int(tfs.sum()),
-                "blob": blob,
-            }
-        ]
+    return segments.filter(
+        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
     )
 
 
-def merge_segments(runs: list[DataFrame]) -> DataFrame:
-    """Sorted k-way merge of segment sets from successive runs (newer
-    runs listed later win per-doc — the reference's replace-on-rewrite
-    upsert semantics, database.py:396-434)."""
-    tagged = [
-        df.withColumn("run_order", F.lit(i).cast("int")) for i, df in enumerate(runs)
-    ]
-    allseg = tagged[0]
-    for t in tagged[1:]:
-        allseg = allseg.unionByName(t)
-    return allseg.groupBy("term", "block_id").applyInPandas(
-        _merge_group, SEGMENT_SCHEMA
-    )
+def read_term_segments(spark, path: str, terms: list[str]) -> DataFrame:
+    """A fresh read of the segments at ``path``, cut to ``terms``."""
+    return term_rows(spark.read.parquet(path), terms)

@@ -136,34 +136,6 @@ def ann_topk(
     )
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via LSH-bucketed self-join."""
-    b = rp_lsh_buckets(df, n_planes, vec_col)
-    left = b.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("vec_a"),
-        "lsh_bucket",
-    )
-    right = b.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vec_b"),
-        "lsh_bucket",
-    )
-    pairs = left.join(right, "lsh_bucket").filter(F.col("id_a") < F.col("id_b"))
-    cos = _dot("vec_a", "vec_b") / (_norm("vec_a") * _norm("vec_b"))
-    return (
-        pairs.withColumn("cos", cos)
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
-
-
 def ivf_index(
     candidates: DataFrame,
     n_centroids: int = 16,
@@ -397,8 +369,7 @@ def semantic_dedup(
     count: SemDeDup runs with tens of thousands of clusters, so the
     largest cluster (the join's skew bound) stays ~n/k. Cosine is a
     JVM-side zip_with/aggregate fold; the threshold compares the
-    4-dp-rounded value (same recipe as embedding_near_dup_pairs) so
-    the boundary is engine-independent.
+    4-dp-rounded value so the boundary is engine-independent.
 
     The (id, cluster) assignment is persisted (two longs per row) so
     the O(n·k·dim) assignment pass runs ONCE across its four plan

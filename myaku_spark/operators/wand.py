@@ -21,6 +21,7 @@ from __future__ import annotations
 import heapq
 import math
 from dataclasses import dataclass, field
+from functools import partial
 
 import numpy as np
 
@@ -121,9 +122,7 @@ class _Block:
                 # neighbors) only now that WAND actually needs it.
                 self.blob = self.fetch()
             dec = decode_block(self.blob)
-            doc_ids = dec["doc_ids"].astype(np.int64)
-            tfs = dec["tfs"]
-            payload = dec.get("scores", np.zeros_like(dec["tfs"]))
+            doc_ids, tfs, payload = dec["doc_ids"], dec["tfs"], dec["scores"]
             d = self.deleted
             if isinstance(d, TombstoneView):
                 # df-mode: the fetch that just ran resolved this
@@ -218,62 +217,42 @@ class TermCursor:
 
 
 def cursors_from_segments(
-    rows, scorer_for_term, deleted: set | None = None
+    rows, scorer_for_term, deleted=None, fetch_blob=None
 ) -> dict[str, TermCursor]:
-    """Segment rows (dicts or Rows with term/block fields) → cursors.
+    """Segment rows (dicts or Rows with term/block fields) → one cursor
+    per term.
 
-    ``deleted`` doc_ids (tombstones from incremental re-index) are
-    filtered out at block-decode time; block-max metadata remains a
-    sound upper bound."""
+    Each row carries its ``blob``, or, when ``fetch_blob(term, group,
+    block_id)`` is given, block METADATA only: the blob is then fetched
+    the first time WAND decodes the block (two-phase read), so skipped
+    blocks never reach the driver. Block-max skipping works on the
+    metadata alone. ``deleted`` doc_ids (tombstones from incremental
+    re-index) are filtered out at block-decode time; block-max metadata
+    remains a sound upper bound."""
     deleted = _deleted_array(deleted)
     by_term: dict[str, list[_Block]] = {}
     for r in rows:
         d = r.asDict() if hasattr(r, "asDict") else dict(r)
-        blk = _Block(
-            min_doc=d["min_doc"],
-            max_doc=d["max_doc"],
-            meta={
-                "max_score": d["max_score"],
-                "max_tf": d["max_tf"],
-                "min_dl": d["min_dl"],
-            },
-            blob=bytes(d["blob"]),
-            deleted=deleted,
+        term = d["term"]
+        blob = fetch = None
+        if fetch_blob is None:
+            blob = bytes(d["blob"])
+        else:
+            fetch = partial(fetch_blob, term, d.get("group", 0), d["block_id"])
+        by_term.setdefault(term, []).append(
+            _Block(
+                min_doc=d["min_doc"],
+                max_doc=d["max_doc"],
+                meta={
+                    "max_score": d["max_score"],
+                    "max_tf": d["max_tf"],
+                    "min_dl": d["min_dl"],
+                },
+                blob=blob,
+                deleted=deleted,
+                fetch=fetch,
+            )
         )
-        by_term.setdefault(d["term"], []).append(blk)
-    out = {}
-    for term, blocks in by_term.items():
-        blocks.sort(key=lambda b: b.min_doc)
-        out[term] = TermCursor(term, blocks, scorer_for_term(term))
-    return out
-
-
-def cursors_from_blockmeta(
-    rows, scorer_for_term, fetch_blob, deleted: set | None = None
-) -> dict[str, TermCursor]:
-    """Two-phase variant: rows carry block METADATA only (no blob).
-    ``fetch_blob(term, group, block_id)`` is invoked lazily the first
-    time WAND decodes the block, so skipped blocks never reach the
-    driver. Block-max skipping (term_upper/block_upper/max_doc) works on
-    metadata alone — no decode, no fetch."""
-    deleted = _deleted_array(deleted)
-    by_term: dict[str, list[_Block]] = {}
-    for r in rows:
-        d = r.asDict() if hasattr(r, "asDict") else dict(r)
-        term, group, block_id = d["term"], d.get("group", 0), d["block_id"]
-        blk = _Block(
-            min_doc=d["min_doc"],
-            max_doc=d["max_doc"],
-            meta={
-                "max_score": d["max_score"],
-                "max_tf": d["max_tf"],
-                "min_dl": d["min_dl"],
-            },
-            blob=None,
-            deleted=deleted,
-            fetch=lambda t=term, g=group, b=block_id: fetch_blob(t, g, b),
-        )
-        by_term.setdefault(term, []).append(blk)
     out = {}
     for term, blocks in by_term.items():
         blocks.sort(key=lambda b: b.min_doc)

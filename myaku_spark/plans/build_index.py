@@ -203,11 +203,6 @@ def build_group(
         payload_col="score" if mode == "myaku" else "dl",
         head_df_threshold=head_df_threshold or HEAD_DF_THRESHOLD,
         block_doc_range=block_doc_range or BLOCK_DOC_RANGE,
-        # Encode inherits the tstats join's term-hash partitioning
-        # (shuffle width); the r7 batch-vectorized encoder amortizes
-        # per-task cost, and the previously pinned 2x-cores fan-out
-        # re-measured as a net loss (an extra exchange of the heavy
-        # array rows: +0.7-1.4 s at bench scale).
     )
     doc_out = docs.join(dstats, "doc_id", "left").select(
         "doc_id",

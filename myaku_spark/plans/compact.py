@@ -2,8 +2,9 @@
 clean segment set (the k-way sorted segment merge, SURVEY §4 custom
 work #3 — the reference delegates this to MongoDB upserts S6).
 
-- merge_segments() joins same-(term, block) segment rows across groups
-  (newest run wins per doc — upsert-replace semantics);
+- same-(term, block) segment rows merge across groups in one
+  applyInPandas kernel (newest run wins per doc — upsert-replace
+  semantics), decoding and re-encoding through the batch codec;
 - tombstoned postings are dropped during the merge re-encode;
 - the docs table is rewritten without tombstoned rows;
 - tombstones are cleared and corpus stats refreshed.
@@ -16,50 +17,60 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myaku_spark.operators.codec import decode_block, encode_block
+from myaku_spark.operators.codec import decode_blocks_batch, encode_blocks_batch
 from myaku_spark.operators.segments import SEGMENT_SCHEMA, write_segments
 
 
 def _merge_with_tombstones(deleted):
-    """``deleted``: a set/frozenset of doc ids (driver-sized delete
+    """``deleted``: a sorted int64 array of doc ids (driver-sized delete
     vectors, shipped in the closure), or None when the rows carry their
     own per-block ``del_ids`` arrays (df-mode: the vector stayed
-    distributed and arrived via tombstone_block_patches)."""
+    distributed and arrived via tombstone_block_patches).
+
+    The kernel merges one (term, block_id) group: its blocks (one per
+    group run) decode in one call, each doc keeps its posting from the
+    newest run, tombstoned docs drop, and the survivors re-encode as
+    one block."""
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        local = deleted if deleted is not None else frozenset()
+        dels = [] if deleted is None else [deleted]
         if "del_ids" in pdf.columns:
-            s = set()
-            for a in pdf["del_ids"]:
-                if isinstance(a, (list, np.ndarray)):
-                    s.update(int(x) for x in a)
-            local = s if deleted is None else (s | set(deleted))
+            dels += [
+                np.asarray(a, dtype=np.int64)
+                for a in pdf["del_ids"]
+                if isinstance(a, (list, np.ndarray))
+            ]
         pdf = pdf.sort_values("run_order")
-        by_doc: dict[int, tuple] = {}
-        for _, row in pdf.iterrows():
-            dec = decode_block(bytes(row["blob"]))
-            pos = dec.get("positions")
-            for i, d in enumerate(dec["doc_ids"]):
-                d = int(d)
-                if d in local:
-                    by_doc.pop(d, None)
-                    continue
-                by_doc[d] = (
-                    int(dec["tfs"][i]),
-                    int(dec["scores"][i]) if "scores" in dec else 0,
-                    pos[i] if pos is not None else None,
-                )
-        if not by_doc:
+        dec = decode_blocks_batch([bytes(b) for b in pdf["blob"]])
+        ids = dec["doc_ids"]
+        m_per = np.diff(dec["pos_off"])
+        ptf = np.where(np.repeat(m_per > 0, dec["n_per"]), dec["tfs"], 0)
+        # Newest run wins: a stable sort by doc id keeps run order
+        # within a doc, so its last posting is the newest.
+        order = np.argsort(ids, kind="stable")
+        last = np.ones(order.size, dtype=bool)
+        last[:-1] = ids[order][1:] != ids[order][:-1]
+        keep = order[last]
+        if dels:
+            keep = keep[~np.isin(ids[keep], np.concatenate(dels))]
+        if keep.size == 0:
             return pd.DataFrame(
                 [], columns=[f.name for f in SEGMENT_SCHEMA.fields]
             )
-        doc_ids = np.array(sorted(by_doc), dtype=np.uint64)
-        tfs = np.array([by_doc[int(d)][0] for d in doc_ids], dtype=np.uint64)
-        scores = np.array([by_doc[int(d)][1] for d in doc_ids], dtype=np.int64)
-        positions = None
-        if by_doc[int(doc_ids[0])][2] is not None:
-            positions = [by_doc[int(d)][2] for d in doc_ids]
-        blob = encode_block(doc_ids, tfs, scores, positions)
+        # Gather the kept postings' position runs in the new order.
+        runs = ptf[keep]
+        src_head = np.concatenate(([0], np.cumsum(ptf)))[keep]
+        dst_head = np.cumsum(runs) - runs
+        pos_idx = np.repeat(src_head - dst_head, runs) + np.arange(runs.sum())
+        blobs, meta = encode_blocks_batch(
+            np.array([0, keep.size]),
+            ids[keep],
+            dec["tfs"][keep],
+            dec["scores"][keep],
+            np.array([0, pos_idx.size]),
+            dec["pos_starts"][pos_idx],
+            dec["pos_lens"][pos_idx],
+        )
         first = pdf.iloc[-1]
         return pd.DataFrame(
             [
@@ -67,16 +78,12 @@ def _merge_with_tombstones(deleted):
                     "bucket": int(first["bucket"]),
                     "term": first["term"],
                     "block_id": int(first["block_id"]),
-                    "n_postings": len(doc_ids),
-                    "min_doc": int(doc_ids.min()),
-                    "max_doc": int(doc_ids.max()),
-                    "max_tf": int(tfs.max()),
+                    **{k: int(v[0]) for k, v in meta.items()},
                     "min_dl": int(pdf["min_dl"].min()),
-                    "max_score": int(scores.max()),
-                    "sum_tf": int(tfs.sum()),
-                    "blob": blob,
+                    "blob": blobs[0],
                 }
-            ]
+            ],
+            columns=[f.name for f in SEGMENT_SCHEMA.fields],
         )
 
     return merge
@@ -111,7 +118,7 @@ def compact_index(
     tmode, tpayload = resolve_tombstones(
         spark, index_dir, path=paths["tombstones"]
     )
-    deleted = frozenset(int(d) for d in tpayload) if tmode == "array" else None
+    deleted = tpayload if tmode == "array" else None
     n_deleted = len(deleted) if deleted is not None else (
         int(tpayload.count()) if tmode == "df" else 0
     )
@@ -136,7 +143,7 @@ def compact_index(
     write_segments(merged, f"{index_dir}/{seg_rel}/group=0")
 
     docs = spark.read.parquet(paths["docs"])
-    if deleted:
+    if deleted is not None:
         tomb_df = spark.createDataFrame(
             [(int(d),) for d in deleted], ["doc_id"]
         )

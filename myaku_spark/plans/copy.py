@@ -11,7 +11,7 @@ segment layout:
 2. colliding doc_ids (already used by the destination) get fresh ids
    above both indexes' max — the DuplicateKeyError → new-_id path;
 3. postings re-key DISTRIBUTED: source blocks decode to posting rows
-   (mapInArrow-style pandas pass), inner-join the (old_id → new_id, dl)
+   (phrase.decode_postings), inner-join the (old_id → new_id, dl)
    mapping — the join simultaneously drops skipped docs and remaps the
    article FK with no driver-side id set — then rebuild through the
    standard build_segments path and land as a NEW destination group
@@ -28,40 +28,10 @@ from __future__ import annotations
 
 import time
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 COPY_GROUP_BASE = 20_000  # copy groups live above incremental deltas
-
-
-def _decode_to_postings(batches):
-    """Segment block rows → posting rows (term, doc_id, tf, payload,
-    starts, lens)."""
-    from myaku_spark.operators.codec import decode_block
-
-    for pdf in batches:
-        out = []
-        for _, row in pdf.iterrows():
-            dec = decode_block(bytes(row["blob"]))
-            pos = dec.get("positions")
-            scores = dec.get("scores")
-            for i, d in enumerate(dec["doc_ids"]):
-                plist = pos[i] if pos is not None else []
-                out.append(
-                    {
-                        "term": row["term"],
-                        "doc_id": int(d),
-                        "tf": int(dec["tfs"][i]),
-                        "payload": int(scores[i]) if scores is not None else 0,
-                        "starts": [int(s) for s, _ in plist],
-                        "lens": [int(ln) for _, ln in plist],
-                    }
-                )
-        yield pd.DataFrame(
-            out,
-            columns=["term", "doc_id", "tf", "payload", "starts", "lens"],
-        )
 
 
 def copy_index(
@@ -70,6 +40,7 @@ def copy_index(
     """Copy the live contents of ``src_dir`` into ``dst_dir``.
 
     Returns {'copied', 'skipped', 'collisions', 'group'}."""
+    from myaku_spark.operators.phrase import decode_postings
     from myaku_spark.operators.segments import build_segments, write_segments
     from myaku_spark.plans import catalog
     from myaku_spark.plans.build_index import append_checkpoint
@@ -153,20 +124,13 @@ def copy_index(
     else:
         max_group = 0
     group = max(max_group + 1, COPY_GROUP_BASE)
-    seg_rows = spark.read.parquet(src_paths["segments"]).select(
-        "term", "blob"
-    )
-    postings = seg_rows.mapInPandas(
-        _decode_to_postings,
-        "term string, doc_id long, tf int, payload long, "
-        "starts array<int>, lens array<int>",
-    )
+    postings = decode_postings(spark.read.parquet(src_paths["segments"]))
     rekeyed = (
         postings.join(mapping, postings["doc_id"] == mapping["src_id"])
         .select(
             "term",
             mapping["dst_id"].alias("doc_id"),
-            "tf",
+            F.col("tf").cast("int").alias("tf"),
             F.col("payload").alias("score"),
             "starts",
             "lens",

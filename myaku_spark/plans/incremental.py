@@ -381,32 +381,53 @@ def _block_patches(segs: DataFrame, affected: DataFrame) -> DataFrame:
 def _patch_blocks(batches):
     """mapInPandas kernel: apply per-row patch arrays to block score
     payloads. Rows with no patch (left-join null) pass through
-    UNDECODED; patched rows decode, add deltas via searchsorted, and
-    re-encode. The delta data arrives IN the rows (from
-    _block_patches), not in the closure — no driver state."""
-    from myaku_spark.operators.codec import decode_block, encode_block
+    UNDECODED; a batch's patched rows decode in one call, add deltas via
+    a per-block searchsorted, and the blocks a delta hit re-encode in
+    one call. The delta data arrives IN the rows (from _block_patches),
+    not in the closure — no driver state."""
+    from myaku_spark.operators.codec import (
+        decode_blocks_batch,
+        encode_blocks_batch,
+    )
 
     for pdf in batches:
         out = pdf.drop(columns=["patch_ids", "patch_deltas"])
-        if len(pdf) == 0:
+        rows = np.flatnonzero(pdf["patch_ids"].notna().to_numpy())
+        if rows.size == 0:
             yield out
             continue
-        for i in pdf.index[pdf["patch_ids"].notna()]:
-            ids = np.asarray(pdf.at[i, "patch_ids"], dtype=np.int64)
-            dls = np.asarray(pdf.at[i, "patch_deltas"], dtype=np.int64)
-            dec = decode_block(bytes(pdf.at[i, "blob"]))
-            doc_ids = dec["doc_ids"].astype(np.int64)
-            idx = np.searchsorted(ids, doc_ids)
-            idx_c = np.clip(idx, 0, len(ids) - 1)
-            hit = ids[idx_c] == doc_ids
-            if not hit.any():
-                continue
-            scores = dec["scores"].astype(np.int64)
-            scores[hit] += dls[idx_c[hit]]
-            out.at[i, "blob"] = encode_block(
-                dec["doc_ids"], dec["tfs"], scores, dec.get("positions")
+        dec = decode_blocks_batch([bytes(pdf["blob"].iat[i]) for i in rows])
+        doc_ids, doc_off, scores = dec["doc_ids"], dec["doc_off"], dec["scores"]
+        hit_blk = np.zeros(rows.size, dtype=bool)
+        for j, i in enumerate(rows):
+            ids = np.asarray(pdf["patch_ids"].iat[i], dtype=np.int64)
+            dls = np.asarray(pdf["patch_deltas"].iat[i], dtype=np.int64)
+            lo, hi = doc_off[j], doc_off[j + 1]
+            idx = np.clip(np.searchsorted(ids, doc_ids[lo:hi]), 0, len(ids) - 1)
+            hit = ids[idx] == doc_ids[lo:hi]
+            scores[lo:hi][hit] += dls[idx[hit]]
+            hit_blk[j] = hit.any()
+        if hit_blk.any():
+            m_per = np.diff(dec["pos_off"])
+            sel = np.repeat(hit_blk, dec["n_per"])
+            psel = np.repeat(hit_blk, m_per)
+            blobs, meta = encode_blocks_batch(
+                np.concatenate(([0], np.cumsum(dec["n_per"][hit_blk]))),
+                doc_ids[sel],
+                dec["tfs"][sel],
+                scores[sel],
+                np.concatenate(([0], np.cumsum(m_per[hit_blk]))),
+                dec["pos_starts"][psel],
+                dec["pos_lens"][psel],
             )
-            out.at[i, "max_score"] = int(scores.max())
+            hit_rows = rows[hit_blk]
+            blob_col = out["blob"].tolist()
+            for i, b in zip(hit_rows, blobs):
+                blob_col[i] = b
+            max_score = out["max_score"].to_numpy(copy=True)
+            max_score[hit_rows] = meta["max_score"]
+            out["blob"] = blob_col
+            out["max_score"] = max_score
         yield out
 
 

@@ -128,6 +128,53 @@ def test_compact_merges_and_applies_tombstones(spark, tmp_path):
     assert s_new.search([term], k=30) == before
 
 
+@pytest.mark.parametrize("with_positions", [True, False])
+@pytest.mark.parametrize("tombstones", ["array", "del_ids"])
+def test_compact_kernel_merges_runs(with_positions, tombstones):
+    # One (term, block_id) group across two runs: doc 5 takes the newer
+    # run's posting (positions included), the tombstoned doc 9 drops,
+    # and the survivors re-encode as one block. A segment set without
+    # positions stays without them.
+    import numpy as np
+    import pandas as pd
+
+    from myaku_spark.operators.codec import decode_block, encode_blocks_batch
+    from myaku_spark.plans.compact import _merge_with_tombstones
+
+    def block(docs, tfs, pays, pos):
+        flat = [p for plist in pos for p in plist] if with_positions else []
+        (blob,), _ = encode_blocks_batch(
+            np.array([0, len(docs)]), np.array(docs), np.array(tfs),
+            np.array(pays), np.array([0, len(flat)]),
+            np.array([a for a, _ in flat]), np.array([b for _, b in flat]),
+        )
+        return blob
+
+    old = block([1, 5, 9], [1, 2, 1], [10, 20, 30],
+                [[(0, 1)], [(3, 1), (7, 2)], [(4, 4)]])
+    new = block([5, 7], [1, 1], [50, 70], [[(1, 1)], [(2, 2)]])
+    pdf = pd.DataFrame({
+        "bucket": [3, 3], "term": ["t", "t"], "block_id": [0, 0],
+        "min_dl": [4, 2], "run_order": [3, 0], "blob": [new, old],
+    })
+    deleted = np.array([9], dtype=np.int64)
+    if tombstones == "del_ids":
+        pdf["del_ids"] = [None, [9]]
+        deleted = None
+    (row,) = _merge_with_tombstones(deleted)(pdf).to_dict("records")
+    assert row["blob"] == block([1, 5, 7], [1, 1, 1], [10, 50, 70],
+                                [[(0, 1)], [(1, 1)], [(2, 2)]])
+    assert (row["n_postings"], row["min_doc"], row["max_doc"]) == (3, 1, 7)
+    assert (row["max_tf"], row["max_score"], row["sum_tf"]) == (1, 70, 3)
+    assert row["min_dl"] == 2
+    assert decode_block(row["blob"])["pos_starts"].size == (
+        3 if with_positions else 0
+    )
+    # Every posting tombstoned: the group writes no block.
+    gone = pdf.assign(blob=[block([9], [1], [1], [[(0, 1)]])] * 2)
+    assert _merge_with_tombstones(deleted)(gone).empty
+
+
 def test_segment_read_partition_pruning(spark, tmp_path):
     """The term-segment read must prune on the bucket partition column and
     push the term predicate to parquet (.explain evidence)."""

@@ -72,25 +72,22 @@ def test_reference_terms_indexed(spark, golden_idx, golden_texts):
 def test_positions_slice_to_surface(spark, golden_idx, golden_texts):
     """Posting positions must index the document text exactly (the
     ArticleTextPosition contract, datatypes.py:115-131)."""
+    from myaku_spark.operators.phrase import decode_postings
     from myaku_spark.operators.segments import read_term_segments
-    from myaku_spark.operators.wand import cursors_from_segments, MyakuScorer
-    from myaku_spark.operators.codec import decode_block
 
-    rows = read_term_segments(
-        spark, f"{golden_idx}/segments", ["山賊", "けれども"]
+    rows = decode_postings(
+        read_term_segments(spark, f"{golden_idx}/segments", ["山賊", "けれども"])
     ).collect()
     assert rows
     for r in rows:
-        dec = decode_block(bytes(r.blob))
-        for i, doc in enumerate(dec["doc_ids"]):
-            text = golden_texts[int(doc)]
-            for start, ln in dec["positions"][i]:
-                assert text[start : start + ln] == r.term, (
-                    r.term,
-                    doc,
-                    start,
-                    text[start : start + ln],
-                )
+        text = golden_texts[r.doc_id]
+        for start, ln in zip(r.starts, r.lens):
+            assert text[start : start + ln] == r.term, (
+                r.term,
+                r.doc_id,
+                start,
+                text[start : start + ln],
+            )
 
 
 def test_skewed_head_term(spark, golden_idx, golden_texts):

@@ -722,3 +722,39 @@ def test_resolve_prune_logs_stats_fallback(caplog):
         assert _resolve_prune("auto", None, segments=object()) is True
     msgs = [r.getMessage() for r in caplog.records]
     assert any("assume large" in m and "_jdf" in m for m in msgs), msgs
+
+
+def test_phrase_auto_prune_is_logged(spark, tmp_path, caplog):
+    # Each prune="auto" outcome is logged at INFO with the size it
+    # measured against PRUNE_MIN_SEGMENT_BYTES: the footprint of a
+    # segments dir, or the plan size of a DataFrame source.
+    import logging
+
+    from myaku_spark.operators.phrase import (
+        PRUNE_MIN_SEGMENT_BYTES,
+        _resolve_prune,
+    )
+
+    small = tmp_path / "segs"
+    small.mkdir()
+    (small / "part-0.parquet").write_bytes(b"x" * 1024)
+    df = _segments_for(spark, DOCS).persist()  # cached: exact plan size
+    df.count()
+    with caplog.at_level(logging.INFO, "myaku_spark.operators.phrase"):
+        assert _resolve_prune("auto", str(small)) is False
+        assert _resolve_prune("auto", str(tmp_path / "missing")) is True
+        assert _resolve_prune("auto", None, segments=df) is False
+        assert _resolve_prune(True, None) is True  # forced: not logged
+    msgs = [r.getMessage() for r in caplog.records]
+    assert len(msgs) == 3, msgs
+    limit = f"against PRUNE_MIN_SEGMENT_BYTES={PRUNE_MIN_SEGMENT_BYTES} B"
+    assert all(m.endswith(limit) for m in msgs), msgs
+    footprint, remote, plan = msgs
+    assert footprint.startswith(
+        "phrase prune=auto -> False: segment footprint 1024 B"
+    ), footprint
+    assert remote.startswith("phrase prune=auto -> True"), remote
+    assert "not a local dir; assume large" in remote
+    assert plan.startswith("phrase prune=auto -> False: plan size "), plan
+    assert 0 < int(plan.split("plan size ")[1].split(" B")[0])
+    df.unpersist()

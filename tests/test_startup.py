@@ -39,32 +39,55 @@ def test_import_driver_queries_synthesizes_nothing():
 
 def test_every_package_definition_is_referenced():
     # No top-level def/class in the package may be named only by its own
-    # definition: each name must occur somewhere else in the repo's .py
-    # files (a caller, a test, a registry entry, an import).
+    # definition: each name must be referenced by code somewhere in the
+    # repo's .py files (a caller, a test, an import, a registry string),
+    # outside its own body. Comments and docstrings do not count.
     import ast
-    import re
     from collections import Counter
 
-    sources = {}
+    def refs(tree):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                yield node.id
+            elif isinstance(node, ast.Attribute):
+                yield node.attr
+            elif isinstance(node, ast.alias):
+                yield from node.name.split(".")
+                if node.asname:
+                    yield node.asname
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and node.value.isidentifier()
+            ):
+                yield node.value
+
+    pkg = os.path.join(REPO_DIR, "myaku_spark") + os.sep
+    used = Counter()
+    defs = []
     for root, dirs, files in os.walk(REPO_DIR):
         dirs[:] = [d for d in dirs if not d.startswith((".", "__"))]
         for f in files:
-            if f.endswith(".py"):
-                with open(os.path.join(root, f), encoding="utf-8") as fh:
-                    sources[os.path.join(root, f)] = fh.read()
-    pkg = os.path.join(REPO_DIR, "myaku_spark") + os.sep
-    defs = Counter(
-        node.name
-        for path, src in sources.items()
-        if path.startswith(pkg)
-        for node in ast.parse(src).body
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-    )
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            used.update(refs(tree))
+            if path.startswith(pkg):
+                defs += [
+                    node
+                    for node in tree.body
+                    if isinstance(
+                        node,
+                        (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef),
+                    )
+                ]
     assert len(defs) > 100  # the scan found the package
-    words = Counter(
-        w for src in sources.values() for w in re.findall(r"\w+", src)
-    )
-    dead = sorted(n for n, k in defs.items() if words[n] <= k)
+    own = Counter()
+    for node in defs:
+        own[node.name] += sum(1 for r in refs(node) if r == node.name)
+    dead = sorted({n.name for n in defs if used[n.name] <= own[n.name]})
     assert dead == [], f"{len(dead)} of {len(defs)} definitions unreferenced"
 
 

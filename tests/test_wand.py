@@ -6,7 +6,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from myaku_spark.operators.codec import encode_block
+from myaku_spark.operators.codec import encode_blocks_batch
 from myaku_spark.operators.wand import (
     BM25Scorer,
     MyakuScorer,
@@ -21,26 +21,22 @@ from myaku_spark.operators.wand import (
 
 def make_cursor(postings, scorer, block_size=4):
     """postings: list of (doc_id, tf, payload) sorted by doc."""
-    postings = sorted(postings)
-    blocks = []
-    for i in range(0, len(postings), block_size):
-        chunk = postings[i : i + block_size]
-        doc_ids = np.array([p[0] for p in chunk], dtype=np.uint64)
-        tfs = np.array([p[1] for p in chunk], dtype=np.uint64)
-        payload = np.array([p[2] for p in chunk], dtype=np.int64)
-        meta = {
-            "max_score": int(payload.max()),
-            "max_tf": int(tfs.max()),
-            "min_dl": int(payload.min()),
-        }
-        blocks.append(
-            _Block(
-                min_doc=int(doc_ids.min()),
-                max_doc=int(doc_ids.max()),
-                meta=meta,
-                blob=encode_block(doc_ids, tfs, payload),
-            )
+    doc_ids, tfs, payload = np.array(sorted(postings), dtype=np.int64).T
+    doc_off = np.append(np.arange(0, len(doc_ids), block_size), len(doc_ids))
+    blobs, meta = encode_blocks_batch(doc_off, doc_ids, tfs, payload)
+    blocks = [
+        _Block(
+            min_doc=int(meta["min_doc"][i]),
+            max_doc=int(meta["max_doc"][i]),
+            meta={
+                "max_score": int(meta["max_score"][i]),
+                "max_tf": int(meta["max_tf"][i]),
+                "min_dl": int(payload[doc_off[i] : doc_off[i + 1]].min()),
+            },
+            blob=blob,
         )
+        for i, blob in enumerate(blobs)
+    ]
     return TermCursor("t", blocks, scorer)
 
 
