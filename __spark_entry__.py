@@ -2,7 +2,7 @@
 
 ``entry(spark)`` runs the flagship pipeline (whitespace-tokenized posting
 build → BM25 → top-k) on sf0.001. ``queries()``/``oracle_sql()`` expose
-every SQL-expressible operator from SURVEY.md §2 with DuckDB oracles;
+the extraction, indexing, ranking and search gates with DuckDB oracles;
 implementations live in ``myaku_spark.driver_queries``.
 """
 
@@ -27,7 +27,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per gated engine operator."""
     from myaku_spark.driver_queries import QUERIES
 
     return dict(QUERIES)

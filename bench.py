@@ -63,16 +63,9 @@ BENCH_QUERIES = [
     "rank_key_topk",
     "dedup_exact",
     "minhash_lsh_pairs",
-    "embedding_topk",
-    "events_windowed",
-    "token_counts",
-    "lm_perplexity",
     "boilerplate",
-    "kmeans_clusters",
     "phrase_search",
-    "curation_funnel",
     "line_dedup",
-    "gopher_quality",
     "pagerank_topk",
 ]
 

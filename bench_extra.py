@@ -36,10 +36,8 @@ from myaku_spark.session import get_spark  # noqa: E402
 
 BENCH_QUERIES = [
     "postings_build", "term_stats", "bm25_topk", "search_and",
-    "rank_key_topk", "dedup_exact", "minhash_lsh_pairs", "embedding_topk",
-    "events_windowed", "token_counts", "lm_perplexity", "boilerplate",
-    "kmeans_clusters", "phrase_search", "curation_funnel", "line_dedup",
-    "gopher_quality", "pagerank_topk",
+    "rank_key_topk", "dedup_exact", "minhash_lsh_pairs", "boilerplate",
+    "phrase_search", "line_dedup", "pagerank_topk",
 ]
 
 

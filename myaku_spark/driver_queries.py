@@ -1,5 +1,6 @@
-"""Driver-contract queries: every SQL-expressible operator from SURVEY §2,
-paired with an ANSI-SQL DuckDB oracle over the same parquet tables.
+"""Driver-contract queries: the extraction, tokenizing, indexing, ranking,
+search, near-duplicate, link-graph and media operators, each paired with
+an ANSI-SQL DuckDB oracle over the same parquet tables.
 
 Each query is a (spark, sf_dir) -> DataFrame callable; ORACLE[name] is the
 equivalent DuckDB SQL, or ORACLE_BUILDERS[name]() builds it for the oracles
@@ -30,7 +31,6 @@ from myaku_spark.operators.dedup import (
 
 # Fixed query terms drawn from the synthetic vocabulary.
 Q_AND_TERMS = ["spark", "join"]
-Q_OR_TERMS = ["window", "merge", "stream"]
 Q_TOPK_TERMS = ["spark", "join", "filter", "window", "query"]
 FIXED_NOW = "2026-08-01 00:00:00"  # parameterized 'utcnow' (A6 recency)
 
@@ -38,7 +38,6 @@ FIXED_NOW = "2026-08-01 00:00:00"  # parameterized 'utcnow' (A6 recency)
 MH_P = 2147483647
 MH_HASHES = [(1_103_515_245 + 12_345 * i, 2_531_011 + 97 * i) for i in range(8)]
 MH_BANDS = 4  # 2 hashes per band
-SHINGLE_K = 3
 
 # SimHash gate parameters: 16 bit-hash functions, 4 pigeonhole bands.
 SH_BITS = 16
@@ -75,8 +74,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,89 +259,8 @@ def q_segment_search_e2e(spark, sf_dir):
     )
 
 
-RRF_TERM = "spark"
-RRF_C = 60  # the standard RRF constant
-RRF_TOPN = 50
 
 
-def q_rrf_fusion(spark, sf_dir):
-    """Hybrid retrieval: lexical BM25 top-50 for one query term fused
-    with cosine top-50 of a query vector (vec 0 over docs ≥ 1) by
-    reciprocal-rank fusion, rrf = Σ 1/(60+rank) (Cormack et al. 2009,
-    public method). Spark shape: each leg prunes to its own top-N
-    BEFORE the fuse, so the full-outer join and the final top-20 see at
-    most 2·N rows — the corpus-sized work stays inside the two ranked
-    legs, which are the already-oracled bm25/cosine plans."""
-    toks = _tokens(spark, sf_dir)
-    p = post_ops.build_postings(toks)
-    ds = post_ops.doc_stats(toks)
-    scored = bm25_ops.attach_bm25(
-        p, post_ops.term_stats(p), ds, post_ops.corpus_stats(ds)
-    )
-    # TakeOrderedAndProject first (per-task top-N merge), THEN the rank
-    # window over the ≤ N surviving rows — never a single-partition
-    # window over a head term's full posting list.
-    lex_top = (
-        scored.filter(F.col("term") == RRF_TERM)
-        .select("doc_id", "bm25")
-        .orderBy(F.desc("bm25"), F.desc("doc_id"))
-        .limit(RRF_TOPN)
-    )
-    lex = lex_top.withColumn(
-        "lex_rank",
-        F.row_number().over(
-            Window.orderBy(F.desc("bm25"), F.desc("doc_id"))
-        ),
-    ).select("doc_id", F.col("lex_rank").cast("int").alias("lex_rank"))
-    emb = _emb(spark, sf_dir)
-    qv = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_emb")
-    )
-    cand = emb.filter(F.col("vec_id") >= 1)
-    dot = F.expr(
-        "aggregate(zip_with(embedding, q_emb, (x, y) ->"
-        " cast(x as double) * cast(y as double)), 0.0d, (acc, v) -> acc + v)"
-    )
-    na = F.expr(
-        "sqrt(aggregate(embedding, 0.0d, (acc, v) ->"
-        " acc + cast(v as double) * cast(v as double)))"
-    )
-    nb = F.expr(
-        "sqrt(aggregate(q_emb, 0.0d, (acc, v) ->"
-        " acc + cast(v as double) * cast(v as double)))"
-    )
-    vec_top = (
-        cand.crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc_id"), (dot / (na * nb)).alias("cos")
-        )
-        .orderBy(F.desc("cos"), F.desc("doc_id"))
-        .limit(RRF_TOPN)
-    )
-    vec = vec_top.withColumn(
-        "vec_rank",
-        F.row_number().over(
-            Window.orderBy(F.desc("cos"), F.desc("doc_id"))
-        ),
-    ).select("doc_id", F.col("vec_rank").cast("int").alias("vec_rank"))
-    rrf = F.coalesce(
-        F.lit(1.0) / (F.lit(RRF_C) + F.col("lex_rank")), F.lit(0.0)
-    ) + F.coalesce(
-        F.lit(1.0) / (F.lit(RRF_C) + F.col("vec_rank")), F.lit(0.0)
-    )
-    return (
-        lex.join(vec, "doc_id", "full_outer")
-        .select(
-            "doc_id",
-            F.coalesce("lex_rank", F.lit(-1)).alias("lex_rank"),
-            F.coalesce("vec_rank", F.lit(-1)).alias("vec_rank"),
-            F.round(rrf, 6).alias("rrf_r"),
-            rrf.alias("_o"),
-        )
-        .orderBy(F.desc("_o"), "doc_id")
-        .limit(20)
-        .drop("_o")
-    )
 
 
 def q_search_and(spark, sf_dir):
@@ -463,49 +379,12 @@ def q_hydrate_topk(spark, sf_dir):
     )
 
 
-def q_lang_distribution(spark, sf_dir):
-    """Text-analysis: language distribution (per-partition metrics, A9)."""
-    return (
-        _docs(spark, sf_dir)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
-        )
-    )
 
 
-def q_token_counts(spark, sf_dir):
-    """Text-analysis: token counting per doc + distinct terms."""
-    toks = _tokens(spark, sf_dir)
-    return toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_tokens"),
-        F.countDistinct("term").cast("long").alias("n_distinct_terms"),
-    )
 
 
-def q_quality_signals(spark, sf_dir):
-    """Text-analysis: quality signals (avg token len, max token len)."""
-    toks = _tokens(spark, sf_dir)
-    return toks.groupBy("doc_id").agg(
-        F.round(F.avg(F.col("len").cast("double")), 4).alias("avg_token_len"),
-        F.max("len").cast("int").alias("max_token_len"),
-    )
 
 
-def q_doc_fingerprint(spark, sf_dir):
-    """Text-analysis: positional fingerprint (deterministic integer mix).
-
-    Terms are id-encoded with the md5-based term_id_col — a pure hash
-    with no dictionary join and no global window, so the fingerprint is
-    one map-side expression + one groupBy at any scale — mixed with the
-    char offset (rolling-hash analog)."""
-    toks = _tokens(spark, sf_dir)
-    tid_p = term_id_col(F.col("term")) % 2_147_483_647
-    contrib = (tid_p * (1 + F.col("start").cast("long"))) % 2_147_483_647
-    return toks.groupBy("doc_id").agg(
-        (F.sum(contrib) % 2_147_483_647).cast("long").alias("fingerprint")
-    )
 
 
 def q_minhash_signature(spark, sf_dir):
@@ -627,68 +506,10 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     )
 
 
-def q_embedding_topk(spark, sf_dir):
-    """Similarity search: brute-force cosine top-3 for 5 query vectors."""
-    emb = _emb(spark, sf_dir)
-    qv = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    cand = emb.filter(F.col("vec_id") >= 5)
-    joined = cand.crossJoin(F.broadcast(qv))
-    dot = F.expr(
-        "aggregate(zip_with(embedding, q_emb, (x, y) ->"
-        " cast(x as double) * cast(y as double)), 0.0d, (acc, v) -> acc + v)"
-    )
-    na = F.expr(
-        "sqrt(aggregate(embedding, 0.0d, (acc, v) ->"
-        " acc + cast(v as double) * cast(v as double)))"
-    )
-    nb = F.expr(
-        "sqrt(aggregate(q_emb, 0.0d, (acc, v) ->"
-        " acc + cast(v as double) * cast(v as double)))"
-    )
-    scored = joined.select(
-        "q_id", "vec_id", (dot / (na * nb)).alias("cos")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.desc("vec_id"))
-    top = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= 3
-    )
-    return top.select(
-        "q_id", "vec_id", F.col("rank").cast("int").alias("rank"),
-        F.round("cos", 3).alias("cos_r"),
-    )
 
 
-def q_ivf_topk(spark, sf_dir):
-    """IVF ANN with FULL probing (nprobe == n_centroids) — by
-    construction identical to the brute-force ranking, so the exact
-    DuckDB cosine oracle applies verbatim; the partial-probe scale path
-    (equi-join on inverted lists, never a cross join) is pytest-covered
-    (test_ivf_topk_partial_probe_recall)."""
-    from myaku_spark.operators.similarity import ivf_topk
-
-    emb = _emb(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    cand = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
-    return ivf_topk(cand, q, k=3, n_centroids=8, nprobe=8).select(
-        "q_id", "vec_id", F.col("rank").cast("int").alias("rank"),
-        F.round("cos", 3).alias("cos_r"),
-    )
 
 
-def q_events_windowed(spark, sf_dir):
-    """Streaming-analog: tumbling 1h window aggregation over events."""
-    ev = _events(spark, sf_dir)
-    return ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("win_start"),
-        "event_type",
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.round(F.sum("value"), 3).alias("sum_value"),
-    )
 
 
 def q_incremental_merge(spark, sf_dir):
@@ -712,18 +533,6 @@ def q_incremental_merge(spark, sf_dir):
     )
 
 
-def q_quality_filter(spark, sf_dir):
-    """Gopher-style token-statistics quality signals (pre-training filter)."""
-    from myaku_spark.operators.textstats import quality_signals
-
-    sig = quality_signals(_docs(spark, sf_dir))
-    return sig.select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("n_distinct_tokens").cast("long").alias("n_distinct_tokens"),
-        F.round("ttr", 4).alias("ttr_r"),
-        F.round("mean_token_len", 4).alias("mtl_r"),
-    )
 
 
 def q_simhash_pairs(spark, sf_dir):
@@ -764,178 +573,16 @@ def q_simhash_pairs(spark, sf_dir):
     )
 
 
-ANN_PLANES = 4
 
 
-def _ann_sign_dot(vec: str, plane: int):
-    """<v, h_p> with h_p[i] = ±1 from the parity of the md5-derived id of
-    'p:i' — the repo's engine-independent hash (term_id_col), so DuckDB
-    replays the identical hyperplane."""
-    return F.expr(
-        f"""aggregate(zip_with({vec}, sequence(0, size({vec}) - 1),
-          (x, i) -> cast(x as double) *
-            (cast(cast(conv(substring(md5(concat('{plane}:',
-                 cast(i as string))), 1, 14), 16, 10) as bigint) % 2
-              as double) * 2.0d - 1.0d)),
-          0.0d, (acc, v) -> acc + v)"""
-    )
 
 
-def _ann_bucket(df, vec: str):
-    bucket = F.lit(0)
-    for p in range(ANN_PLANES):
-        bucket = bucket * 2 + F.when(_ann_sign_dot(vec, p) >= 0, 1).otherwise(0)
-    return df.withColumn("lsh_bucket", bucket.cast("int"))
 
 
-def q_ann_lsh_topk(spark, sf_dir):
-    """LSH-bucketed ANN gate twin, DuckDB-oracled end-to-end.
-
-    Identical plan shape to the production ann_topk (operators/
-    similarity.py:91 — sign-hyperplane bucket → bucket equi-join →
-    windowed exact cosine among same-bucket candidates); the twin's
-    hyperplane signs come from the md5 cross-engine hash instead of
-    xxhash64 so the DuckDB oracle replays the exact bucket assignment.
-    The xxhash64 production planes are pytest-covered
-    (test_ann_topk_recall_vs_exact)."""
-    emb = _emb(spark, sf_dir)
-    q = _ann_bucket(
-        emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-        ),
-        "q_emb",
-    )
-    cand = _ann_bucket(
-        emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding"),
-        "embedding",
-    )
-    joined = cand.join(F.broadcast(q), "lsh_bucket")
-    dot = F.expr(
-        "aggregate(zip_with(embedding, q_emb, (x, y) ->"
-        " cast(x as double) * cast(y as double)), 0.0d, (acc, v) -> acc + v)"
-    )
-    na = F.expr(
-        "sqrt(aggregate(embedding, 0.0d, (acc, v) ->"
-        " acc + cast(v as double) * cast(v as double)))"
-    )
-    nb = F.expr(
-        "sqrt(aggregate(q_emb, 0.0d, (acc, v) ->"
-        " acc + cast(v as double) * cast(v as double)))"
-    )
-    scored = joined.select("q_id", "vec_id", (dot / (na * nb)).alias("cos"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.desc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select(
-            "q_id", "vec_id", F.col("rank").cast("int").alias("rank"),
-            F.round("cos", 3).alias("cos_r"),
-        )
-    )
 
 
-def q_embedding_near_dup(spark, sf_dir):
-    """Embedding near-duplicate pairs, DuckDB-oracled: LSH-bucket
-    self-join (never all-pairs) + exact cosine verify ≥ threshold.
-    Hyperplanes are the md5 cross-engine hash (as in ann_lsh_topk);
-    ×2-scaled twins (vec_id+100000, cosine exactly 1.0 with their
-    source) seed guaranteed near-dups so the gate is non-vacuous."""
-    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
-    twins = emb.filter(F.col("vec_id") < 20).select(
-        (F.col("vec_id") + 100_000).alias("vec_id"),
-        F.expr(
-            "transform(embedding, x -> cast(cast(x as double) * 2.0d as float))"
-        ).alias("embedding"),
-    )
-    allv = _ann_bucket(emb.unionByName(twins), "embedding")
-    left = allv.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("emb_a"),
-        "lsh_bucket",
-    )
-    right = allv.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("emb_b"),
-        "lsh_bucket",
-    )
-    pairs = left.join(right, "lsh_bucket").filter(
-        F.col("vec_a") < F.col("vec_b")
-    )
-    dot = F.expr(
-        "aggregate(zip_with(emb_a, emb_b, (x, y) ->"
-        " cast(x as double) * cast(y as double)), 0.0d, (acc, v) -> acc + v)"
-    )
-    na = F.expr(
-        "sqrt(aggregate(emb_a, 0.0d, (acc, v) ->"
-        " acc + cast(v as double) * cast(v as double)))"
-    )
-    nb = F.expr(
-        "sqrt(aggregate(emb_b, 0.0d, (acc, v) ->"
-        " acc + cast(v as double) * cast(v as double)))"
-    )
-    cos = dot / (na * nb)
-    return (
-        pairs.select("vec_a", "vec_b", cos.alias("cos"))
-        .filter(F.round(cos, 4) >= 0.98)
-        .select("vec_a", "vec_b", F.round("cos", 3).alias("cos_r"))
-    )
 
 
-def q_repetition_signals(spark, sf_dir):
-    """Gopher-style repetition filters (Rae et al. appendix A):
-    duplicate-line fraction + most-common-2-gram fraction, DuckDB-
-    oracled. The sf documents are single-line, so REPETITIVE twins are
-    seeded (doc_id+200000 = the doc's 40-char prefix repeated 10 times
-    on newlines — built with engine-shared string functions) so both
-    signals take non-trivial values. The production operator
-    (textstats.repetition_signals, \\s+ tokens + slice/transform
-    shingles) is pytest-covered; the gate twin splits exactly like the
-    SQL (single-space tokens, lead windows)."""
-    docs = (
-        _docs(spark, sf_dir)
-        .filter(F.col("doc_id") < 100)
-        .select("doc_id", "text")
-    )
-    twins = docs.filter(F.col("doc_id") < 20).select(
-        (F.col("doc_id") + 200_000).alias("doc_id"),
-        F.repeat(
-            F.concat(F.substring("text", 1, 40), F.lit("\n")), 10
-        ).alias("text"),
-    )
-    alld = docs.unionByName(twins)
-    lines = alld.select(
-        "doc_id", F.explode(F.split("text", "\n", -1)).alias("line")
-    )
-    line_stats = lines.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.countDistinct("line").alias("n_distinct"),
-    )
-    toks = alld.select(
-        "doc_id",
-        F.posexplode(F.split("text", " ", -1)).alias("ord", "term"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("ord")
-    grams = (
-        toks.withColumn("t2", F.lead("term", 1).over(w))
-        .filter(F.col("t2").isNotNull())
-        .select("doc_id", F.concat_ws(" ", "term", "t2").alias("gram"))
-    )
-    gram_counts = grams.groupBy("doc_id", "gram").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    gram_stats = gram_counts.groupBy("doc_id").agg(
-        F.max("cnt").alias("top_cnt"), F.sum("cnt").alias("n_grams")
-    )
-    return line_stats.join(gram_stats, "doc_id").select(
-        "doc_id",
-        F.col("n_lines").cast("long").alias("n_lines"),
-        F.round(
-            (F.col("n_lines") - F.col("n_distinct")) / F.col("n_lines"), 4
-        ).alias("dup_line_frac"),
-        F.round(F.col("top_cnt") / F.col("n_grams"), 4).alias(
-            "top_2gram_frac"
-        ),
-    )
 
 
 def q_decontaminate(spark, sf_dir):
@@ -962,15 +609,6 @@ def q_decontaminate(spark, sf_dir):
     return out.filter(F.col("n_shared") >= 5).select("doc_id", "n_shared")
 
 
-def q_lang_id(spark, sf_dir):
-    """Heuristic language ID vs the labeled lang column (DuckDB-oracled:
-    the script-ratio + marker-stopword heuristic is pure regex/list
-    arithmetic, replayed in RE2 syntax on the oracle side)."""
-    from myaku_spark.operators.textstats import detect_language
-
-    return detect_language(_docs(spark, sf_dir)).select(
-        "doc_id", "lang", "lang_pred"
-    )
 
 
 def q_ja_index_postings(spark, sf_dir):
@@ -1487,355 +1125,42 @@ def q_pagination_page2(spark, sf_dir):
     )
 
 
-def q_source_stats(spark, sf_dir):
-    """A9 crawl-stats analog: per-source docs/chars/langs."""
-    return (
-        _docs(spark, sf_dir)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
-            F.countDistinct("lang").cast("long").alias("n_langs"),
-        )
-    )
 
 
-def q_event_sessions(spark, sf_dir):
-    """Sessionization (gap > 30 min starts a session) — the stateful
-    streaming pattern expressed in batch with window lag."""
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    gap = epoch - F.lag(epoch).over(w)
-    marked = ev.withColumn(
-        "new_session",
-        F.when(gap.isNull() | (gap > 1800), 1).otherwise(0),
-    )
-    sess = marked.withColumn(
-        "session_no",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-    return sess.groupBy("user_id", "session_no").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.min("ts").alias("session_start"),
-    )
 
 
 # Weighted-sampling gate parameters (shared literals on both sides).
-WS_RATES = {"src0": 0.9, "src1": 0.5, "src2": 0.25, "src3": 0.1}
-WS_DEFAULT = 0.05
-WS_SALT = "gate"
-
-PACK_MAX = 200  # token budget per packed training sequence
 
 
-def q_pii_redaction(spark, sf_dir):
-    """PII scrub: detection counts + redacted-text digest. The synthetic
-    corpus has no PII, so both sides SEED it identically (doc_id-derived
-    emails / dotted quads / phone numbers appended to doc_id<200) — the
-    regexes and the replacement then have real work to disagree on."""
-    from myaku_spark.operators.textstats import pii_signals, redact_pii
-
-    docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 200)
-    did = F.col("doc_id")
-    seeded = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                did % 3 == 0,
-                F.concat(
-                    F.lit(" contact user"),
-                    did.cast("string"),
-                    F.lit("@example.com now"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                did % 5 == 0,
-                F.concat(
-                    F.lit(" from 10.0."),
-                    (did % 256).cast("string"),
-                    F.lit(".7 today"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                did % 7 == 0,
-                F.concat(
-                    F.lit(" call 555-01"),
-                    F.lpad((did % 10).cast("string"), 1, "0"),
-                    F.lit("-"),
-                    F.lpad((did % 10000).cast("string"), 4, "0"),
-                ),
-            ).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    sig = pii_signals(seeded)
-    red = redact_pii(seeded).select(
-        "doc_id", F.md5(F.col("redacted")).alias("redacted_md5")
-    )
-    return sig.join(red, "doc_id").select(
-        "doc_id", "n_email", "n_ipv4", "n_phone", "redacted_md5"
-    )
 
 
-def q_weighted_sample(spark, sf_dir):
-    """Corpus mixing: deterministic per-source Bernoulli sample (md5
-    hash-threshold draw). The output IS the sampled id set — any engine
-    drawing differently fails the hash, so the check is exact, not
-    statistical."""
-    from myaku_spark.operators.textstats import weighted_sample
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source")
-    return weighted_sample(
-        docs, WS_RATES, salt=WS_SALT, default_rate=WS_DEFAULT
-    )
 
 
-def q_pack_sequences(spark, sf_dir):
-    """Training-sequence packing: longest-first next-fit into PACK_MAX
-    token budgets within doc_id%8 shards (the parallel unit). Oracle
-    replays the fold as a recursive CTE."""
-    from myaku_spark.operators.packing import pack_sequences
-
-    toks = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.size(
-            F.filter(F.split(F.col("text"), " "), lambda t: F.length(t) > 0)
-        )
-        .cast("long")
-        .alias("n_tokens"),
-    )
-    sharded = toks.withColumn(
-        "shard", F.pmod(F.col("doc_id"), F.lit(8)).cast("long")
-    )
-    return pack_sequences(sharded, PACK_MAX, order="length").select(
-        "shard", "doc_id", "n_tokens", "seq_id", "seq_fill"
-    )
 
 
-KM_K = 8  # k-means gate: clusters
-KM_ITERS = 3  # full Lloyd update rounds before the final assignment
 
 
-def q_kmeans_clusters(spark, sf_dir):
-    """Embedding clustering for data curation: Lloyd's k-means, k=8,
-    3 update rounds, deterministic init (lowest vec_ids). Vectors are
-    int-scaled (round(x*1000)) on BOTH sides so every centroid mean is
-    an exact integer ratio — the only cross-engine float noise left is
-    the 64-term distance sum, ~1e-12 relative, far below any argmin
-    boundary. Oracle: the same Lloyd rounds unrolled as SQL CTEs."""
-    from myaku_spark.operators.similarity import kmeans_assign, kmeans_fit
-
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.round(x.cast("double") * 1000, 0),
-        ).alias("embedding"),
-    )
-    cents = kmeans_fit(emb, k=KM_K, iters=KM_ITERS)
-    asg = kmeans_assign(emb, cents)
-    sizes = asg.groupBy("cluster").agg(
-        F.count(F.lit(1)).cast("long").alias("cluster_size")
-    )
-    return asg.join(sizes, "cluster").select(
-        "vec_id", "cluster", "cluster_size"
-    )
 
 
-def _kmeans_prefix(
-    k: int, iters: int, vec_sql: str | None = None, sfx: str = "",
-    table: str = "embeddings",
-) -> str:
-    """Lloyd's k-means unrolled as CTEs (assignment a_i/m_i, update
-    u_i/c_{i+1}); mirrors kmeans_fit exactly, incl. empty-cluster
-    carry-over and lowest-cluster tie-break. Returns the WITH-chain up
-    to the final assignment m{iters} so multiple oracles can build on
-    the same clustering. ``vec_sql`` overrides the int-scaled vector
-    expression (e.g. a subspace slice for PQ); ``table`` the source
-    relation (e.g. a twin-seeded CTE for semantic_dedup); ``sfx``
-    suffixes every CTE name so several chains can coexist in one
-    statement (the first chain must carry the WITH keyword: strip it
-    for later ones)."""
-    vec_sql = vec_sql or (
-        "list_transform(embedding, x -> round(CAST(x AS DOUBLE) * 1000))"
-    )
-    parts = [
-        f"""
-e{sfx} AS MATERIALIZED (
-  SELECT vec_id, {vec_sql} AS v
-  FROM {table}
-),
-c0{sfx} AS MATERIALIZED (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cl,
-         v AS cv
-  FROM (SELECT vec_id, v FROM e{sfx} ORDER BY vec_id LIMIT {k})
-)"""
-    ]
-    for i in range(iters + 1):
-        parts.append(
-            f""",
-a{i}{sfx} AS MATERIALIZED (
-  SELECT vec_id, cl, sum((x - y) * (x - y)) AS dist
-  FROM (SELECT e.vec_id, c.cl, unnest(e.v) AS x, unnest(c.cv) AS y
-        FROM e{sfx} e CROSS JOIN c{i}{sfx} c)
-  GROUP BY vec_id, cl
-),
-m{i}{sfx} AS MATERIALIZED (
-  SELECT vec_id, cl FROM (
-    SELECT vec_id, cl,
-           row_number() OVER (PARTITION BY vec_id ORDER BY dist, cl) AS rn
-    FROM a{i}{sfx})
-  WHERE rn = 1
-)"""
-        )
-        if i < iters:
-            parts.append(
-                f""",
-u{i}{sfx} AS MATERIALIZED (
-  SELECT m.cl, t.pos, avg(t.val) AS val
-  FROM m{i}{sfx} m JOIN (
-    SELECT vec_id, unnest(v) AS val, generate_subscripts(v, 1) AS pos
-    FROM e{sfx}
-  ) t USING (vec_id)
-  GROUP BY m.cl, t.pos
-),
-c{i + 1}{sfx} AS MATERIALIZED (
-  SELECT p.cl,
-         CASE WHEN count(u.val) = 0 THEN p.cv
-              ELSE list(u.val ORDER BY u.pos) END AS cv
-  FROM c{i}{sfx} p LEFT JOIN u{i}{sfx} u ON u.cl = p.cl
-  GROUP BY p.cl, p.cv
-)"""
-            )
-    return "WITH " + "".join(parts)
 
 
-def _kmeans_sql(k: int, iters: int) -> str:
-    return (
-        _kmeans_prefix(k, iters)
-        + f""",
-sizes AS (
-  SELECT cl, CAST(count(*) AS BIGINT) AS cluster_size
-  FROM m{iters} GROUP BY cl
-)
-SELECT m.vec_id, m.cl AS cluster, s.cluster_size
-FROM m{iters} m JOIN sizes s USING (cl)
-"""
-    )
 
 
-PQ_M = 4        # product quantization: subspaces
-PQ_KCB = 8      # centroids per subspace codebook
-PQ_ITERS = 2    # Lloyd rounds per codebook
-PQ_TOPK = 5
-PQ_DIM = 64     # testdata embedding dimension
-PQ_QIDS = [0, 1, 2]
 
 
-def q_pq_adc_topk(spark, sf_dir):
-    """Product-quantization ANN: per-subspace Lloyd codebooks (same
-    deterministic k-means as kmeans_clusters, on vector slices), 1-int-
-    per-subspace codes, and asymmetric-distance top-k via a broadcast
-    query LUT. Int-scaled vectors make every distance an exact integer
-    — the oracle unrolls all four codebook fits as suffixed CTE chains
-    and replays encode + ADC relationally."""
-    from myaku_spark.operators.similarity import pq_adc_topk
-
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.round(x.cast("double") * 1000, 0),
-        ).alias("embedding"),
-    )
-    queries = emb.filter(F.col("vec_id").isin(PQ_QIDS)).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    return pq_adc_topk(
-        emb, queries, k=PQ_TOPK, m=PQ_M, k_cb=PQ_KCB,
-        iters=PQ_ITERS, dim=PQ_DIM,
-    )
 
 
-CS_QUOTA = 40  # cluster-sample gate: max rows kept per cluster
-CS_SALT = "cs0"
 
 
-def q_cluster_sample(spark, sf_dir):
-    """Cluster-balanced diversity sampling (D4/SemDeDup-style): the
-    same deterministic Lloyd clustering as kmeans_clusters, then at
-    most CS_QUOTA rows per cluster chosen by the engine-independent
-    md5 uniform draw — head clusters capped, tail clusters whole."""
-    from myaku_spark.operators.similarity import (
-        cluster_sample,
-        kmeans_assign,
-        kmeans_fit,
-    )
-
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.round(x.cast("double") * 1000, 0),
-        ).alias("embedding"),
-    )
-    cents = kmeans_fit(emb, k=KM_K, iters=KM_ITERS)
-    asg = kmeans_assign(emb, cents)
-    return cluster_sample(asg, quota=CS_QUOTA, salt=CS_SALT)
 
 
-SD_TAU = 0.98  # semantic-dedup gate: within-cluster cosine threshold
 
 
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup gate (Abbas et al. 2023): the deterministic Lloyd
-    clustering of kmeans_clusters over int-scaled vectors, seeded with
-    exact twins (vec_id+100000, identical vectors — cosine exactly 1,
-    same cluster, guaranteed drops) and near twins (first coordinate
-    +50 — near-1 cosine, usually same cluster), then within-cluster
-    cosine dedup at SD_TAU with lowest-id-survives. Oracle: the same
-    Lloyd CTE chain over the twinned table + a relational pair join."""
-    from myaku_spark.operators.similarity import kmeans_fit, semantic_dedup
-
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.round(x.cast("double") * 1000, 0),
-        ).alias("embedding"),
-    )
-    exact = emb.filter(F.col("vec_id") < 10).select(
-        (F.col("vec_id") + 100_000).alias("vec_id"), "embedding"
-    )
-    near = emb.filter(
-        (F.col("vec_id") >= 10) & (F.col("vec_id") < 20)
-    ).select(
-        (F.col("vec_id") + 100_000).alias("vec_id"),
-        F.expr(
-            "transform(embedding, (x, i) -> IF(i = 0, x + 50.0D, x))"
-        ).alias("embedding"),
-    )
-    allv = emb.unionByName(exact).unionByName(near)
-    cents = kmeans_fit(allv, k=KM_K, iters=KM_ITERS)
-    return semantic_dedup(allv, cents, threshold=SD_TAU)
 
 
-LM_K = 0.5  # add-k smoothing constant for the bigram LM gate
 
 
-def q_lm_perplexity(spark, sf_dir):
-    """CCNet-style LM quality scoring: train a bigram add-k LM on the
-    corpus, score every doc's avg token log-prob + perplexity. All
-    Catalyst (tokenize, bigram explode, count joins); floats rounded
-    at 3dp with identical expression shapes on both engines."""
-    from myaku_spark.operators.lm import perplexity, train_bigram_lm
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    lm = train_bigram_lm(docs)  # eager fit; model cached until released
-    return perplexity(docs, lm, k=LM_K)
 
 
 BP_MIN_DOCS = 5  # shingle doc-frequency at which it counts as boilerplate
@@ -1927,61 +1252,8 @@ def q_proximity_search(spark, sf_dir):
     return _phrase_gate(spark, sf_dir, PROX, slop=PROX_SLOP)
 
 
-CUR_TWINS = 30  # seeded exact-duplicate twins so the dedup stage bites
-CUR_MIN_CHARS = 180
-CUR_PPL_MAX = 30.2  # p75 of funnel survivors' ppl: the stage bites, most pass
-CUR_SALT = "cur0"
-CUR_WEIGHTS = {f"src{i}": 1.0 for i in range(5)} | {
-    f"src{i}": 0.6 for i in range(5, 10)
-}
-CUR_DEFAULT_RATE = 0.3
 
 
-def q_curation_funnel(spark, sf_dir):
-    """The full curation pipeline as a survivor funnel: input → lang →
-    min-length → exact dedup → boilerplate → LM perplexity → weighted
-    domain sample, computed as ONE flag projection + ONE aggregation
-    (plans/curate.py). The corpus has no exact duplicates, so the gate
-    seeds CUR_TWINS identical twins (doc_id + 10^6) — first-writer-wins
-    must remove exactly the twins. Oracle replays every stage
-    relationally over the same seeded input."""
-    from myaku_spark.plans.curate import curate_flags, curate_metrics
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    twins = (
-        docs.filter(F.col("lang") == "en")
-        .orderBy("doc_id")
-        .limit(CUR_TWINS)
-        .select(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"),
-            "text", "lang", "source", "n_chars",
-        )
-    )
-    inp = docs.unionByName(twins)
-    from myaku_spark.operators.lm import train_bigram_lm
-
-    lm = train_bigram_lm(inp)
-    flags = curate_flags(
-        inp,
-        lang="en",
-        min_chars=CUR_MIN_CHARS,
-        bp_min_docs=BP_MIN_DOCS,
-        bp_max_ratio=BP_MAX_RATIO,
-        ppl_max=CUR_PPL_MAX,
-        weights=CUR_WEIGHTS,
-        default_rate=CUR_DEFAULT_RATE,
-        salt=CUR_SALT,
-        lm=lm,
-    )
-    # funnel is driver-sized by construction (one row per stage):
-    # materialize it so the fitted model's cache can be released here
-    rows = curate_metrics(flags).collect()
-    lm.release()
-    return spark.createDataFrame(
-        rows, "stage_idx int, stage string, n_docs long"
-    )
 
 
 FUZZY_QUERIES = [
@@ -2083,53 +1355,8 @@ def q_line_dedup(spark, sf_dir):
     )
 
 
-def _gopher_seeded_docs(spark, sf_dir):
-    """Documents with deterministic rule-triggering mutations applied
-    identically on both engines (the synthetic corpus is single-space
-    text with no newlines/#/ellipses, so unseeded it would exercise
-    only the word-count and stopword rules): bullet lines, ellipsis
-    lines, # runs, a too-short doc class, and a stopword tail that
-    lets half the corpus pass the stopword floor. CASE order matters
-    and is mirrored in the oracle."""
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        F.when(F.col("doc_id") % 13 == 4, F.lit("zz zz zz"))
-        .when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit("\n- bullet one\n* bullet two\n• bullet three"),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(F.col("text"), F.lit(" wait...\nto be continued...")),
-        )
-        .when(
-            F.col("doc_id") % 11 == 3,
-            F.concat(F.col("text"), F.lit(" ## #### #")),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    ).select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 2 == 0,
-            F.concat(F.col("text"), F.lit(" of the and that have with")),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
 
 
-def q_gopher_quality(spark, sf_dir):
-    """Gopher rule-set quality filter (Rae et al. 2021 table A1): the
-    full per-doc signal vector + combined keep flag, JVM higher-order
-    functions only (projection plan, no shuffle). The oracle replays
-    every signal relationally over the identically-seeded corpus."""
-    from myaku_spark.operators.textstats import gopher_quality
-
-    return gopher_quality(_gopher_seeded_docs(spark, sf_dir))
 
 
 PR_OUTLINKS = 5   # pagerank gate: candidate outlinks per doc
@@ -2175,22 +1402,8 @@ def q_pagerank_topk(spark, sf_dir):
     )
 
 
-CH_MAX_TOKENS = 24  # doc-chunking gate: tokens per window
-CH_OVERLAP = 6      # doc-chunking gate: window overlap
 
 
-def q_doc_chunks(spark, sf_dir):
-    """Fixed-token-window chunking with overlap (the pre-tokenization
-    step that sizes documents for training/embedding): every window's
-    token count and exact character-span text are replayed relationally
-    from the shared token-offset CTE."""
-    from myaku_spark.operators.packing import chunk_documents
-
-    return chunk_documents(
-        _docs(spark, sf_dir),
-        max_tokens=CH_MAX_TOKENS,
-        overlap=CH_OVERLAP,
-    )
 
 
 PD_MIN_DOCS = 3    # paragraph-dedup gate: doc-frequency floor
@@ -2237,42 +1450,15 @@ def q_paragraph_dedup(spark, sf_dir):
     )
 
 
-CQ_PROBS = (0.1, 0.5, 0.9, 0.99)  # corpus-quantiles gate probabilities
 
 
-def q_corpus_quantiles(spark, sf_dir):
-    """Per-language exact length quantiles (corpus profiling: the
-    distribution snapshot a curation run records before/after each
-    filter stage). Spark's percentile() and DuckDB's quantile_cont()
-    both do linear interpolation on the sorted values, so the gate
-    checks them value-equal at 4 dp."""
-    docs = _docs(spark, sf_dir)
-    qarr = ", ".join(f"{p}D" for p in CQ_PROBS)
-    agg = docs.groupBy("lang").agg(
-        F.expr(f"percentile(n_chars, array({qarr}))").alias("qs")
-    )
-    probs = F.array(*[F.lit(float(p)) for p in CQ_PROBS])
-    return agg.select(
-        "lang", F.posexplode("qs").alias("i", "v")
-    ).select(
-        "lang",
-        F.element_at(probs, F.col("i") + 1).alias("p"),
-        F.round("v", 4).alias("n_chars_q"),
-    )
 
 
 QUERIES = {
-    "gopher_quality": q_gopher_quality,
     "pagerank_topk": q_pagerank_topk,
-    "kmeans_clusters": q_kmeans_clusters,
-    "cluster_sample": q_cluster_sample,
-    "lm_perplexity": q_lm_perplexity,
     "boilerplate": q_boilerplate,
     "phrase_search": q_phrase_search,
     "proximity_search": q_proximity_search,
-    "curation_funnel": q_curation_funnel,
-    "pq_adc_topk": q_pq_adc_topk,
-    "lang_id": q_lang_id,
     "ja_index_postings": q_ja_index_postings,
     "extraction_parity": q_extraction_parity,
     "media_features": q_media_features,
@@ -2282,15 +1468,11 @@ QUERIES = {
     "segment_search_e2e": q_segment_search_e2e,
     "fuzzy_terms": q_fuzzy_terms,
     "substring_spans": q_substring_spans,
-    "semantic_dedup": q_semantic_dedup,
     "line_dedup": q_line_dedup,
     "prefix_terms": q_prefix_terms,
     "blog_rollup": q_blog_rollup,
     "pagination_page2": q_pagination_page2,
-    "source_stats": q_source_stats,
-    "event_sessions": q_event_sessions,
     "conj_interp_rollup": q_conj_interp_rollup,
-    "rrf_fusion": q_rrf_fusion,
     "token_positions": q_token_positions,
     "postings_build": q_postings_build,
     "posting_positions": q_posting_positions,
@@ -2305,30 +1487,14 @@ QUERIES = {
     "dedup_exact": q_dedup_exact,
     "anti_join_skip": q_anti_join_skip,
     "hydrate_topk": q_hydrate_topk,
-    "lang_distribution": q_lang_distribution,
-    "token_counts": q_token_counts,
-    "quality_signals": q_quality_signals,
-    "doc_fingerprint": q_doc_fingerprint,
     "minhash_signature": q_minhash_signature,
     "minhash_lsh_pairs": q_minhash_lsh_pairs,
     "dup_clusters": q_dup_clusters,
     "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-    "embedding_topk": q_embedding_topk,
-    "ivf_topk": q_ivf_topk,
-    "events_windowed": q_events_windowed,
     "incremental_merge": q_incremental_merge,
-    "quality_filter": q_quality_filter,
     "simhash_pairs": q_simhash_pairs,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "embedding_near_dup": q_embedding_near_dup,
-    "repetition_signals": q_repetition_signals,
     "decontaminate": q_decontaminate,
-    "pii_redaction": q_pii_redaction,
-    "weighted_sample": q_weighted_sample,
-    "pack_sequences": q_pack_sequences,
-    "corpus_quantiles": q_corpus_quantiles,
     "paragraph_dedup": q_paragraph_dedup,
-    "doc_chunks": q_doc_chunks,
 }
 
 
@@ -2463,76 +1629,12 @@ def _media_features_values() -> str:
     return _values_sql(rows, ["media_id", "kind", "n_bytes", "dim"])
 
 
-_RE_RATIOS = {
-    "hiragana": "[ぁ-ゟ]",
-    "katakana": "[゠-ヿ]",
-    "cjk": "[一-鿿]",
-    "hangul": "[가-힯]",
-    "cyrillic": "[Ѐ-ӿ]",
-    "latin": "[A-Za-z]",
-}
 
 
-def _sql_ratio(cls: str) -> str:
-    pat = _RE_RATIOS[cls]
-    return (
-        f"(length(text) - length(regexp_replace(text, '{pat}', '', 'g')))"
-        " / greatest(length(text), 1)"
-    )
 
 
-def _sql_marker(words: list[str]) -> str:
-    lst = ", ".join(f"'{w}'" for w in words)
-    return (
-        "len(list_intersect(list_distinct("
-        "string_split_regex(lower(text), '\\s+')), "
-        f"[{lst}]))"
-    )
 
 
-def _lang_id_sql() -> str:
-    """DuckDB twin of textstats.detect_language: script-class ratios via
-    regexp_replace length-diff, Latin marker-stopword argmax replayed as
-    the same left-to-right fold (en→es→fr→de, strict >)."""
-    from myaku_spark.operators.textstats import LANG_MARKERS
-
-    m = {lang: _sql_marker(words) for lang, words in LANG_MARKERS.items()}
-    return f"""
-WITH r AS (
-  SELECT doc_id, lang,
-         {_sql_ratio("hiragana")} AS hira,
-         {_sql_ratio("katakana")} AS kata,
-         {_sql_ratio("cjk")} AS cjk,
-         {_sql_ratio("hangul")} AS hangul,
-         {_sql_ratio("cyrillic")} AS cyr,
-         {_sql_ratio("latin")} AS lat,
-         {m["en"]} AS en_c, {m["es"]} AS es_c,
-         {m["fr"]} AS fr_c, {m["de"]} AS de_c
-  FROM documents
-),
-s1 AS (
-  SELECT *, CASE WHEN es_c > en_c THEN 'es' ELSE 'en' END AS bl1,
-         CASE WHEN es_c > en_c THEN es_c ELSE en_c END AS bc1
-  FROM r
-),
-s2 AS (
-  SELECT *, CASE WHEN fr_c > bc1 THEN 'fr' ELSE bl1 END AS bl2,
-         CASE WHEN fr_c > bc1 THEN fr_c ELSE bc1 END AS bc2
-  FROM s1
-),
-s3 AS (
-  SELECT *, CASE WHEN de_c > bc2 THEN 'de' ELSE bl2 END AS best_latin
-  FROM s2
-)
-SELECT doc_id, lang,
-       CASE WHEN hira + kata > 0.05 THEN 'ja'
-            WHEN hangul > 0.2 THEN 'ko'
-            WHEN cjk > 0.3 THEN 'zh'
-            WHEN cyr > 0.3 THEN 'ru'
-            WHEN lat > 0.2 THEN best_latin
-            ELSE 'und' END AS lang_pred
-FROM s3
-"""
 
 _mh_per_band = len(MH_HASHES) // MH_BANDS
 _band_selects = []
@@ -2650,47 +1752,6 @@ ranked AS (
 SELECT term, doc_id, tf, CAST(rank AS INT) AS rank, round(bm25, 3) AS bm25_r
 FROM ranked WHERE rank <= 10
 """,
-    "rrf_fusion": f"""
-WITH {_SQL_BM25},
-lexr AS (
-  SELECT doc_id,
-         CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id DESC) AS INT)
-           AS lex_rank
-  FROM scored WHERE term = '{RRF_TERM}'
-),
-lex AS (SELECT * FROM lexr WHERE lex_rank <= {RRF_TOPN}),
-q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
-c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 1),
-pairs AS (SELECT c.vec_id, c.embedding, q.q_emb FROM c, q),
-expl AS (
-  SELECT vec_id,
-         CAST(unnest(embedding) AS DOUBLE) AS x,
-         CAST(unnest(q_emb) AS DOUBLE) AS y
-  FROM pairs
-),
-sums AS (
-  SELECT vec_id, sum(x * y) AS dot, sqrt(sum(x * x)) AS na,
-         sqrt(sum(y * y)) AS nb
-  FROM expl GROUP BY vec_id
-),
-vecr AS (
-  SELECT vec_id AS doc_id,
-         CAST(row_number() OVER (ORDER BY dot / (na * nb) DESC, vec_id DESC)
-              AS INT) AS vec_rank
-  FROM sums
-),
-vec AS (SELECT * FROM vecr WHERE vec_rank <= {RRF_TOPN}),
-fused AS (
-  SELECT COALESCE(lex.doc_id, vec.doc_id) AS doc_id,
-         lex.lex_rank, vec.vec_rank,
-         COALESCE(CAST(1 AS DOUBLE) / ({RRF_C} + lex.lex_rank), 0)
-           + COALESCE(CAST(1 AS DOUBLE) / ({RRF_C} + vec.vec_rank), 0) AS rrf
-  FROM lex FULL OUTER JOIN vec ON lex.doc_id = vec.doc_id
-)
-SELECT doc_id, COALESCE(lex_rank, -1) AS lex_rank,
-       COALESCE(vec_rank, -1) AS vec_rank, round(rrf, 6) AS rrf_r
-FROM fused ORDER BY rrf DESC, doc_id LIMIT 20
-""",
     "search_and": f"""
 WITH {_SQL_BM25}
 SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matched, round(sum(bm25), 3) AS score_r
@@ -2752,30 +1813,6 @@ ranked AS (
 SELECT r.term, r.doc_id, CAST(r.rank AS INT) AS rank, d.lang, d.source, d.n_chars
 FROM ranked r JOIN documents d USING (doc_id) WHERE r.rank <= 10
 """,
-    "lang_distribution": """
-SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars
-FROM documents GROUP BY lang
-""",
-    "token_counts": f"""
-WITH {_SQL_TOKS}
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       CAST(count(DISTINCT term) AS BIGINT) AS n_distinct_terms
-FROM toks GROUP BY doc_id
-""",
-    "quality_signals": f"""
-WITH {_SQL_TOKS}
-SELECT doc_id, round(avg(CAST(len AS DOUBLE)), 4) AS avg_token_len,
-       CAST(max(len) AS INT) AS max_token_len
-FROM toks GROUP BY doc_id
-""",
-    "doc_fingerprint": f"""
-WITH {_SQL_TOKS}
-SELECT doc_id,
-       CAST(sum((({_SQL_TID} % 2147483647) * (1 + CAST(start AS BIGINT)))
-            % 2147483647) % 2147483647 AS BIGINT) AS fingerprint
-FROM toks GROUP BY doc_id
-""",
     "minhash_signature": f"{_SQL_MH} SELECT * FROM sig",
     "minhash_lsh_pairs": f"""
 {_SQL_MH},
@@ -2817,43 +1854,6 @@ FROM inter JOIN sizes sa ON sa.doc_id = doc_a
            JOIN sizes sb ON sb.doc_id = doc_b
 WHERE round(inter / (sa.sz + sb.sz - inter), 4) >= 0.2
 """,
-    "embedding_topk": """
-WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5),
-c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 5),
-pairs AS (SELECT c.vec_id, q.q_id, c.embedding, q.q_emb FROM c, q),
-expl AS (
-  SELECT vec_id, q_id,
-         CAST(unnest(embedding) AS DOUBLE) AS x,
-         CAST(unnest(q_emb) AS DOUBLE) AS y
-  FROM pairs
-),
-sums AS (
-  SELECT vec_id, q_id, sum(x * y) AS dot, sqrt(sum(x * x)) AS na,
-         sqrt(sum(y * y)) AS nb
-  FROM expl GROUP BY vec_id, q_id
-),
-ranked AS (
-  SELECT q_id, vec_id, dot / (na * nb) AS cos,
-         row_number() OVER (PARTITION BY q_id
-                            ORDER BY dot / (na * nb) DESC, vec_id DESC) AS rank
-  FROM sums
-)
-SELECT q_id, vec_id, CAST(rank AS INT) AS rank, round(cos, 3) AS cos_r
-FROM ranked WHERE rank <= 3
-""",
-    "events_windowed": """
-SELECT date_trunc('hour', ts) AS win_start, event_type,
-       CAST(count(*) AS BIGINT) AS n_events, round(sum(value), 3) AS sum_value
-FROM events GROUP BY 1, 2
-""",
-    "quality_filter": f"""
-WITH {_SQL_TOKS}
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       CAST(count(DISTINCT term) AS BIGINT) AS n_distinct_tokens,
-       round(count(DISTINCT term) / count(*), 4) AS ttr_r,
-       round(sum(length(term)) / count(*), 4) AS mtl_r
-FROM toks GROUP BY doc_id
-""",
     "pagination_page2": f"""
 WITH {_SQL_POSTINGS},
 scored AS (
@@ -2870,31 +1870,6 @@ ranked AS (
 )
 SELECT term, doc_id, score, CAST(rank AS INT) AS rank
 FROM ranked WHERE rank > 10 AND rank <= 20
-""",
-    "source_stats": """
-SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-FROM documents GROUP BY source
-""",
-    "event_sessions": """
-WITH marked AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-  SELECT user_id, ts,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_no
-  FROM marked
-)
-SELECT user_id, CAST(session_no AS BIGINT) AS session_no,
-       CAST(count(*) AS BIGINT) AS n_events, min(ts) AS session_start
-FROM sess GROUP BY user_id, session_no
 """,
     "incremental_merge": """
 WITH combined AS (
@@ -2926,160 +1901,20 @@ ORACLE_BUILDERS = {
     "fli_rollup": _fli_rollup_values,
     "fli_field_families": _fli_field_families_values,
     "blog_rollup": _blog_rollup_values,
-    "lang_id": _lang_id_sql,
     "extraction_parity": _extraction_parity_values,
     "ja_index_postings": _ja_postings_values,
     "media_features": _media_features_values,
 }
 
 # Full-probe IVF is rank-identical to brute force → same exact oracle.
-ORACLE["ivf_topk"] = ORACLE["embedding_topk"]
 
 
-def _ann_sign_sql(plane: int) -> str:
-    """DuckDB twin of _ann_sign_dot's ±1 component (md5 parity of 'p:i')."""
-    return (
-        f"(CASE WHEN CAST('0x' || substr(md5('{plane}:' ||"
-        " CAST(i AS VARCHAR)), 1, 14) AS BIGINT) % 2 = 1"
-        " THEN 1.0 ELSE -1.0 END)"
-    )
 
 
-def _ann_bucket_sql(src: str, id_col: str, vec: str, out: str) -> str:
-    sums = ",\n    ".join(
-        f"sum(x * {_ann_sign_sql(p)}) AS d{p}" for p in range(ANN_PLANES)
-    )
-    bits = " + ".join(
-        f"(CASE WHEN d{p} >= 0 THEN {1 << (ANN_PLANES - 1 - p)} ELSE 0 END)"
-        for p in range(ANN_PLANES)
-    )
-    return f"""
-{out}_exp AS (
-  SELECT {id_col}, CAST(unnest({vec}) AS DOUBLE) AS x,
-         unnest(range(len({vec}))) AS i
-  FROM {src}
-),
-{out}_sums AS (
-  SELECT {id_col},
-    {sums}
-  FROM {out}_exp GROUP BY {id_col}
-),
-{out} AS (SELECT {id_col}, {bits} AS b FROM {out}_sums)"""
 
 
-ORACLE["ann_lsh_topk"] = f"""
-WITH q0 AS (SELECT vec_id AS q_id, embedding AS q_emb
-            FROM embeddings WHERE vec_id < 5),
-c0 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 5),
-{_ann_bucket_sql('c0', 'vec_id', 'embedding', 'cbk')},
-{_ann_bucket_sql('q0', 'q_id', 'q_emb', 'qbk')},
-pairs AS (
-  SELECT c0.vec_id, q0.q_id, c0.embedding, q0.q_emb
-  FROM c0 JOIN cbk ON c0.vec_id = cbk.vec_id
-       JOIN qbk ON cbk.b = qbk.b
-       JOIN q0 ON q0.q_id = qbk.q_id
-),
-expl AS (
-  SELECT vec_id, q_id,
-         CAST(unnest(embedding) AS DOUBLE) AS x,
-         CAST(unnest(q_emb) AS DOUBLE) AS y
-  FROM pairs
-),
-sums AS (
-  SELECT vec_id, q_id, sum(x * y) AS dot, sqrt(sum(x * x)) AS na,
-         sqrt(sum(y * y)) AS nb
-  FROM expl GROUP BY vec_id, q_id
-),
-ranked AS (
-  SELECT q_id, vec_id, dot / (na * nb) AS cos,
-         row_number() OVER (PARTITION BY q_id
-                            ORDER BY dot / (na * nb) DESC, vec_id DESC) AS rank
-  FROM sums
-)
-SELECT q_id, vec_id, CAST(rank AS INT) AS rank, round(cos, 3) AS cos_r
-FROM ranked WHERE rank <= 3
-"""
 
-ORACLE["embedding_near_dup"] = f"""
-WITH twins AS (
-  SELECT vec_id + 100000 AS vec_id,
-         list_transform(embedding,
-                        x -> CAST(CAST(x AS DOUBLE) * 2.0 AS FLOAT))
-           AS embedding
-  FROM embeddings WHERE vec_id < 20
-),
-allv AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL SELECT vec_id, embedding FROM twins
-),
-{_ann_bucket_sql('allv', 'vec_id', 'embedding', 'bk')},
-pairs AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         a.embedding AS emb_a, b.embedding AS emb_b
-  FROM allv a
-  JOIN bk ba ON a.vec_id = ba.vec_id
-  JOIN bk bb ON ba.b = bb.b
-  JOIN allv b ON b.vec_id = bb.vec_id
-  WHERE a.vec_id < b.vec_id
-),
-expl AS (
-  SELECT vec_a, vec_b,
-         CAST(unnest(emb_a) AS DOUBLE) AS x,
-         CAST(unnest(emb_b) AS DOUBLE) AS y
-  FROM pairs
-),
-sums AS (
-  SELECT vec_a, vec_b, sum(x * y) AS dot, sqrt(sum(x * x)) AS na,
-         sqrt(sum(y * y)) AS nb
-  FROM expl GROUP BY vec_a, vec_b
-)
-SELECT vec_a, vec_b, round(dot / (na * nb), 3) AS cos_r
-FROM sums WHERE round(dot / (na * nb), 4) >= 0.98
-"""
 
-ORACLE["repetition_signals"] = """
-WITH docs0 AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 100
-),
-twins AS (
-  SELECT doc_id + 200000 AS doc_id,
-         repeat(substr(text, 1, 40) || chr(10), 10) AS text
-  FROM docs0 WHERE doc_id < 20
-),
-alld AS (SELECT * FROM docs0 UNION ALL SELECT * FROM twins),
-lines AS (
-  SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM alld
-),
-line_stats AS (
-  SELECT doc_id, count(*) AS n_lines,
-         count(DISTINCT line) AS n_distinct
-  FROM lines GROUP BY doc_id
-),
-toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term,
-         generate_subscripts(string_split(text, ' '), 1) AS ord
-  FROM alld
-),
-grams0 AS (
-  SELECT doc_id, term,
-         lead(term, 1) OVER (PARTITION BY doc_id ORDER BY ord) AS t2
-  FROM toks
-),
-grams AS (
-  SELECT doc_id, term || ' ' || t2 AS gram FROM grams0 WHERE t2 IS NOT NULL
-),
-gram_counts AS (
-  SELECT doc_id, gram, count(*) AS cnt FROM grams GROUP BY doc_id, gram
-),
-gram_stats AS (
-  SELECT doc_id, max(cnt) AS top_cnt, sum(cnt) AS n_grams
-  FROM gram_counts GROUP BY doc_id
-)
-SELECT l.doc_id, CAST(l.n_lines AS BIGINT) AS n_lines,
-       round((l.n_lines - l.n_distinct) / l.n_lines, 4) AS dup_line_frac,
-       round(g.top_cnt / g.n_grams, 4) AS top_2gram_frac
-FROM line_stats l JOIN gram_stats g ON l.doc_id = g.doc_id
-"""
 
 ORACLE["decontaminate"] = """
 WITH docs0 AS (
@@ -3155,123 +1990,6 @@ SELECT doc_id, cluster_id, CAST(n AS BIGINT) AS cluster_size
 FROM cc JOIN sizes USING (cluster_id)
 """
 
-from myaku_spark.operators.textstats import PII_PATTERNS  # noqa: E402
-
-ORACLE["pii_redaction"] = f"""
-WITH seeded AS (
-  SELECT doc_id,
-         text
-         || CASE WHEN doc_id % 3 = 0
-                 THEN ' contact user' || doc_id || '@example.com now'
-                 ELSE '' END
-         || CASE WHEN doc_id % 5 = 0
-                 THEN ' from 10.0.' || (doc_id % 256) || '.7 today'
-                 ELSE '' END
-         || CASE WHEN doc_id % 7 = 0
-                 THEN ' call 555-01' || (doc_id % 10) || '-'
-                      || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                 ELSE '' END AS text
-  FROM documents WHERE doc_id < 200
-)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text, '{PII_PATTERNS["email"]}')) AS BIGINT) AS n_email,
-       CAST(len(regexp_extract_all(text, '{PII_PATTERNS["ipv4"]}')) AS BIGINT) AS n_ipv4,
-       CAST(len(regexp_extract_all(text, '{PII_PATTERNS["phone"]}')) AS BIGINT) AS n_phone,
-       md5(regexp_replace(regexp_replace(regexp_replace(text,
-           '{PII_PATTERNS["email"]}', '<PII>', 'g'),
-           '{PII_PATTERNS["ipv4"]}', '<PII>', 'g'),
-           '{PII_PATTERNS["phone"]}', '<PII>', 'g')) AS redacted_md5
-FROM seeded
-"""
-
-ORACLE["weighted_sample"] = f"""
-SELECT doc_id, source FROM documents
-WHERE CAST('0x' || substr(md5(doc_id || ':{WS_SALT}'), 1, 14) AS BIGINT)
-      / 72057594037927936.0
-    < CASE source
-        WHEN 'src0' THEN 0.9 WHEN 'src1' THEN 0.5
-        WHEN 'src2' THEN 0.25 WHEN 'src3' THEN 0.1
-        ELSE 0.05 END
-"""
-
-ORACLE["pack_sequences"] = f"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id,
-         CAST(len(list_filter(string_split(text, ' '), t -> len(t) > 0))
-              AS BIGINT) AS n_tokens
-  FROM documents
-),
-ordered AS (
-  SELECT doc_id % 8 AS shard, doc_id, n_tokens,
-         row_number() OVER (PARTITION BY doc_id % 8
-                            ORDER BY n_tokens DESC, doc_id) AS rn
-  FROM toks
-),
-pack(shard, rn, doc_id, n_tokens, seq_id, seq_fill) AS (
-  SELECT shard, rn, doc_id, n_tokens, CAST(0 AS BIGINT), n_tokens
-  FROM ordered WHERE rn = 1
-  UNION ALL
-  SELECT o.shard, o.rn, o.doc_id, o.n_tokens,
-         CASE WHEN p.seq_fill + o.n_tokens > {PACK_MAX}
-              THEN p.seq_id + 1 ELSE p.seq_id END,
-         CASE WHEN p.seq_fill + o.n_tokens > {PACK_MAX}
-              THEN o.n_tokens ELSE p.seq_fill + o.n_tokens END
-  FROM ordered o JOIN pack p ON o.shard = p.shard AND o.rn = p.rn + 1
-)
-SELECT shard, doc_id, n_tokens, seq_id, seq_fill FROM pack
-"""
-
-ORACLE["kmeans_clusters"] = _kmeans_sql(KM_K, KM_ITERS)
-
-
-def _semdedup_sql() -> str:
-    scaled = "list_transform(embedding, x -> round(CAST(x AS DOUBLE) * 1000))"
-    chain = _kmeans_prefix(
-        KM_K, KM_ITERS, vec_sql="v0", sfx="sd", table="combined"
-    )
-    chain = chain[len("WITH ") :]
-    return f"""
-WITH combined AS MATERIALIZED (
-  SELECT vec_id, {scaled} AS v0 FROM embeddings
-  UNION ALL
-  SELECT vec_id + 100000 AS vec_id, {scaled} AS v0
-  FROM embeddings WHERE vec_id < 10
-  UNION ALL
-  SELECT vec_id + 100000 AS vec_id,
-         list_concat([({scaled})[1] + 50], ({scaled})[2:]) AS v0
-  FROM embeddings WHERE vec_id >= 10 AND vec_id < 20
-),
-{chain},
-asgsd AS MATERIALIZED (
-  SELECT m.vec_id, m.cl, e.v
-  FROM m{KM_ITERS}sd m JOIN esd e USING (vec_id)
-),
-prsd AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.v AS va, b.v AS vb
-  FROM asgsd a JOIN asgsd b ON a.cl = b.cl AND a.vec_id < b.vec_id
-),
-explsd AS (
-  SELECT id_a, id_b, CAST(unnest(va) AS DOUBLE) AS x,
-         CAST(unnest(vb) AS DOUBLE) AS y
-  FROM prsd
-),
-sumssd AS (
-  SELECT id_a, id_b, sum(x * y) AS dot,
-         sqrt(sum(x * x)) AS na, sqrt(sum(y * y)) AS nb
-  FROM explsd GROUP BY id_a, id_b
-),
-dupssd AS (
-  SELECT DISTINCT id_b AS vec_id FROM sumssd
-  WHERE round(dot / (na * nb), 4) >= {SD_TAU}
-)
-SELECT m.vec_id, m.cl AS cluster, (d.vec_id IS NULL) AS kept
-FROM m{KM_ITERS}sd m LEFT JOIN dupssd d USING (vec_id)
-"""
-
-
-ORACLE["semantic_dedup"] = _semdedup_sql()
-
-
 ORACLE["line_dedup"] = f"""
 WITH seeded AS (
   SELECT doc_id,
@@ -3306,60 +2024,8 @@ FROM marked GROUP BY doc_id
 """
 
 
-def _pq_sql() -> str:
-    sub = PQ_DIM // PQ_M
-    chains = []
-    for j in range(PQ_M):
-        a, b = j * sub + 1, (j + 1) * sub
-        vec = (
-            f"list_transform(embedding[{a}:{b}],"
-            " x -> round(CAST(x AS DOUBLE) * 1000))"
-        )
-        chain = _kmeans_prefix(PQ_KCB, PQ_ITERS, vec_sql=vec, sfx=f"_{j}")
-        chains.append(chain if j == 0 else chain[len("WITH "):])
-    qids = ", ".join(str(q) for q in PQ_QIDS)
-    qds = ",".join(
-        f"""
-qd_{j} AS (
-  SELECT vec_id AS q_id, cl, sum((x - y) * (x - y)) AS d
-  FROM (SELECT e.vec_id, c.cl, unnest(e.v) AS x, unnest(c.cv) AS y
-        FROM e_{j} e CROSS JOIN c{PQ_ITERS}_{j} c
-        WHERE e.vec_id IN ({qids}))
-  GROUP BY vec_id, cl
-)"""
-        for j in range(PQ_M)
-    )
-    code_joins = "\n  ".join(
-        f"JOIN m{PQ_ITERS}_{j} m{j} USING (vec_id)" for j in range(1, PQ_M)
-    )
-    lut_joins = "\n  ".join(
-        f"JOIN qd_{j} q{j} ON q{j}.cl = m{j}.cl AND q{j}.q_id = q0.q_id"
-        for j in range(1, PQ_M)
-    )
-    dist_sum = " + ".join(f"q{j}.d" for j in range(PQ_M))
-    return (
-        ",".join(chains)
-        + ","
-        + qds
-        + f""",
-adc AS (
-  SELECT q0.q_id, m0.vec_id, round({dist_sum}, 3) AS adc_dist
-  FROM m{PQ_ITERS}_0 m0
-  {code_joins}
-  JOIN qd_0 q0 ON q0.cl = m0.cl
-  {lut_joins}
-)
-SELECT q_id, vec_id, adc_dist, CAST(rn AS INTEGER) AS rank FROM (
-  SELECT q_id, vec_id, adc_dist,
-         row_number() OVER (
-           PARTITION BY q_id ORDER BY adc_dist, vec_id) AS rn
-  FROM adc)
-WHERE rn <= {PQ_TOPK}
-"""
-    )
 
 
-ORACLE["pq_adc_topk"] = _pq_sql()
 
 ORACLE["phrase_search"] = f"""
 WITH {_SQL_TOKS},
@@ -3382,116 +2048,7 @@ ORDER BY phrase_tf DESC, doc_id
 LIMIT {PHRASE_K}
 """
 
-_CUR_RATE_CASE = "CASE i.source " + " ".join(
-    f"WHEN '{d}' THEN {w}" for d, w in sorted(CUR_WEIGHTS.items())
-) + f" ELSE {CUR_DEFAULT_RATE} END"
 
-ORACLE["curation_funnel"] = f"""
-WITH twins AS (
-  SELECT doc_id + 1000000 AS doc_id, text, lang, source, n_chars
-  FROM (SELECT doc_id, text, lang, source, n_chars FROM documents
-        WHERE lang = 'en' ORDER BY doc_id LIMIT {CUR_TWINS})
-),
-inp AS (
-  SELECT doc_id, text, lang, source, n_chars FROM documents
-  UNION ALL SELECT * FROM twins
-),
-ctoks AS (
-  SELECT doc_id, unnest(str_split_regex(text, '\\s+')) AS term,
-         generate_subscripts(str_split_regex(text, '\\s+'), 1) AS ord
-  FROM inp
-),
-csh0 AS (
-  SELECT doc_id, term,
-         lead(term, 1) OVER (PARTITION BY doc_id ORDER BY ord) AS t2,
-         lead(term, 2) OVER (PARTITION BY doc_id ORDER BY ord) AS t3
-  FROM ctoks
-),
-csh AS (
-  SELECT DISTINCT doc_id, term || ' ' || t2 || ' ' || t3 AS shingle
-  FROM csh0 WHERE t3 IS NOT NULL
-),
-cfreq AS (SELECT shingle, count(*) AS doc_freq FROM csh GROUP BY 1),
-bpf AS (
-  SELECT s.doc_id,
-         sum(CASE WHEN f.doc_freq >= {BP_MIN_DOCS} THEN 1 ELSE 0 END)
-           * 1.0 / count(*) < {BP_MAX_RATIO} AS bp_keep
-  FROM csh s JOIN cfreq f USING (shingle)
-  GROUP BY s.doc_id
-),
-ltok AS (
-  SELECT doc_id,
-         list_prepend('<s>', list_filter(
-           regexp_split_to_array(lower(text), '\\s+'),
-           x -> x <> '')) AS t
-  FROM inp
-),
-lpairs AS (
-  SELECT doc_id,
-         unnest(list_transform(range(2, len(t) + 1), j -> t[j - 1])) AS w1,
-         unnest(list_transform(range(2, len(t) + 1), j -> t[j])) AS w2
-  FROM ltok
-),
-lbig AS (SELECT w1, w2, count(*) AS c12 FROM lpairs GROUP BY 1, 2),
-lctx AS (SELECT w1, count(*) AS c1 FROM lpairs GROUP BY 1),
-lvoc AS (SELECT count(DISTINCT w2) AS v FROM lpairs),
-ppl AS (
-  SELECT p.doc_id,
-         round(exp(-avg(ln((b.c12 + {LM_K}) / (c.c1 + {LM_K} * lvoc.v)))),
-               3) AS ppl
-  FROM lpairs p
-  JOIN lbig b USING (w1, w2)
-  JOIN lctx c USING (w1)
-  CROSS JOIN lvoc
-  GROUP BY p.doc_id
-),
-flags AS (
-  SELECT i.doc_id,
-         (i.lang = 'en') AS f_lang,
-         (i.n_chars >= {CUR_MIN_CHARS}) AS f_len,
-         i.doc_id = min(CASE WHEN i.lang = 'en'
-                              AND i.n_chars >= {CUR_MIN_CHARS}
-                             THEN i.doc_id END)
-           OVER (PARTITION BY md5(i.text)) AS f_dedup,
-         coalesce(b.bp_keep, TRUE) AS f_bp,
-         coalesce(p.ppl <= {CUR_PPL_MAX}, FALSE) AS f_ppl,
-         CAST('0x' || substr(md5(i.doc_id || ':{CUR_SALT}'), 1, 14)
-              AS BIGINT) / 72057594037927936.0 < {_CUR_RATE_CASE}
-           AS f_sample
-  FROM inp i
-  LEFT JOIN bpf b USING (doc_id)
-  LEFT JOIN ppl p USING (doc_id)
-)
-SELECT 0 AS stage_idx, 'input' AS stage,
-       CAST(count(*) AS BIGINT) AS n_docs FROM flags
-UNION ALL
-SELECT 1, 'lang', CAST(sum(CASE WHEN f_lang THEN 1 ELSE 0 END) AS BIGINT)
-FROM flags
-UNION ALL
-SELECT 2, 'min_length',
-       CAST(sum(CASE WHEN f_lang AND f_len THEN 1 ELSE 0 END) AS BIGINT)
-FROM flags
-UNION ALL
-SELECT 3, 'exact_dedup',
-       CAST(sum(CASE WHEN f_lang AND f_len AND f_dedup
-                THEN 1 ELSE 0 END) AS BIGINT)
-FROM flags
-UNION ALL
-SELECT 4, 'boilerplate',
-       CAST(sum(CASE WHEN f_lang AND f_len AND f_dedup AND f_bp
-                THEN 1 ELSE 0 END) AS BIGINT)
-FROM flags
-UNION ALL
-SELECT 5, 'lm_ppl',
-       CAST(sum(CASE WHEN f_lang AND f_len AND f_dedup AND f_bp
-                     AND f_ppl THEN 1 ELSE 0 END) AS BIGINT)
-FROM flags
-UNION ALL
-SELECT 6, 'domain_sample',
-       CAST(sum(CASE WHEN f_lang AND f_len AND f_dedup AND f_bp
-                     AND f_ppl AND f_sample THEN 1 ELSE 0 END) AS BIGINT)
-FROM flags
-"""
 
 ORACLE["proximity_search"] = f"""
 WITH {_SQL_TOKS},
@@ -3510,53 +2067,7 @@ ORDER BY phrase_tf DESC, doc_id
 LIMIT {PHRASE_K}
 """
 
-ORACLE["cluster_sample"] = (
-    _kmeans_prefix(KM_K, KM_ITERS)
-    + f""",
-draw AS (
-  SELECT vec_id, cl AS cluster,
-         CAST('0x' || substr(md5(vec_id || ':{CS_SALT}'), 1, 14) AS BIGINT)
-           / 72057594037927936.0 AS u
-  FROM m{KM_ITERS}
-)
-SELECT vec_id, cluster, pick FROM (
-  SELECT vec_id, cluster,
-         CAST(row_number() OVER (
-           PARTITION BY cluster ORDER BY u, vec_id) AS INTEGER) AS pick
-  FROM draw)
-WHERE pick <= {CS_QUOTA}
-"""
-)
 
-ORACLE["lm_perplexity"] = f"""
-WITH tok AS (
-  SELECT doc_id,
-         list_prepend('<s>', list_filter(
-           regexp_split_to_array(lower(text), '\\s+'),
-           x -> x <> '')) AS t
-  FROM documents
-),
-pairs AS (
-  SELECT doc_id,
-         unnest(list_transform(range(2, len(t) + 1), j -> t[j - 1])) AS w1,
-         unnest(list_transform(range(2, len(t) + 1), j -> t[j])) AS w2
-  FROM tok
-),
-big AS (SELECT w1, w2, count(*) AS c12 FROM pairs GROUP BY 1, 2),
-ctx AS (SELECT w1, count(*) AS c1 FROM pairs GROUP BY 1),
-voc AS (SELECT count(DISTINCT w2) AS v FROM pairs)
-SELECT p.doc_id,
-       CAST(count(*) AS BIGINT) AS n_bigrams,
-       round(avg(ln((b.c12 + {LM_K}) / (c.c1 + {LM_K} * voc.v))), 3)
-         AS avg_logprob,
-       round(exp(-avg(ln((b.c12 + {LM_K}) / (c.c1 + {LM_K} * voc.v)))), 3)
-         AS ppl
-FROM pairs p
-JOIN big b USING (w1, w2)
-JOIN ctx c USING (w1)
-CROSS JOIN voc
-GROUP BY p.doc_id
-"""
 
 ORACLE["boilerplate"] = f"""
 WITH toks AS (
@@ -3596,76 +2107,6 @@ FROM fl GROUP BY doc_id
 # regexp-split on \s+ with empties dropped (matching F.split + filter),
 # lines = split on chr(10) with blank lines dropped, leftmost
 # non-overlapping replace() for the #/... counts on both engines.
-ORACLE["gopher_quality"] = """
-WITH seeded AS (
-  SELECT doc_id,
-    CASE
-      WHEN doc_id % 13 = 4 THEN 'zz zz zz'
-      WHEN doc_id % 7 = 0 THEN text || chr(10) || '- bullet one'
-           || chr(10) || '* bullet two' || chr(10) || '• bullet three'
-      WHEN doc_id % 5 = 0 THEN text || ' wait...' || chr(10)
-           || 'to be continued...'
-      WHEN doc_id % 11 = 3 THEN text || ' ## #### #'
-      ELSE text
-    END AS t0
-  FROM documents
-),
-seeded2 AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 2 = 0
-         THEN t0 || ' of the and that have with'
-         ELSE t0 END AS txt
-  FROM seeded
-),
-sig AS (
-  -- coalesce mirrors the Spark side's NULL-text handling (NULL text
-  -- lands kept=false with zeroed signals, not NULL signals)
-  SELECT doc_id, coalesce(txt, '') AS txt,
-    list_filter(regexp_split_to_array(coalesce(txt, ''), '\\s+'),
-                w -> length(w) > 0) AS words,
-    list_filter(string_split(coalesce(txt, ''), chr(10)),
-                l -> length(trim(l)) > 0) AS lines
-  FROM seeded2
-),
-calc AS (
-  SELECT doc_id,
-    CAST(len(words) AS BIGINT) AS n_words,
-    CAST(greatest(len(words), 1) AS DOUBLE) AS nw,
-    CAST(greatest(len(lines), 1) AS DOUBLE) AS nl,
-    -- list_aggregate on an EMPTY list returns NULL (zero-word doc):
-    -- coalesce so mean_word_len lands 0.0 like concat_ws('') in Spark
-    length(coalesce(list_aggregate(words, 'string_agg', ''), ''))
-      AS wchars,
-    len(list_filter(words, w -> regexp_matches(w, '[A-Za-z]')))
-      AS n_alpha,
-    (length(txt) - length(replace(txt, '#', ''))) AS n_hash,
-    (length(txt) - length(replace(txt, '...', ''))) / 3.0 AS n_ell,
-    len(list_filter(lines, l ->
-        starts_with(trim(l), '- ') OR starts_with(trim(l), '* ')
-        OR starts_with(trim(l), '•'))) AS n_bullet,
-    len(list_filter(lines, l -> ends_with(rtrim(l), '...')))
-      AS n_ell_line,
-    len(list_intersect(
-        list_distinct(list_transform(words, w -> lower(w))),
-        ['the','be','to','of','and','that','have','with']))
-      AS stop_hits
-  FROM sig
-)
-SELECT doc_id, n_words,
-  round(wchars / nw, 4) AS mean_word_len,
-  round(n_alpha / nw, 4) AS alpha_word_frac,
-  round(n_hash / nw, 4) AS hash_ratio,
-  round(n_ell / nw, 4) AS ellipsis_ratio,
-  round(n_bullet / nl, 4) AS bullet_line_frac,
-  round(n_ell_line / nl, 4) AS ellipsis_line_frac,
-  CAST(stop_hits AS INT) AS stopword_hits,
-  (n_words >= 50 AND n_words <= 100000
-   AND wchars / nw >= 3.0 AND wchars / nw <= 10.0
-   AND n_hash / nw <= 0.1 AND n_ell / nw <= 0.1
-   AND n_bullet / nl <= 0.9 AND n_ell_line / nl <= 0.3
-   AND n_alpha / nw >= 0.8 AND stop_hits >= 2) AS kept
-FROM calc
-"""
 
 
 def _pagerank_sql(outlinks: int, iters: int, k: int) -> str:
@@ -3715,18 +2156,6 @@ LIMIT {k}
 ORACLE["pagerank_topk"] = _pagerank_sql(PR_OUTLINKS, PR_ITERS, PR_K)
 
 
-ORACLE["corpus_quantiles"] = f"""
-WITH q AS (
-  SELECT lang,
-         quantile_cont(n_chars, [{", ".join(str(p) for p in CQ_PROBS)}])
-           AS qs
-  FROM documents GROUP BY lang
-)
-SELECT lang,
-       CAST([{", ".join(str(p) for p in CQ_PROBS)}][i] AS DOUBLE) AS p,
-       round(qs[i], 4) AS n_chars_q
-FROM q, generate_series(1, {len(CQ_PROBS)}) AS t(i)
-"""
 
 
 # Paragraph dedup (q_paragraph_dedup): seeded-corpus mirror + full
@@ -3794,37 +2223,3 @@ FROM marked GROUP BY doc_id
 # ceil((n - overlap)/step), chunk text = the original char span from
 # first token start to last token end (1-based list indexing; DuckDB
 # range(a, b) is a scalar list here, unnested per doc).
-ORACLE["doc_chunks"] = f"""
-WITH {_SQL_TOKS},
-tl AS (
-  SELECT doc_id,
-         list(struct_pack(s := start, e := start + len)
-              ORDER BY start) AS ts
-  FROM toks GROUP BY doc_id
-),
-docs2 AS (
-  SELECT t.doc_id, d.text, t.ts, len(t.ts) AS n
-  FROM tl t JOIN documents d USING (doc_id)
-),
-chunks AS (
-  SELECT doc_id, text, ts, n,
-         unnest(range(0,
-           CASE WHEN n <= {CH_MAX_TOKENS} THEN 1
-                ELSE CAST(ceil((n - {CH_OVERLAP})
-                          / {CH_MAX_TOKENS - CH_OVERLAP}.0) AS BIGINT)
-           END)) AS chunk_id
-  FROM docs2
-)
-SELECT doc_id,
-  CAST(chunk_id AS INT) AS chunk_id,
-  CAST(least(chunk_id * {CH_MAX_TOKENS - CH_OVERLAP} + {CH_MAX_TOKENS},
-             n)
-       - chunk_id * {CH_MAX_TOKENS - CH_OVERLAP} AS INT) AS n_tokens,
-  substring(text,
-    ts[CAST(chunk_id * {CH_MAX_TOKENS - CH_OVERLAP} AS INT) + 1].s + 1,
-    ts[CAST(least(chunk_id * {CH_MAX_TOKENS - CH_OVERLAP}
-                  + {CH_MAX_TOKENS}, n) AS INT)].e
-      - ts[CAST(chunk_id * {CH_MAX_TOKENS - CH_OVERLAP} AS INT) + 1].s
-  ) AS chunk_text
-FROM chunks
-"""

@@ -43,6 +43,7 @@ from __future__ import annotations
 import csv
 import io
 import os
+from importlib import resources
 from typing import NamedTuple
 
 DEFAULT_FRAGMENT = os.path.join(
@@ -93,18 +94,12 @@ def default_fragment_bytes() -> bytes:
     """Packaged fragment bytes, zip-safe: executors importing
     myaku_spark from a ``--py-files`` zip (scripts/run_search.py) have a
     ``__file__`` that points INSIDE the archive, where open() fails —
-    importlib.resources reads through the zip importer. Falls back to
-    the filesystem path for source checkouts on odd loaders."""
-    try:
-        from importlib import resources
-
-        return (
-            resources.files("myaku_spark.functions")
-            .joinpath("ipadic_fragment.csv")
-            .read_bytes()
-        )
-    except Exception:
-        return open(DEFAULT_FRAGMENT, "rb").read()
+    importlib.resources reads through the zip importer."""
+    return (
+        resources.files("myaku_spark.functions")
+        .joinpath("ipadic_fragment.csv")
+        .read_bytes()
+    )
 
 
 def parse_ipadic_csv(

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from importlib import resources
 from xml.etree import ElementTree
 
 DEFAULT_FRAGMENT = os.path.join(
@@ -41,17 +42,13 @@ def default_fragment_text() -> str:
     """Packaged fragment XML, zip-safe (see
     ipadic_csv.default_fragment_bytes): read through the import
     machinery so executors importing myaku_spark from a --py-files zip
-    can build the default dictionary; filesystem path as fallback."""
-    try:
-        from importlib import resources
+    can build the default dictionary."""
+    return (
+        resources.files("myaku_spark.functions")
+        .joinpath("jmdict_fragment.xml")
+        .read_text(encoding="utf-8")
+    )
 
-        return (
-            resources.files("myaku_spark.functions")
-            .joinpath("jmdict_fragment.xml")
-            .read_text(encoding="utf-8")
-        )
-    except Exception:
-        return open(DEFAULT_FRAGMENT, encoding="utf-8").read()
 
 _REPR_TAGS = {"k_ele", "r_ele"}
 _TEXT_FORM_TAG = {"k_ele": "keb", "r_ele": "reb"}
@@ -59,7 +56,6 @@ _REPR_OPTIONAL = {
     "k_ele": ("ke_inf", "ke_pri"),
     "r_ele": ("re_inf", "re_pri"),
 }
-_SENSE_TAGS = ("stagk", "stagr", "pos", "field", "misc", "dial", "s_inf")
 
 
 @dataclass

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 K1 = 1.2
 B = 0.75
 PAGE_SIZE = 10  # SEARCH_RESULTS_PAGE_SIZE, datastore/__init__.py:22
-MAX_PAGE = 30  # myakuweb/settings.py:98
 
 
 def idf_col(df_col, n_docs_col):

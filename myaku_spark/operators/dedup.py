@@ -30,11 +30,16 @@ import logging
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from myaku_spark.operators.textstats import WS_SPLIT
-
 log = logging.getLogger(__name__)
 
 MH_PRIME = 2147483647
+
+# Whitespace-run split pattern, spelled as the explicit character class
+# RE2's \s matches ([\t\n\f\r ]) instead of Java-regex \s (which also
+# matches U+000B vertical tab): the DuckDB oracles split with RE2 \s+,
+# so a \x0B-bearing document would silently diverge between engines
+# under Java \s+. Same portability move as PUNCT_CLASS.
+WS_SPLIT = "[ \\t\\n\\f\\r]+"
 
 
 def exact_dedup(
@@ -72,9 +77,12 @@ def shingles(
     computed JVM-side via slice/transform over the split array, then
     exploded. No Python, no per-doc window.
 
-    Short docs (< k tokens) yield no shingles; the materialize-then-
-    slice + CASE-guard mechanics live in textstats.token_gram_rows
-    (measured 8x on the sf1 boilerplate query before the fix).
+    The token array gets its own projection (slice(split(text)) inside
+    the lambda re-evaluates the split per gram, quadratic per doc;
+    measured 8x on the sf1 boilerplate query before the fix) and the
+    index sequence is CASE-guarded: Spark's sequence(1, 0) counts DOWN
+    and slice(_, 0, k) throws, so short docs (< k tokens) yield no
+    shingles.
 
     Dedup happens INSIDE the per-doc gram array (array_distinct before
     the explode): a shingle can only repeat within its own document, so
@@ -82,12 +90,16 @@ def shingles(
     the corpus-wide ``.distinct()`` exchange of every shingle string
     that a post-explode dedup costs (r7: one full shuffle removed from
     boilerplate/minhash/jaccard/decontaminate)."""
-    from myaku_spark.operators.textstats import token_gram_rows
-
-    sh = token_gram_rows(
-        df, k, f"concat_ws(' ', slice(_toks, i, {k}))", "shingle",
-        text_col, id_col, distinct=True,
+    base = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.split(F.col(text_col), WS_SPLIT).alias("_toks"),
     )
+    grams = (
+        f"array_distinct(transform(CASE WHEN size(_toks) >= {k}"
+        f" THEN sequence(1, size(_toks) - {k - 1})"
+        f" ELSE array() END, i -> concat_ws(' ', slice(_toks, i, {k}))))"
+    )
+    sh = base.select("doc_id", F.explode(F.expr(grams)).alias("shingle"))
     return sh.filter(F.length("shingle") > 0)
 
 

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import os
 import threading
 import time as _time
@@ -33,6 +34,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from myaku_spark.operators.bm25 import PAGE_SIZE
+
+log = logging.getLogger(__name__)
 
 
 def _rank_window():
@@ -177,12 +180,13 @@ class PageCacheTable:
                 continue
             try:
                 t = pq.read_table(f)
-            except (OSError, pa.ArrowInvalid):
+            except (OSError, pa.ArrowInvalid) as e:
                 # Concurrent replace, or a truncated/corrupt slot left by
                 # a crash mid-write on a non-atomic filesystem (NFS /
                 # object-store mounts): a cache must never propagate its
                 # own corruption into the serving path — treat as miss
                 # (gc() reclaims the slot).
+                log.warning("page cache slot %s unreadable, miss: %r", f, e)
                 continue
             if t.num_rows == 0:
                 continue
@@ -218,9 +222,10 @@ class PageCacheTable:
             try:
                 t = pq.read_table(f, columns=["expiry"])
                 expired = t.num_rows == 0 or t.column("expiry")[0].as_py() < now
-            except (OSError, pa.ArrowInvalid):
+            except (OSError, pa.ArrowInvalid) as e:
                 # Missing OR unreadable slot file: either way the slot
                 # can never serve a hit again — reclaim it.
+                log.warning("page cache slot %s unreadable, reclaim: %r", f, e)
                 expired = True
             if expired:
                 shutil.rmtree(slot, ignore_errors=True)

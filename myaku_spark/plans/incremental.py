@@ -33,6 +33,7 @@ after compaction.
 
 from __future__ import annotations
 
+import logging
 import time
 
 import numpy as np
@@ -51,6 +52,8 @@ from myaku_spark.plans.build_index import (
     extract_and_dedupe,
     write_build_meta,
 )
+
+log = logging.getLogger(__name__)
 
 DELTA_GROUP_BASE = 10_000  # delta groups live above base group ids
 
@@ -222,7 +225,13 @@ def resolve_tombstones(
     n = df.count()
     if n == 0:
         return "none", None
-    if n <= max_driver_rows:
+    mode = "array" if n <= max_driver_rows else "df"
+    log.info(
+        "tombstones -> %s: %d deleted docs against "
+        "TOMBSTONE_DRIVER_MAX=%d (max_driver_rows=%d)",
+        mode, n, TOMBSTONE_DRIVER_MAX, max_driver_rows,
+    )
+    if mode == "array":
         arr = np.unique(
             np.fromiter(
                 (r.doc_id for r in df.collect()), dtype=np.int64, count=n

@@ -9,8 +9,6 @@ their real computational shape:
   word-order permutation — exact-dup and shingle/minhash/LSH semantics
   stay honest (straight copies would make every replica pair a near-dup
   candidate and quadratically distort the LSH bench);
-- embeddings: vec_id shift + np.roll(embedding, k) — distinct vectors,
-  same dimensionality/norms;
 - events: event_id/user_id shifts + k-second ts jitter.
 
 Replica 0 is the untouched sf0.1 data. Usage:
@@ -59,24 +57,6 @@ def _mutate_docs(batches):
         yield pd.DataFrame(out)
 
 
-def _mutate_emb(batches):
-    for pdf in batches:
-        out = []
-        for _, r in pdf.iterrows():
-            k = int(r["replica"])
-            emb = np.asarray(r["embedding"], dtype=np.float32)
-            if k > 0:
-                emb = np.roll(emb, k)
-            out.append(
-                {
-                    "vec_id": int(r["vec_id"]) + k * ID_STRIDE,
-                    "embedding": emb.tolist(),
-                    "label": int(r["label"]),
-                }
-            )
-        yield pd.DataFrame(out)
-
-
 def main() -> None:
     out_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/myaku_sf1"
     spark = get_spark("make_sf1", parallelism=int(os.environ.get(
@@ -90,11 +70,6 @@ def main() -> None:
         _mutate_docs,
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.mode("overwrite").parquet(f"{out_dir}/documents.parquet")
-
-    emb = spark.read.parquet(f"{SRC}/embeddings.parquet").select("*", reps)
-    emb.mapInPandas(
-        _mutate_emb, "vec_id long, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(f"{out_dir}/embeddings.parquet")
 
     ev = spark.read.parquet(f"{SRC}/events.parquet").select("*", reps)
     (

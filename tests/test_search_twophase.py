@@ -285,10 +285,12 @@ def test_page_cache_table_empty_page_and_namespace(tmp_path):
     assert c2.get("u1", ["猫"], "and", 2) is None
 
 
-def test_page_cache_corrupt_slot_is_miss_and_gc_reclaims(tmp_path):
+def test_page_cache_corrupt_slot_is_miss_and_gc_reclaims(tmp_path, caplog):
     # ADVICE r4: a truncated/corrupt slot.parquet (crash mid-write on a
     # non-atomic filesystem) raises ArrowInvalid from pyarrow — the
-    # serving path must see a MISS, and gc() must reclaim the slot.
+    # serving path must see a MISS, and gc() must reclaim the slot. Both
+    # swallowed errors are logged with the slot path.
+    import logging
     import os
 
     from myaku_spark.operators.topk_cache import PageCacheTable
@@ -297,11 +299,17 @@ def test_page_cache_corrupt_slot_is_miss_and_gc_reclaims(tmp_path):
     c = PageCacheTable(str(tmp_path / "pc"), clock=lambda: t[0])
     c.set("u1", 1, ["猫"], "and", 2, [(9.0, 7)])
     slot_dir = c._slot_dir("u1", 1)
-    with open(os.path.join(slot_dir, "slot.parquet"), "wb") as f:
+    slot = os.path.join(slot_dir, "slot.parquet")
+    with open(slot, "wb") as f:
         f.write(b"PAR1 this is not a parquet footer")
-    assert c.get("u1", ["猫"], "and", 2) is None  # miss, not a raise
-    assert c.gc() == 1
+    with caplog.at_level(logging.WARNING, "myaku_spark.operators.topk_cache"):
+        assert c.get("u1", ["猫"], "and", 2) is None  # miss, not a raise
+        assert c.gc() == 1
     assert not os.path.isdir(slot_dir)
+    msgs = [r.getMessage() for r in caplog.records]
+    assert len(msgs) == 2, msgs
+    assert all(slot in m and "ArrowInvalid" in m for m in msgs), msgs
+    assert "miss" in msgs[0] and "reclaim" in msgs[1], msgs
 
 
 def test_page_cache_gc_unlinks_stale_tmp_files(tmp_path):

@@ -36,14 +36,37 @@ def test_import_driver_queries_synthesizes_nothing():
     subprocess.run([sys.executable, "-c", code], cwd=REPO_DIR, check=True)
 
 
+def test_every_gate_has_exactly_one_oracle():
+    from myaku_spark.driver_queries import ORACLE, ORACLE_BUILDERS, QUERIES
+
+    assert not set(ORACLE) & set(ORACLE_BUILDERS)
+    assert set(QUERIES) == set(ORACLE) | set(ORACLE_BUILDERS)
+
 
 def test_every_package_definition_is_referenced():
-    # No top-level def/class in the package may be named only by its own
-    # definition: each name must be referenced by code somewhere in the
-    # repo's .py files (a caller, a test, an import, a registry string),
-    # outside its own body. Comments and docstrings do not count.
+    # No top-level def/class/assigned name in the package may be named
+    # only by its own definition: each name must be referenced by code
+    # somewhere in the repo's .py files (a caller, a test, an import, a
+    # registry string), outside its own statement. Comments and
+    # docstrings do not count.
     import ast
     from collections import Counter
+
+    def names(node):
+        if isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ):
+            return [node.name]
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, ast.AnnAssign):
+            targets = [node.target]
+        else:
+            return []
+        return [
+            n.id for t in targets for n in ast.walk(t)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+        ]
 
     def refs(tree):
         for node in ast.walk(tree):
@@ -75,19 +98,12 @@ def test_every_package_definition_is_referenced():
                 tree = ast.parse(fh.read())
             used.update(refs(tree))
             if path.startswith(pkg):
-                defs += [
-                    node
-                    for node in tree.body
-                    if isinstance(
-                        node,
-                        (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef),
-                    )
-                ]
-    assert len(defs) > 100  # the scan found the package
+                defs += [(n, node) for node in tree.body for n in names(node)]
+    assert len(defs) > 300  # the scan found the package
     own = Counter()
-    for node in defs:
-        own[node.name] += sum(1 for r in refs(node) if r == node.name)
-    dead = sorted({n.name for n in defs if used[n.name] <= own[n.name]})
+    for name, node in defs:
+        own[name] += sum(1 for r in refs(node) if r == name)
+    dead = sorted({name for name, _ in defs if used[name] <= own[name]})
     assert dead == [], f"{len(dead)} of {len(defs)} definitions unreferenced"
 
 

@@ -56,119 +56,6 @@ def test_stream_drains_landing_zone_into_index(spark, tmp_path):
     assert spark.read.parquet(f"{idx}/docs").count() == n1
 
 
-def test_stateful_sessionization_across_microbatches(spark, tmp_path):
-    """applyInPandasWithState sessionization: a session SPANNING two
-    micro-batches continues from group state (the semantics a stateless
-    windowed agg cannot express), and the final per-session counts equal
-    the batch twin over the full event set."""
-    import datetime as dt
-
-    from myaku_spark.streaming.sessions import OUTPUT_SCHEMA, sessionize_stream
-
-    land = str(tmp_path / "ev_landing")
-    ckpt = str(tmp_path / "ev_ckpt")
-    base = dt.datetime(2026, 8, 1, 12, 0, 0)
-
-    def ev(user, eid, minutes):
-        return (user, eid, base + dt.timedelta(minutes=minutes))
-
-    # Batch 1: u1 starts a session (2 events); u2 one event.
-    b1 = [ev(1, 1, 0), ev(1, 2, 10), ev(2, 3, 0)]
-    # Batch 2: u1 continues the SAME session (gap 20m < 30m) then after
-    # a 40m gap starts session 2; u2's next event is 31m later → new
-    # session.
-    b2 = [ev(1, 4, 30), ev(1, 5, 75), ev(2, 6, 31)]
-    schema = "user_id long, event_id long, ts timestamp"
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(land)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(land)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(land)
-    )
-    q = (
-        sessionize_stream(stream)
-        .writeStream.format("memory")
-        .queryName("sess_snap")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-
-    snaps = spark.sql("SELECT * FROM sess_snap").collect()
-    # Latest (max n_events) snapshot per (user, session) = final state.
-    final = {}
-    for r in snaps:
-        k = (r.user_id, r.session_no)
-        if k not in final or r.n_events > final[k][0]:
-            final[k] = (r.n_events, r.session_start)
-    assert final[(1, 1)][0] == 3  # session spanned both micro-batches
-    assert final[(1, 2)][0] == 1
-    assert final[(2, 1)][0] == 1
-    assert final[(2, 2)][0] == 1
-    assert final[(1, 1)][1] == base  # session_start from batch 1 kept
-
-
-def test_watermarked_window_drops_late_data(spark, tmp_path):
-    """Watermarked tumbling windows: an event arriving LATER than the
-    watermark bound is dropped instead of reopening its (finalized)
-    window — append mode emits each closed window exactly once."""
-    import datetime as dt
-
-    from myaku_spark.streaming.windows import windowed_event_counts
-
-    land = str(tmp_path / "wm_landing")
-    ckpt = str(tmp_path / "wm_ckpt")
-    base = dt.datetime(2026, 8, 1, 12, 0, 0)
-    schema = "user_id long, event_id long, ts timestamp"
-
-    def ev(eid, minutes):
-        return (1, eid, base + dt.timedelta(minutes=minutes))
-
-    # Batch 1: two events in window [12:00,12:10), one in [12:10,12:20).
-    # Watermark after batch 1 = 12:18 - 5m = 12:13 — PAST the end of the
-    # first window, so it is finalized.
-    b1 = [ev(1, 0), ev(2, 3), ev(3, 18)]
-    # Batch 2: a LATE event at 12:01 whose window end (12:10) is below
-    # the watermark → dropped; an on-time event at 12:25 advances the
-    # watermark to 12:20, closing the second window too.
-    b2 = [ev(4, 1), ev(5, 25)]
-    out = str(tmp_path / "wm_out")
-
-    def drain():
-        stream = spark.readStream.schema(schema).parquet(land)
-        q = (
-            windowed_event_counts(
-                stream, window="10 minutes", watermark="5 minutes"
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-
-    # Two separate drains guarantee the watermark from batch 1 is
-    # committed before the late data arrives.
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(land)
-    drain()
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(land)
-    drain()
-    rows = {r.win_start: r.n_events
-            for r in spark.read.parquet(out).collect()}
-    # Window 12:00 closed with 2 events — the late event at 12:01 was
-    # DROPPED (3 would mean late data reopened the window).
-    assert rows.get(base) == 2
-    assert rows.get(base + dt.timedelta(minutes=10)) == 1
-    # The 12:20 window is still open (watermark == its end) → not emitted.
-    assert (base + dt.timedelta(minutes=20)) not in rows
-
-
 def test_stateful_dedup_across_microbatches(spark, tmp_path):
     """applyInPandasWithState cross-batch exact dedup: a content hash
     seen in micro-batch 1 is dropped when re-delivered in micro-batch 2

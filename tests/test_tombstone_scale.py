@@ -82,6 +82,29 @@ def test_resolve_tombstones_modes(spark, tidx, monkeypatch):
     assert mode2 == "df" and df.count() == N_PAD + 3
 
 
+@pytest.mark.parametrize(
+    "max_driver_rows, mode", [(None, "array"), (0, "df")]
+)
+def test_resolve_tombstones_logs_its_mode(
+    spark, tmp_path, caplog, max_driver_rows, mode
+):
+    import logging
+
+    path = str(tmp_path / "tombstones")
+    spark.createDataFrame([(7,), (3,), (5,)], "doc_id long").write.parquet(
+        path
+    )
+    with caplog.at_level(logging.INFO, "myaku_spark.plans.incremental"):
+        got, _ = resolve_tombstones(
+            spark, str(tmp_path), path=path, max_driver_rows=max_driver_rows
+        )
+    assert got == mode
+    msgs = [r.getMessage() for r in caplog.records]
+    assert len(msgs) == 1, msgs
+    assert msgs[0].startswith(f"tombstones -> {mode}: 3 deleted docs"), msgs
+    assert f"TOMBSTONE_DRIVER_MAX={incr.TOMBSTONE_DRIVER_MAX}" in msgs[0]
+
+
 def test_df_mode_serving_paths_identical_no_driver_set(
     spark, tidx, monkeypatch
 ):
