@@ -1,7 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry(spark)`` runs the flagship pipeline (whitespace-tokenized posting
-build → BM25 → top-k) on sf0.001. ``queries()``/``oracle_sql()`` expose
+``entry(spark)`` runs the flagship pipeline on sf0.001: whitespace
+postings → block-encoded segments → BM25 top-k through the engine's
+batch WAND. ``queries()``/``oracle_sql()`` expose
 the extraction, indexing, ranking and search gates with DuckDB oracles;
 implementations live in ``myaku_spark.driver_queries``.
 """
@@ -20,7 +21,8 @@ if _REPO_DIR not in sys.path:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001: BM25 top-10 per query term."""
+    """Flagship query on the sf0.001 data: BM25 top-10 per query term,
+    ranked by the engine."""
     from myaku_spark.driver_queries import q_bm25_topk
 
     return q_bm25_topk(spark, "/root/testdata/sf0.001")

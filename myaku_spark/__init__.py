@@ -19,5 +19,3 @@ Reference semantics citations in docstrings point into ``/root/reference``
 """
 
 __version__ = "0.1.0"
-
-from myaku_spark.session import get_spark  # noqa: F401

@@ -12,15 +12,26 @@ sides so IEEE doubles agree.
 The whitespace-tokenized ``documents`` table stands in for the Japanese
 ``pages`` path (same pipeline shape; the ja tokenizer is a UDF and is
 covered by pytest + rows-only checks instead).
+
+Ranking and search gates run the engine itself. ``_gate_index`` turns the
+whitespace postings into a temp index through ``build_segments`` (block
+encode with positions), and the gates rank through ``batch_search``,
+``IndexSearcher.search`` / ``search_page`` / ``search_phrase`` and
+``hydrate``, whose scorers are ``wand.py``'s. The posting gates read the
+postings back through ``phrase.decode_postings``. So each oracle replays
+the paper's ranking semantics relationally against the engine's own
+encode, decode and WAND path; the gates collect their driver-sized
+results before the temp index is removed.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from myaku_spark.functions.tokenize import explode_whitespace_tokens
-from myaku_spark.operators import bm25 as bm25_ops
 from myaku_spark.operators import postings as post_ops
 from myaku_spark.operators import scoring
 from myaku_spark.operators.dedup import (
@@ -28,6 +39,7 @@ from myaku_spark.operators.dedup import (
     lsh_candidate_pairs,
     simhash_near_dups,
 )
+from myaku_spark.session import local_frame
 
 # Fixed query terms drawn from the synthetic vocabulary.
 Q_AND_TERMS = ["spark", "join"]
@@ -74,10 +86,88 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
-
-
 def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return explode_whitespace_tokens(_docs(spark, sf_dir))
+
+
+@contextmanager
+def _gate_index(spark: SparkSession, sf_dir: str, mode: str):
+    """A temp index over the whitespace postings of ``sf_dir`` in the
+    layout the engine reads (``segments/group=0``, ``docs``,
+    ``term_stats``, ``corpus_stats``); yields its dir and removes it on
+    exit.
+
+    Segments are ``build_segments`` blocks with (start, len) positions;
+    head terms (df > 64) range-block every 64 doc ids. The posting
+    payload is ``dl`` for ``bm25`` and the integer quality score
+    ``length_score(n_chars)*3 + tf_score_mod(tf)`` for ``myaku``.
+    ``docs`` holds (doc_id, dl, n_chars, lang, source)."""
+    import shutil
+    import tempfile
+
+    from myaku_spark.operators.segments import build_segments, write_segments
+
+    toks = _tokens(spark, sf_dir).select(
+        "doc_id", "term",
+        F.col("start").cast("int").alias("start"),
+        F.col("len").cast("int").alias("len"),
+    )
+    dstats = post_ops.doc_stats(toks)
+    docs = dstats.join(
+        _docs(spark, sf_dir).select("doc_id", "n_chars", "lang", "source"),
+        "doc_id",
+    )
+    payload = (
+        F.col("dl") if mode == "bm25"
+        else scoring.length_score_col(F.col("n_chars")) * 3
+        + scoring.tf_score_mod_col(F.col("tf"))
+    )
+    # persist: build_segments reads the postings twice (df + blocks)
+    postings = (
+        post_ops.build_postings(toks)
+        .join(docs.select("doc_id", "dl", "n_chars"), "doc_id")
+        .withColumn("payload", payload.cast("long"))
+        .persist()
+    )
+    d = tempfile.mkdtemp(prefix=f"gate_idx_{mode}_")
+    try:
+        write_segments(
+            build_segments(
+                postings, payload_col="payload",
+                head_df_threshold=64, block_doc_range=64,
+            ),
+            f"{d}/segments/group=0",
+        )
+        docs.write.parquet(f"{d}/docs")
+        post_ops.term_stats(postings).write.parquet(f"{d}/term_stats")
+        post_ops.corpus_stats(dstats).write.parquet(f"{d}/corpus_stats")
+        yield d
+    finally:
+        postings.unpersist()
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _term_topk(spark, sf_dir, mode: str, k: int) -> list:
+    """One-term ``batch_search`` queries, one per Q_TOPK_TERMS term:
+    (query_id = term, rank, doc_id, score) rows."""
+    from myaku_spark.operators.batch_search import batch_search
+
+    with _gate_index(spark, sf_dir, mode) as d:
+        return batch_search(
+            spark, d, [(t, [t]) for t in Q_TOPK_TERMS], k=k, mode=mode
+        ).collect()
+
+
+def _decoded_postings(spark, sf_dir, schema: str, *cols) -> DataFrame:
+    """``cols`` of the gate index's postings, decoded from its segment
+    blocks by ``phrase.decode_postings``."""
+    from myaku_spark.operators.phrase import decode_postings
+
+    with _gate_index(spark, sf_dir, "bm25") as d:
+        rows = decode_postings(spark.read.parquet(f"{d}/segments")).select(
+            *cols
+        ).collect()
+    return local_frame(spark, rows, schema)
 
 
 # SQL fragment: token stream with char offsets (mirrors
@@ -141,19 +231,21 @@ def q_token_positions(spark, sf_dir):
 
 
 def q_postings_build(spark, sf_dir):
-    """A1: posting build — (term, doc_id) → tf."""
-    p = post_ops.build_postings(_tokens(spark, sf_dir))
-    return p.select("term", "doc_id", F.col("tf").cast("int").alias("tf"))
+    """A1: posting build — (term, doc_id) → tf, as encoded into segment
+    blocks and decoded back."""
+    return _decoded_postings(
+        spark, sf_dir, "term string, doc_id long, tf int",
+        "term", "doc_id", F.col("tf").cast("int"),
+    )
 
 
 def q_posting_positions(spark, sf_dir):
-    """A1 positions: first occurrence offset per (term, doc) (array head)."""
-    p = post_ops.build_postings(_tokens(spark, sf_dir))
-    return p.select(
-        "term",
-        "doc_id",
-        F.col("positions")[0]["start"].cast("int").alias("first_start"),
-        F.size("positions").alias("n_positions"),
+    """A1 positions: first occurrence offset per (term, doc) (list head),
+    as encoded into segment blocks and decoded back."""
+    return _decoded_postings(
+        spark, sf_dir,
+        "term string, doc_id long, first_start int, n_positions int",
+        "term", "doc_id", F.col("starts")[0], F.size("starts"),
     )
 
 
@@ -182,21 +274,19 @@ def q_term_dictionary(spark, sf_dir):
 
 
 def q_bm25_topk(spark, sf_dir):
-    """K1: per-term BM25 top-10 for the fixed query terms."""
-    toks = _tokens(spark, sf_dir)
-    p = post_ops.build_postings(toks)
-    scored = bm25_ops.attach_bm25(
-        p, post_ops.term_stats(p), post_ops.doc_stats(toks),
-        post_ops.corpus_stats(post_ops.doc_stats(toks)),
+    """K1: per-term BM25 top-10 for the fixed query terms — one-term
+    ``batch_search`` queries over the bm25 gate index, each hit's tf
+    joined back from the whitespace postings."""
+    top = local_frame(
+        spark,
+        [(r.query_id, r.doc_id, r.rank, r.score)
+         for r in _term_topk(spark, sf_dir, "bm25", 10)],
+        "term string, doc_id long, rank int, score double",
     )
-    qterms = F.broadcast(
-        spark.createDataFrame([(t,) for t in Q_TOPK_TERMS], ["term"])
-    )
-    top = bm25_ops.topk_per_term(scored.join(qterms, "term"), k=10)
-    return top.select(
-        "term", "doc_id", F.col("tf").cast("int").alias("tf"),
-        F.col("rank").cast("int").alias("rank"),
-        F.round("bm25", 3).alias("bm25_r"),
+    p = post_ops.build_postings(_tokens(spark, sf_dir))
+    return top.join(p, ["term", "doc_id"]).select(
+        "term", "doc_id", F.col("tf").cast("int").alias("tf"), "rank",
+        F.round("score", 3).alias("bm25_r"),
     )
 
 
@@ -207,44 +297,15 @@ E2E_K = 10
 
 def q_segment_search_e2e(spark, sf_dir):
     """r4 verdict #7 — ONE gate row covering the full serving path
-    THROUGH the codec: documents → postings → compressed segment blocks
-    (small head_df_threshold/block_doc_range so head terms genuinely
-    range-block) → a temp index layout (v0 catalog: segments/docs/
-    term_stats/corpus_stats parquet) → IndexSearcher(mode='bm25')
-    two-phase WAND (metadata-only plan, lazy blob windows) → page-2
-    slice → hydration join. The oracle replays it relationally in
-    DuckDB: per-doc BM25 sum over the query terms, ORDER BY
-    (score, doc_id) DESC, rows 11-20."""
-    import shutil
-    import tempfile
-
+    THROUGH the codec: the bm25 gate index (range-blocked head terms) →
+    IndexSearcher(mode='bm25') two-phase WAND (metadata-only plan, lazy
+    blob windows) → page-2 slice → hydration join. The oracle replays
+    it relationally in DuckDB: per-doc BM25 sum over the query terms,
+    ORDER BY (score, doc_id) DESC, rows 11-20."""
     from myaku_spark.operators.search import IndexSearcher
-    from myaku_spark.operators.segments import build_segments, write_segments
 
-    toks = _tokens(spark, sf_dir)
-    p = post_ops.build_postings(toks)
-    ds = post_ops.doc_stats(toks)
-    postings = p.join(ds, "doc_id").withColumn("payload", F.col("dl"))
-    d = tempfile.mkdtemp(prefix="e2e_idx_")
-    try:
-        segs = build_segments(
-            postings,
-            payload_col="payload",
-            with_positions=False,
-            head_df_threshold=64,
-            block_doc_range=64,
-        )
-        write_segments(segs, f"{d}/segments/group=0")
-        ds.write.mode("overwrite").parquet(f"{d}/docs")
-        p.groupBy("term").agg(
-            F.count(F.lit(1)).cast("long").alias("df"),
-            F.sum("tf").cast("long").alias("cf"),
-        ).write.mode("overwrite").parquet(f"{d}/term_stats")
-        ds.agg(
-            F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-        ).write.mode("overwrite").parquet(f"{d}/corpus_stats")
-        s = IndexSearcher(spark, d, mode="bm25")
-        page = s.search_page(
+    with _gate_index(spark, sf_dir, "bm25") as d:
+        page = IndexSearcher(spark, d, mode="bm25").search_page(
             E2E_TERMS, page_num=E2E_PAGE, k=E2E_K, combine="or"
         )
         rows = [
@@ -252,66 +313,39 @@ def q_segment_search_e2e(spark, sf_dir):
              int(r.dl), round(float(r.score), 3))
             for r in page.collect()
         ]
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "rank int, doc_id long, dl long, score_r double"
+    return local_frame(
+        spark, rows, "rank int, doc_id long, dl long, score_r double"
     )
-
-
-
-
 
 
 def q_search_and(spark, sf_dir):
-    """J7: posting-list intersection (multi-term AND) + summed BM25."""
-    toks = _tokens(spark, sf_dir)
-    p = post_ops.build_postings(toks)
-    scored = bm25_ops.attach_bm25(
-        p, post_ops.term_stats(p), post_ops.doc_stats(toks),
-        post_ops.corpus_stats(post_ops.doc_stats(toks)),
-    )
-    qdf = F.broadcast(
-        spark.createDataFrame([(t,) for t in Q_AND_TERMS], ["term"])
-    )
-    agg = (
-        scored.join(qdf, "term")
-        .groupBy("doc_id")
-        .agg(F.sum("bm25").alias("s"), F.count(F.lit(1)).alias("n_matched"))
-        .filter(F.col("n_matched") == len(Q_AND_TERMS))
-    )
-    return agg.select(
-        "doc_id", F.col("n_matched").cast("long").alias("n_matched"),
-        F.round("s", 3).alias("score_r"),
-    )
+    """J7: posting-list intersection (multi-term AND) + summed BM25 —
+    conjunctive WAND over the bm25 gate index, k = every doc."""
+    from myaku_spark.operators.search import IndexSearcher
+
+    with _gate_index(spark, sf_dir, "bm25") as d:
+        s = IndexSearcher(spark, d, mode="bm25")
+        hits = s.search(Q_AND_TERMS, k=s.n_docs, combine="and")
+    return local_frame(
+        spark,
+        [(doc, len(Q_AND_TERMS), score) for score, doc in hits],
+        "doc_id long, n_matched long, score double",
+    ).select("doc_id", "n_matched", F.round("score", 3).alias("score_r"))
 
 
 def q_rank_key_topk(spark, sf_dir):
     """K1/K3 Myaku rank mode: integer quality score, (score,doc_id) DESC.
 
-    Integer-exact across engines: score = length-bucket(n_chars)*3 +
-    tf-bucket(tf)*3 (A5/A6 arithmetic), rank key (score DESC, doc_id DESC).
-    """
-    docs = _docs(spark, sf_dir)
-    p = post_ops.build_postings(_tokens(spark, sf_dir))
-    scored = p.join(docs.select("doc_id", "n_chars"), "doc_id").select(
-        "term",
-        "doc_id",
-        (
-            scoring.length_score_col(F.col("n_chars")) * 3
-            + scoring.tf_score_mod_col(F.col("tf"))
-        ).cast("int").alias("score"),
+    Integer-exact across engines: the myaku gate index's payload is
+    length-bucket(n_chars)*3 + tf-bucket(tf)*3 (A5/A6 arithmetic), and
+    one-term ``batch_search`` queries rank it by (score DESC, doc_id
+    DESC)."""
+    return local_frame(
+        spark,
+        [(r.query_id, r.doc_id, int(r.score), r.rank)
+         for r in _term_topk(spark, sf_dir, "myaku", 10)],
+        "term string, doc_id long, score int, rank int",
     )
-    qterms = F.broadcast(
-        spark.createDataFrame([(t,) for t in Q_TOPK_TERMS], ["term"])
-    )
-    w = Window.partitionBy("term").orderBy(F.desc("score"), F.desc("doc_id"))
-    top = (
-        scored.join(qterms, "term")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-    )
-    return top.select("term", "doc_id", "score", F.col("rank").cast("int").alias("rank"))
 
 
 _SQL_LENGTH_SCORE = """
@@ -371,20 +405,23 @@ def q_anti_join_skip(spark, sf_dir):
 
 
 def q_hydrate_topk(spark, sf_dir):
-    """J1/J2: broadcast hydration of top-k results with doc metadata."""
-    top = q_rank_key_topk(spark, sf_dir)
-    docs = _docs(spark, sf_dir).select("doc_id", "lang", "source", "n_chars")
-    return top.join(F.broadcast(docs), "doc_id").select(
-        "term", "doc_id", "rank", "lang", "source", "n_chars"
+    """J1/J2: hydration of each fixed term's myaku top-10
+    (``IndexSearcher.search`` → ``hydrate``) with doc metadata."""
+    from myaku_spark.operators.search import IndexSearcher
+
+    rows = []
+    with _gate_index(spark, sf_dir, "myaku") as d:
+        s = IndexSearcher(spark, d, mode="myaku")
+        for t in Q_TOPK_TERMS:
+            rows += [
+                (t, r.doc_id, r.rank, r.lang, r.source, r.n_chars)
+                for r in s.hydrate(s.search([t], k=10)).collect()
+            ]
+    return local_frame(
+        spark, rows,
+        "term string, doc_id long, rank int, lang string, source string,"
+        " n_chars long",
     )
-
-
-
-
-
-
-
-
 
 
 def q_minhash_signature(spark, sf_dir):
@@ -506,12 +543,6 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     )
 
 
-
-
-
-
-
-
 def q_incremental_merge(spark, sf_dir):
     """S6/J4 semantics: first-writer-wins upsert of docs by text hash.
 
@@ -531,8 +562,6 @@ def q_incremental_merge(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .select("h", F.col("doc_id").alias("keeper_doc_id"))
     )
-
-
 
 
 def q_simhash_pairs(spark, sf_dir):
@@ -573,18 +602,6 @@ def q_simhash_pairs(spark, sf_dir):
     )
 
 
-
-
-
-
-
-
-
-
-
-
-
-
 def q_decontaminate(spark, sf_dir):
     """Benchmark decontamination (n-gram test-set leak check): corpus
     docs sharing ≥5 distinct 3-token shingles with the benchmark set
@@ -607,8 +624,6 @@ def q_decontaminate(spark, sf_dir):
     corpus = docs.filter(F.col("doc_id") % 41 != 0).unionByName(leaks)
     out = decontaminate(corpus, benchmark, k=3)
     return out.filter(F.col("n_shared") >= 5).select("doc_id", "n_shared")
-
-
 
 
 def q_ja_index_postings(spark, sf_dir):
@@ -1103,64 +1118,12 @@ def _blog_rollup_values() -> str:
 
 def q_pagination_page2(spark, sf_dir):
     """K2 pagination: page 2 (ranks 11-20) of the rank-key retrieval."""
-    docs = _docs(spark, sf_dir)
-    p = post_ops.build_postings(_tokens(spark, sf_dir))
-    scored = p.join(docs.select("doc_id", "n_chars"), "doc_id").select(
-        "term",
-        "doc_id",
-        (
-            scoring.length_score_col(F.col("n_chars")) * 3
-            + scoring.tf_score_mod_col(F.col("tf"))
-        ).cast("int").alias("score"),
+    return local_frame(
+        spark,
+        [(r.query_id, r.doc_id, int(r.score), r.rank)
+         for r in _term_topk(spark, sf_dir, "myaku", 20) if r.rank > 10],
+        "term string, doc_id long, score int, rank int",
     )
-    qterms = F.broadcast(
-        spark.createDataFrame([(t,) for t in Q_TOPK_TERMS], ["term"])
-    )
-    w = Window.partitionBy("term").orderBy(F.desc("score"), F.desc("doc_id"))
-    return (
-        scored.join(qterms, "term")
-        .withColumn("rank", F.row_number().over(w))
-        .filter((F.col("rank") > 10) & (F.col("rank") <= 20))
-        .select("term", "doc_id", "score", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-
-
-
-
-# Weighted-sampling gate parameters (shared literals on both sides).
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
 
 
 BP_MIN_DOCS = 5  # shingle doc-frequency at which it counts as boilerplate
@@ -1183,53 +1146,27 @@ def q_boilerplate(spark, sf_dir):
     )
 
 
-PHRASE = ["slow", "hash", "batch"]  # phrase gate: 8 occurrences in 5 docs
+# Phrase gate: 5 occurrences in 5 docs, at sf0.001 and at sf0.01.
+PHRASE = ["small", "query", "line"]
 PHRASE_K = 10
 
 
 def _phrase_gate(spark, sf_dir, terms, slop=0):
-    """Shared phrase/proximity gate plumbing: whitespace postings with
-    (start, len) positions → build_segments (delta+varint block encode)
-    → decode_postings → position chain-match (gap=1 for the space
-    separator) → top-k by phrase_tf. Top-k is driver-sized by contract
-    (<= PHRASE_K rows); returning a local DataFrame lets the persisted
-    postings be released here instead of leaking into the session
-    cache."""
-    from myaku_spark.operators.phrase import phrase_match, decode_postings
-    from myaku_spark.operators.segments import build_segments
+    """Shared phrase/proximity gate: ``IndexSearcher.search_phrase``
+    (gap=1 for the space separator) over the gate index, top-k by
+    phrase_tf. match_starts is canonicalized to a comma-joined string:
+    engines may stringify lists differently in the driver's
+    normalizer."""
+    from myaku_spark.operators.search import IndexSearcher
 
-    toks = _tokens(spark, sf_dir).filter(F.col("term").isin(terms))
-    postings = toks.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).cast("int").alias("tf"),
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("start").cast("int").alias("start"),
-                    F.col("len").cast("int").alias("len"),
-                )
-            )
-        ).alias("positions"),
-    ).withColumn("score", F.col("tf")).persist()
-    # (persist: build_segments reads postings twice — term stats + rows)
-    segs = build_segments(postings, payload_col="score")
-    dec = decode_postings(segs)
-    rows = (
-        phrase_match(dec, terms, gap=1, slop=slop)
-        .orderBy(F.desc("phrase_tf"), "doc_id")
-        .limit(PHRASE_K)
-        # match_starts canonicalized to a comma-joined string: array
-        # columns have never crossed the driver's value hasher (every
-        # prior gate projects scalars) and engines may stringify lists
-        # differently in its normalizer
-        .select(
-            "doc_id", "phrase_tf",
-            F.array_join("match_starts", ",").alias("match_starts"),
+    with _gate_index(spark, sf_dir, "myaku") as d:
+        hits = IndexSearcher(spark, d).search_phrase(
+            terms, k=PHRASE_K, gap=1, slop=slop
         )
-        .collect()
-    )
-    postings.unpersist()
-    return spark.createDataFrame(
-        rows, "doc_id long, phrase_tf long, match_starts string"
+    return local_frame(
+        spark,
+        [(doc, tf, ",".join(map(str, starts))) for doc, tf, starts in hits],
+        "doc_id long, phrase_tf long, match_starts string",
     )
 
 
@@ -1246,14 +1183,10 @@ PROX_SLOP = 8  # window admits one intervening token of <= 7 chars
 
 def q_proximity_search(spark, sf_dir):
     """Ordered proximity search (slop=8): 'slow' followed by 'batch'
-    within the window — catches both the adjacent pair and the
-    'slow hash batch' trigram. Same decode path as phrase_search;
+    within the window — catches both the adjacent pair and pairs with
+    one short token between them. Same engine path as phrase_search;
     chains branch over every in-window occurrence."""
     return _phrase_gate(spark, sf_dir, PROX, slop=PROX_SLOP)
-
-
-
-
 
 
 FUZZY_QUERIES = [
@@ -1355,10 +1288,6 @@ def q_line_dedup(spark, sf_dir):
     )
 
 
-
-
-
-
 PR_OUTLINKS = 5   # pagerank gate: candidate outlinks per doc
 PR_ITERS = 3      # pagerank gate: unrolled power iterations
 PR_K = 20         # pagerank gate: top-k by rank
@@ -1400,10 +1329,6 @@ def q_pagerank_topk(spark, sf_dir):
         .orderBy(F.desc("rank_n"), "node")
         .limit(PR_K)
     )
-
-
-
-
 
 
 PD_MIN_DOCS = 3    # paragraph-dedup gate: doc-frequency floor
@@ -1448,10 +1373,6 @@ def q_paragraph_dedup(spark, sf_dir):
     return strip_common_paragraphs(
         docs, min_docs=PD_MIN_DOCS, min_len=PD_MIN_LEN
     )
-
-
-
-
 
 
 QUERIES = {
@@ -1627,13 +1548,6 @@ def _media_features_values() -> str:
             nb = 64 * (4 + i % 5)
         rows.append((i, kind, nb, 64))
     return _values_sql(rows, ["media_id", "kind", "n_bytes", "dim"])
-
-
-
-
-
-
-
 
 
 _mh_per_band = len(MH_HASHES) // MH_BANDS
@@ -1906,16 +1820,6 @@ ORACLE_BUILDERS = {
     "media_features": _media_features_values,
 }
 
-# Full-probe IVF is rank-identical to brute force → same exact oracle.
-
-
-
-
-
-
-
-
-
 ORACLE["decontaminate"] = """
 WITH docs0 AS (
   SELECT doc_id, text FROM documents WHERE doc_id < 200
@@ -2024,9 +1928,6 @@ FROM marked GROUP BY doc_id
 """
 
 
-
-
-
 ORACLE["phrase_search"] = f"""
 WITH {_SQL_TOKS},
 t0 AS (SELECT doc_id, start, start + len AS e FROM toks
@@ -2049,7 +1950,6 @@ LIMIT {PHRASE_K}
 """
 
 
-
 ORACLE["proximity_search"] = f"""
 WITH {_SQL_TOKS},
 t0 AS (SELECT doc_id, start, start + len AS e FROM toks
@@ -2066,7 +1966,6 @@ FROM m GROUP BY doc_id
 ORDER BY phrase_tf DESC, doc_id
 LIMIT {PHRASE_K}
 """
-
 
 
 ORACLE["boilerplate"] = f"""
@@ -2100,13 +1999,6 @@ SELECT doc_id,
        sum(b) * 1.0 / count(*) < {BP_MAX_RATIO} AS keep
 FROM fl GROUP BY doc_id
 """
-
-
-# Gopher rule set (q_gopher_quality): the seeded-corpus CASE chain is
-# mirrored verbatim, then every signal replays relationally — words =
-# regexp-split on \s+ with empties dropped (matching F.split + filter),
-# lines = split on chr(10) with blank lines dropped, leftmost
-# non-overlapping replace() for the #/... counts on both engines.
 
 
 def _pagerank_sql(outlinks: int, iters: int, k: int) -> str:
@@ -2154,8 +2046,6 @@ LIMIT {k}
 
 
 ORACLE["pagerank_topk"] = _pagerank_sql(PR_OUTLINKS, PR_ITERS, PR_K)
-
-
 
 
 # Paragraph dedup (q_paragraph_dedup): seeded-corpus mirror + full
@@ -2216,10 +2106,3 @@ SELECT doc_id,
     AS n_removed
 FROM marked GROUP BY doc_id
 """
-
-
-# Document chunking (q_doc_chunks): per-doc ordered token offsets
-# (the shared toks CTE), window count = 1 for short docs else
-# ceil((n - overlap)/step), chunk text = the original char span from
-# first token start to last token end (1-based list indexing; DuckDB
-# range(a, b) is a scalar list here, unnested per doc).

@@ -29,7 +29,7 @@ so the data side is a file swap, not a code change.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from importlib import resources
 from xml.etree import ElementTree
 

@@ -48,9 +48,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from myaku_spark.functions.ja_lexicon import (  # noqa: F401 (re-export)
-    JA_FUNCTION_WORDS,
-    JA_LEXICON_VERSION,
+from myaku_spark.functions.ja_lexicon import (
     JaDictionary,
     JMdictSubset,
     resolve_dictionary,

@@ -24,7 +24,6 @@ from __future__ import annotations
 import logging
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -1,4 +1,4 @@
-"""Posting-list construction (A1-A4) as salted, shuffle-aware aggregations.
+"""Posting-list construction (A1-A4) as shuffle-aware aggregations.
 
 The reference builds one posting per (term, article) by in-memory reduce
 (reduce_found_lexical_items, /root/reference/myaku/datatypes.py:428-505)
@@ -9,7 +9,6 @@ same artifacts are explicit DataFrames:
 - ``build_postings``      (term, doc_id) → tf + sorted positions     [A1]
 - ``doc_stats``           doc_id → dl (+ corpus N, avgdl)            [BM25]
 - ``term_stats``          term → df, cf                             [A2]
-- ``term_posting_arrays`` term → sorted array of (doc_id, tf, score) [K1]
 
 Shuffle/skew notes (the 100 TB design point):
 
@@ -17,11 +16,8 @@ Shuffle/skew notes (the 100 TB design point):
   class function words that appear in nearly every doc) do NOT skew this
   aggregation; Spark's partial (map-side) aggregation combines duplicate
   occurrences within a partition first.
-* ``groupBy(term)`` collect-style aggregations DO skew. ``term_posting_
-  arrays`` therefore salts: phase 1 groups on (term, pmod(doc_id, S))
-  producing S sorted partial lists per head term, phase 2 merges the ≤S
-  partials per term. Count/max-only term stats need no salt — partial
-  aggregation already reduces each partition to one row per term.
+* ``groupBy(term)`` term stats are count/sum only: partial aggregation
+  reduces each partition to one row per term, so head terms need no salt.
 * At full scale posting lists are never materialized as one giant array:
   the segment writer (segments.py) blocks postings by doc_id range so a
   10^8-posting term becomes ~10^6 independent (term, block) rows.
@@ -31,8 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DEFAULT_SALTS = 16
 
 
 def build_postings(tokens: DataFrame) -> DataFrame:
@@ -72,27 +66,6 @@ def term_stats(postings: DataFrame) -> DataFrame:
     """
     return postings.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
-    )
-
-
-def term_posting_arrays(
-    postings: DataFrame, n_salts: int = DEFAULT_SALTS
-) -> DataFrame:
-    """term → array<struct<doc_id,tf>> sorted by doc_id, salted two-phase.
-
-    Phase 1 groups on (term, pmod(doc_id, S)) so a head term's list is
-    assembled as S independent partials on S different reducers; phase 2
-    flattens + array_sorts the ≤S partials. Both phases stay JVM-side.
-    """
-    phase1 = postings.groupBy(
-        "term", F.pmod(F.col("doc_id"), F.lit(n_salts)).alias("_salt")
-    ).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("doc_id"), F.col("tf")))
-        ).alias("partial")
-    )
-    return phase1.groupBy("term").agg(
-        F.array_sort(F.flatten(F.collect_list("partial"))).alias("postings")
     )
 
 

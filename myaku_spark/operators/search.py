@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myaku_spark.functions.widthnorm import normalize_char_width
-from myaku_spark.operators.bm25 import PAGE_SIZE
 from myaku_spark.operators.segments import term_rows
 from myaku_spark.operators.wand import (
     BM25Scorer,
@@ -39,6 +38,8 @@ from myaku_spark.operators.wand import (
     wand_topk_and,
     wand_topk_or,
 )
+
+PAGE_SIZE = 10  # SEARCH_RESULTS_PAGE_SIZE, datastore/__init__.py:22
 
 _META_COLS = [
     "group",

@@ -1,25 +1,5 @@
-"""Materialized first-page top-k per term (the Redis first-page cache,
-re-architected).
-
-Reference semantics: a perpetual cache of page 1 (top 10) per term,
-written at build close (/root/reference/myaku/datastore/index_build.py:
-61-114), incrementally maintained by comparing a new posting's rank key
-against the page's lowest cached key (cache.py:201-289:
-is_recache_required). Here:
-
-- ``build_first_page``   one window top-k over scored postings → a small
-                         (term, rank, doc_id, score) table.
-- ``stale_terms``        A4-style per-term max rank keys of the delta vs
-                         the cached page's MIN rank key: a term needs
-                         recaching iff a new posting outranks the page
-                         floor OR the page isn't full (same decision
-                         logic as is_recache_required).
-- ``refresh_first_page`` recompute only stale terms' pages and MERGE.
-
-At 10^12 docs the first-page table is ~#terms × k rows — small enough to
-serve point lookups from any KV/Iceberg table, and the refresh touches
-only terms whose delta contains a page-1-worthy posting.
-"""
+"""Cross-process per-user next-page cache (the reference's Redis
+NextPageCache) as a parquet slot table."""
 
 from __future__ import annotations
 
@@ -30,73 +10,7 @@ import os
 import threading
 import time as _time
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
-from myaku_spark.operators.bm25 import PAGE_SIZE
-
 log = logging.getLogger(__name__)
-
-
-def _rank_window():
-    return Window.partitionBy("term").orderBy(
-        F.desc("score"), F.desc("doc_id")
-    )
-
-
-def build_first_page(
-    scored_postings: DataFrame, k: int = PAGE_SIZE
-) -> DataFrame:
-    """(term, rank, doc_id, score, total_results) — page 1 per term."""
-    w = _rank_window()
-    counts = scored_postings.groupBy("term").agg(
-        F.count(F.lit(1)).alias("total_results")
-    )
-    return (
-        scored_postings.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .join(counts, "term")
-        .select("term", "rank", "doc_id", "score", "total_results")
-    )
-
-
-def stale_terms(
-    cached_page: DataFrame, delta_postings: DataFrame, k: int = PAGE_SIZE
-) -> DataFrame:
-    """Terms whose cached first page is invalidated by the delta.
-
-    A term is stale when (a) it's new/not cached, (b) its cached page has
-    fewer than k entries (any new posting may enter), or (c) the delta's
-    best new rank key beats the cached page's floor key."""
-    floor = cached_page.groupBy("term").agg(
-        F.min(F.struct("score", "doc_id")).alias("floor_key"),
-        F.count(F.lit(1)).alias("n_cached"),
-    )
-    delta_best = delta_postings.groupBy("term").agg(
-        F.max(F.struct("score", "doc_id")).alias("best_new_key")
-    )
-    joined = delta_best.join(floor, "term", "left")
-    return joined.filter(
-        F.col("floor_key").isNull()
-        | (F.col("n_cached") < k)
-        | (F.col("best_new_key") > F.col("floor_key"))
-    ).select("term")
-
-
-def refresh_first_page(
-    cached_page: DataFrame,
-    all_scored_postings: DataFrame,
-    delta_postings: DataFrame,
-    k: int = PAGE_SIZE,
-) -> DataFrame:
-    """MERGE-style refresh: recompute pages only for stale terms, keep the
-    rest of the cache untouched (K5 reorder + recache decision)."""
-    stale = stale_terms(cached_page, delta_postings, k)
-    fresh = build_first_page(
-        all_scored_postings.join(stale, "term", "left_semi"), k
-    )
-    kept = cached_page.join(stale, "term", "left_anti")
-    return kept.unionByName(fresh)
 
 
 class PageCacheTable:
@@ -240,6 +154,8 @@ class PageCacheTable:
                 try:
                     if now - os.path.getmtime(p) > self.TTL_SECONDS:
                         os.unlink(p)
-                except OSError:
-                    pass
+                except OSError as e:
+                    # Another gc or a racing set() may own the file; a
+                    # leftover temp file is retried on the next gc.
+                    log.warning("page cache temp file %s not removed: %r", p, e)
         return removed

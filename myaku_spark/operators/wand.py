@@ -60,8 +60,12 @@ class BM25Scorer:
         )
 
     def block_upper(self, block_meta: dict) -> float:
-        # BM25 is increasing in tf and decreasing in dl → (max_tf, min_dl)
-        # gives a sound per-block upper bound.
+        # With idf > 0, BM25 is increasing in tf and decreasing in dl →
+        # (max_tf, min_dl) gives a sound per-block upper bound. idf < 0
+        # once df exceeds n_docs (df keeps counting tombstoned docs
+        # until compaction, n_docs does not); every score is then <= 0.
+        if self.idf < 0:
+            return 0.0
         return self.score(block_meta["max_tf"], block_meta["min_dl"])
 
 

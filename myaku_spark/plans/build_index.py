@@ -44,6 +44,7 @@ from myaku_spark.functions.html_extract import extract_text_udf
 from myaku_spark.functions.textfns import alnum_count_udf, text_hash_col
 from myaku_spark.functions.tokenize import ja_posting_rows
 from myaku_spark.operators.ids import assign_doc_ids
+from myaku_spark.operators.postings import term_stats
 from myaku_spark.operators.scoring import (
     article_quality_score_col,
     tf_score_mod_col,
@@ -213,10 +214,7 @@ def build_group(
         F.col("doc_score").cast("long").alias("doc_score"),
         F.col("warc_ts").alias("doc_ts"),
     )
-    tstats = postings.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("df"),
-        F.sum("tf").cast("long").alias("cf"),
-    )
+    tstats = term_stats(postings)
     # Materialize the shared cached inputs ONCE (dstats forces postings
     # too), then run the three independent writes from a small thread
     # pool (guide §2.6): each write's task tail back-fills cores freed

@@ -2,8 +2,8 @@
 clean segment set (the k-way sorted segment merge, SURVEY §4 custom
 work #3 — the reference delegates this to MongoDB upserts S6).
 
-- same-(term, block) segment rows merge across groups in one
-  applyInPandas kernel (newest run wins per doc — upsert-replace
+- a term's segment rows whose doc ranges overlap merge across groups in
+  one applyInPandas kernel (newest run wins per doc — upsert-replace
   semantics), decoding and re-encoding through the batch codec;
 - tombstoned postings are dropped during the merge re-encode;
 - the docs table is rewritten without tombstoned rows;
@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from myaku_spark.operators.codec import decode_blocks_batch, encode_blocks_batch
@@ -89,6 +89,34 @@ def _merge_with_tombstones(deleted):
     return merge
 
 
+def _merge_runs(segs: DataFrame) -> DataFrame:
+    """``segs`` with each ``block_id`` replaced by the ordinal, within
+    its term, of the run of blocks whose doc ranges overlap: those merge
+    into one block, and the rest stay apart. WAND needs a term's blocks
+    to hold disjoint doc ranges, and a stored block_id names a doc range
+    only for a range block: a tail block is block 0 in every group, so
+    merging by block_id would fold a delta group's tail block into the
+    base group's first range block."""
+    w = Window.partitionBy("term").orderBy("min_doc", "group", "block_id")
+    reach = F.max("max_doc").over(
+        w.rowsBetween(Window.unboundedPreceding, -1)
+    )
+    new_run = F.col("min_doc") > F.coalesce(reach, F.lit(-1))
+    runs = segs.select(
+        "group", "term", "block_id", "min_doc",
+        new_run.cast("long").alias("_new"),
+    ).select(
+        "group", "term", "block_id",
+        (F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0)) - 1)
+        .alias("_run"),
+    )
+    return (
+        segs.join(runs, ["group", "term", "block_id"])
+        .withColumn("block_id", F.col("_run"))
+        .drop("_run")
+    )
+
+
 def compact_index(
     spark: SparkSession, index_dir: str, gc_old: bool = True
 ) -> dict:
@@ -135,7 +163,7 @@ def compact_index(
         segs = segs.join(
             patches, ["group", "bucket", "term", "block_id"], "left"
         )
-    merged = segs.groupBy("term", "block_id").applyInPandas(
+    merged = _merge_runs(segs).groupBy("term", "block_id").applyInPandas(
         _merge_with_tombstones(deleted), SEGMENT_SCHEMA
     )
     seg_rel = f"segments_v{version}"

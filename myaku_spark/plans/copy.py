@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 COPY_GROUP_BASE = 20_000  # copy groups live above incremental deltas

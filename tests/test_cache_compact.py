@@ -1,75 +1,8 @@
-"""First-page cache materialization + refresh decision, compaction, and
-physical-plan pruning assertions."""
+"""Compaction, catalog time travel and physical-plan pruning
+assertions."""
 
 import pytest
 from pyspark.sql import functions as F
-
-from myaku_spark.operators.topk_cache import (
-    build_first_page,
-    refresh_first_page,
-    stale_terms,
-)
-
-
-@pytest.fixture(scope="module")
-def scored(spark):
-    rows = []
-    # term 'hot': 15 docs, scores 100..1500; term 'cold': 3 docs.
-    for d in range(15):
-        rows.append(("hot", d, (d + 1) * 100))
-    for d in range(3):
-        rows.append(("cold", d + 100, 50 + d))
-    return spark.createDataFrame(rows, ["term", "doc_id", "score"])
-
-
-def test_build_first_page(spark, scored):
-    page = build_first_page(scored, k=10)
-    rows = [r for r in page.collect() if r.term == "hot"]
-    assert len(rows) == 10
-    assert all(r.total_results == 15 for r in rows)
-    best = min(rows, key=lambda r: r.rank)
-    assert best.doc_id == 14 and best.score == 1500
-    # floor of the page = rank 10 → score 600
-    floor = max(rows, key=lambda r: r.rank)
-    assert floor.score == 600
-
-
-def test_stale_terms_decision(spark, scored):
-    cached = build_first_page(scored, k=10)
-    # Delta 1: a posting below the hot page floor → NOT stale.
-    low = spark.createDataFrame([("hot", 999, 10)], ["term", "doc_id", "score"])
-    assert stale_terms(cached, low, k=10).count() == 0
-    # Delta 2: outranks the floor → stale.
-    high = spark.createDataFrame(
-        [("hot", 999, 700)], ["term", "doc_id", "score"]
-    )
-    assert [r.term for r in stale_terms(cached, high, k=10).collect()] == ["hot"]
-    # Delta 3: 'cold' page is not full → any posting marks it stale.
-    coldd = spark.createDataFrame(
-        [("cold", 999, 1)], ["term", "doc_id", "score"]
-    )
-    assert [r.term for r in stale_terms(cached, coldd, k=10).collect()] == [
-        "cold"
-    ]
-    # Delta 4: unseen term → stale (needs caching).
-    new = spark.createDataFrame([("new", 1, 5)], ["term", "doc_id", "score"])
-    assert [r.term for r in stale_terms(cached, new, k=10).collect()] == ["new"]
-
-
-def test_refresh_first_page(spark, scored):
-    cached = build_first_page(scored, k=10)
-    delta = spark.createDataFrame(
-        [("hot", 999, 700)], ["term", "doc_id", "score"]
-    )
-    all_postings = scored.unionByName(delta)
-    refreshed = refresh_first_page(cached, all_postings, delta, k=10)
-    hot = sorted(
-        (r.rank, r.doc_id) for r in refreshed.collect() if r.term == "hot"
-    )
-    assert (9, 999) in hot  # the new doc entered at score 700
-    assert len(hot) == 10
-    cold = [r for r in refreshed.collect() if r.term == "cold"]
-    assert len(cold) == 3  # untouched term kept verbatim
 
 
 def test_compact_merges_and_applies_tombstones(spark, tmp_path):

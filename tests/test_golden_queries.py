@@ -17,7 +17,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from myaku_spark.functions.tokenize import JA_FUNCTION_WORDS
+from myaku_spark.functions.ja_lexicon import JA_FUNCTION_WORDS
 from myaku_spark.operators.search import IndexSearcher
 from myaku_spark.plans.build_index import build_index
 from myaku_spark.sources.pages import golden_pages_df

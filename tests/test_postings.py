@@ -1,5 +1,5 @@
 """Posting build invariants: tf = positions length, positions sorted,
-salted == unsalted aggregation, term stats consistency, scoring parity."""
+term stats consistency, scoring parity."""
 
 from pyspark.sql import functions as F
 
@@ -8,7 +8,6 @@ from myaku_spark.operators.postings import (
     build_postings,
     corpus_stats,
     doc_stats,
-    term_posting_arrays,
     term_stats,
 )
 from myaku_spark.operators.scoring import (
@@ -42,20 +41,6 @@ def test_positions_sorted_and_in_bounds(spark, sf_dir):
         )
     ).count()
     assert bad == 0
-
-
-def test_salted_equals_unsalted(spark, sf_dir):
-    p = build_postings(_toks(spark, sf_dir))
-    salted = term_posting_arrays(p, n_salts=8)
-    unsalted = term_posting_arrays(p, n_salts=1)
-    diff = (
-        salted.alias("a")
-        .join(unsalted.alias("b"), "term")
-        .filter(F.col("a.postings") != F.col("b.postings"))
-        .count()
-    )
-    assert diff == 0
-    assert salted.count() == unsalted.count()
 
 
 def test_term_stats_consistency(spark, sf_dir):

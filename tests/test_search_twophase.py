@@ -312,7 +312,8 @@ def test_page_cache_corrupt_slot_is_miss_and_gc_reclaims(tmp_path, caplog):
     assert "miss" in msgs[0] and "reclaim" in msgs[1], msgs
 
 
-def test_page_cache_gc_unlinks_stale_tmp_files(tmp_path):
+def test_page_cache_gc_unlinks_stale_tmp_files(tmp_path, monkeypatch, caplog):
+    import logging
     import os
 
     from myaku_spark.operators.topk_cache import PageCacheTable
@@ -322,13 +323,28 @@ def test_page_cache_gc_unlinks_stale_tmp_files(tmp_path):
     c.set("u1", 1, ["猫"], "and", 2, [(9.0, 7)])
     slot_dir = c._slot_dir("u1", 1)
     orphan = os.path.join(slot_dir, ".tmp-dead-process")
-    with open(orphan, "wb") as f:
-        f.write(b"partial write")
+    stuck = os.path.join(slot_dir, ".tmp-stuck-process")
     old = 1.0
-    os.utime(orphan, (old, old))
+    for path in (orphan, stuck):
+        with open(path, "wb") as f:
+            f.write(b"partial write")
+        os.utime(path, (old, old))
     # Slot itself is fresh (expiry = clock+TTL) but must refresh the
     # clock so "now - mtime > TTL" holds for the orphan.
     t[0] = PageCacheTable.TTL_SECONDS + 10.0
     c.set("u1", 1, ["猫"], "and", 2, [(9.0, 7)])  # re-arm expiry
-    assert c.gc() == 0  # live slot kept...
+    real_unlink = os.unlink
+
+    def unlink(path, *a, **k):
+        if path == stuck:
+            raise PermissionError(13, "Permission denied", path)
+        return real_unlink(path, *a, **k)
+
+    monkeypatch.setattr(os, "unlink", unlink)
+    with caplog.at_level(logging.WARNING, "myaku_spark.operators.topk_cache"):
+        assert c.gc() == 0  # live slot kept...
     assert not os.path.exists(orphan)  # ...orphan temp reclaimed
+    assert os.path.exists(stuck)
+    msgs = [r.getMessage() for r in caplog.records]
+    assert len(msgs) == 1, msgs
+    assert stuck in msgs[0] and "PermissionError" in msgs[0], msgs

@@ -85,9 +85,24 @@ def test_every_package_definition_is_referenced():
             ):
                 yield node.value
 
+    def unused_imports(path, tree):
+        # Every name a package module imports (at any depth) must be
+        # read as code in that module: a Name, which is also the root
+        # of every Attribute chain. Strings and comments do not count,
+        # so a "re-export" needs a real reader.
+        bound = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                bound |= {a.asname or a.name.split(".")[0] for a in node.names}
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                bound |= {a.asname or a.name for a in node.names}
+        read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        return [f"{os.path.relpath(path, REPO_DIR)}: {n}" for n in sorted(bound - read)]
+
     pkg = os.path.join(REPO_DIR, "myaku_spark") + os.sep
     used = Counter()
     defs = []
+    unread = []
     for root, dirs, files in os.walk(REPO_DIR):
         dirs[:] = [d for d in dirs if not d.startswith((".", "__"))]
         for f in files:
@@ -99,12 +114,14 @@ def test_every_package_definition_is_referenced():
             used.update(refs(tree))
             if path.startswith(pkg):
                 defs += [(n, node) for node in tree.body for n in names(node)]
+                unread += unused_imports(path, tree)
     assert len(defs) > 300  # the scan found the package
     own = Counter()
     for name, node in defs:
         own[name] += sum(1 for r in refs(node) if r == name)
     dead = sorted({name for name, _ in defs if used[name] <= own[name]})
     assert dead == [], f"{len(dead)} of {len(defs)} definitions unreferenced"
+    assert unread == [], f"imported but never read: {unread}"
 
 
 def test_local_session_lists_segments_on_the_driver(
