@@ -62,11 +62,7 @@ BENCH_QUERIES = [
     "search_and",
     "rank_key_topk",
     "dedup_exact",
-    "minhash_lsh_pairs",
-    "boilerplate",
     "phrase_search",
-    "line_dedup",
-    "pagerank_topk",
 ]
 
 
@@ -156,34 +152,6 @@ def main() -> None:
         t0 = time.time()
         force(QUERIES[name](spark, sf_dir))
         timings[name] = round(time.time() - t0, 3)
-
-    # ngram-Jaccard verify on a boilerplate-HEAVY corpus: every doc
-    # shares a 25-token footer, so co-shingle pairs are quadratic in the
-    # corpus without the candidate prune. The timing measures the pruned
-    # plan (semi-joins below the self-join) verifying 50 seeded twin
-    # pairs against 1550 footer-sharing docs.
-    from myaku_spark.operators.dedup import ngram_jaccard, shingles
-
-    footer = " ".join(f"navfooter{i}" for i in range(25))
-    base = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") < 1500)
-        .withColumn("text", F.concat(F.col("text"), F.lit(" " + footer)))
-    )
-    twins = base.filter(F.col("doc_id") < 50).withColumn(
-        "doc_id", F.col("doc_id") + 100000
-    )
-    cands = spark.range(50).select(
-        F.col("id").alias("doc_a"), (F.col("id") + 100000).alias("doc_b")
-    )
-    t0 = time.time()
-    force(
-        ngram_jaccard(
-            shingles(base.unionByName(twins), k=3), candidates=cands
-        ).filter(F.col("jaccard") >= 0.9)
-    )
-    timings["ngram_jaccard_boiler"] = round(time.time() - t0, 3)
 
     # Headline: the real Japanese index build (extract UDF → tokenize UDF
     # → postings → scored → compressed segments → checkpoints) over a

@@ -31,14 +31,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import BENCH_QUERIES  # noqa: E402
 from myaku_spark.driver_queries import QUERIES, q_bm25_topk  # noqa: E402
 from myaku_spark.session import get_spark  # noqa: E402
-
-BENCH_QUERIES = [
-    "postings_build", "term_stats", "bm25_topk", "search_and",
-    "rank_key_topk", "dedup_exact", "minhash_lsh_pairs", "boilerplate",
-    "phrase_search", "line_dedup", "pagerank_topk",
-]
 
 
 def noop_force(df) -> None:

@@ -1,6 +1,6 @@
 """Driver-contract queries: the extraction, tokenizing, indexing, ranking,
-search, near-duplicate, link-graph and media operators, each paired with
-an ANSI-SQL DuckDB oracle over the same parquet tables.
+search, first-writer dedup and media operators, each paired with an
+ANSI-SQL DuckDB oracle over the same parquet tables.
 
 Each query is a (spark, sf_dir) -> DataFrame callable; ORACLE[name] is the
 equivalent DuckDB SQL, or ORACLE_BUILDERS[name]() builds it for the oracles
@@ -34,11 +34,6 @@ from pyspark.sql import functions as F
 from myaku_spark.functions.tokenize import explode_whitespace_tokens
 from myaku_spark.operators import postings as post_ops
 from myaku_spark.operators import scoring
-from myaku_spark.operators.dedup import (
-    connected_components,
-    lsh_candidate_pairs,
-    simhash_near_dups,
-)
 from myaku_spark.session import local_frame
 
 # Fixed query terms drawn from the synthetic vocabulary.
@@ -46,16 +41,9 @@ Q_AND_TERMS = ["spark", "join"]
 Q_TOPK_TERMS = ["spark", "join", "filter", "window", "query"]
 FIXED_NOW = "2026-08-01 00:00:00"  # parameterized 'utcnow' (A6 recency)
 
-# MinHash parameters (shared literals on both sides).
-MH_P = 2147483647
-MH_HASHES = [(1_103_515_245 + 12_345 * i, 2_531_011 + 97 * i) for i in range(8)]
-MH_BANDS = 4  # 2 hashes per band
-
-# SimHash gate parameters: 16 bit-hash functions, 4 pigeonhole bands.
-SH_BITS = 16
-SH_HASHES = [(48_271 + 1_009 * i, 16_807 + 31 * i) for i in range(SH_BITS)]
-SH_MAX_HAMMING = 3
-SH_SAMPLE = 300
+# Modulus of the ja_index_postings checksum (a prime below 2^31, so
+# each tid * tf term stays inside a long).
+CHECKSUM_P = 2147483647
 
 
 def term_id_col(c):
@@ -63,12 +51,9 @@ def term_id_col(c):
 
     A pure hash — NO global sort or single-partition window — so the
     dictionary id assignment is the same shape at any scale (this
-    replaced the round-1 Window.orderBy('term') gate device). DuckDB
-    twin: _SQL_TID."""
+    replaced the round-1 Window.orderBy('term') gate device). Python
+    twin: term_id_py."""
     return F.conv(F.substring(F.md5(c), 1, 14), 16, 10).cast("long")
-
-
-_SQL_TID = "CAST('0x' || substr(md5(term), 1, 14) AS BIGINT)"
 
 
 def term_id_py(term: str) -> int:
@@ -424,125 +409,6 @@ def q_hydrate_topk(spark, sf_dir):
     )
 
 
-def q_minhash_signature(spark, sf_dir):
-    """Near-dup dedup: MinHash signatures over token sets (LSH stage 1).
-
-    Term ids are md5-hash-based (term_id_col — no dictionary join, no
-    global window; the round-1 Window.orderBy gate device is gone);
-    hash_i(t) = (a_i * tid + b_i) mod p; signature = per-doc min.
-
-    No (doc_id, term) distinct before the aggregation (r7): min over a
-    multiset equals min over its set, so deduping first only cost a
-    full exchange of every token pair AND blocked map-side partial
-    aggregation — without it each partition pre-reduces to 8 mins per
-    doc before the one doc-keyed shuffle. Signatures are identical.
-    """
-    toks = _tokens(spark, sf_dir).select("doc_id", "term")
-    t = toks.withColumn("tid", term_id_col(F.col("term")) % MH_P)
-    aggs = [
-        F.min((F.lit(a).cast("long") * F.col("tid") + F.lit(b)) % MH_P).alias(f"mh{i}")
-        for i, (a, b) in enumerate(MH_HASHES)
-    ]
-    return t.groupBy("doc_id").agg(*aggs)
-
-
-MH_MAX_BUCKET = 50  # degenerate-bucket cap (dedup.lsh_candidate_pairs)
-
-
-def q_minhash_lsh_pairs(spark, sf_dir):
-    """Near-dup dedup stage 2: LSH band-bucket join → candidate pairs,
-    through the production operator (dedup.lsh_candidate_pairs).
-
-    Buckets larger than MH_MAX_BUCKET are dropped before the self-join,
-    which is what keeps the band join sub-quadratic at 100 TB. The
-    oracle replays the cap."""
-    return lsh_candidate_pairs(
-        q_minhash_signature(spark, sf_dir),
-        n_hashes=len(MH_HASHES),
-        n_bands=MH_BANDS,
-        max_bucket=MH_MAX_BUCKET,
-    )
-
-
-def q_dup_clusters(spark, sf_dir):
-    """Near-dup dedup stage 3: candidate pairs → duplicate CLUSTERS via
-    distributed connected components (alternating large-star/small-star,
-    dedup.connected_components — per-round hash shuffles, no driver
-    graph). cluster_id = min doc_id of the component; cluster_size gives
-    the retention decision (keep cluster_id, drop size-1 ... n-1 rest).
-    Oracle: DuckDB recursive min-label propagation over the same pairs."""
-    cc = connected_components(q_minhash_lsh_pairs(spark, sf_dir))
-    sizes = cc.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).cast("long").alias("cluster_size")
-    )
-    return cc.join(sizes, "cluster_id").select(
-        "doc_id", "cluster_id", "cluster_size"
-    )
-
-
-def q_ngram_jaccard_pairs(spark, sf_dir):
-    """Near-dup dedup: exact n-gram (shingle) Jaccard over a doc sample
-    SEEDED with near-duplicate twins (doc_id+100000 = the doc with its
-    first token dropped), so the gate compares non-empty pair sets —
-    the round-1 version was vacuously green on 0 rows."""
-    docs = (
-        _docs(spark, sf_dir)
-        .filter(F.col("doc_id") < 50)
-        .select("doc_id", "text")
-    )
-    mut = docs.select(
-        (F.col("doc_id") + 100_000).alias("doc_id"),
-        F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
-    )
-    toks = explode_whitespace_tokens(docs.unionByName(mut))
-    w = Window.partitionBy("doc_id").orderBy("start")
-    sh = (
-        toks.withColumn("t2", F.lead("term", 1).over(w))
-        .withColumn("t3", F.lead("term", 2).over(w))
-        .filter(F.col("t3").isNotNull())
-        .select(
-            "doc_id",
-            F.concat_ws(" ", "term", "t2", "t3").alias("shingle"),
-        )
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        sh.alias("a")
-        .join(
-            sh.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .withColumnRenamed("sz", "sz_a")
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                "sz", "sz_b"
-            ),
-            "doc_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= 0.2)
-    )
-    return out.select(
-        "doc_a", "doc_b", F.col("inter").cast("long").alias("inter"), "jaccard"
-    )
-
-
 def q_incremental_merge(spark, sf_dir):
     """S6/J4 semantics: first-writer-wins upsert of docs by text hash.
 
@@ -564,68 +430,6 @@ def q_incremental_merge(spark, sf_dir):
     )
 
 
-def q_simhash_pairs(spark, sf_dir):
-    """SimHash near-dup pairs, DuckDB-oracled.
-
-    16-bit arithmetic SimHash (bit j = sign of Σ tf·(±1) where the sign
-    is the parity of a linear hash of the md5 term id) — shared-literal
-    arithmetic the oracle replays, in place of the production 64-bit
-    xxhash64 signature (dedup.simhash). The 4-bit pigeonhole band join
-    and the exact hamming ≤ 3 verify are the production operator
-    (dedup.simhash_near_dups). Near-dup power comes from mutated twins
-    (doc+100000 = first token dropped)."""
-    docs = (
-        _docs(spark, sf_dir)
-        .filter(F.col("doc_id") < SH_SAMPLE)
-        .select("doc_id", "text")
-    )
-    mut = docs.filter(F.col("doc_id") < 20).select(
-        (F.col("doc_id") + 100_000).alias("doc_id"),
-        F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
-    )
-    toks = explode_whitespace_tokens(docs.unionByName(mut))
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    tid = term_id_col(F.col("term")) % MH_P
-    aggs = []
-    for j, (a, b) in enumerate(SH_HASHES):
-        sign = F.when(
-            ((tid * F.lit(a).cast("long") + F.lit(b)) % MH_P) % 2 == 1, 1
-        ).otherwise(-1)
-        aggs.append(F.sum(F.col("tf") * sign).alias(f"v{j}"))
-    v = tf.groupBy("doc_id").agg(*aggs)
-    sh = F.lit(0).cast("long")
-    for j in range(SH_BITS):
-        sh = sh + F.when(F.col(f"v{j}") > 0, F.lit(1 << j).cast("long")).otherwise(0)
-    sig = v.select("doc_id", sh.alias("simhash"))
-    return simhash_near_dups(
-        sig, max_hamming=SH_MAX_HAMMING, n_bands=4, bits=SH_BITS
-    )
-
-
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination (n-gram test-set leak check): corpus
-    docs sharing ≥5 distinct 3-token shingles with the benchmark set
-    (docs with doc_id % 41 == 0). Leak twins (doc_id+300000 = a
-    benchmark doc minus its first token) are seeded into the corpus so
-    detection is non-vacuous. Runs the PRODUCTION operator
-    (dedup.decontaminate — shingle equi-join, never all-pairs)."""
-    from myaku_spark.operators.dedup import decontaminate
-
-    docs = (
-        _docs(spark, sf_dir)
-        .filter(F.col("doc_id") < 200)
-        .select("doc_id", "text")
-    )
-    benchmark = docs.filter(F.col("doc_id") % 41 == 0)
-    leaks = benchmark.filter(F.col("doc_id") < 100).select(
-        (F.col("doc_id") + 300_000).alias("doc_id"),
-        F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
-    )
-    corpus = docs.filter(F.col("doc_id") % 41 != 0).unionByName(leaks)
-    out = decontaminate(corpus, benchmark, k=3)
-    return out.filter(F.col("n_shared") >= 5).select("doc_id", "n_shared")
-
-
 def q_ja_index_postings(spark, sf_dir):
     """Japanese pipeline over deterministic synthetic pages: extract UDF →
     ja tokenize UDF → posting build → per-url rollup with an
@@ -643,11 +447,11 @@ def q_ja_index_postings(spark, sf_dir):
     )
     toks = explode_ja_tokens(docs, "text", "doc_id")
     p = post_ops.build_postings(toks)
-    tid_p = term_id_col(F.col("term")) % MH_P
+    tid_p = term_id_col(F.col("term")) % CHECKSUM_P
     rolled = p.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_postings"),
         F.sum("tf").cast("long").alias("sum_tf"),
-        (F.sum((tid_p * F.col("tf")) % MH_P) % MH_P)
+        (F.sum((tid_p * F.col("tf")) % CHECKSUM_P) % CHECKSUM_P)
         .cast("long")
         .alias("checksum"),
     )
@@ -1126,26 +930,6 @@ def q_pagination_page2(spark, sf_dir):
     )
 
 
-BP_MIN_DOCS = 5  # shingle doc-frequency at which it counts as boilerplate
-BP_MAX_RATIO = 0.1  # keep a doc iff its boilerplate-shingle ratio is below
-
-
-def q_boilerplate(spark, sf_dir):
-    """Cross-doc boilerplate detection: 3-token shingles appearing in
-    >= BP_MIN_DOCS distinct docs are boilerplate; per-doc ratio +
-    keep flag (CCNet paragraph-hash idea at n-gram granularity). The
-    0.1 keep threshold sits between the corpus p90 (0.065) and max
-    (0.27) so both flag branches are exercised."""
-    from myaku_spark.operators.dedup import boilerplate_ngrams
-
-    return boilerplate_ngrams(
-        _docs(spark, sf_dir),
-        k=3,
-        min_docs=BP_MIN_DOCS,
-        max_ratio=BP_MAX_RATIO,
-    )
-
-
 # Phrase gate: 5 occurrences in 5 docs, at sf0.001 and at sf0.01.
 PHRASE = ["small", "query", "line"]
 PHRASE_K = 10
@@ -1245,139 +1029,7 @@ def q_prefix_terms(spark, sf_dir):
     return prefix_term_lookup(terms, queries, k=PREFIX_K)
 
 
-SUBSTR_L = 80  # min duplicated-substring length (chars) for the gate
-
-
-def q_substring_spans(spark, sf_dir):
-    """Exact repeated-substring spans (Lee et al. ACL'22 exact-substring
-    dedup, L-gram formulation): maximal merged [p, p+L) intervals of
-    positions whose L-gram occurs >= 2 times anywhere in the corpus.
-    The oracle replays the same L-gram/merge construction relationally
-    in DuckDB, so the gate pins both the coverage rule and the
-    gaps-and-islands interval merge."""
-    from myaku_spark.operators.dedup import repeated_substring_spans
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    return repeated_substring_spans(docs, min_len=SUBSTR_L)
-
-
-LD_MIN_DOCS = 5   # line-dedup gate: distinct docs a line must appear in
-LD_MIN_LEN = 10   # line-dedup gate: minimum line length considered
-LD_FOOTER = "SPONSORED CONTENT - SUBSCRIBE TO OUR NEWSLETTER TODAY"
-
-
-def q_line_dedup(spark, sf_dir):
-    """Line-level corpus dedup gate (RefinedWeb/CCNet line filter): a
-    deterministic boilerplate footer is appended to docs 0-49 on BOTH
-    engines, so the cross-document line-frequency count, the excision,
-    and the in-order text rebuild are all value-checked; natural
-    cross-doc duplicate lines (if any) dedup identically too."""
-    from myaku_spark.operators.dedup import strip_common_lines
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") < 50,
-            F.concat(F.col("text"), F.lit("\n" + LD_FOOTER)),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return strip_common_lines(
-        docs, min_docs=LD_MIN_DOCS, min_len=LD_MIN_LEN
-    )
-
-
-PR_OUTLINKS = 5   # pagerank gate: candidate outlinks per doc
-PR_ITERS = 3      # pagerank gate: unrolled power iterations
-PR_K = 20         # pagerank gate: top-k by rank
-
-
-def q_pagerank_topk(spark, sf_dir):
-    """Link-authority ranking (damped PageRank, the crawl-frontier
-    prioritization signal): a deterministic synthetic link graph is
-    derived from doc_ids on BOTH engines (doc d links to
-    (31d + 7 + 17j) mod N for j in 0..4, self-links dropped), then 3
-    power iterations run — as a persisted DataFrame loop here, as
-    unrolled CTEs in the oracle. Ranks are normalized by N and rounded
-    to 6 dp BEFORE the top-k order so the boundary is deterministic
-    across engines."""
-    from myaku_spark.operators.graph import pagerank
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-    n = docs.count()
-    edges = (
-        docs.select(
-            F.col("doc_id").alias("src"),
-            F.explode(
-                F.sequence(F.lit(0), F.lit(PR_OUTLINKS - 1))
-            ).alias("j"),
-        )
-        .select(
-            "src",
-            ((F.col("src") * 31 + 7 + 17 * F.col("j")) % n).alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-    )
-    pr = pagerank(
-        edges,
-        nodes=docs.select(F.col("doc_id").alias("node")),
-        n_iter=PR_ITERS,
-    )
-    return (
-        pr.select("node", F.round(F.col("rank") * n, 6).alias("rank_n"))
-        .orderBy(F.desc("rank_n"), "node")
-        .limit(PR_K)
-    )
-
-
-PD_MIN_DOCS = 3    # paragraph-dedup gate: doc-frequency floor
-PD_MIN_LEN = 20    # paragraph-dedup gate: min normalized-key length
-PD_BOILER_A = "Sponsored Content -- visit Example.com (2024)!"
-PD_BOILER_B = "sponsored content visit EXAMPLE.COM 999"
-
-
-def q_paragraph_dedup(spark, sf_dir):
-    """CCNet paragraph-level dedup gate (Wenzek et al. 2020): two
-    case/digit/punctuation VARIANTS of one boilerplate paragraph are
-    seeded across the corpus (doc_id % 3 picks the variant) plus a
-    per-doc unique tail whose normalized key is short enough to be
-    exempt — the gate therefore pins the normalization collision, the
-    doc-frequency count, the min-len exemption, and the in-order
-    rebuild, all replayed relationally."""
-    from myaku_spark.operators.dedup import strip_common_paragraphs
-
-    nl2 = "\n\n"
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 3 == 0, F.lit(nl2 + PD_BOILER_A)
-            )
-            .when(F.col("doc_id") % 3 == 1, F.lit(nl2 + PD_BOILER_B))
-            .otherwise(F.lit("")),
-            F.when(
-                F.col("doc_id") % 5 == 0,
-                F.concat(
-                    F.lit(nl2 + "keep "),
-                    F.translate(
-                        F.col("doc_id").cast("string"),
-                        "0123456789",
-                        "abcdefghij",
-                    ),
-                ),
-            ).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    return strip_common_paragraphs(
-        docs, min_docs=PD_MIN_DOCS, min_len=PD_MIN_LEN
-    )
-
-
 QUERIES = {
-    "pagerank_topk": q_pagerank_topk,
-    "boilerplate": q_boilerplate,
     "phrase_search": q_phrase_search,
     "proximity_search": q_proximity_search,
     "ja_index_postings": q_ja_index_postings,
@@ -1388,8 +1040,6 @@ QUERIES = {
     "fli_field_families": q_fli_field_families,
     "segment_search_e2e": q_segment_search_e2e,
     "fuzzy_terms": q_fuzzy_terms,
-    "substring_spans": q_substring_spans,
-    "line_dedup": q_line_dedup,
     "prefix_terms": q_prefix_terms,
     "blog_rollup": q_blog_rollup,
     "pagination_page2": q_pagination_page2,
@@ -1408,64 +1058,11 @@ QUERIES = {
     "dedup_exact": q_dedup_exact,
     "anti_join_skip": q_anti_join_skip,
     "hydrate_topk": q_hydrate_topk,
-    "minhash_signature": q_minhash_signature,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "dup_clusters": q_dup_clusters,
-    "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
     "incremental_merge": q_incremental_merge,
-    "simhash_pairs": q_simhash_pairs,
-    "decontaminate": q_decontaminate,
-    "paragraph_dedup": q_paragraph_dedup,
 }
 
 
 # --- DuckDB oracles ---------------------------------------------------------
-
-_SQL_MH = f"""
-WITH {_SQL_TOKS},
-dterms AS (SELECT DISTINCT doc_id, term FROM toks),
-tt AS (SELECT doc_id, ({_SQL_TID} % {MH_P}) AS tid FROM dterms),
-sig AS (
-  SELECT doc_id,
-{",".join(f"    CAST(min(({a} * tid + {b}) % {MH_P}) AS BIGINT) AS mh{i}" for i, (a, b) in enumerate(MH_HASHES))}
-  FROM tt GROUP BY doc_id
-)
-"""
-
-# Shared near-dup sample + mutated-twin CTE (first token dropped).
-def _sql_mutated(limit: int, mut_limit: int | None = None) -> str:
-    m = mut_limit if mut_limit is not None else limit
-    return f"""
-combined AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < {limit}
-  UNION ALL
-  SELECT doc_id + 100000 AS doc_id,
-         substr(text, strpos(text, ' ') + 1) AS text
-  FROM documents WHERE doc_id < {m}
-)
-"""
-
-
-_SQL_SH = f"""
-{_sql_mutated(300, 20)},
-{_SQL_TOKS.replace("FROM documents", "FROM combined")},
-tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-       FROM toks GROUP BY doc_id, term),
-tt AS (SELECT doc_id, tf, ({_SQL_TID} % {MH_P}) AS tid FROM tf),
-v AS (
-  SELECT doc_id,
-{",".join(f"    sum(tf * (CASE WHEN ((tid * {a} + {b}) % {MH_P}) % 2 = 1 THEN 1 ELSE -1 END)) AS v{j}" for j, (a, b) in enumerate(SH_HASHES))}
-  FROM tt GROUP BY doc_id
-),
-sig AS (
-  SELECT doc_id,
-         CAST({" + ".join(f"(CASE WHEN v{j} > 0 THEN {1 << j} ELSE 0 END)" for j in range(SH_BITS))} AS BIGINT) AS simhash
-  FROM v
-),
-bands AS (
-{" UNION ALL ".join(f"  SELECT doc_id, simhash, {bnd} AS band, (simhash >> {bnd * 4}) % 16 AS bval FROM sig" for bnd in range(4))}
-)
-"""
 
 
 def _values_sql(rows: list[tuple], cols: list[str]) -> str:
@@ -1517,8 +1114,11 @@ def _ja_postings_values() -> str:
         n_postings = len(tf)
         sum_tf = sum(len(v) for v in tf.values())
         checksum = (
-            sum((term_id_py(term) % MH_P) * len(v) % MH_P for term, v in tf.items())
-            % MH_P
+            sum(
+                (term_id_py(term) % CHECKSUM_P) * len(v) % CHECKSUM_P
+                for term, v in tf.items()
+            )
+            % CHECKSUM_P
         )
         rows.append((p["url"], n_postings, sum_tf, checksum))
     return _values_sql(rows, ["url", "n_postings", "sum_tf", "checksum"])
@@ -1549,18 +1149,6 @@ def _media_features_values() -> str:
         rows.append((i, kind, nb, 64))
     return _values_sql(rows, ["media_id", "kind", "n_bytes", "dim"])
 
-
-_mh_per_band = len(MH_HASHES) // MH_BANDS
-_band_selects = []
-for _bnd in range(MH_BANDS):
-    _cols = [f"mh{_bnd * _mh_per_band + j}" for j in range(_mh_per_band)]
-    _expr = "CAST(0 AS BIGINT)"
-    for _c in _cols:
-        _expr = f"(({_expr}) * 1000003 + {_c}) % {MH_P}"
-    _band_selects.append(
-        f"SELECT doc_id, {_bnd} AS band, {_expr} AS bucket FROM sig"
-    )
-_SQL_BANDS = " UNION ALL ".join(_band_selects)
 
 ORACLE = {
     "token_positions": f"WITH {_SQL_TOKS} SELECT doc_id, term, start, len FROM toks",
@@ -1593,33 +1181,6 @@ ranked AS (
 SELECT CAST(rank AS INT) AS rank, r.doc_id, d.dl, round(score, 3) AS score_r
 FROM ranked r JOIN dstats d USING (doc_id)
 WHERE rank > {E2E_K * (E2E_PAGE - 1)} AND rank <= {E2E_K * E2E_PAGE}
-""",
-    "substring_spans": f"""
-WITH g AS (
-  SELECT doc_id, CAST(p AS INT) AS pos,
-         substr(text, CAST(p AS INT) + 1, {SUBSTR_L}) AS gram
-  FROM documents,
-       LATERAL (SELECT unnest(range(0, length(text) - {SUBSTR_L} + 1)) AS p)
-  WHERE length(text) >= {SUBSTR_L}
-),
-rep AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-rp AS (SELECT doc_id, pos FROM g WHERE gram IN (SELECT gram FROM rep)),
-m AS (
-  SELECT doc_id, pos,
-    CASE WHEN pos > coalesce(max(pos + {SUBSTR_L}) OVER (
-        PARTITION BY doc_id ORDER BY pos
-        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-      THEN 1 ELSE 0 END AS new_span
-  FROM rp
-),
-i AS (
-  SELECT doc_id, pos,
-         sum(new_span) OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-  FROM m
-)
-SELECT doc_id, CAST(min(pos) AS INT) AS span_start,
-       CAST(max(pos) + {SUBSTR_L} AS INT) AS span_end
-FROM i GROUP BY doc_id, grp
 """,
     "fuzzy_terms": f"""
 WITH {_SQL_POSTINGS},
@@ -1727,47 +1288,6 @@ ranked AS (
 SELECT r.term, r.doc_id, CAST(r.rank AS INT) AS rank, d.lang, d.source, d.n_chars
 FROM ranked r JOIN documents d USING (doc_id) WHERE r.rank <= 10
 """,
-    "minhash_signature": f"{_SQL_MH} SELECT * FROM sig",
-    "minhash_lsh_pairs": f"""
-{_SQL_MH},
-bands0 AS ({_SQL_BANDS}),
-keep AS (
-  SELECT band, bucket FROM bands0
-  GROUP BY band, bucket HAVING count(*) <= {MH_MAX_BUCKET}
-),
-bands AS (
-  SELECT b.* FROM bands0 b JOIN keep USING (band, bucket)
-)
-SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-FROM bands l JOIN bands r
-  ON l.band = r.band AND l.bucket = r.bucket AND l.doc_id < r.doc_id
-""",
-    "ngram_jaccard_pairs": f"""
-WITH {_sql_mutated(50)},
-{_SQL_TOKS.replace("FROM documents", "FROM combined")},
-st AS (SELECT * FROM toks),
-sh0 AS (
-  SELECT doc_id, term,
-         lead(term, 1) OVER (PARTITION BY doc_id ORDER BY start) AS t2,
-         lead(term, 2) OVER (PARTITION BY doc_id ORDER BY start) AS t3
-  FROM st
-),
-sh AS (
-  SELECT DISTINCT doc_id, term || ' ' || t2 || ' ' || t3 AS shingle
-  FROM sh0 WHERE t3 IS NOT NULL
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT doc_a, doc_b, CAST(inter AS BIGINT) AS inter,
-       round(inter / (sa.sz + sb.sz - inter), 4) AS jaccard
-FROM inter JOIN sizes sa ON sa.doc_id = doc_a
-           JOIN sizes sb ON sb.doc_id = doc_b
-WHERE round(inter / (sa.sz + sb.sz - inter), 4) >= 0.2
-""",
     "pagination_page2": f"""
 WITH {_SQL_POSTINGS},
 scored AS (
@@ -1796,14 +1316,6 @@ r AS (SELECT h, doc_id, row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn
       FROM h)
 SELECT h, doc_id AS keeper_doc_id FROM r WHERE rn = 1
 """,
-    "simhash_pairs": f"""
-WITH {_SQL_SH}
-SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-       CAST(bit_count(xor(l.simhash, r.simhash)) AS INT) AS hamming
-FROM bands l JOIN bands r
-  ON l.band = r.band AND l.bval = r.bval AND l.doc_id < r.doc_id
-WHERE bit_count(xor(l.simhash, r.simhash)) <= {SH_MAX_HAMMING}
-""",
 }
 
 # Oracles computed from the pure-Python twins (synth_page, the tokenizer,
@@ -1819,113 +1331,6 @@ ORACLE_BUILDERS = {
     "ja_index_postings": _ja_postings_values,
     "media_features": _media_features_values,
 }
-
-ORACLE["decontaminate"] = """
-WITH docs0 AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 200
-),
-bench AS (SELECT * FROM docs0 WHERE doc_id % 41 = 0),
-leaks AS (
-  SELECT doc_id + 300000 AS doc_id,
-         substr(text, instr(text, ' ') + 1) AS text
-  FROM bench WHERE doc_id < 100
-),
-corpus AS (
-  SELECT * FROM docs0 WHERE doc_id % 41 <> 0
-  UNION ALL SELECT * FROM leaks
-),
-ctoks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term,
-         generate_subscripts(string_split(text, ' '), 1) AS ord
-  FROM corpus
-),
-csh0 AS (
-  SELECT doc_id, term,
-         lead(term, 1) OVER (PARTITION BY doc_id ORDER BY ord) AS t2,
-         lead(term, 2) OVER (PARTITION BY doc_id ORDER BY ord) AS t3
-  FROM ctoks
-),
-csh AS (
-  SELECT DISTINCT doc_id, term || ' ' || t2 || ' ' || t3 AS shingle
-  FROM csh0 WHERE t3 IS NOT NULL
-),
-btoks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term,
-         generate_subscripts(string_split(text, ' '), 1) AS ord
-  FROM bench
-),
-bsh0 AS (
-  SELECT doc_id, term,
-         lead(term, 1) OVER (PARTITION BY doc_id ORDER BY ord) AS t2,
-         lead(term, 2) OVER (PARTITION BY doc_id ORDER BY ord) AS t3
-  FROM btoks
-),
-bsh AS (
-  SELECT DISTINCT term || ' ' || t2 || ' ' || t3 AS shingle
-  FROM bsh0 WHERE t3 IS NOT NULL
-),
-shared AS (
-  SELECT c.doc_id, count(*) AS n_shared
-  FROM csh c JOIN bsh b ON c.shingle = b.shingle
-  GROUP BY c.doc_id
-)
-SELECT doc_id, CAST(n_shared AS BIGINT) AS n_shared
-FROM shared WHERE n_shared >= 5
-"""
-
-ORACLE["dup_clusters"] = f"""
-WITH RECURSIVE pairs AS (
-{ORACLE["minhash_lsh_pairs"]}
-),
-sym AS (
-  SELECT doc_a AS u, doc_b AS v FROM pairs
-  UNION SELECT doc_b AS u, doc_a AS v FROM pairs
-),
-nodes AS (SELECT DISTINCT u AS node FROM sym),
-reach(node, lab) AS (
-  SELECT node, node AS lab FROM nodes
-  UNION
-  SELECT s.u AS node, r.lab FROM sym s JOIN reach r ON s.v = r.node
-  WHERE r.lab < s.u
-),
-cc AS (SELECT node AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY node),
-sizes AS (SELECT cluster_id, count(*) AS n FROM cc GROUP BY cluster_id)
-SELECT doc_id, cluster_id, CAST(n AS BIGINT) AS cluster_size
-FROM cc JOIN sizes USING (cluster_id)
-"""
-
-ORACLE["line_dedup"] = f"""
-WITH seeded AS (
-  SELECT doc_id,
-         CASE WHEN doc_id < 50
-              THEN text || chr(10) || '{LD_FOOTER}'
-              ELSE text END AS text
-  FROM documents
-),
-ln AS (
-  SELECT doc_id,
-         unnest(string_split(text, chr(10))) AS line,
-         generate_subscripts(string_split(text, chr(10)), 1) AS pos
-  FROM seeded
-),
-freq AS (
-  SELECT line, count(DISTINCT doc_id) AS line_df
-  FROM ln WHERE length(line) >= {LD_MIN_LEN}
-  GROUP BY line
-),
-common AS (SELECT line FROM freq WHERE line_df >= {LD_MIN_DOCS}),
-marked AS (
-  SELECT l.doc_id, l.pos, l.line, (c.line IS NOT NULL) AS is_common
-  FROM ln l LEFT JOIN common c USING (line)
-)
-SELECT doc_id,
-       coalesce(string_agg(line, chr(10) ORDER BY pos)
-                FILTER (WHERE NOT is_common), '') AS text,
-       CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(sum(CASE WHEN is_common THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_removed
-FROM marked GROUP BY doc_id
-"""
 
 
 ORACLE["phrase_search"] = f"""
@@ -1968,141 +1373,3 @@ LIMIT {PHRASE_K}
 """
 
 
-ORACLE["boilerplate"] = f"""
-WITH toks AS (
-  -- \\s+ regex split mirrors shingles()'s tokenization exactly (the
-  -- operator splits on runs of any whitespace, not single spaces)
-  SELECT doc_id, unnest(str_split_regex(text, '\\s+')) AS term,
-         generate_subscripts(str_split_regex(text, '\\s+'), 1) AS ord
-  FROM documents
-),
-sh0 AS (
-  SELECT doc_id, term,
-         lead(term, 1) OVER (PARTITION BY doc_id ORDER BY ord) AS t2,
-         lead(term, 2) OVER (PARTITION BY doc_id ORDER BY ord) AS t3
-  FROM toks
-),
-sh AS (
-  SELECT DISTINCT doc_id, term || ' ' || t2 || ' ' || t3 AS shingle
-  FROM sh0 WHERE t3 IS NOT NULL
-),
-freq AS (SELECT shingle, count(*) AS doc_freq FROM sh GROUP BY 1),
-fl AS (
-  SELECT s.doc_id,
-         CASE WHEN f.doc_freq >= {BP_MIN_DOCS} THEN 1 ELSE 0 END AS b
-  FROM sh s JOIN freq f USING (shingle)
-)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_shingles,
-       CAST(sum(b) AS BIGINT) AS n_boiler,
-       round(sum(b) * 1.0 / count(*), 6) AS boiler_ratio,
-       sum(b) * 1.0 / count(*) < {BP_MAX_RATIO} AS keep
-FROM fl GROUP BY doc_id
-"""
-
-
-def _pagerank_sql(outlinks: int, iters: int, k: int) -> str:
-    """Unrolled damped power iteration over the deterministic synthetic
-    link graph (doc d → (31d + 7 + 17j) mod N, self-links dropped) —
-    the relational twin of operators/graph.pagerank. edges/deg are
-    MATERIALIZED (referenced once per iteration; DuckDB would inline
-    them per reference otherwise)."""
-    its = []
-    prev = "r0"
-    for t in range(1, iters + 1):
-        its.append(f"""
-r{t} AS (
-  SELECT d.doc_id AS node,
-         0.15 / (SELECT n FROM nn)
-         + 0.85 * coalesce(sum(r.rank / g.outdeg), 0) AS rank
-  FROM docs d
-  LEFT JOIN edges e ON e.dst = d.doc_id
-  LEFT JOIN {prev} r ON r.node = e.src
-  LEFT JOIN deg g ON g.src = e.src
-  GROUP BY d.doc_id
-)""")
-        prev = f"r{t}"
-    return f"""
-WITH docs AS (SELECT doc_id FROM documents),
-nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM docs),
-nb AS (SELECT count(*) AS nb FROM docs),
-edges AS MATERIALIZED (
-  SELECT d.doc_id AS src,
-         (d.doc_id * 31 + 7 + 17 * j.j) % (SELECT nb FROM nb) AS dst
-  FROM docs d, generate_series(0, {outlinks - 1}) AS j(j)
-  WHERE (d.doc_id * 31 + 7 + 17 * j.j) % (SELECT nb FROM nb)
-        != d.doc_id
-),
-deg AS MATERIALIZED (
-  SELECT src, CAST(count(*) AS DOUBLE) AS outdeg FROM edges GROUP BY src
-),
-r0 AS (SELECT doc_id AS node, 1.0 / (SELECT n FROM nn) AS rank FROM docs),
-{",".join(its)}
-SELECT node, round(rank * (SELECT n FROM nn), 6) AS rank_n
-FROM {prev}
-ORDER BY rank_n DESC, node
-LIMIT {k}
-"""
-
-
-ORACLE["pagerank_topk"] = _pagerank_sql(PR_OUTLINKS, PR_ITERS, PR_K)
-
-
-# Paragraph dedup (q_paragraph_dedup): seeded-corpus mirror + full
-# relational replay. Normalization must match normalize_paragraph
-# exactly: lower → strip [0-9] → strip the explicit ASCII-punct class
-# (RE2 has no \p{Punct}) → collapse \s+ → trim. DuckDB regexp_replace
-# needs the 'g' flag (Spark's is global by default).
-ORACLE["paragraph_dedup"] = f"""
-WITH seeded AS (
-  SELECT doc_id,
-    text
-    || CASE WHEN doc_id % 3 = 0
-            THEN chr(10) || chr(10) || '{PD_BOILER_A.replace("'", "''")}'
-            WHEN doc_id % 3 = 1
-            THEN chr(10) || chr(10) || '{PD_BOILER_B.replace("'", "''")}'
-            ELSE '' END
-    || CASE WHEN doc_id % 5 = 0
-            THEN chr(10) || chr(10) || 'keep '
-                 || translate(CAST(doc_id AS VARCHAR),
-                              '0123456789', 'abcdefghij')
-            ELSE '' END AS txt
-  FROM documents
-),
-paras AS (
-  SELECT doc_id,
-    unnest(regexp_split_to_array(txt, '\\n\\s*\\n')) AS para,
-    generate_subscripts(
-        regexp_split_to_array(txt, '\\n\\s*\\n'), 1) AS pos
-  FROM seeded
-),
-keyed AS (
-  SELECT doc_id, pos, para,
-    trim(regexp_replace(
-      regexp_replace(
-        regexp_replace(lower(para), '[0-9]', '', 'g'),
-        '[!-/:-@\\[-`{{-~]', '', 'g'),
-      '\\s+', ' ', 'g')) AS key
-  FROM paras
-),
-freq AS (
-  SELECT key, count(DISTINCT doc_id) AS para_df
-  FROM keyed WHERE length(key) >= {PD_MIN_LEN}
-  GROUP BY key
-),
-marked AS (
-  SELECT k.doc_id, k.pos, k.para,
-    (f.para_df IS NOT NULL AND f.para_df >= {PD_MIN_DOCS}
-     AND length(k.key) >= {PD_MIN_LEN}) AS is_common
-  FROM keyed k LEFT JOIN freq f ON f.key = k.key
-)
-SELECT doc_id,
-  coalesce(
-    string_agg(CASE WHEN NOT is_common THEN para END,
-               chr(10) || chr(10) ORDER BY pos),
-    '') AS text,
-  CAST(count(*) AS BIGINT) AS n_paragraphs,
-  CAST(sum(CASE WHEN is_common THEN 1 ELSE 0 END) AS BIGINT)
-    AS n_removed
-FROM marked GROUP BY doc_id
-"""

@@ -1,3 +1,3 @@
 """Relational + custom operators: posting-list build, scoring, BM25/WAND
 top-k, posting codec, segment write, phrase, fuzzy and prefix lookup,
-dedup, link graph, media features."""
+media features."""

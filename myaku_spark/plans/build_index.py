@@ -376,21 +376,25 @@ def build_index(
         tagged = pages.withColumn("_group", F.lit(0).cast("int"))
     else:
         ext_path = f"{index_dir}/extracted"
+        ext = extract_and_dedupe(pages).withColumn(
+            "_group", _group_col(F.col("url"), n_groups)
+        )
         if not catalog.parquet_exists(ext_path):
-            extract_and_dedupe(pages).withColumn(
-                "_group", _group_col(F.col("url"), n_groups)
-            ).write.mode("overwrite").partitionBy("_group").parquet(ext_path)
-        tagged = spark.read.parquet(ext_path)
+            ext.write.mode("overwrite").partitionBy("_group").parquet(ext_path)
+        # The lazy frame's schema (no job): an empty corpus writes no
+        # part files, and there is then no schema to infer.
+        tagged = spark.read.schema(ext.schema).parquet(ext_path)
     metrics = []
     for g in range(n_groups):
         if g in done:
             continue
         grp = tagged.filter(F.col("_group") == g).drop("_group")
-        # Single-group builds skip the emptiness probe job: group 0 IS
-        # the whole input, and build_group handles an empty corpus
-        # (zero-row writes, zeroed observation metrics) identically to
-        # the empty-checkpoint shortcut below.
-        if n_groups > 1 and grp.limit(1).count() == 0:
+        # Group 0 skips the emptiness probe job and always runs
+        # build_group, which handles an empty corpus (zero-row writes,
+        # zeroed observation metrics) like the empty-checkpoint
+        # shortcut below. So even an index of no pages has the docs and
+        # term_stats tables that copy_index reads.
+        if g > 0 and grp.limit(1).count() == 0:
             # A group can be emptied by corpus-wide dedup; commit an
             # empty checkpoint row so resumes skip it too.
             row = {

@@ -6,9 +6,8 @@ replication with PER-REPLICA MUTATION so the expensive operators keep
 their real computational shape:
 
 - documents: replica k shifts doc_id by k*10^7 and applies a seeded
-  word-order permutation — exact-dup and shingle/minhash/LSH semantics
-  stay honest (straight copies would make every replica pair a near-dup
-  candidate and quadratically distort the LSH bench);
+  word-order permutation, so exact-dup semantics stay honest (straight
+  copies would make every replica a content duplicate of replica 0);
 - events: event_id/user_id shifts + k-second ts jitter.
 
 Replica 0 is the untouched sf0.1 data. Usage:

@@ -273,20 +273,25 @@ def test_pages_avro_roundtrip_gated(spark, tmp_path):
     assert got == expect
 
 
-def test_empty_single_group_build(spark, tmp_path):
-    """n_groups=1 skips the emptiness probe, so an empty corpus goes
-    through build_group itself: it must commit a zeroed checkpoint row
-    and write zero docs."""
+@pytest.mark.parametrize("n_groups", [1, 2])
+def test_empty_single_group_build(spark, tmp_path, n_groups):
+    """Group 0 skips the emptiness probe, so an empty corpus goes
+    through build_group itself: every group must commit a zeroed
+    checkpoint row and zero docs and terms are written. With 2 groups
+    the corpus-wide extracted stage has no part files and is read back
+    with its known schema (the engine oracle copies into such an
+    index)."""
     from myaku_spark.sources.pages import PAGES_SCHEMA
 
     d = str(tmp_path / "idx")
     empty = spark.createDataFrame([], PAGES_SCHEMA)
-    metrics = build_index(spark, empty, d, n_groups=1, now=NOW)
-    zeroed = {"group": 0, "status": "done", "docs": 0, "terms": 0,
+    metrics = build_index(spark, empty, d, n_groups=n_groups, now=NOW)
+    zeroed = {"status": "done", "docs": 0, "terms": 0,
               "postings": 0, "bytes": 0, "sum_dl": 0}
-    assert len(metrics) == 1
-    assert {k: metrics[0][k] for k in zeroed} == zeroed
+    assert [m["group"] for m in metrics] == list(range(n_groups))
+    assert all({k: m[k] for k in zeroed} == zeroed for m in metrics)
     cp = spark.read.parquet(f"{d}/checkpoints").collect()
-    assert len(cp) == 1
-    assert {k: cp[0][k] for k in zeroed} == zeroed
+    assert sorted(r.group for r in cp) == list(range(n_groups))
+    assert all({k: r[k] for k in zeroed} == zeroed for r in cp)
     assert spark.read.parquet(f"{d}/docs").count() == 0
+    assert spark.read.parquet(f"{d}/term_stats").count() == 0

@@ -340,13 +340,9 @@ def _run_chain(spark, root, mode):
         ),
         "rescore": lambda: rescore_index(spark, idx, RESCORE_NOW),
         "compact": lambda: compact_index(spark, idx),
-        # A fresh destination: an empty index. It has one group because
-        # a 2-group build of no pages fails to read back its empty
-        # extracted stage.
+        # A fresh destination: an empty index built like the source.
         "copy": lambda: (
-            build_index(
-                spark, _pages(spark, []), dst, **{**build, "n_groups": 1}
-            ),
+            build_index(spark, _pages(spark, []), dst, **build),
             copy_index(spark, idx, dst),
         ),
     }
