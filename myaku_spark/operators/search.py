@@ -4,15 +4,27 @@ The Spark re-architecture of the reference search path
 (/root/reference/myaku/datastore/index_search.py:207-248): K1 ranked
 posting scan becomes WAND over term-partition-pruned segments; K2
 pagination is a slice of the returned top-k; J1/J2 hydration is one
-pushed-down ``doc_id IN (…)`` scan of the docs table for the (≤ k·pages)
+pushed-down ``doc_id IN (…)`` read of the docs table for the (≤ k·pages)
 result doc_ids.
 Queries are width-normalized with the same P6 function used at index
 time (symmetry contract, views.py:305-310).
 
-Two-phase segment access: the query plan collects block METADATA only
-(parquet column pruning keeps blob pages unread), then fetches blobs
-lazily in forward windows as WAND's skip pattern requests them
-(SegmentBlobStore). Driver bytes are bounded by decoded blocks +
+An interactive request runs no Spark job. Its point reads (block
+metadata, blobs, BM25 ``df`` and hydration) are ``pyarrow.dataset``
+reads over the searcher's file listing, with the same pushdown a Spark
+scan would get: hive partition pruning on ``bucket`` and parquet
+predicates on ``term`` / ``block_id`` / ``doc_id``. This is the
+reference's split (MongoDB ``$in`` lookups plus a Redis first-page
+cache) with parquet in place of MongoDB. Spark stays for work that is
+distributed by nature: builds, ``batch_search``, previews, phrase
+search (Catalyst higher-order-function matching, two jobs) and the
+df-mode tombstone semi-join for delete vectors larger than the driver
+holds.
+
+Two-phase segment access: the query plan reads block METADATA only
+(the blob column is not projected, so its pages stay unread), then
+fetches blobs lazily in forward windows as WAND's skip pattern requests
+them (SegmentBlobStore). Driver bytes are bounded by decoded blocks +
 prefetch overshoot, never by posting-list size — a けれども-class head
 term at 10^9 docs ships only the blocks WAND actually opens.
 """
@@ -24,11 +36,15 @@ import time as _time
 from collections import OrderedDict
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from myaku_spark.functions.widthnorm import normalize_char_width
-from myaku_spark.operators.segments import term_rows
+from myaku_spark.functions.xxh import term_bucket
+from myaku_spark.operators.segments import N_BUCKETS, SEGMENT_SCHEMA, term_rows
 from myaku_spark.operators.wand import (
     BM25Scorer,
     MyakuScorer,
@@ -54,19 +70,59 @@ _META_COLS = [
     "max_score",
 ]
 
+# A segments dir as the searcher reads it: the segment rows plus the
+# ``group=G`` partition column. Explicit, so that a segments dir with no
+# part files (an index built from no pages) reads as zero rows.
+_SEGMENTS = StructType(
+    [*SEGMENT_SCHEMA.fields, StructField("group", IntegerType())]
+)
+
+
+def _parquet_dataset(path: str, schema: pa.Schema | None = None):
+    """The parquet files under ``path`` as a pyarrow dataset with hive
+    partition columns (``group=G``, ``bucket=B``). The file listing is
+    taken here, once; every read of the dataset scans that listing.
+    With a ``schema``, a dir with no part files is an empty dataset."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(
+        path, schema=schema, format="parquet", partitioning="hive"
+    )
+
+
+def _arrow_frame(spark: SparkSession, table: pa.Table) -> DataFrame:
+    """``table`` as a Spark DataFrame typed as a Spark read of the same
+    parquet would be: every field nullable, and zone-less timestamps
+    (parquet INT96, which Spark writes in UTC) as UTC instants. Below
+    the Arrow local-relation threshold this is a LocalRelation, so
+    ``collect()`` runs no job."""
+    cols, fields = [], []
+    for f, col in zip(table.schema, table.columns):
+        if pa.types.is_timestamp(f.type) and f.type.tz is None:
+            col = col.cast(pa.timestamp(f.type.unit, tz="UTC"))
+        cols.append(col)
+        fields.append(StructField(f.name, from_arrow_type(col.type)))
+    table = pa.Table.from_arrays(cols, names=table.column_names)
+    return spark.createDataFrame(table, StructType(fields))
+
 
 class SegmentBlobStore:
-    """Block metadata up front, blobs on demand.
+    """Block metadata up front, blobs on demand, all from one listing
+    of the segments dir taken on first use.
 
-    - ``ensure_terms`` collects metadata-only rows for the query terms
-      (bucket partition pruning + parquet term pushdown; the blob column
-      is never in the scan schema).
+    - ``ensure_terms`` reads metadata-only rows for the query terms: one
+      pyarrow read with bucket partition pruning and a parquet ``term``
+      predicate, projecting ``_META_COLS`` (the blob column is never
+      read).
     - ``blob(term, group, block_id)`` fetches a FORWARD WINDOW of up to
       ``prefetch_blocks`` not-yet-cached blobs for the term starting at
       the requested block (WAND cursors only move forward in doc_id, so
-      forward prefetch amortizes Spark-job latency without overshooting
+      forward prefetch amortizes per-read latency without overshooting
       into blocks a skip already passed).
-    - ``bytes_fetched`` / ``fetch_jobs`` instrument the driver-byte
+    - ``term_segments`` is the Spark relation over the same files, for
+      phrase search.
+    - ``bytes_fetched`` / ``fetch_jobs`` count blob bytes and blob
+      reads (one parquet read each; no Spark job), the driver-byte
       bound asserted by tests and the head-term bench entry.
     """
 
@@ -87,9 +143,9 @@ class SegmentBlobStore:
         self.max_terms = max_terms
         self.max_blob_bytes = max_blob_bytes
         # Terms whose TOTAL posting count is below this are fetched whole
-        # in one job at query start (a few MB at most — one Spark job
-        # instead of one per forward window); head terms above it stay
-        # lazy so driver bytes remain bounded by what WAND opens.
+        # in one read at query start (a few MB at most — one read instead
+        # of one per forward window); head terms above it stay lazy so
+        # driver bytes remain bounded by what WAND opens.
         self.eager_postings = eager_postings
         # df-mode tombstones (delete vector beyond driver size): every
         # fetch window semi-joins its decoded doc ids against this
@@ -103,29 +159,52 @@ class SegmentBlobStore:
         self.cached_blob_bytes = 0
         self.bytes_fetched = 0
         self.fetch_jobs = 0
+        self._ds = None
         self._df = None
 
-    def _seg_df(self):
-        """One parquet DataFrame reused by every fetch — planning a fresh
-        read per window was measurable per-query driver latency."""
-        if self._df is None:
-            self._df = self.spark.read.parquet(self.seg_path)
-        return self._df
+    def _dataset(self):
+        if self._ds is None:
+            self._ds = _parquet_dataset(
+                self.seg_path, to_arrow_schema(_SEGMENTS)
+            )
+        return self._ds
+
+    def _scanner(self, terms: list[str], columns: list[str], block_ids=None):
+        """A pushed-down read of the rows of ``terms`` (and only
+        ``block_ids``, when given): bucket partition pruning, parquet
+        predicates on term and block_id, and only ``columns`` read."""
+        import pyarrow.dataset as ds
+
+        buckets = sorted({term_bucket(t, N_BUCKETS) for t in terms})
+        where = ds.field("bucket").isin(buckets) & ds.field("term").isin(terms)
+        if block_ids is not None:
+            where &= ds.field("block_id").isin(block_ids)
+        return self._dataset().scanner(columns=columns, filter=where)
 
     def term_segments(self, terms: list[str]) -> DataFrame:
-        """The segment rows of ``terms`` (bucket pruning + term pushdown)."""
-        return term_rows(self._seg_df(), terms)
+        """The Spark relation of ``terms``' segment rows (bucket pruning
+        + term pushdown), over the files the pyarrow reads scan — one
+        listing, so a phrase and a WAND request on one searcher read the
+        same snapshot."""
+        if self._df is None:
+            files = self._dataset().files
+            self._df = (
+                self.spark.read.schema(_SEGMENTS)
+                .option("basePath", self.seg_path)
+                .parquet(*files)
+                if files
+                else self.spark.createDataFrame([], _SEGMENTS)
+            )
+        return term_rows(self._df, terms)
 
     def ensure_terms(self, terms: list[str]) -> None:
         missing = [t for t in terms if t not in self.meta]
         if missing:
-            rows = (
-                self.term_segments(missing)
-                .select(*_META_COLS)
-                .collect()
-            )
+            table = self._scanner(missing, _META_COLS).to_table()
+            row = Row(*table.column_names)
             by_term: dict[str, list] = {t: [] for t in missing}
-            for r in rows:
+            for values in zip(*(c.to_pylist() for c in table.columns)):
+                r = row(*values)
                 by_term.setdefault(r.term, []).append(r)
             for t in missing:
                 self.meta[t] = sorted(
@@ -146,7 +225,7 @@ class SegmentBlobStore:
         return out
 
     def _prefetch_small(self, terms: list[str]) -> None:
-        """One batched blob fetch for all small query terms."""
+        """One batched blob read for all small query terms."""
         small = [
             t
             for t in terms
@@ -156,27 +235,32 @@ class SegmentBlobStore:
                 (t, r.group, r.block_id) not in self.blobs for r in self.meta[t]
             )
         ]
-        if not small:
-            return
-        rows = (
-            self.term_segments(small)
-            .select("term", "group", "block_id", "blob")
-            .collect()
-        )
+        if small:
+            self._fetch(small)
+
+    def _fetch(self, terms: list[str], block_ids=None) -> None:
+        """One blob read (``_scanner``) into the cache, then the df-mode
+        tombstone lookup for the blobs it brought in."""
+        table = self._scanner(
+            terms, ["term", "group", "block_id", "blob"], block_ids
+        ).to_table()
         self.fetch_jobs += 1
         fresh = []
-        for r in rows:
-            key = (r.term, r.group, r.block_id)
+        for term, group, block_id, b in zip(
+            *(c.to_pylist() for c in table.columns)
+        ):
+            key = (term, group, block_id)
             if key not in self.blobs:
-                fresh.append(bytes(r.blob))
-            self._store_blob(key, bytes(r.blob))
+                fresh.append(b)
+            self._store_blob(key, b)
         self._resolve_deleted(fresh)
 
     def _resolve_deleted(self, new_blobs: list[bytes]) -> None:
         """df-mode tombstone lookup for a fetch window: decode the new
         blobs' doc ids (driver-bounded — these blobs just shipped) and
         ask the delete-vector DataFrame which of them are deleted via a
-        broadcast semi-join. One small Spark job per fetch window; the
+        broadcast semi-join. One small Spark job per fetch window, kept
+        on Spark because the vector may not fit on the driver; the
         result is at most |opened postings| ids."""
         if self.tombstones_df is None or not new_blobs:
             return
@@ -224,31 +308,10 @@ class SegmentBlobStore:
             for r in metas[idx : idx + self.prefetch_blocks]
             if (term, r.group, r.block_id) not in self.blobs
         ]
-        want = list({int(r.block_id) for r in window})
-        bucket = int(metas[idx].bucket)
-        rows = (
-            self._seg_df()
-            .filter(
-                (F.col("bucket") == bucket)
-                & (F.col("term") == term)
-                & F.col("block_id").isin(want)
-            )
-            .select("group", "block_id", "blob")
-            .collect()
-        )
-        self.fetch_jobs += 1
-        fresh = []
-        for r in rows:
-            k = (term, r.group, r.block_id)
-            if k not in self.blobs:
-                fresh.append(bytes(r.blob))
-            self._store_blob(k, bytes(r.blob))
-        self._resolve_deleted(fresh)
+        self._fetch([term], sorted({int(r.block_id) for r in window}))
         if key not in self.blobs:
             raise KeyError(f"segment blob not found: {key}")
         return self.blobs[key]
-
-
 class UserPageCache:
     """Per-user next-page cache (the reference's Redis NextPageCache,
     cache.py:316-459): each user holds TWO slots (forward/backward);
@@ -311,13 +374,14 @@ class UserPageCache:
 class IndexSearcher:
     """Interactive search over one catalog snapshot of an index.
 
-    Each component's parquet relation (segments, docs, term_stats) is
-    resolved once, on first use, and reused by every later request:
-    its file listing is the one taken at that first use. An
-    ``incremental_update`` appends ``group=G`` dirs in place, so a
-    searcher that has already served requests keeps answering from the
-    groups (and the tombstones, read at construction) it started with;
-    a new searcher sees the update."""
+    Each component's file listing (segments, docs, term_stats) is taken
+    once, on first use, and every later read of that component scans
+    it: the pyarrow reads of ``search`` and ``hydrate`` and the Spark
+    relation of ``search_phrase`` alike. An ``incremental_update``
+    appends ``group=G`` dirs in place, so a searcher that has already
+    served requests keeps answering from the groups (and the
+    tombstones, read at construction) it started with; a new searcher
+    sees the update."""
 
     def __init__(
         self,
@@ -375,7 +439,7 @@ class IndexSearcher:
         else:
             self.deleted = None
         self._deleted_bc = None  # lazily created, cached per searcher
-        self._relations: dict[str, DataFrame] = {}
+        self._datasets: dict = {}
         self.store = SegmentBlobStore(
             spark,
             self._paths["segments"],
@@ -401,31 +465,34 @@ class IndexSearcher:
         self._lock = threading.RLock()
         self._precompute_threads: list[threading.Thread] = []
         if mode == "bm25":
-            r = spark.read.parquet(self._paths["corpus_stats"]).collect()[0]
-            self.n_docs, self.avgdl = int(r.n_docs), float(r.avgdl)
+            r = self._dataset("corpus_stats").to_table().to_pylist()[0]
+            # avgdl is null for an index of no docs, where nothing is scored
+            self.n_docs, self.avgdl = int(r["n_docs"]), float(r["avgdl"] or 0)
 
-    def _relation(self, component: str) -> DataFrame:
-        """``component``'s parquet relation, read on first use and then
-        reused: a fresh read pays a schema-footer job (and a listing job
-        past 32 partition dirs) before any data is scanned."""
-        df = self._relations.get(component)
-        if df is None:
-            df = self._relations[component] = self.spark.read.parquet(
+    def _dataset(self, component: str):
+        """``component``'s pyarrow dataset, listed on first use and then
+        reused (the searcher's snapshot of that component)."""
+        d = self._datasets.get(component)
+        if d is None:
+            d = self._datasets[component] = _parquet_dataset(
                 self._paths[component]
             )
-        return df
+        return d
 
     def _scorer_factory(self, terms: list[str]):
         if self.mode == "myaku":
             return lambda term: MyakuScorer()
-        tstats = (
-            self._relation("term_stats")
-            .filter(F.col("term").isin(terms))
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .collect()
+        import pyarrow.dataset as ds
+
+        tstats = self._dataset("term_stats").to_table(
+            columns=["term", "df"], filter=ds.field("term").isin(terms)
         )
-        df_map = {r.term: int(r.df) for r in tstats}
+        # df of a term = the sum of its per-group rows
+        df_map: dict[str, int] = {}
+        for term, df in zip(
+            tstats.column("term").to_pylist(), tstats.column("df").to_pylist()
+        ):
+            df_map[term] = df_map.get(term, 0) + df
         return lambda term: BM25Scorer(
             idf=stats_for_bm25(self.n_docs, df_map.get(term, 0)),
             avgdl=self.avgdl,
@@ -552,31 +619,34 @@ class IndexSearcher:
         """J1: the docs rows of ``results`` (score, doc_id) plus their
         ``score`` and 1-based ``rank``, in rank order.
 
-        One scan, one job: ``doc_id IN (ids)`` is pushed down to parquet,
-        and score/rank attach by the doc's position in a literal id
-        array — no local relation to broadcast, and a one-partition
-        sort instead of a range-partitioned ``orderBy`` (sample job +
-        shuffle)."""
+        One pyarrow read with ``doc_id IN (ids)`` pushed down to parquet;
+        score and rank attach by each row's position in the id list, and
+        the rows come back as a LocalRelation, so ``collect()`` runs no
+        Spark job. Columns and types are those of a Spark read of the
+        docs table (its ``group`` partition column included)."""
         if not results:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        ids = [int(d) for _, d in results]
-        rank = F.array_position(
-            F.array(*[F.lit(d) for d in ids]).cast("array<bigint>"),
-            F.col("doc_id"),
+            empty = pa.schema(
+                [("doc_id", pa.int64()), ("score", pa.float64())]
+            ).empty_table()
+            return _arrow_frame(self.spark, empty)
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        ids = pa.array([int(d) for _, d in results], pa.int64())
+        docs = self._dataset("docs").to_table(
+            filter=ds.field("doc_id").isin(ids)
         )
-        scores = F.array(*[F.lit(float(s)) for s, _ in results])
-        docs = self._relation("docs")
-        return (
-            docs.filter(F.col("doc_id").isin(ids))
-            .select(
-                "doc_id",
-                *[c for c in docs.columns if c != "doc_id"],
-                F.element_at(scores, rank.cast("int")).alias("score"),
-                rank.alias("rank"),
+        pos = pc.index_in(docs.column("doc_id"), value_set=ids)
+        scores = pa.array([float(s) for s, _ in results], pa.float64())
+        docs = (
+            docs.select(
+                ["doc_id", *[c for c in docs.column_names if c != "doc_id"]]
             )
-            .coalesce(1)
-            .sortWithinPartitions("rank")
+            .append_column("score", pc.take(scores, pos))
+            .append_column("rank", pc.add(pos.cast(pa.int64()), 1))
+            .sort_by("rank")
         )
+        return _arrow_frame(self.spark, docs)
 
     def search_page(
         self,

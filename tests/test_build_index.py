@@ -295,3 +295,24 @@ def test_empty_single_group_build(spark, tmp_path, n_groups):
     assert all({k: r[k] for k in zeroed} == zeroed for r in cp)
     assert spark.read.parquet(f"{d}/docs").count() == 0
     assert spark.read.parquet(f"{d}/term_stats").count() == 0
+
+
+@pytest.mark.parametrize("n_groups", [1, 2])
+@pytest.mark.parametrize("mode", ["myaku", "bm25"])
+def test_empty_index_serves_empty_results(spark, tmp_path, mode, n_groups):
+    """An index of no pages has a segments dir with no part files; the
+    searcher reads it with its known schema, as zero rows, on both its
+    pyarrow (WAND) and its Spark (phrase) path. Its corpus_stats row has
+    a null avgdl."""
+    from myaku_spark.sources.pages import PAGES_SCHEMA
+
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame([], PAGES_SCHEMA), d,
+                n_groups=n_groups, now=NOW, mode=mode)
+    s = IndexSearcher(spark, d, mode=mode)
+    assert s.search(["物語"]) == []
+    assert s.search(["物語", "旅"], combine="or") == []
+    empty = s.hydrate([])
+    assert empty.dtypes == [("doc_id", "bigint"), ("score", "double")]
+    assert empty.collect() == []
+    assert s.search_phrase(["物語", "旅"]) == []

@@ -240,7 +240,10 @@ def test_searcher_snapshot_across_incremental_update(spark, tmp_path):
     # A searcher reads each component's file listing on first use: after
     # an incremental_update appends a delta group in place, a searcher
     # that already served search + hydrate + phrase answers exactly as
-    # before, and only a NEW searcher sees the delta docs.
+    # before, and only a NEW searcher sees the delta docs. Phrase search
+    # reads the segments listing that WAND took, so a searcher that
+    # served only search + hydrate before the update answers its first
+    # phrase after it from the pre-update snapshot.
     d = str(tmp_path / "snap")
     build_index(spark, synth_pages_df(spark, 20, partitions=2), d,
                 n_groups=1, now=NOW)
@@ -262,9 +265,14 @@ def test_searcher_snapshot_across_incremental_update(spark, tmp_path):
 
     old = IndexSearcher(spark, d, mode="myaku")
     before = serve(old)
+    wand_only = IndexSearcher(spark, d, mode="myaku")
+    assert wand_only.search([top_term], k=50) == before[0]
+    rows = wand_only.hydrate(before[0]).collect()
+    assert [tuple(r) for r in rows] == before[1]
     mod = spark.createDataFrame(_modified_pages(spark), PAGES_SCHEMA)
     assert incremental_update(spark, d, mod, now=NOW)["docs"] == 5
     assert serve(old) == before
+    assert wand_only.search_phrase([top_term], k=50) == before[2]
 
     hits, rows, phrase = serve(IndexSearcher(spark, d, mode="myaku"))
     delta = {doc for _, doc in hits if (doc >> 40) >= 10_000}

@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 
 from myaku_spark.operators.search import IndexSearcher, UserPageCache
 from myaku_spark.operators.segments import build_segments, write_segments
+from myaku_spark.plans.build_index import build_index
+from myaku_spark.sources.pages import synth_pages_df
 
 
 @pytest.fixture(scope="module")
@@ -88,11 +90,25 @@ def test_small_terms_prefetch_in_one_job(spark, head_idx):
 
 
 def test_metadata_scan_excludes_blob_column(spark, head_idx):
-    # The metadata collect must not carry the blob column in its scan
-    # schema (column pruning keeps blob pages unread).
+    # Neither metadata read may carry the blob column in its scan schema
+    # (column pruning keeps blob pages unread): the store's pyarrow read,
+    # and the Spark scan that batch, phrase and previews read through.
     from myaku_spark.operators.segments import read_term_segments
     from myaku_spark.operators.search import _META_COLS
 
+    s = IndexSearcher(spark, head_idx, mode="myaku")
+    scans = []
+    scanner = s.store._scanner
+
+    def recording(terms, columns, block_ids=None):
+        scans.append((columns, scanner(terms, columns, block_ids)))
+        return scans[-1][1]
+
+    s.store._scanner = recording
+    s.store.ensure_terms(["head", "rare"])
+    assert [cols for cols, _ in scans] == [_META_COLS]
+    assert "blob" not in scans[0][1].projected_schema.names
+    assert s.store.meta["head"] and s.store.meta["rare"]
     plan = (
         read_term_segments(spark, f"{head_idx}/segments", ["head"])
         .select(*_META_COLS)
@@ -133,9 +149,46 @@ def test_hydrate_contract_one_scan(spark, head_idx, jobs_run_by):
     empty = s.hydrate([])
     assert empty.dtypes == [("doc_id", "bigint"), ("score", "double")]
     assert empty.collect() == []
-    # Warm: the docs relation is resolved, so a request is one scan job.
+    # A hydrate is one pyarrow read into a LocalRelation: no Spark job,
+    # for an empty page too.
     page = s.search(["head"], k=3, combine="or")
-    assert len(jobs_run_by(lambda: s.hydrate(page).collect())) == 1
+    assert len(jobs_run_by(lambda: s.hydrate(page).collect())) == 0
+    assert len(jobs_run_by(lambda: s.hydrate([]).collect())) == 0
+
+
+@pytest.mark.parametrize("mode", ["myaku", "bm25"])
+def test_interactive_request_runs_no_spark_job(
+    spark, tmp_path, jobs_run_by, mode
+):
+    # A request is search + hydrate(...).collect(). Block metadata, blob
+    # fetches, BM25 df and hydration are pyarrow reads of the searcher's
+    # file listing, so neither a searcher's first request, a warm repeat,
+    # nor a cache miss (a fresh term: metadata plus blob read) starts a
+    # Spark job.
+    d = str(tmp_path / mode)
+    build_index(spark, synth_pages_df(spark, 30, partitions=2), d,
+                n_groups=1, now="2026-08-01 00:00:00", mode=mode)
+    top = [
+        r.term
+        for r in spark.read.parquet(f"{d}/term_stats")
+        .orderBy(F.desc("df"), "term")
+        .limit(3)
+        .collect()
+    ]
+    s = IndexSearcher(spark, d, mode=mode)
+    got = []
+
+    def request(terms, combine="and"):
+        got.append(s.hydrate(s.search(terms, k=5, combine=combine)).collect())
+
+    assert jobs_run_by(lambda: request(top[:1])) == {}
+    assert jobs_run_by(lambda: request(top[:1])) == {}
+    fetches = s.store.fetch_jobs
+    assert jobs_run_by(lambda: request(top[1:], combine="or")) == {}
+    assert s.store.fetch_jobs == fetches + 1
+    assert all(len(rows) == 5 for rows in got)
+    want = s.search(top[1:], k=5, combine="or", exhaustive=True)
+    assert [(r.score, r.doc_id) for r in got[-1]] == want
 
 
 def test_user_page_cache_semantics():
