@@ -2,21 +2,28 @@
 
 The segments already carry per-posting (start, len) position lists
 (codec.py stores them in each block exactly for this); phrase
-evaluation is the standard positional-intersection: join the phrase
-terms' postings on doc_id, then chain-match positions so each next term
+evaluation is the standard positional-intersection: intersect the
+phrase terms' doc sets, then chain-match positions so each next term
 starts where the previous one ended (+ a separator ``gap`` — 1 for
 space-separated corpora, 0 for Japanese text, mirroring how the
 reference's found-lexical-item positions are raw char offsets,
 myaku/datatypes.py ArticleTextPosition).
 
-Scale shape: segment reads prune by bucket partition + parquet term
-pushdown, so only the phrase's terms are scanned; block decode is one
-mapInArrow pass; the doc_id equi-joins shrink left-to-right (every
-join intersects with another term's doc set) and the position
-chain-match is pure Catalyst HOFs (map_from_arrays + try_element_at
-inside transform/filter) — no Python touches a position after decode.
-Top-k is orderBy().limit() = TakeOrderedAndProject, never a global
-window.
+Two evaluators share those semantics:
+
+- ``phrase_topk``, the interactive kernel: numpy on the driver over
+  decoded blocks. ``IndexSearcher.search_phrase`` feeds it the blocks
+  its blob store reads, one doc-range window at a time, so an
+  interactive phrase runs no Spark job. Positions are keyed by (doc
+  rank, start) and each chain step is a ``searchsorted`` probe, the
+  vectorized block intersection of the columnar inverted-index
+  literature instead of a row-at-a-time match.
+- ``batch_phrase_match``, the batch plan: many queries in one Spark
+  plan whose size is constant in the number of queries. Segment reads
+  prune by bucket partition + parquet term pushdown, block decode is
+  one mapInArrow pass and the chain-match is Catalyst higher-order
+  functions — no Python touches a position after decode.
+  ``phrase_search`` is a batch of one.
 """
 
 from __future__ import annotations
@@ -35,6 +42,13 @@ POSTINGS_SCHEMA = (
     "term string, doc_id long, tf long, starts array<int>, lens array<int>, "
     "payload long"
 )
+
+
+def _positions_per_posting(dec: dict) -> np.ndarray:
+    """Position-list length per posting of a ``decode_blocks_batch``
+    result: its tf when its block stores positions, else 0."""
+    has_pos = np.diff(dec["pos_off"]) > 0
+    return np.where(np.repeat(has_pos, dec["n_per"]), dec["tfs"], 0)
 
 
 def decode_postings(segments: DataFrame, deleted=None) -> DataFrame:
@@ -80,10 +94,7 @@ def decode_postings(segments: DataFrame, deleted=None) -> DataFrame:
             pays = dec["scores"]
             fs = dec["pos_starts"]
             fl = dec["pos_lens"]
-            # Position-list length per posting: tf when its block
-            # stores positions, else 0 (empty lists downstream).
-            m_per = np.diff(dec["pos_off"])
-            ptf = np.where(np.repeat(m_per > 0, n_per), tfs, 0)
+            ptf = _positions_per_posting(dec)
             term_rep = np.repeat(
                 np.asarray(terms, dtype=object), n_per
             )
@@ -118,128 +129,115 @@ def decode_postings(segments: DataFrame, deleted=None) -> DataFrame:
     return segments.select("term", "blob").mapInArrow(gen, POSTINGS_SCHEMA)
 
 
-def phrase_match(
-    postings: DataFrame,
+def term_postings(dec: dict, doc_range=None, deleted=None) -> tuple:
+    """One term's postings from a ``codec.decode_blocks_batch`` result as
+    the ``(doc_ids, n_pos, starts, lens)`` arrays ``phrase_topk`` reads.
+    ``n_pos`` is each posting's position count: its tf when its block
+    stores positions, else 0. Postings outside ``doc_range`` (lo, hi)
+    or in the SORTED ``deleted`` array drop with their positions."""
+    ids = dec["doc_ids"]
+    n_pos = _positions_per_posting(dec)
+    keep = np.ones(ids.size, dtype=bool)
+    if doc_range is not None:
+        keep &= (ids >= doc_range[0]) & (ids <= doc_range[1])
+    if deleted is not None and deleted.size:
+        keep &= ~np.isin(ids, deleted)
+    pos_keep = np.repeat(keep, n_pos)
+    return (
+        ids[keep], n_pos[keep],
+        dec["pos_starts"][pos_keep], dec["pos_lens"][pos_keep],
+    )
+
+
+def phrase_topk(
+    postings: dict,
     terms: list[str],
     gap: int = 0,
     slop: int = 0,
-) -> DataFrame:
-    """(doc_id, phrase_tf, match_starts) for docs containing the exact
-    term sequence with positional adjacency (next.start == prev.end +
-    gap). Candidate chains survive overlapping occurrences and repeated
-    phrase terms (each step re-probes that term's own position map).
+    k: int = 10,
+) -> list[tuple[int, int, list[int]]]:
+    """Top-k ``[(doc_id, phrase_tf, match_starts)]`` for the phrase
+    ``terms`` (at least one) over ``postings`` ({term: the arrays of
+    :func:`term_postings`}), ranked by phrase_tf desc, doc_id asc. The
+    interactive evaluator: numpy on the driver, no Spark.
 
-    ``slop`` > 0 relaxes adjacency to an ordered proximity window:
-    next.start ∈ [prev.end + gap, prev.end + gap + slop]. Chains BRANCH
-    over every in-window occurrence (a greedy nearest-match would
-    wrongly kill chains whose nearer token dead-ends later), and
-    match_starts dedups to distinct chain heads.
+    Semantics are ``batch_phrase_match``'s: every distinct term must
+    occur in the doc; the next term starts at ``end + gap`` (slop 0) or
+    anywhere in ``[end + gap, end + gap + slop]``, in which case chains
+    branch over every occurrence in the window and equal (head, end)
+    pairs merge; ``match_starts`` lists the distinct chain heads in the
+    order of the first term's positions. A repeated term re-probes its
+    own positions.
 
-    Shape: ONE groupBy(doc_id) pivots the phrase terms' postings into a
-    per-doc term→positions map, then the whole chain-match is a single
-    projection of Catalyst HOFs over that row — no per-term self-joins,
-    no branch recomputation of the postings lineage, one shuffle whose
-    volume is exactly the phrase terms' postings."""
-    if not terms:
-        raise ValueError("phrase requires at least one term")
-    tm = (
-        postings.filter(F.col("term").isin(list(terms)))
-        .groupBy("doc_id")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.struct(
-                        F.col("term"),
-                        F.struct(
-                            F.col("starts").alias("starts"),
-                            F.col("lens").alias("lens"),
-                        ).alias("pos"),
-                    )
-                )
-            ).alias("tm")
-        )
+    Vectorized shape: intersect the doc sets, key every position by
+    (dense rank of its doc among the candidates, start) — doc ids are
+    int64, so they are ranked rather than packed — then each step is
+    two ``searchsorted`` probes per chain and an ``np.repeat`` branch
+    over the hits."""
+    uniq = list(dict.fromkeys(terms))
+    if k <= 0 or any(t not in postings for t in uniq):
+        return []
+    docs = np.unique(postings[uniq[0]][0])
+    for t in uniq[1:]:
+        docs = np.intersect1d(docs, postings[t][0])
+    if docs.size == 0:
+        return []
+    pos = {}  # term -> (doc rank, start, len) of its candidate positions
+    for t in uniq:
+        ids, n_pos, starts, lens = postings[t]
+        rank = np.minimum(np.searchsorted(docs, ids), docs.size - 1)
+        p_rank = np.repeat(np.where(docs[rank] == ids, rank, -1), n_pos)
+        sel = p_rank >= 0
+        pos[t] = (p_rank[sel], starts[sel], lens[sel])
+    # key = rank * span + start; a probe value outside [0, span) is
+    # clipped so that it can never reach a neighboring doc's keys
+    span = 1 + max(
+        (int(p[1].max()) for p in pos.values() if p[1].size), default=0
     )
-    # Conjunctive contract: every phrase term must occur in the doc.
-    present = None
-    for t in set(terms):
-        c = F.col("tm").getItem(t).isNotNull()
-        present = c if present is None else (present & c)
-    tm = tm.filter(present)
-    t0 = F.col("tm").getItem(terms[0])
-    cand = F.zip_with(
-        t0.getField("starts"),
-        t0.getField("lens"),
-        lambda a, b: F.struct(a.alias("head"), (a + b).alias("end")),
-    )
+    keyed = {}
+    for t in set(terms[1:]):
+        p_rank, starts, lens = pos[t]
+        keys = p_rank * span + starts
+        order = np.argsort(keys, kind="stable")
+        keyed[t] = (keys[order], starts[order], lens[order])
+    h_rank, h_start, h_len = pos[terms[0]]
+    order = np.argsort(h_rank, kind="stable")  # by doc, stored order within
+    h_rank, h_start = h_rank[order], h_start[order]
+    c_head = np.arange(h_rank.size)  # chains: head index, doc rank, end
+    c_rank, c_end = h_rank, h_start + h_len[order]
     for t in terms[1:]:
-        ti = F.col("tm").getItem(t)
-        if slop == 0:
-            # exact adjacency: O(1) map probe per candidate
-            pos_map = F.map_from_arrays(
-                ti.getField("starts"), ti.getField("lens")
-            )
-            cand = F.filter(
-                F.transform(
-                    cand,
-                    lambda c: F.struct(
-                        c.getField("head").alias("head"),
-                        (
-                            c.getField("end")
-                            + F.lit(gap)
-                            + F.try_element_at(
-                                pos_map, c.getField("end") + F.lit(gap)
-                            )
-                        ).alias("end"),
-                    ),
-                ),
-                lambda c: c.getField("end").isNotNull(),
-            )
-        else:
-            # proximity window: branch over every in-window occurrence
-            zipped = F.zip_with(
-                ti.getField("starts"),
-                ti.getField("lens"),
-                lambda a, b: F.struct(
-                    a.alias("start"), (a + b).alias("end")
-                ),
-            )
-            cand = F.array_distinct(
-                F.flatten(
-                    F.transform(
-                        cand,
-                        lambda c: F.transform(
-                            F.filter(
-                                zipped,
-                                lambda p: (
-                                    p.getField("start")
-                                    >= c.getField("end") + F.lit(gap)
-                                )
-                                & (
-                                    p.getField("start")
-                                    <= c.getField("end")
-                                    + F.lit(gap + slop)
-                                ),
-                            ),
-                            lambda p: F.struct(
-                                c.getField("head").alias("head"),
-                                p.getField("end").alias("end"),
-                            ),
-                        ),
-                    )
-                )
-            )
-    heads = F.array_distinct(
-        F.transform(cand, lambda c: c.getField("head"))
-    )
-    return (
-        tm.select("doc_id", heads.alias("match_starts"))
-        .filter(F.size("match_starts") > 0)
-        .select(
-            "doc_id",
-            F.size("match_starts").cast("long").alias("phrase_tf"),
-            "match_starts",
+        keys, starts, lens = keyed[t]
+        lo = c_end + gap
+        first = np.searchsorted(keys, c_rank * span + np.clip(lo, 0, span))
+        last = np.searchsorted(
+            keys, c_rank * span + np.clip(lo + slop, -1, span - 1), "right"
         )
+        n = np.maximum(last - first, 0)
+        parent = np.repeat(np.arange(n.size), n)
+        child = first[parent] + np.arange(parent.size) - np.repeat(
+            np.cumsum(n) - n, n
+        )
+        c_head, c_rank = c_head[parent], c_rank[parent]
+        c_end = starts[child] + lens[child]
+        if slop and c_head.size:  # merge equal chains, or branches multiply
+            order = np.lexsort((c_end, c_head))
+            c_head, c_rank, c_end = c_head[order], c_rank[order], c_end[order]
+            new = np.ones(order.size, dtype=bool)
+            new[1:] = (np.diff(c_head) != 0) | (np.diff(c_end) != 0)
+            c_head, c_rank, c_end = c_head[new], c_rank[new], c_end[new]
+    heads = np.unique(c_head)
+    ranks, first, tf = np.unique(
+        h_rank[heads], return_index=True, return_counts=True
     )
+    doc_ids = docs[ranks]
+    return [
+        (
+            int(doc_ids[i]),
+            int(tf[i]),
+            h_start[heads[first[i] : first[i] + tf[i]]].tolist(),
+        )
+        for i in np.lexsort((doc_ids, -tf))[:k]
+    ]
 
 
 # Skip range pruning when the rarest phrase term itself has more blocks
@@ -448,47 +446,17 @@ def phrase_search(
     slop: int = 0,
     prune="auto",
 ) -> DataFrame:
-    """Top-k docs for an exact phrase; ``source`` is an index_dir (reads
-    the catalog-resolved segments + tombstones) or a segments DataFrame.
-    Ranked by phrase_tf desc, doc_id asc via TakeOrderedAndProject.
-    ``prune`` applies the rarest-term block-range prune before decode;
-    results are provably unchanged (tested). "auto" skips it below the
-    footprint crossover where decode-all is cheaper."""
-    deleted_bc = None
-    tombs_df = None
-    forced_min = 0 if prune is True else None  # True means PRUNE
-    if isinstance(source, DataFrame):
-        segments = source.filter(F.col("term").isin(list(terms)))
-        if _resolve_prune(prune, None, segments=segments):
-            segments = _prune_blocks_for_queries(
-                segments, [("q", list(terms))], min_postings=forced_min
-            )
-    else:
-        from myaku_spark.operators.segments import read_term_segments
-        from myaku_spark.plans import catalog
-        from myaku_spark.plans.incremental import resolve_tombstones
-
-        _, paths = catalog.resolve(source)
-        segments = read_term_segments(spark, paths["segments"], list(terms))
-        if _resolve_prune(prune, paths["segments"]):
-            segments = _prune_blocks_for_queries(
-                segments, [("q", list(terms))], min_postings=forced_min
-            )
-        tmode, tpayload = resolve_tombstones(
-            spark, source, path=paths["tombstones"]
+    """Top-k (doc_id, phrase_tf, match_starts) for one phrase, ranked by
+    phrase_tf desc, doc_id asc: ``batch_phrase_search`` over a batch of
+    one query, with the same ``source`` and ``prune`` arguments."""
+    return (
+        batch_phrase_search(
+            spark, source, [("q", list(terms))],
+            k=k, gap=gap, slop=slop, prune=prune,
         )
-        if tmode == "array":
-            deleted_bc = spark.sparkContext.broadcast(tpayload)
-        elif tmode == "df":
-            tombs_df = tpayload
-    postings = decode_postings(segments, deleted=deleted_bc)
-    if tombs_df is not None:
-        # Delete vector too big for the driver: apply it as a
-        # distributed anti-join on the decoded postings instead.
-        postings = postings.join(tombs_df, "doc_id", "left_anti")
-    return phrase_match(postings, terms, gap=gap, slop=slop).orderBy(
-        F.desc("phrase_tf"), "doc_id"
-    ).limit(k)
+        .orderBy("rank")
+        .select("doc_id", "phrase_tf", "match_starts")
+    )
 
 
 # Below this many queries the conjunctive gate is a broadcast
@@ -516,19 +484,19 @@ def batch_phrase_match(
     measured batch bottleneck):
 
     - heavy track: ONE groupBy(doc_id) pivots the batch terms' postings
-      into a per-doc term→positions map (exactly phrase_match's pivot,
-      deduplicated across queries — position arrays cross the wire
-      once, however many queries share a term);
+      into a per-doc term→positions map, deduplicated across queries
+      — position arrays cross the wire once, however many queries
+      share a term;
     - light track: the conjunctive gate runs WITHOUT positions —
       (term, doc_id) rows join the exploded distinct query terms and a
       count-match keeps (query_id, doc_id) pairs containing every term;
     - the gate pairs equi-join the per-doc maps (doc_id) + the query
       term arrays (broadcast), and the chain-match evaluates inline as
       an aggregate() fold over the TERMS array probing the map
-      (element_at) per step — same per-step candidate expressions as
-      phrase_match (map probe at slop=0, branching window filter
-      otherwise), no shuffle ever carries a position array tagged by
-      query. Repeated phrase terms re-probe their own map entry.
+      (element_at) per step — a map probe at slop=0, a branching
+      window filter (array_distinct over (head, end)) otherwise; no
+      shuffle ever carries a position array tagged by query. Repeated
+      phrase terms re-probe their own map entry.
 
     ``gate_mode``: 'bnlj' gates by a broadcast nested-loop
     map_contains_key probe (no gate shuffle — |candidate docs| x N

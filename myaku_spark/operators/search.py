@@ -15,11 +15,11 @@ reads over the searcher's file listing, with the same pushdown a Spark
 scan would get: hive partition pruning on ``bucket`` and parquet
 predicates on ``term`` / ``block_id`` / ``doc_id``. This is the
 reference's split (MongoDB ``$in`` lookups plus a Redis first-page
-cache) with parquet in place of MongoDB. Spark stays for work that is
-distributed by nature: builds, ``batch_search``, previews, phrase
-search (Catalyst higher-order-function matching, two jobs) and the
-df-mode tombstone semi-join for delete vectors larger than the driver
-holds.
+cache) with parquet in place of MongoDB. A phrase request reads the
+same store and matches positions with numpy (``phrase.phrase_topk``).
+Spark stays for work that is distributed by nature: builds,
+``batch_search``, ``batch_phrase_search``, previews and the df-mode
+tombstone semi-join for delete vectors larger than the driver holds.
 
 Two-phase segment access: the query plan reads block METADATA only
 (the blob column is not projected, so its pages stay unread), then
@@ -44,10 +44,11 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from myaku_spark.functions.widthnorm import normalize_char_width
 from myaku_spark.functions.xxh import term_bucket
-from myaku_spark.operators.segments import N_BUCKETS, SEGMENT_SCHEMA, term_rows
+from myaku_spark.operators.segments import N_BUCKETS, SEGMENT_SCHEMA
 from myaku_spark.operators.wand import (
     BM25Scorer,
     MyakuScorer,
+    TombstoneView,
     cursors_from_segments,
     exhaustive_topk,
     stats_for_bm25,
@@ -108,7 +109,8 @@ def _arrow_frame(spark: SparkSession, table: pa.Table) -> DataFrame:
 
 class SegmentBlobStore:
     """Block metadata up front, blobs on demand, all from one listing
-    of the segments dir taken on first use.
+    of the segments dir taken on first use. WAND and phrase requests
+    read through it alike.
 
     - ``ensure_terms`` reads metadata-only rows for the query terms: one
       pyarrow read with bucket partition pruning and a parquet ``term``
@@ -116,11 +118,9 @@ class SegmentBlobStore:
       read).
     - ``blob(term, group, block_id)`` fetches a FORWARD WINDOW of up to
       ``prefetch_blocks`` not-yet-cached blobs for the term starting at
-      the requested block (WAND cursors only move forward in doc_id, so
-      forward prefetch amortizes per-read latency without overshooting
-      into blocks a skip already passed).
-    - ``term_segments`` is the Spark relation over the same files, for
-      phrase search.
+      the requested block (WAND cursors and phrase windows only move
+      forward in doc_id, so forward prefetch amortizes per-read latency
+      without overshooting into blocks a skip already passed).
     - ``bytes_fetched`` / ``fetch_jobs`` count blob bytes and blob
       reads (one parquet read each; no Spark job), the driver-byte
       bound asserted by tests and the head-term bench entry.
@@ -160,7 +160,6 @@ class SegmentBlobStore:
         self.bytes_fetched = 0
         self.fetch_jobs = 0
         self._ds = None
-        self._df = None
 
     def _dataset(self):
         if self._ds is None:
@@ -180,22 +179,6 @@ class SegmentBlobStore:
         if block_ids is not None:
             where &= ds.field("block_id").isin(block_ids)
         return self._dataset().scanner(columns=columns, filter=where)
-
-    def term_segments(self, terms: list[str]) -> DataFrame:
-        """The Spark relation of ``terms``' segment rows (bucket pruning
-        + term pushdown), over the files the pyarrow reads scan — one
-        listing, so a phrase and a WAND request on one searcher read the
-        same snapshot."""
-        if self._df is None:
-            files = self._dataset().files
-            self._df = (
-                self.spark.read.schema(_SEGMENTS)
-                .option("basePath", self.seg_path)
-                .parquet(*files)
-                if files
-                else self.spark.createDataFrame([], _SEGMENTS)
-            )
-        return term_rows(self._df, terms)
 
     def ensure_terms(self, terms: list[str]) -> None:
         missing = [t for t in terms if t not in self.meta]
@@ -312,6 +295,24 @@ class SegmentBlobStore:
         if key not in self.blobs:
             raise KeyError(f"segment blob not found: {key}")
         return self.blobs[key]
+
+
+def _doc_windows(rows: list, size: int):
+    """``(window, lo, hi)``: a term's block metadata ``rows`` (sorted by
+    min_doc) cut into windows of ``size`` blocks and their doc range. A
+    block whose range overlaps a window's joins it, so the ranges are
+    disjoint and each posting of the term lies in exactly one."""
+    i = 0
+    while i < len(rows):
+        j = min(i + size, len(rows))
+        hi = max(r.max_doc for r in rows[i:j])
+        while j < len(rows) and rows[j].min_doc <= hi:
+            hi = max(hi, rows[j].max_doc)
+            j += 1
+        yield rows[i:j], rows[i].min_doc, hi
+        i = j
+
+
 class UserPageCache:
     """Per-user next-page cache (the reference's Redis NextPageCache,
     cache.py:316-459): each user holds TWO slots (forward/backward);
@@ -376,12 +377,11 @@ class IndexSearcher:
 
     Each component's file listing (segments, docs, term_stats) is taken
     once, on first use, and every later read of that component scans
-    it: the pyarrow reads of ``search`` and ``hydrate`` and the Spark
-    relation of ``search_phrase`` alike. An ``incremental_update``
-    appends ``group=G`` dirs in place, so a searcher that has already
-    served requests keeps answering from the groups (and the
-    tombstones, read at construction) it started with; a new searcher
-    sees the update."""
+    it: the pyarrow reads of ``search``, ``search_phrase`` and
+    ``hydrate`` alike. An ``incremental_update`` appends ``group=G``
+    dirs in place, so a searcher that has already served requests keeps
+    answering from the groups (and the tombstones, read at
+    construction) it started with; a new searcher sees the update."""
 
     def __init__(
         self,
@@ -412,7 +412,6 @@ class IndexSearcher:
         # entry, so a compaction publishing mid-construction or mid-query
         # can never mix versions for this searcher (old dirs stay until
         # GC).
-        from myaku_spark.operators.wand import TombstoneView
         from myaku_spark.plans import catalog
         from myaku_spark.plans.incremental import resolve_tombstones
 
@@ -438,7 +437,6 @@ class IndexSearcher:
             self._tombstones_df = tpayload
         else:
             self.deleted = None
-        self._deleted_bc = None  # lazily created, cached per searcher
         self._datasets: dict = {}
         self.store = SegmentBlobStore(
             spark,
@@ -459,9 +457,10 @@ class IndexSearcher:
             )
         else:
             self.page_cache = UserPageCache()
-        # Serializes WAND evaluation between the interactive path and
-        # the async next-page precompute worker (the store's caches are
-        # not concurrency-safe); RLock because the worker calls search().
+        # Serializes WAND and phrase evaluation between the interactive
+        # path and the async next-page precompute worker (the store's
+        # caches are not concurrency-safe); RLock because the worker
+        # calls search().
         self._lock = threading.RLock()
         self._precompute_threads: list[threading.Thread] = []
         if mode == "bm25":
@@ -519,49 +518,71 @@ class IndexSearcher:
         slop: int = 0,
     ) -> list[tuple[int, int, list[int]]]:
         """Exact-phrase (or slop-window proximity) top-k:
-        [(doc_id, phrase_tf, match_starts)], ranked by phrase_tf desc.
+        [(doc_id, phrase_tf, match_starts)], ranked by phrase_tf desc,
+        doc_id asc. gap=0 matches Japanese text (positions abut); gap=1
+        space-separated corpora.
 
-        Uses THIS searcher's catalog snapshot and tombstone vector (not
-        a fresh catalog read), so a concurrent compaction can never mix
-        versions between a term search and a phrase search on the same
-        searcher. gap=0 matches Japanese text (positions abut); gap=1
-        space-separated corpora."""
-        from myaku_spark.operators.phrase import (
-            decode_postings,
-            phrase_match,
-        )
+        Runs on the driver with no Spark job (df-mode tombstones aside):
+        the blob store reads the blocks and ``phrase.phrase_topk``
+        matches them. The rarest term's blocks are walked in doc order,
+        ``prefetch_blocks`` at a time; for each window only the other
+        terms' blocks overlapping its doc range are fetched, and the
+        window's top-k merges into the running one — the forward-window
+        rule WAND follows, so driver bytes stay bounded by a window, not
+        by posting-list size. Reads THIS searcher's snapshot and
+        tombstones, as ``search`` does."""
+        from myaku_spark.operators.codec import decode_blocks_batch
+        from myaku_spark.operators.phrase import phrase_topk, term_postings
 
         if isinstance(query, str):
             terms = [normalize_char_width(t) for t in query.split()]
         else:
             terms = [normalize_char_width(t) for t in query]
-        segments = self.store.term_segments(terms)
-        # one broadcast per SEARCHER, not per call (self.deleted is
-        # immutable by the snapshot contract) — repeated interactive
-        # phrase queries must not leak a broadcast each
-        if (
-            isinstance(self.deleted, np.ndarray)
-            and self._deleted_bc is None
-        ):
-            self._deleted_bc = self.spark.sparkContext.broadcast(
-                self.deleted
+        if not terms:
+            raise ValueError("phrase requires at least one term")
+        uniq = list(dict.fromkeys(terms))
+        top: list[tuple[int, int, list[int]]] = []
+        with self._lock:
+            self.store.meta_rows(uniq)
+            metas = {t: self.store.meta.get(t, []) for t in uniq}
+            if not all(metas.values()):
+                return top  # conjunctive: an absent term matches nothing
+            rare = min(
+                uniq, key=lambda t: (sum(r.n_postings for r in metas[t]), t)
             )
-        postings = decode_postings(segments, deleted=self._deleted_bc)
-        if self._tombstones_df is not None:
-            # df-mode delete vector: distributed anti-join, no driver set.
-            postings = postings.join(
-                self._tombstones_df, "doc_id", "left_anti"
-            )
-        rows = (
-            phrase_match(postings, terms, gap=gap, slop=slop)
-            .orderBy(F.desc("phrase_tf"), "doc_id")
-            .limit(k)
-            .collect()
-        )
-        return [
-            (int(r.doc_id), int(r.phrase_tf), list(r.match_starts))
-            for r in rows
-        ]
+            ranges = {  # each other term's block doc ranges
+                t: (
+                    np.array([r.min_doc for r in metas[t]], dtype=np.int64),
+                    np.array([r.max_doc for r in metas[t]], dtype=np.int64),
+                )
+                for t in uniq
+                if t != rare
+            }
+            for window, lo, hi in _doc_windows(
+                metas[rare], self.store.prefetch_blocks
+            ):
+                blocks = {rare: window}
+                for t, (min_doc, max_doc) in ranges.items():
+                    overlap = (min_doc <= hi) & (max_doc >= lo)
+                    blocks[t] = [metas[t][i] for i in np.flatnonzero(overlap)]
+                if not all(blocks.values()):
+                    continue
+                blobs = {
+                    t: [self.store.blob(t, r.group, r.block_id) for r in rows]
+                    for t, rows in blocks.items()
+                }
+                deleted = self.deleted  # read after the fetches fill a view
+                if isinstance(deleted, TombstoneView):
+                    deleted = deleted.array
+                postings = {
+                    t: term_postings(decode_blocks_batch(b), (lo, hi), deleted)
+                    for t, b in blobs.items()
+                }
+                top = sorted(
+                    top + phrase_topk(postings, terms, gap, slop, k),
+                    key=lambda hit: (-hit[1], hit[0]),
+                )[:k]
+        return top
 
     def search(
         self,

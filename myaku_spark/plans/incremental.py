@@ -206,12 +206,14 @@ def resolve_tombstones(
     """Size-guarded delete-vector access: ('none', None) when empty,
     ('array', sorted int64 ndarray) when the set is driver-sized, else
     ('df', DataFrame[doc_id]) — the count is the only driver-side
-    datum above the threshold. Serving paths dispatch on the mode:
-    arrays broadcast into the decode kernels exactly as before; df
-    mode applies the deletes distributively (postings anti-join on the
-    phrase path, binned-interval del_ids attach on the batch-WAND
-    path, per-fetch-window semi-joins on the interactive two-phase
-    path)."""
+    datum above the threshold. No mode runs a Spark job: the count
+    comes from parquet footers, the array is a pyarrow read and the
+    DataFrame has an explicit schema. Serving paths dispatch on the
+    mode: arrays feed the decode kernels; df mode applies the deletes
+    distributively (postings anti-join on the batch phrase path,
+    binned-interval del_ids attach on the batch-WAND path,
+    per-fetch-window semi-joins on the interactive WAND and phrase
+    paths)."""
     from myaku_spark.plans import catalog
 
     if max_driver_rows is None:  # late-bound so tests can tune the knob
@@ -220,8 +222,10 @@ def resolve_tombstones(
         path = catalog.path_of(index_dir, "tombstones")
     if not catalog.parquet_exists(path):
         return "none", None
-    df = spark.read.parquet(path).select("doc_id")
-    n = df.count()
+    import pyarrow.dataset as ds
+
+    files = ds.dataset(path, format="parquet")
+    n = files.count_rows()  # parquet footers: no data page is read
     if n == 0:
         return "none", None
     mode = "array" if n <= max_driver_rows else "df"
@@ -231,13 +235,10 @@ def resolve_tombstones(
         mode, n, TOMBSTONE_DRIVER_MAX, max_driver_rows,
     )
     if mode == "array":
-        arr = np.unique(
-            np.fromiter(
-                (r.doc_id for r in df.collect()), dtype=np.int64, count=n
-            )
-        )
-        return "array", arr
-    return "df", df
+        ids = files.to_table(columns=["doc_id"]).column("doc_id")
+        return "array", np.unique(ids.to_numpy().astype(np.int64))
+    # explicit schema: no inference job
+    return "df", spark.read.schema("doc_id long").parquet(path)
 
 
 def tombstone_block_patches(segs: DataFrame, tombs: DataFrame) -> DataFrame:

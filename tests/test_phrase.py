@@ -1,13 +1,21 @@
 """Positional phrase search: codec round-trip + adjacency semantics."""
 
+import random
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from myaku_spark.functions.tokenize import explode_whitespace_tokens
+from myaku_spark.operators.codec import (
+    decode_blocks_batch,
+    encode_blocks_batch,
+)
 from myaku_spark.operators.phrase import (
     decode_postings,
-    phrase_match,
     phrase_search,
+    phrase_topk,
+    term_postings,
 )
 from myaku_spark.operators.segments import build_segments
 
@@ -88,20 +96,26 @@ def test_phrase_rank_and_k(spark):
     ]
 
 
-def test_phrase_gap0_no_separator(spark):
+def test_phrase_gap0_no_separator():
     # Japanese-style adjacency: positions abut exactly (gap=0).
-    postings = spark.createDataFrame(
-        [
-            ("猫", 1, 1, [0], [1]),
-            ("好き", 1, 1, [1], [2]),   # 猫好き at 0..3
-            ("猫", 2, 1, [0], [1]),
-            ("好き", 2, 1, [5], [2]),   # not adjacent
-        ],
-        "term string, doc_id long, tf long, starts array<int>, lens array<int>",
+    def postings(rows):  # [(doc_id, starts, lens)] -> kernel arrays
+        return (
+            np.array([d for d, _, _ in rows]),
+            np.array([len(st) for _, st, _ in rows]),
+            np.array([x for _, st, _ in rows for x in st]),
+            np.array([x for _, _, ln in rows for x in ln]),
+        )
+
+    got = phrase_topk(
+        {
+            "猫": postings([(1, [0], [1]), (2, [0], [1])]),
+            "好き": postings([(1, [1], [2]),    # 猫好き at 0..3
+                              (2, [5], [2])]),  # not adjacent
+        },
+        ["猫", "好き"],
+        gap=0,
     )
-    got = {r.doc_id: list(r.match_starts)
-           for r in phrase_match(postings, ["猫", "好き"], gap=0).collect()}
-    assert got == {1: [0]}
+    assert got == [(1, 1, [0])]
 
 
 def test_decode_postings_roundtrip(spark):
@@ -187,8 +201,6 @@ def test_phrase_randomized_vs_twin(spark):
     """Seeded randomized sweep: small vocab forces heavy term repetition
     and overlapping candidates; every phrase length 2-4 must equal the
     pure-Python twin exactly."""
-    import random
-
     rng = random.Random(7)
     vocab = ["a", "bb", "c", "dd", "e"]
     docs = [
@@ -333,6 +345,26 @@ def test_searcher_phrase_api(spark, tmp_path):
     assert {(d_, t_) for d_, t_, _ in via_api} == via_op and via_api
 
 
+def _kernel_topk(segs, terms, gap, slop=0, k=10):
+    """{doc_id: (phrase_tf, match_starts)} of the interactive kernel
+    over ``segs``' blocks of ``terms``: a per-query evaluator whose
+    matching is independent of the batch plan's."""
+    blobs = {}
+    for r in (
+        segs.filter(F.col("term").isin(terms))
+        .orderBy("term", "block_id")
+        .collect()
+    ):
+        blobs.setdefault(r.term, []).append(r.blob)
+    postings = {
+        t: term_postings(decode_blocks_batch(b)) for t, b in blobs.items()
+    }
+    return {
+        doc: (tf, starts)
+        for doc, tf, starts in phrase_topk(postings, terms, gap, slop, k)
+    }
+
+
 def test_batch_phrase_equals_per_query(spark):
     from myaku_spark.operators.phrase import batch_phrase_search
 
@@ -344,10 +376,7 @@ def test_batch_phrase_equals_per_query(spark):
             r.phrase_tf, list(r.match_starts)
         )
     for qid, terms in queries:
-        single = {
-            r.doc_id: (r.phrase_tf, list(r.match_starts))
-            for r in phrase_search(spark, segs, terms, k=10, gap=1).collect()
-        }
+        single = _kernel_topk(segs, terms, gap=1, k=10)
         assert batch.get(qid, {}) == single, qid
 
 
@@ -364,12 +393,7 @@ def test_batch_phrase_slop_equals_per_query(spark):
             r.phrase_tf, list(r.match_starts)
         )
     for qid, terms in queries:
-        single = {
-            r.doc_id: (r.phrase_tf, list(r.match_starts))
-            for r in phrase_search(
-                spark, segs, terms, k=10, gap=1, slop=6
-            ).collect()
-        }
+        single = _kernel_topk(segs, terms, gap=1, slop=6, k=10)
         assert batch.get(qid, {}) == single, qid
 
 
@@ -398,13 +422,51 @@ def test_batch_phrase_plan_constant_in_n(spark):
     assert len(p64) <= int(len(p2) * 1.05) + 64
 
 
+def _doc_positions(text, gap):
+    """{term: [(start, len)]} of a space-separated doc whose tokens sit
+    ``gap`` chars apart."""
+    per = {}
+    off = 0
+    for w in text.split(" "):
+        per.setdefault(w, []).append((off, len(w)))
+        off += len(w) + gap
+    return per
+
+
+def _twin(per, terms, gap, slop):
+    """(phrase_tf, match_starts) of one doc ({term: [(start, len)]}): a
+    pure-Python positional chain that replicates the branching window
+    semantics independently."""
+    if any(t not in per for t in terms):
+        return (0, [])
+    cands = [(s, s + l) for s, l in per[terms[0]]]
+    for t in terms[1:]:
+        new = []
+        for head, end in cands:
+            for s, l in per[t]:
+                if end + gap <= s <= end + gap + slop:
+                    new.append((head, s + l))
+        if slop > 0:  # array_distinct semantics of the branch path
+            seen, ded = set(), []
+            for c in new:
+                if c not in seen:
+                    seen.add(c)
+                    ded.append(c)
+            new = ded
+        cands = new
+    heads, seen = [], set()
+    for h, _ in cands:
+        if h not in seen:
+            seen.add(h)
+            heads.append(h)
+    return (len(heads), heads)
+
+
 def test_batch_phrase_randomized_vs_python_twin(spark):
     # Property sweep: 40 random whitespace docs, 24 random phrase
     # queries (lengths 1-3, repeats allowed), gap=1 at slop 0 and 4 —
     # batch results must equal a pure-Python positional chain twin that
     # replicates the branching window semantics independently.
-    import random
-
     from myaku_spark.operators.phrase import batch_phrase_search
 
     rng = random.Random(42)
@@ -413,41 +475,6 @@ def test_batch_phrase_randomized_vs_python_twin(spark):
         (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(5, 20))))
         for i in range(40)
     ]
-
-    def doc_positions(text):
-        per = {}
-        off = 0
-        for w in text.split(" "):
-            per.setdefault(w, []).append((off, len(w)))
-            off += len(w) + 1
-        return per
-
-    def twin(text, terms, gap, slop):
-        per = doc_positions(text)
-        if any(t not in per for t in terms):
-            return (0, [])
-        cands = [(s, s + l) for s, l in per[terms[0]]]
-        for t in terms[1:]:
-            new = []
-            for head, end in cands:
-                for s, l in per[t]:
-                    if end + gap <= s <= end + gap + slop:
-                        new.append((head, s + l))
-            if slop > 0:  # array_distinct semantics of the branch path
-                seen, ded = set(), []
-                for c in new:
-                    if c not in seen:
-                        seen.add(c)
-                        ded.append(c)
-                new = ded
-            cands = new
-        heads, seen = [], set()
-        for h, _ in cands:
-            if h not in seen:
-                seen.add(h)
-                heads.append(h)
-        return (len(heads), heads)
-
     queries = [
         (f"q{i}", [rng.choice(vocab) for _ in range(rng.randint(1, 3))])
         for i in range(24)
@@ -464,10 +491,73 @@ def test_batch_phrase_randomized_vs_python_twin(spark):
         for qid, terms in queries:
             want = {}
             for doc_id, text in docs:
-                tf, heads = twin(text, terms, 1, slop)
+                tf, heads = _twin(_doc_positions(text, 1), terms, 1, slop)
                 if tf:
                     want[doc_id] = (tf, heads)
             assert got.get(qid, {}) == want, (slop, qid, terms)
+
+
+def _codec_postings(docs, gap):
+    """{term: term_postings(...)} for space-separated ``docs`` whose
+    tokens sit ``gap`` chars apart, through the block codec: each term's
+    postings are encoded as two blocks and decoded in one batch."""
+    per_doc = {d: _doc_positions(text, gap) for d, text in docs}
+    out = {}
+    for t in sorted({t for per in per_doc.values() for t in per}):
+        ids = sorted(d for d, per in per_doc.items() if t in per)
+        pos = [per_doc[d][t] for d in ids]
+        cuts = sorted({0, len(ids) // 2, len(ids)})
+        flat = [p for ps in pos for p in ps]
+        blobs, _ = encode_blocks_batch(
+            np.array(cuts),
+            np.array(ids, dtype=np.uint64),
+            np.array([len(ps) for ps in pos]),
+            np.zeros(len(ids), dtype=np.int64),
+            np.cumsum([0] + [len(ps) for ps in pos])[cuts],
+            np.array([st for st, _ in flat]),
+            np.array([ln for _, ln in flat]),
+        )
+        out[t] = term_postings(decode_blocks_batch(blobs))
+    return out
+
+
+@pytest.mark.parametrize("gap", [0, 1])
+def test_phrase_kernel_vs_python_twin(gap):
+    # The interactive kernel on decoded postings, no Spark: random docs
+    # over a small vocabulary (repeated and overlapping terms) with
+    # int64 doc ids past 32 bits, phrases of 1-4 terms plus an absent
+    # term, at slop 0 and 4, must equal the chain twin exactly — at
+    # every k, so phrase_tf ties break by doc_id.
+    rng = random.Random(17 + gap)
+    vocab = ["a", "bb", "c", "dd", "e"]
+    docs = [
+        ((1 << 40) + 7 * i,
+         " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 20))))
+        for i in range(40)
+    ]
+    postings = _codec_postings(docs, gap)
+    phrases = [["a", "bb", "a"], ["a", "a"], ["c"], ["a", "zz"]] + [
+        [rng.choice(vocab) for _ in range(rng.randint(1, 4))]
+        for _ in range(12)
+    ]
+    matched = 0
+    for slop in (0, 4):
+        for terms in phrases:
+            want = []
+            for doc_id, text in docs:
+                tf, heads = _twin(_doc_positions(text, gap), terms, gap, slop)
+                if tf:
+                    want.append((doc_id, tf, heads))
+            want.sort(key=lambda h: (-h[1], h[0]))
+            for k in (1, 3, 1000):
+                got = phrase_topk(postings, terms, gap, slop, k)
+                assert got == want[:k], (slop, terms, k)
+            matched += len(want) > 3
+    assert matched >= 20  # most phrases match in several docs
+    # empty input: no postings at all, or a term with zero postings
+    assert phrase_topk({}, ["a"], gap) == []
+    none = term_postings(decode_blocks_batch([]))
+    assert phrase_topk({"a": none, "bb": postings["bb"]}, ["a", "bb"]) == []
 
 
 def test_merge_intervals():

@@ -10,6 +10,7 @@ while WAND == exhaustive rank-identity still holds.
 import pytest
 from pyspark.sql import functions as F
 
+from myaku_spark.operators.phrase import batch_phrase_search, decode_postings
 from myaku_spark.operators.search import IndexSearcher, UserPageCache
 from myaku_spark.operators.segments import build_segments, write_segments
 from myaku_spark.plans.build_index import build_index
@@ -18,20 +19,24 @@ from myaku_spark.sources.pages import synth_pages_df
 
 @pytest.fixture(scope="module")
 def head_idx(spark, tmp_path_factory):
-    """A synthetic index with one head term (1000 docs, range-blocked)
-    and one rare term (1 doc), written in the on-disk index layout."""
+    """A synthetic index with one head term (1000 docs, range-blocked),
+    a second range-blocked term ``next`` that follows it in every third
+    doc, and one rare term (1 doc), written in the on-disk index
+    layout."""
     d = str(tmp_path_factory.mktemp("twophase"))
-    rows = [("head", i, 1, (i * 37) % 1000) for i in range(1000)]
-    rows.append(("rare", 500, 1, 999999))
+    rows = [("head", i, 1, (i * 37) % 1000, [0], [4]) for i in range(1000)]
+    rows += [("next", i, 1, 1, [4], [4]) for i in range(0, 1000, 3)]
+    rows.append(("rare", 500, 1, 999999, [9], [4]))
     postings = spark.createDataFrame(
-        rows, ["term", "doc_id", "tf", "score"]
+        rows,
+        "term string, doc_id long, tf long, score long, "
+        "starts array<int>, lens array<int>",
     )
     segs = build_segments(
         postings,
         payload_col="score",
         head_df_threshold=8,
         block_doc_range=64,
-        with_positions=False,
     )
     write_segments(segs, f"{d}/segments/group=0")
     spark.createDataFrame(
@@ -47,8 +52,9 @@ def test_wand_and_fetches_bounded_bytes(spark, head_idx):
     s.store.eager_postings = 0  # force the lazy head-term path
     hits = s.search(["head", "rare"], k=3, combine="and")
     assert [d for _, d in hits] == [500]
-    total = (
+    total = (  # the query terms' blobs only
         spark.read.parquet(f"{head_idx}/segments")
+        .filter(F.col("term").isin("head", "rare"))
         .agg(F.sum(F.length("blob")))
         .collect()[0][0]
     )
@@ -189,6 +195,88 @@ def test_interactive_request_runs_no_spark_job(
     assert all(len(rows) == 5 for rows in got)
     want = s.search(top[1:], k=5, combine="or", exhaustive=True)
     assert [(r.score, r.doc_id) for r in got[-1]] == want
+    # A phrase request runs on the same store: cold (fresh terms, whose
+    # metadata and blobs are read now) and warm, no Spark job either
+    # time, and the batch plan's answer both times.
+    occ = {}  # (doc, start) -> (term, end)
+    for r in decode_postings(spark.read.parquet(f"{d}/segments")).collect():
+        for st, ln in zip(r.starts, r.lens):
+            occ[(r.doc_id, st)] = (r.term, st + ln)
+    phrase = next(
+        [t, occ[(doc, end)][0]]
+        for (doc, _), (t, end) in sorted(occ.items())
+        if (doc, end) in occ and not {t, occ[(doc, end)][0]} & set(top)
+    )
+    want = [
+        (r.doc_id, r.phrase_tf, list(r.match_starts))
+        for r in _batch_phrase(spark, d, phrase, k=5)
+    ]
+    assert want
+    for _ in ("cold", "warm"):
+        hits = []
+        assert jobs_run_by(
+            lambda: hits.append(s.search_phrase(phrase, k=5))
+        ) == {}
+        assert hits == [want]
+
+
+def _batch_phrase(spark, index_dir, terms, k):
+    """``terms``' top-k rows from the batch phrase plan, in rank order."""
+    return (
+        batch_phrase_search(spark, index_dir, [("q", terms)], k=k)
+        .orderBy("rank")
+        .collect()
+    )
+
+
+def test_phrase_walks_rare_term_windows(
+    spark, head_idx, jobs_run_by, monkeypatch
+):
+    # The rarer phrase term ("next": every third doc, 16 range blocks)
+    # is walked prefetch_blocks blocks at a time, and each window reads
+    # only the "head" blocks overlapping its doc range: the request runs
+    # no Spark job and equals the batch plan at every k.
+    from myaku_spark.operators import phrase
+    from myaku_spark.operators.search import _doc_windows
+
+    s = IndexSearcher(spark, head_idx, mode="myaku")
+    s.store.prefetch_blocks = 2
+    s.store.eager_postings = 0  # force the lazy windowed path
+    s.store.ensure_terms(["head", "next"])
+    meta = {t: s.store.meta[t] for t in ("head", "next")}
+    windows = [hi for _, _, hi in _doc_windows(meta["next"], 2)]
+    assert len(windows) == 8  # 16 blocks of "next", 2 per window
+    held = []  # the blobs the store holds when each window is matched
+    kernel = phrase.phrase_topk
+
+    def recording(*args, **kwargs):
+        held.append({(t, b) for t, _, b in s.store.blobs})
+        return kernel(*args, **kwargs)
+
+    monkeypatch.setattr(phrase, "phrase_topk", recording)
+    got = {}
+    for k in (1000, 5):
+        hits = []
+        assert jobs_run_by(
+            lambda: hits.append(s.search_phrase(["head", "next"], k=k))
+        ) == {}
+        want = [
+            (r.doc_id, r.phrase_tf, list(r.match_starts))
+            for r in _batch_phrase(spark, head_idx, ["head", "next"], k)
+        ]
+        assert hits == [want]
+        got[k] = hits[0]
+    assert len(got[1000]) == 334 and got[5] == got[1000][:5]
+    # Both terms are blocked on the same 64-doc ranges, so when the cold
+    # request matches window i the store holds exactly the blocks of
+    # both terms that start at or before the window's last doc: nothing
+    # is fetched ahead of the window being matched.
+    assert len(held) == 2 * len(windows)
+    for hi, blocks in zip(windows, held):
+        assert blocks == {
+            (t, r.block_id) for t, rows in meta.items() for r in rows
+            if r.min_doc <= hi
+        }
 
 
 def test_user_page_cache_semantics():

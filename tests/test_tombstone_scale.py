@@ -105,6 +105,36 @@ def test_resolve_tombstones_logs_its_mode(
     assert f"TOMBSTONE_DRIVER_MAX={incr.TOMBSTONE_DRIVER_MAX}" in msgs[0]
 
 
+@pytest.mark.parametrize("mode", ["myaku", "bm25"])
+def test_array_mode_searcher_runs_no_spark_job(spark, tidx, jobs_run_by, mode):
+    # After incremental_update, building a searcher (the tombstone count
+    # from parquet footers, the array from a pyarrow read) and serving a
+    # phrase, cold and warm, run no Spark job; the phrase leaves out the
+    # tombstoned docs and equals the batch plan.
+    term = _top_term(spark, tidx)
+    want = [
+        (r.doc_id, r.phrase_tf, list(r.match_starts))
+        for r in batch_phrase_search(spark, tidx, [("p", [term])], k=50)
+        .orderBy("rank")
+        .collect()
+    ]
+    real_tombs = {t for t in load_tombstones(spark, tidx) if t < PAD_BASE}
+    assert want and len(real_tombs) == 3
+    searchers = []
+    assert jobs_run_by(
+        lambda: searchers.append(IndexSearcher(spark, tidx, mode=mode))
+    ) == {}
+    s = searchers[0]
+    assert len(s.deleted) == N_PAD + 3  # array mode
+    for _ in ("cold", "warm"):
+        hits = []
+        assert jobs_run_by(
+            lambda: hits.append(s.search_phrase([term], k=50))
+        ) == {}
+        assert hits == [want]
+    assert not {doc for doc, _, _ in want} & real_tombs
+
+
 def test_df_mode_serving_paths_identical_no_driver_set(
     spark, tidx, monkeypatch
 ):
