@@ -283,7 +283,8 @@ def main() -> None:
     ).count()
     timings["wand_batch_128q_prefilter"] = round(time.time() - t0, 3)
 
-    # 128 phrase queries in ONE constant-size plan (batch_phrase_match):
+    # 128 phrase queries in ONE constant-size plan (the phrase_topk
+    # kernel per query in applyInArrow):
     # 64 real top-bigram phrases + 64 unlikely pairs over the documents
     # corpus, evaluated against one decode of the union of their terms.
     from pyspark.sql import Window as W3

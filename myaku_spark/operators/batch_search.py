@@ -35,6 +35,10 @@ query, the price of perfect per-query locality (a term-at-a-time
 pre-score pass could trade that off, but loses conjunctive skipping).
 Tombstones ride a broadcast sorted array applied at block decode.
 
+The phrase batch (``phrase.batch_phrase_search``) shares this front,
+``_query_blocks``, and differs only in its runner: ``phrase_topk`` in
+place of WAND.
+
 Reference anchor: this is the Spark-native form of Myaku's per-term
 indexed query (datastore/index_search.py:207-248) lifted to query SETS,
 the shape the north rule's 10^12-doc batch evaluation needs.
@@ -59,7 +63,7 @@ from pyspark.sql.types import (
 )
 
 from myaku_spark.functions.widthnorm import normalize_char_width
-from myaku_spark.operators.segments import read_term_segments
+from myaku_spark.operators.segments import read_term_segments, term_rows
 from myaku_spark.session import local_frame
 
 log = logging.getLogger(__name__)
@@ -78,6 +82,24 @@ _SEG_COLS = [
     "term", "group", "block_id", "n_postings", "min_doc", "max_doc",
     "max_tf", "min_dl", "max_score", "blob",
 ]
+
+
+def _deleted_ids(table: pa.Table, deleted_bc):
+    """The sorted deleted doc ids a kernel drops from one query's rows:
+    the broadcast array, or, in df mode (a delete vector beyond driver
+    size), the per-block ``del_ids`` that arrived IN the rows via the
+    binned interval join (tombstone_block_patches), unioned over this
+    query's blocks."""
+    deleted = deleted_bc.value if deleted_bc is not None else None
+    if "del_ids" in table.column_names:
+        arrs = [
+            np.asarray(a, dtype=np.int64)
+            for a in table.column("del_ids").to_pylist()
+            if a
+        ]
+        if arrs:
+            deleted = np.unique(np.concatenate(arrs))
+    return deleted
 
 
 def _make_runner(k: int, combine: str, mode: str, deleted_bc, bm25_stats):
@@ -103,19 +125,7 @@ def _make_runner(k: int, combine: str, mode: str, deleted_bc, bm25_stats):
         # document can match (search.py:321 parity).
         if combine == "and" and present < n_terms:
             return empty
-        deleted = deleted_bc.value if deleted_bc is not None else None
-        if "del_ids" in table.column_names:
-            # df-mode tombstones (delete vector beyond driver size):
-            # per-block deleted ids arrived IN the rows via the binned
-            # interval join (tombstone_block_patches) — union this
-            # query's slices into the sorted array the cursors expect.
-            arrs = [
-                np.asarray(a, dtype=np.int64)
-                for a in table.column("del_ids").to_pylist()
-                if a
-            ]
-            if arrs:
-                deleted = np.unique(np.concatenate(arrs))
+        deleted = _deleted_ids(table, deleted_bc)
         if mode == "myaku":
             scorer_for_term = lambda term: MyakuScorer()  # noqa: E731
         else:
@@ -251,6 +261,85 @@ def _auto_prefilter(segments_path: str) -> bool:
     return on
 
 
+def _query_blocks(
+    spark: SparkSession, source, paths, queries, combine: str, prefilter_and
+):
+    """The shared front of both batches: ``(rows, terms, deleted_bc)``,
+    where ``rows`` are each query's candidate segment blocks, laid out
+    for a per-query ``groupBy("query_id").applyInArrow`` kernel that
+    reads its deletes through ``_deleted_ids(table, deleted_bc)``.
+    ``rows`` is None when the batch names no term.
+
+    ``source`` is an index dir with its ``catalog.resolve`` ``paths``,
+    or a DataFrame of segment rows with ``paths`` None (no tombstones;
+    not prefiltered). ``queries``: list[(query_id,
+    [terms])], already width-normalized, or a DataFrame with columns
+    (query_id string, terms array<string>). ``terms`` is the batch's
+    distinct term list."""
+    from myaku_spark.plans.incremental import (
+        resolve_tombstones,
+        tombstone_block_patches,
+    )
+
+    if paths is None:
+        prefilter_and = False
+    elif prefilter_and == "auto":
+        prefilter_and = _auto_prefilter(paths["segments"])
+    terms: list[str] | None = None
+    if not isinstance(queries, DataFrame):
+        # List input: the distinct term set is already driver-local —
+        # no Spark job needed to recover it (the DataFrame path below
+        # pays one collect). The Arrow-built frame is a LocalRelation:
+        # its broadcast reads it in one JVM task, not one Python-worker
+        # task per core.
+        terms = sorted({t for _, ts in queries for t in ts})
+        queries = local_frame(
+            spark, queries, "query_id string, terms array<string>"
+        ).coalesce(1)
+    qterms = queries.select(
+        "query_id",
+        F.size(F.array_distinct("terms")).alias("n_terms"),
+        F.explode(F.array_distinct("terms")).alias("term"),
+    )
+    # Driver-side term list for bucket partition pruning (batch term sets
+    # are driver-sized by construction; the segment rows are not).
+    if terms is None:
+        terms = [r.term for r in qterms.select("term").distinct().collect()]
+    if not terms:
+        return None, terms, None
+    if paths is None:
+        rows = term_rows(source, terms).join(F.broadcast(qterms), "term")
+    else:
+        rows = _joined_blocks(
+            spark, paths, qterms, terms, combine, prefilter_and
+        )
+
+    deleted_bc = None
+    if paths is not None:
+        tmode, tpayload = resolve_tombstones(
+            spark, source, path=paths["tombstones"]
+        )
+        if tmode == "array":
+            deleted_bc = spark.sparkContext.broadcast(tpayload)
+        elif tmode == "df":
+            # Distributed delete-vector application: per-block deleted-id
+            # arrays ride the joined rows (binned interval join keyed by
+            # block), so the kernels see exactly the deletes their blocks
+            # can contain — the vector itself never leaves the executors.
+            seg_meta = read_term_segments(
+                spark, paths["segments"], terms
+            ).select("group", "bucket", "term", "block_id", "min_doc", "max_doc")
+            patches = tombstone_block_patches(seg_meta, tpayload).drop(
+                "bucket"
+            )
+            rows = rows.join(patches, ["group", "term", "block_id"], "left")
+    sc = spark.sparkContext
+    if sc.master.startswith("local"):
+        # One kernel task per core: see the module docstring.
+        rows = rows.repartition(sc.defaultParallelism, "query_id")
+    return rows, terms, deleted_bc
+
+
 def batch_search(
     spark: SparkSession,
     index_dir: str,
@@ -271,60 +360,18 @@ def batch_search(
     enough that the avoided blob shuffle beats the prefilter's fixed
     stage cost."""
     from myaku_spark.plans import catalog
-    from myaku_spark.plans.incremental import resolve_tombstones
 
     _, paths = catalog.resolve(index_dir)
-    if prefilter_and == "auto":
-        prefilter_and = _auto_prefilter(paths["segments"])
-    terms: list[str] | None = None
     if not isinstance(queries, DataFrame):
-        qlist = [
+        queries = [
             (str(qid), [normalize_char_width(t) for t in terms])
             for qid, terms in queries
         ]
-        # List input: the distinct term set is already driver-local —
-        # no Spark job needed to recover it (the DataFrame path below
-        # pays one collect). The Arrow-built frame is a LocalRelation:
-        # its broadcast reads it in one JVM task, not one Python-worker
-        # task per core.
-        terms = sorted({t for _, ts in qlist for t in ts})
-        queries = local_frame(
-            spark, qlist, "query_id string, terms array<string>"
-        ).coalesce(1)
-    qterms = queries.select(
-        "query_id",
-        F.size(F.array_distinct("terms")).alias("n_terms"),
-        F.explode(F.array_distinct("terms")).alias("term"),
+    rows, terms, deleted_bc = _query_blocks(
+        spark, index_dir, paths, queries, combine, prefilter_and
     )
-    # Driver-side term list for bucket partition pruning (batch term sets
-    # are driver-sized by construction; the segment rows are not).
-    if terms is None:
-        terms = [r.term for r in qterms.select("term").distinct().collect()]
-    if not terms:
+    if rows is None:
         return local_frame(spark, [], BATCH_RESULT_SCHEMA)
-    joined = _joined_blocks(
-        spark, paths, qterms, terms, combine, prefilter_and
-    )
-
-    tmode, tpayload = resolve_tombstones(
-        spark, index_dir, path=paths["tombstones"]
-    )
-    deleted_bc = None
-    if tmode == "array":
-        deleted_bc = spark.sparkContext.broadcast(tpayload)
-    elif tmode == "df":
-        # Distributed delete-vector application: per-block deleted-id
-        # arrays ride the joined rows (binned interval join keyed by
-        # block), so the WAND kernels see exactly the deletes their
-        # blocks can contain — the vector itself never leaves the
-        # executors.
-        from myaku_spark.plans.incremental import tombstone_block_patches
-
-        seg_meta = read_term_segments(spark, paths["segments"], terms).select(
-            "group", "bucket", "term", "block_id", "min_doc", "max_doc"
-        )
-        patches = tombstone_block_patches(seg_meta, tpayload).drop("bucket")
-        joined = joined.join(patches, ["group", "term", "block_id"], "left")
     bm25_stats = None
     if mode == "bm25":
         r = spark.read.parquet(paths["corpus_stats"]).collect()[0]
@@ -340,11 +387,7 @@ def batch_search(
             float(r.avgdl),
             {x.term: int(x.df) for x in df_rows},
         )
-    sc = spark.sparkContext
-    if sc.master.startswith("local"):
-        # One WAND task per core: see the module docstring.
-        joined = joined.repartition(sc.defaultParallelism, "query_id")
-    return joined.groupBy("query_id").applyInArrow(
+    return rows.groupBy("query_id").applyInArrow(
         _make_runner(k, combine, mode, deleted_bc, bm25_stats),
         BATCH_RESULT_SCHEMA,
     )

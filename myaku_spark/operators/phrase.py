@@ -9,34 +9,33 @@ space-separated corpora, 0 for Japanese text, mirroring how the
 reference's found-lexical-item positions are raw char offsets,
 myaku/datatypes.py ArticleTextPosition).
 
-Two evaluators share those semantics:
+One evaluator, ``phrase_topk``: numpy over the decoded blocks of the
+phrase's terms (``codec.decode_blocks_batch`` then ``term_postings``).
+Positions are keyed by (doc rank, start) and each chain step is a
+``searchsorted`` probe, the vectorized block intersection of the
+columnar inverted-index literature instead of a row-at-a-time match.
+It runs in two places:
 
-- ``phrase_topk``, the interactive kernel: numpy on the driver over
-  decoded blocks. ``IndexSearcher.search_phrase`` feeds it the blocks
-  its blob store reads, one doc-range window at a time, so an
-  interactive phrase runs no Spark job. Positions are keyed by (doc
-  rank, start) and each chain step is a ``searchsorted`` probe, the
-  vectorized block intersection of the columnar inverted-index
-  literature instead of a row-at-a-time match.
-- ``batch_phrase_match``, the batch plan: many queries in one Spark
-  plan whose size is constant in the number of queries. Segment reads
-  prune by bucket partition + parquet term pushdown, block decode is
-  one mapInArrow pass and the chain-match is Catalyst higher-order
-  functions — no Python touches a position after decode.
-  ``phrase_search`` is a batch of one.
+- ``IndexSearcher.search_phrase``, on the driver: the searcher's blob
+  store reads the blocks one doc-range window at a time, so an
+  interactive phrase runs no Spark job.
+- ``batch_phrase_search``, in Spark: the batch front ``batch_search``
+  uses (explode (query_id, term), join the term-pruned segment blocks,
+  repartition by query_id) feeds each query's blocks to the kernel in
+  ``groupBy("query_id").applyInArrow``. ``phrase_search`` is a batch
+  of one.
 """
 
 from __future__ import annotations
 
-import logging
-
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
+from myaku_spark.functions.widthnorm import normalize_char_width
 from myaku_spark.session import local_frame
-
-log = logging.getLogger(__name__)
 
 POSTINGS_SCHEMA = (
     "term string, doc_id long, tf long, starts array<int>, lens array<int>, "
@@ -51,23 +50,17 @@ def _positions_per_posting(dec: dict) -> np.ndarray:
     return np.where(np.repeat(has_pos, dec["n_per"]), dec["tfs"], 0)
 
 
-def decode_postings(segments: DataFrame, deleted=None) -> DataFrame:
+def decode_postings(segments: DataFrame) -> DataFrame:
     """Segment block rows → (term, doc_id, tf, starts, lens, payload)
     postings.
 
-    ``deleted``: optional broadcast of a SORTED int64 doc_id array;
-    tombstoned docs are dropped with a vectorized np.isin at decode.
-
     mapInArrow kernel with NO per-posting Python loop: the codec hands
-    back flat position arrays, tombstone filtering gathers them with a
-    repeat-mask, and the output position lists are Arrow ListArrays
-    assembled directly from numpy offsets — the decode-side mirror of
-    segments._encode_rows. Python touches one object per BLOCK, never
-    per posting or position."""
+    back flat position arrays, and the output position lists are Arrow
+    ListArrays assembled directly from numpy offsets — the decode-side
+    mirror of segments._encode_rows. Python touches one object per
+    BLOCK, never per posting or position."""
 
     def gen(batches):
-        import pyarrow as pa
-
         from myaku_spark.operators.codec import decode_blocks_batch
 
         out_schema = pa.schema(
@@ -88,40 +81,25 @@ def decode_postings(segments: DataFrame, deleted=None) -> DataFrame:
                 continue
             # One vectorized decode for the whole batch of blocks.
             dec = decode_blocks_batch(blobs)
-            n_per = dec["n_per"]
-            ids = dec["doc_ids"]
-            tfs = dec["tfs"]
-            pays = dec["scores"]
-            fs = dec["pos_starts"]
-            fl = dec["pos_lens"]
             ptf = _positions_per_posting(dec)
-            term_rep = np.repeat(
-                np.asarray(terms, dtype=object), n_per
-            )
-            if deleted is not None and deleted.value.size:
-                keep = ~np.isin(ids, deleted.value, assume_unique=False)
-                fmask = np.repeat(keep, ptf)
-                fs, fl = fs[fmask], fl[fmask]
-                ids, tfs, ptf = ids[keep], tfs[keep], ptf[keep]
-                pays = pays[keep]
-                term_rep = term_rep[keep]
-            if ids.size == 0:
-                continue
             offsets = pa.array(
                 np.concatenate(([0], np.cumsum(ptf))).astype(np.int32)
             )
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(term_rep, type=pa.string()),
-                    pa.array(ids),
-                    pa.array(tfs),
+                    pa.array(
+                        np.repeat(np.asarray(terms, dtype=object), dec["n_per"]),
+                        type=pa.string(),
+                    ),
+                    pa.array(dec["doc_ids"]),
+                    pa.array(dec["tfs"]),
                     pa.ListArray.from_arrays(
-                        offsets, pa.array(fs.astype(np.int32))
+                        offsets, pa.array(dec["pos_starts"].astype(np.int32))
                     ),
                     pa.ListArray.from_arrays(
-                        offsets, pa.array(fl.astype(np.int32))
+                        offsets, pa.array(dec["pos_lens"].astype(np.int32))
                     ),
-                    pa.array(pays),
+                    pa.array(dec["scores"]),
                 ],
                 schema=out_schema,
             )
@@ -158,10 +136,9 @@ def phrase_topk(
 ) -> list[tuple[int, int, list[int]]]:
     """Top-k ``[(doc_id, phrase_tf, match_starts)]`` for the phrase
     ``terms`` (at least one) over ``postings`` ({term: the arrays of
-    :func:`term_postings`}), ranked by phrase_tf desc, doc_id asc. The
-    interactive evaluator: numpy on the driver, no Spark.
+    :func:`term_postings`}), ranked by phrase_tf desc, doc_id asc.
 
-    Semantics are ``batch_phrase_match``'s: every distinct term must
+    Semantics: every distinct term must
     occur in the doc; the next term starts at ``end + gap`` (slop 0) or
     anywhere in ``[end + gap, end + gap + slop]``, in which case chains
     branch over every occurrence in the window and equal (head, end)
@@ -240,203 +217,6 @@ def phrase_topk(
     ]
 
 
-# Skip range pruning when the rarest phrase term itself has more blocks
-# than this — the ranges stop being driver-sized and the prune stops
-# buying anything (an all-head-term phrase intersects everywhere).
-MAX_RANGE_BLOCKS = 4096
-# Driver budget for the union of all queries' rare-term block ranges in
-# a batch (metadata rows, ~24 B each). Queries are pruned cheapest-rare-
-# term-first until the budget runs out; the rest keep all their blocks.
-MAX_TOTAL_RANGES = 262_144
-# Below this on-disk segment footprint, decoding everything is cheaper
-# than what the prune adds (two metadata collects + a broadcast range
-# semi-join in the plan): the prune exists to keep the DECODE from
-# scaling with full posting lists, so when the whole index is already
-# small the metadata passes are pure overhead. Same auto pattern as
-# batch_search.PREFILTER_MIN_SEGMENT_BYTES, with a lower crossover —
-# the phrase prune avoids decode+match CPU, not a blob shuffle.
-# Resolved only for index-dir sources (local dir size probe, no Spark
-# job); DataFrame sources can't be probed cheaply and assume large.
-PRUNE_MIN_SEGMENT_BYTES = 16 * 1024 * 1024
-# Post-stats guard (applies to every source): once the per-term stats
-# are in hand, skip the ranges collect + broadcast range join when the
-# batch's total posting volume is already below the decode cost the
-# prune could save. Measured on the 128-query bench batch: 116k
-# postings at sf0.1 (prune loses ~20% qps), 929k at sf1 (prune wins
-# 1.75x) — the guard sits at the geometric middle.
-PRUNE_MIN_POSTINGS = 300_000
-
-
-def _merge_intervals(ivs: list[tuple[int, int]]) -> list[tuple[int, int]]:
-    """Union of [lo, hi] intervals — fewer broadcast rows, same cover."""
-    out: list[list[int]] = []
-    for lo, hi in sorted(ivs):
-        if out and lo <= out[-1][1] + 1:
-            if hi > out[-1][1]:
-                out[-1][1] = hi
-        else:
-            out.append([lo, hi])
-    return [(a, b) for a, b in out]
-
-
-def _prune_blocks_for_queries(
-    segments: DataFrame,
-    queries: list[tuple[str, list[str]]],
-    min_postings: int | None = None,
-) -> DataFrame:
-    """Per-query conjunctive block prune (r4 verdict #1 — the measured
-    batch-phrase scale-killer): any doc matching query q appears in q's
-    RAREST term's postings, so blocks of q's other terms overlapping
-    none of the rare term's block ranges cannot contribute to q. A
-    block survives iff SOME query using its term still needs it, so the
-    shared decode covers exactly the union of the queries'
-    intersection neighborhoods — not the union of full posting lists
-    (measured 4.3x qps loss at 10x data without this).
-
-    Driver work is metadata-only and budgeted: one (term → postings,
-    blocks) aggregate (≤ |distinct terms| rows), the rare terms' block
-    ranges (≤ MAX_TOTAL_RANGES rows, cheapest queries first), merged
-    into per-term interval unions driver-side. Blocks prune via ONE
-    broadcast range semi-join — plan size constant in the number of
-    queries. Queries over the budget (or whose rare term exceeds
-    MAX_RANGE_BLOCKS) keep all their terms' blocks; queries with a
-    term entirely absent from the index contribute nothing (conjunctive
-    contract: they cannot match).
-
-    ``min_postings`` (default PRUNE_MIN_POSTINGS) short-circuits to
-    the unpruned segments when the batch's total posting volume is
-    already below it — there, decode-all beats the prune's remaining
-    stages. Callers forcing the prune (prune=True at the search entry
-    points) pass 0, which also restores the absent-term and keep_all
-    behaviors unconditionally."""
-    stats = {
-        r.term: (int(r.tp), int(r.nb))
-        for r in segments.groupBy("term").agg(
-            F.sum("n_postings").alias("tp"), F.count(F.lit(1)).alias("nb")
-        ).collect()
-    }
-    if min_postings is None:
-        min_postings = PRUNE_MIN_POSTINGS
-    if sum(tp for tp, _ in stats.values()) <= min_postings:
-        return segments  # decode-all beats the prune's remaining stages
-    keep_all: set[str] = set()
-    # query terms keyed by their rare term, cheapest rare term first so
-    # the range budget prunes as many queries as possible.
-    prunable: list[tuple[str, list[str]]] = []  # (rare, terms)
-    for _qid, terms in queries:
-        terms = list(dict.fromkeys(terms))
-        if any(t not in stats for t in terms):
-            continue  # query can't match — needs no blocks at all
-        rare = min(terms, key=lambda t: (stats[t][0], t))
-        if len(terms) < 2 or stats[rare][1] > MAX_RANGE_BLOCKS:
-            keep_all.update(terms)
-        else:
-            prunable.append((rare, terms))
-    prunable.sort(key=lambda rt: stats[rt[0]][1])
-    budget = MAX_TOTAL_RANGES
-    rare_for: dict[str, list[str]] = {}  # rare term → terms to cover
-    for rare, terms in prunable:
-        nb = stats[rare][1]
-        if rare not in rare_for:
-            if budget - nb < 0:
-                keep_all.update(terms)
-                continue
-            budget -= nb
-            rare_for[rare] = []
-        rare_for[rare].extend(terms)
-    if not rare_for:
-        if keep_all:
-            return segments.filter(F.col("term").isin(sorted(keep_all)))
-        return segments.limit(0) if queries else segments
-    ranges = (
-        segments.filter(F.col("term").isin(sorted(rare_for)))
-        .select("term", "min_doc", "max_doc")
-        .collect()
-    )
-    by_rare: dict[str, list[tuple[int, int]]] = {}
-    for r in ranges:
-        by_rare.setdefault(r.term, []).append((int(r.min_doc), int(r.max_doc)))
-    per_term: dict[str, list[tuple[int, int]]] = {}
-    for rare, terms in rare_for.items():
-        for t in set(terms) - keep_all:
-            per_term.setdefault(t, []).extend(by_rare.get(rare, []))
-    rows = [
-        (t, lo, hi)
-        for t, ivs in per_term.items()
-        for lo, hi in _merge_intervals(ivs)
-    ]
-    spark = segments.sparkSession
-    ranges_df = spark.createDataFrame(
-        rows, "k_term string, r_min long, r_max long"
-    )
-    pruned = segments.filter(
-        ~F.col("term").isin(sorted(keep_all)) if keep_all else F.lit(True)
-    ).join(
-        F.broadcast(ranges_df),
-        (F.col("term") == F.col("k_term"))
-        & (F.col("min_doc") <= F.col("r_max"))
-        & (F.col("max_doc") >= F.col("r_min")),
-        "leftsemi",
-    )
-    if keep_all:
-        pruned = segments.filter(
-            F.col("term").isin(sorted(keep_all))
-        ).unionByName(pruned)
-    return pruned
-
-
-def _resolve_prune(
-    prune, segments_path: str | None, segments=None
-) -> bool:
-    """``prune="auto"`` → prune only when the segment footprint clears
-    PRUNE_MIN_SEGMENT_BYTES (same probe as batch_search's prefilter
-    auto — no Spark job). DataFrame sources (no path) are sized from
-    Catalyst plan statistics (exact for cached inputs, scan-size
-    estimates otherwise — still no job); when stats are unavailable
-    (e.g. Spark Connect has no ``_jdf``) they assume large: at real
-    cluster scale the prune always pays, and below the crossover the
-    post-stats PRUNE_MIN_POSTINGS guard still short-circuits. Logs the
-    auto decision and the size it measured."""
-    if prune != "auto":
-        return bool(prune)
-    seen = None
-    if segments_path is not None:
-        from myaku_spark.operators.batch_search import _segment_bytes
-
-        measured = "segment footprint"
-        unknown = "not a local dir"
-        seen = _segment_bytes(segments_path, PRUNE_MIN_SEGMENT_BYTES)
-    elif segments is not None:
-        measured = "plan size"
-        unknown = "no plan statistics"
-        try:
-            seen = int(
-                segments._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        except Exception as e:  # non-py4j sessions have no _jdf
-            log.warning(
-                "phrase prune=auto: plan statistics unavailable (%r); "
-                "assume large and prune",
-                e,
-            )
-    else:
-        measured, unknown = "source", "nothing to size"
-    on = seen is None or seen >= PRUNE_MIN_SEGMENT_BYTES
-    log.info(
-        "phrase prune=auto -> %s: %s %s against "
-        "PRUNE_MIN_SEGMENT_BYTES=%d B",
-        on,
-        measured,
-        f"unknown ({unknown}; assume large)" if seen is None
-        else f"{'>= ' if on else ''}{seen} B",
-        PRUNE_MIN_SEGMENT_BYTES,
-    )
-    return on
-
-
 def phrase_search(
     spark: SparkSession,
     source,
@@ -444,199 +224,56 @@ def phrase_search(
     k: int = 10,
     gap: int = 0,
     slop: int = 0,
-    prune="auto",
 ) -> DataFrame:
     """Top-k (doc_id, phrase_tf, match_starts) for one phrase, ranked by
     phrase_tf desc, doc_id asc: ``batch_phrase_search`` over a batch of
-    one query, with the same ``source`` and ``prune`` arguments."""
+    one query, with the same ``source`` argument."""
     return (
         batch_phrase_search(
-            spark, source, [("q", list(terms))],
-            k=k, gap=gap, slop=slop, prune=prune,
+            spark, source, [("q", list(terms))], k=k, gap=gap, slop=slop
         )
         .orderBy("rank")
         .select("doc_id", "phrase_tf", "match_starts")
     )
 
 
-# Below this many queries the conjunctive gate is a broadcast
-# nested-loop containment probe over the per-doc term maps (zero extra
-# shuffle, |candidate docs| x N cheap JVM evals); above it the
-# equi-join + count gate wins (its shuffle is Σ df tiny rows,
-# independent of N x corpus).
-BNLJ_GATE_MAX_QUERIES = 512
+def _phrase_runner(phrases: dict, k, gap, slop, deleted_bc, schema):
+    """applyInArrow kernel: one query's joined segment block rows →
+    its top-k, decoded per term and matched by ``phrase_topk``.
+    ``phrases``: {query_id: terms in phrase order, repeats kept}."""
 
+    def run(table: pa.Table) -> pa.Table:
+        # Imported on the worker: a closure over this module's globals
+        # would pickle whatever they hold on the driver at call time.
+        from myaku_spark.operators.batch_search import _deleted_ids
+        from myaku_spark.operators.codec import decode_blocks_batch
+        from myaku_spark.operators.phrase import phrase_topk, term_postings
 
-def batch_phrase_match(
-    postings: DataFrame,
-    queries_df: DataFrame,
-    gap: int = 0,
-    slop: int = 0,
-    gate_mode: str = "auto",
-    n_queries: int | None = None,
-) -> DataFrame:
-    """(query_id, doc_id, phrase_tf, match_starts) for EVERY query in
-    one plan whose size is constant in the number of queries.
-
-    ``queries_df``: (query_id string, terms array<string>). Two-track
-    shape (r5 — the r4 single-track version shuffled each posting's
-    position arrays once PER QUERY through a collect_list group, the
-    measured batch bottleneck):
-
-    - heavy track: ONE groupBy(doc_id) pivots the batch terms' postings
-      into a per-doc term→positions map, deduplicated across queries
-      — position arrays cross the wire once, however many queries
-      share a term;
-    - light track: the conjunctive gate runs WITHOUT positions —
-      (term, doc_id) rows join the exploded distinct query terms and a
-      count-match keeps (query_id, doc_id) pairs containing every term;
-    - the gate pairs equi-join the per-doc maps (doc_id) + the query
-      term arrays (broadcast), and the chain-match evaluates inline as
-      an aggregate() fold over the TERMS array probing the map
-      (element_at) per step — a map probe at slop=0, a branching
-      window filter (array_distinct over (head, end)) otherwise; no
-      shuffle ever carries a position array tagged by query. Repeated
-      phrase terms re-probe their own map entry.
-
-    ``gate_mode``: 'bnlj' gates by a broadcast nested-loop
-    map_contains_key probe (no gate shuffle — |candidate docs| x N
-    condition evals); 'equi' by the exploded-term equi-join + count
-    match (shuffles Σ df light rows — N-independent); 'auto' picks
-    bnlj for batches ≤ BNLJ_GATE_MAX_QUERIES (``n_queries`` hint
-    avoids the count() action when the caller knows the batch size;
-    the hint is a PRE-filter upper bound — when the hint exceeds the
-    threshold but the post-filter batch would not, the equi gate runs
-    where bnlj would have: same rows, one avoidable shuffle; pass no
-    hint to have the gate count the filtered batch exactly).
-    Both gates are result-identical (tested). Queries with an empty
-    terms array are dropped up front: the bnlj containment gate is
-    vacuously true for them (every doc matches) and the chain fold's
-    slice(terms, 2, size-1) then throws at runtime, failing the whole
-    batch — whereas the equi gate merely produced no rows. Uniform
-    no-rows semantics on both paths."""
-    queries_df = queries_df.filter(F.size("terms") >= 1)
-    if gate_mode == "auto":
-        if n_queries is None:
-            n_queries = queries_df.count()
-        gate_mode = (
-            "bnlj" if n_queries <= BNLJ_GATE_MAX_QUERIES else "equi"
+        qid = table.column("query_id")[0].as_py()
+        deleted = _deleted_ids(table, deleted_bc)
+        blobs: dict[str, list[bytes]] = {}
+        for t, b in zip(
+            table.column("term").to_pylist(), table.column("blob").to_pylist()
+        ):
+            blobs.setdefault(t, []).append(b)
+        postings = {
+            t: term_postings(decode_blocks_batch(b), None, deleted)
+            for t, b in blobs.items()
+        }
+        # A term with no blocks leaves it out of ``postings``: no rows.
+        top = phrase_topk(postings, phrases[qid], gap, slop, k)
+        return pa.table(
+            [
+                [qid] * len(top),
+                list(range(1, len(top) + 1)),
+                [d for d, _, _ in top],
+                [tf for _, tf, _ in top],
+                [starts for _, _, starts in top],
+            ],
+            schema=schema,
         )
-    tm = postings.groupBy("doc_id").agg(
-        F.map_from_entries(
-            F.collect_list(
-                F.struct(
-                    F.col("term"),
-                    F.struct(
-                        F.col("starts").alias("starts"),
-                        F.col("lens").alias("lens"),
-                    ).alias("pos"),
-                )
-            )
-        ).alias("tm")
-    )
-    if gate_mode == "bnlj":
-        cand = tm.join(
-            F.broadcast(queries_df.select("query_id", "terms")),
-            F.forall(
-                F.col("terms"),
-                lambda t: F.map_contains_key(F.col("tm"), t),
-            ),
-        )
-    else:
-        qx = queries_df.select(
-            "query_id",
-            F.size(F.array_distinct("terms")).alias("n_distinct"),
-            F.explode(F.array_distinct("terms")).alias("term"),
-        )
-        gate = (
-            postings.select("term", "doc_id")
-            .join(F.broadcast(qx), "term")
-            .groupBy("query_id", "doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_hit"),
-                F.max("n_distinct").alias("n_distinct"),
-            )
-            .filter(F.col("n_hit") == F.col("n_distinct"))
-            .select("query_id", "doc_id")
-        )
-        cand = gate.join(tm, "doc_id").join(
-            F.broadcast(queries_df.select("query_id", "terms")), "query_id"
-        )
-    t0 = F.element_at(F.col("tm"), F.element_at(F.col("terms"), 1))
-    init = F.zip_with(
-        t0.getField("starts"),
-        t0.getField("lens"),
-        lambda a, b: F.struct(a.alias("head"), (a + b).alias("end")),
-    )
-    rest = F.expr("slice(terms, 2, size(terms) - 1)")
-    if slop == 0:
 
-        def step(acc, t):
-            e = F.element_at(F.col("tm"), t)
-            pm = F.map_from_arrays(e.getField("starts"), e.getField("lens"))
-            return F.filter(
-                F.transform(
-                    acc,
-                    lambda c: F.struct(
-                        c.getField("head").alias("head"),
-                        (
-                            c.getField("end")
-                            + F.lit(gap)
-                            + F.try_element_at(
-                                pm, c.getField("end") + F.lit(gap)
-                            )
-                        ).alias("end"),
-                    ),
-                ),
-                lambda c: c.getField("end").isNotNull(),
-            )
-
-    else:
-
-        def step(acc, t):
-            e = F.element_at(F.col("tm"), t)
-            zipped = F.zip_with(
-                e.getField("starts"),
-                e.getField("lens"),
-                lambda a, b: F.struct(a.alias("start"), (a + b).alias("end")),
-            )
-            return F.array_distinct(
-                F.flatten(
-                    F.transform(
-                        acc,
-                        lambda c: F.transform(
-                            F.filter(
-                                zipped,
-                                lambda p: (
-                                    p.getField("start")
-                                    >= c.getField("end") + F.lit(gap)
-                                )
-                                & (
-                                    p.getField("start")
-                                    <= c.getField("end") + F.lit(gap + slop)
-                                ),
-                            ),
-                            lambda p: F.struct(
-                                c.getField("head").alias("head"),
-                                p.getField("end").alias("end"),
-                            ),
-                        ),
-                    )
-                )
-            )
-
-    chains = F.aggregate(rest, init, step)
-    heads = F.array_distinct(F.transform(chains, lambda c: c.getField("head")))
-    return (
-        cand.select("query_id", "doc_id", heads.alias("match_starts"))
-        .filter(F.size("match_starts") > 0)
-        .select(
-            "query_id",
-            "doc_id",
-            F.size("match_starts").cast("long").alias("phrase_tf"),
-            "match_starts",
-        )
-    )
+    return run
 
 
 def batch_phrase_search(
@@ -646,77 +283,39 @@ def batch_phrase_search(
     k: int = 10,
     gap: int = 0,
     slop: int = 0,
-    prune="auto",
 ) -> DataFrame:
-    """N phrase queries against ONE decode of the union of their terms,
-    evaluated by batch_phrase_match in a single data-parallel plan —
-    size constant in N (no per-query unions, r3 verdict wrong-list #4),
-    so thousands of phrase queries stay one job with flat compile time.
-    ``prune`` applies the per-query rarest-term block prune
-    (_prune_blocks_for_queries) before the shared decode, so the batch
-    decodes the union of the queries' intersection neighborhoods, not
-    the union of their full posting lists; results are provably
-    unchanged (tested pruned == unpruned == python twin). "auto" skips
-    it below the footprint crossover where decode-all is cheaper.
-    Per-query top-k via a query-partitioned window; results materialize
-    driver-side (N×k rows — driver-sized by construction).
-    ``queries``: list[(query_id, [terms])]. Returns
-    (query_id, rank, doc_id, phrase_tf, match_starts)."""
-    from pyspark.sql import Window
+    """Top-k phrase matches for N queries in one lazy Spark plan whose
+    size is constant in N: the front ``batch_search`` uses
+    (``batch_search._query_blocks``: the batch's term blocks joined to
+    (query_id, term), the rarest-term doc-range prefilter when its auto
+    gate says so, tombstones, one exchange on query_id), then
+    ``phrase_topk`` per query in ``groupBy("query_id").applyInArrow``.
 
-    out_schema = (
+    ``source``: an index dir, or a DataFrame of segment rows (no
+    tombstones, no prefilter). ``queries``: list[(query_id, [terms])];
+    terms are width-normalized as the index's are, and a query with no
+    terms yields no rows. Returns
+    (query_id, rank, doc_id, phrase_tf, match_starts)."""
+    from myaku_spark.operators.batch_search import _query_blocks
+    from myaku_spark.plans import catalog
+
+    schema = StructType.fromDDL(
         "query_id string, rank int, doc_id long, phrase_tf long,"
         " match_starts array<int>"
     )
-    if not queries:
-        return spark.createDataFrame([], out_schema)
-    all_terms = sorted({t for _, terms in queries for t in terms})
-    deleted_bc = None
-    tombs_df = None
-    seg_path = None
-    if isinstance(source, DataFrame):
-        segments = source.filter(F.col("term").isin(all_terms))
-    else:
-        from myaku_spark.operators.segments import read_term_segments
-        from myaku_spark.plans import catalog
-        from myaku_spark.plans.incremental import resolve_tombstones
-
-        _, paths = catalog.resolve(source)
-        seg_path = paths["segments"]
-        segments = read_term_segments(spark, paths["segments"], all_terms)
-        tmode, tpayload = resolve_tombstones(
-            spark, source, path=paths["tombstones"]
-        )
-        if tmode == "array":
-            deleted_bc = spark.sparkContext.broadcast(tpayload)
-        elif tmode == "df":
-            tombs_df = tpayload
-    if _resolve_prune(
-        prune, seg_path, segments=segments if seg_path is None else None
-    ):
-        segments = _prune_blocks_for_queries(
-            segments,
-            [(str(q), list(t)) for q, t in queries],
-            min_postings=0 if prune is True else None,  # True = force
-        )
-    postings = decode_postings(segments, deleted=deleted_bc)
-    if tombs_df is not None:
-        postings = postings.join(tombs_df, "doc_id", "left_anti")
-    qdf = local_frame(
-        spark,
-        [(str(qid), [str(t) for t in terms]) for qid, terms in queries],
-        "query_id string, terms array<string>",
+    phrases = {
+        str(qid): [normalize_char_width(t) for t in terms]
+        for qid, terms in queries
+    }
+    paths = None if isinstance(source, DataFrame) else catalog.resolve(source)[1]
+    rows, _, deleted_bc = _query_blocks(
+        spark, source, paths, list(phrases.items()), "and", "auto"
     )
-    matched = batch_phrase_match(
-        postings, qdf, gap=gap, slop=slop, n_queries=len(queries)
+    if rows is None:
+        return local_frame(spark, [], schema)
+    return rows.groupBy("query_id").applyInArrow(
+        _phrase_runner(
+            phrases, k, gap, slop, deleted_bc, to_arrow_schema(schema)
+        ),
+        schema,
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("phrase_tf"), "doc_id")
-    rows = (
-        matched.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "phrase_tf", "match_starts")
-        .collect()
-    )
-    if deleted_bc is not None:
-        deleted_bc.destroy()
-    return spark.createDataFrame(rows, out_schema)

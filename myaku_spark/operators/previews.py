@@ -201,7 +201,7 @@ def preview_for_results(
     # set (≤ k·pages rows) broadcasts into an interval semi-join against
     # the block metadata, so only blocks whose [min_doc, max_doc] range
     # covers a result doc are ever decoded — and the decode itself runs
-    # executor-side (the same mapInArrow kernel phrase search uses),
+    # executor-side (the phrase.decode_postings mapInArrow kernel),
     # shipping the driver nothing but the final per-result-doc position
     # arrays. Same pattern as plans/incremental.tombstone_block_patches.
     rdoc = F.broadcast(

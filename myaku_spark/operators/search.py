@@ -40,11 +40,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
 
 from myaku_spark.functions.widthnorm import normalize_char_width
 from myaku_spark.functions.xxh import term_bucket
-from myaku_spark.operators.segments import N_BUCKETS, SEGMENT_SCHEMA
+from myaku_spark.operators.segments import N_BUCKETS, SEGMENT_DIR_SCHEMA
 from myaku_spark.operators.wand import (
     BM25Scorer,
     MyakuScorer,
@@ -70,14 +70,6 @@ _META_COLS = [
     "min_dl",
     "max_score",
 ]
-
-# A segments dir as the searcher reads it: the segment rows plus the
-# ``group=G`` partition column. Explicit, so that a segments dir with no
-# part files (an index built from no pages) reads as zero rows.
-_SEGMENTS = StructType(
-    [*SEGMENT_SCHEMA.fields, StructField("group", IntegerType())]
-)
-
 
 def _parquet_dataset(path: str, schema: pa.Schema | None = None):
     """The parquet files under ``path`` as a pyarrow dataset with hive
@@ -164,7 +156,7 @@ class SegmentBlobStore:
     def _dataset(self):
         if self._ds is None:
             self._ds = _parquet_dataset(
-                self.seg_path, to_arrow_schema(_SEGMENTS)
+                self.seg_path, to_arrow_schema(SEGMENT_DIR_SCHEMA)
             )
         return self._ds
 

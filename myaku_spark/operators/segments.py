@@ -59,6 +59,12 @@ SEGMENT_SCHEMA = StructType(
         StructField("blob", BinaryType()),
     ]
 )
+# A segments dir as it is read back: the segment rows plus the
+# ``group=G`` partition column. Explicit, so that a segments dir with no
+# part files (an index built from no pages) reads as zero rows.
+SEGMENT_DIR_SCHEMA = StructType(
+    [*SEGMENT_SCHEMA.fields, StructField("group", IntegerType())]
+)
 
 
 def term_bucket_col(term_col):
@@ -281,5 +287,5 @@ def term_rows(segments: DataFrame, terms: list[str]) -> DataFrame:
 
 
 def read_term_segments(spark, path: str, terms: list[str]) -> DataFrame:
-    """A fresh read of the segments at ``path``, cut to ``terms``."""
-    return term_rows(spark.read.parquet(path), terms)
+    """A fresh read of the segments dir at ``path``, cut to ``terms``."""
+    return term_rows(spark.read.schema(SEGMENT_DIR_SCHEMA).parquet(path), terms)

@@ -210,8 +210,7 @@ def resolve_tombstones(
     comes from parquet footers, the array is a pyarrow read and the
     DataFrame has an explicit schema. Serving paths dispatch on the
     mode: arrays feed the decode kernels; df mode applies the deletes
-    distributively (postings anti-join on the batch phrase path,
-    binned-interval del_ids attach on the batch-WAND path,
+    distributively (binned-interval del_ids attach on both batch paths,
     per-fetch-window semi-joins on the interactive WAND and phrase
     paths)."""
     from myaku_spark.plans import catalog

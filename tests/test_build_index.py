@@ -316,3 +316,19 @@ def test_empty_index_serves_empty_results(spark, tmp_path, mode, n_groups):
     assert empty.dtypes == [("doc_id", "bigint"), ("score", "double")]
     assert empty.collect() == []
     assert s.search_phrase(["物語", "旅"]) == []
+
+
+def test_empty_index_serves_empty_batches(spark, tmp_path):
+    """Both batch entry points read the segments dir of an index of no
+    pages with its known schema: no rows, in AND, OR and phrase."""
+    from myaku_spark.operators.batch_search import batch_search
+    from myaku_spark.operators.phrase import batch_phrase_search
+    from myaku_spark.sources.pages import PAGES_SCHEMA
+
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame([], PAGES_SCHEMA), d,
+                n_groups=2, now=NOW)
+    queries = [("q1", ["物語"]), ("q2", ["物語", "旅"])]
+    for combine in ("and", "or"):
+        assert batch_search(spark, d, queries, combine=combine).collect() == []
+    assert batch_phrase_search(spark, d, queries).collect() == []

@@ -17,7 +17,8 @@ with no engine code:
   missing term), ranked by (score, doc_id) DESC; these must equal
   ``IndexSearcher.search`` and ``batch_search``;
 - phrase and proximity matches with gap=0 adjacency, ranked by
-  (phrase_tf DESC, doc_id); these must equal ``search_phrase``.
+  (phrase_tf DESC, doc_id); these must equal ``search_phrase`` and
+  ``batch_phrase_search``.
 
 Doc ids must agree exactly in rank order, scores to 1e-9.
 
@@ -50,7 +51,7 @@ from pyspark.sql import functions as F
 from myaku_spark.driver_queries import _SQL_TF_MOD
 from myaku_spark.functions.tokenize import ja_posting_rows
 from myaku_spark.operators.batch_search import batch_search
-from myaku_spark.operators.phrase import decode_postings
+from myaku_spark.operators.phrase import batch_phrase_search, decode_postings
 from myaku_spark.operators.search import IndexSearcher
 from myaku_spark.plans import catalog
 from myaku_spark.plans.build_index import build_index
@@ -309,13 +310,31 @@ def _check(spark, index_dir, con, mode, terms, phrases, tmp):
                     _oracle_topk(con, q, combine, k),
                 )
             )
+    batch = {}  # phrase name -> batch_phrase_search hits, rank order
+    for slop in {slop for _, slop in phrases.values()}:
+        rows = batch_phrase_search(
+            spark, index_dir,
+            [(n, q) for n, (q, sl) in phrases.items() if sl == slop],
+            k=K_ALL, gap=0, slop=slop,
+        ).collect()
+        for r in sorted(rows, key=lambda r: r.rank):
+            batch.setdefault(r.query_id, []).append(
+                (r.doc_id, r.phrase_tf, list(r.match_starts))
+            )
     for name, (q, slop) in phrases.items():
+        want = _oracle_phrase(con, q, slop, K_ALL)
         out.append(
             _diff(
                 f"search_phrase {name} {q} slop={slop}",
                 s.search_phrase(q, k=K_ALL, gap=0, slop=slop),
-                _oracle_phrase(con, q, slop, K_ALL),
+                want,
                 scored=False,
+            )
+        )
+        out.append(
+            _diff(
+                f"batch_phrase_search {name} {q} slop={slop}",
+                batch.get(name, []), want, scored=False,
             )
         )
     return [m for m in out if m]

@@ -187,14 +187,6 @@ def test_phrase_on_ja_index_dir(spark, tmp_path):
         for r in phrase_search(spark, d, phrase, k=100, gap=0).collect()
     }
     assert got == expect and got
-    # rarest-term block-range prune is provably result-neutral
-    unpruned = {
-        r.doc_id: list(r.match_starts)
-        for r in phrase_search(
-            spark, d, phrase, k=100, gap=0, prune=False
-        ).collect()
-    }
-    assert unpruned == got
 
 
 def test_phrase_randomized_vs_twin(spark):
@@ -345,73 +337,18 @@ def test_searcher_phrase_api(spark, tmp_path):
     assert {(d_, t_) for d_, t_, _ in via_api} == via_op and via_api
 
 
-def _kernel_topk(segs, terms, gap, slop=0, k=10):
-    """{doc_id: (phrase_tf, match_starts)} of the interactive kernel
-    over ``segs``' blocks of ``terms``: a per-query evaluator whose
-    matching is independent of the batch plan's."""
-    blobs = {}
-    for r in (
-        segs.filter(F.col("term").isin(terms))
-        .orderBy("term", "block_id")
-        .collect()
-    ):
-        blobs.setdefault(r.term, []).append(r.blob)
-    postings = {
-        t: term_postings(decode_blocks_batch(b)) for t, b in blobs.items()
-    }
-    return {
-        doc: (tf, starts)
-        for doc, tf, starts in phrase_topk(postings, terms, gap, slop, k)
-    }
-
-
-def test_batch_phrase_equals_per_query(spark):
-    from myaku_spark.operators.phrase import batch_phrase_search
-
-    segs = _segments_for(spark, DOCS)
-    queries = [("p1", ["a", "b"]), ("p2", ["a", "b", "a"]), ("p3", ["b", "a"])]
-    batch = {}
-    for r in batch_phrase_search(spark, segs, queries, k=10, gap=1).collect():
-        batch.setdefault(r.query_id, {})[r.doc_id] = (
-            r.phrase_tf, list(r.match_starts)
-        )
-    for qid, terms in queries:
-        single = _kernel_topk(segs, terms, gap=1, k=10)
-        assert batch.get(qid, {}) == single, qid
-
-
-def test_batch_phrase_slop_equals_per_query(spark):
-    from myaku_spark.operators.phrase import batch_phrase_search
-
-    segs = _segments_for(spark, DOCS)
-    queries = [("s1", ["a", "b"]), ("s2", ["b", "b"])]
-    batch = {}
-    for r in batch_phrase_search(
-        spark, segs, queries, k=10, gap=1, slop=6
-    ).collect():
-        batch.setdefault(r.query_id, {})[r.doc_id] = (
-            r.phrase_tf, list(r.match_starts)
-        )
-    for qid, terms in queries:
-        single = _kernel_topk(segs, terms, gap=1, slop=6, k=10)
-        assert batch.get(qid, {}) == single, qid
-
-
 def test_batch_phrase_plan_constant_in_n(spark):
     # r3 verdict wrong-list #4: the batch plan must not grow with the
     # number of queries (no per-query unions) — queries are data, not
     # plan nodes.
-    from myaku_spark.operators.phrase import batch_phrase_match, decode_postings
+    from myaku_spark.operators.phrase import batch_phrase_search
 
     segs = _segments_for(spark, DOCS)
-    postings = decode_postings(segs)
 
     def plan_for(n):
-        qdf = spark.createDataFrame(
-            [(f"q{i}", ["a", "b"]) for i in range(n)],
-            "query_id string, terms array<string>",
+        out = batch_phrase_search(
+            spark, segs, [(f"q{i}", ["a", "b"]) for i in range(n)], gap=1
         )
-        out = batch_phrase_match(postings, qdf, gap=1)
         return out._jdf.queryExecution().optimizedPlan().toString()
 
     p2, p64 = plan_for(2), plan_for(64)
@@ -462,6 +399,63 @@ def _twin(per, terms, gap, slop):
     return (len(heads), heads)
 
 
+def _twin_topk(docs, terms, gap, slop=0, k=10):
+    """{doc_id: (phrase_tf, match_starts)} of the chain twin over
+    space-separated ``docs``, top-k by phrase_tf desc, doc_id asc."""
+    hits = []
+    for doc_id, text in docs:
+        tf, heads = _twin(_doc_positions(text, gap), terms, gap, slop)
+        if tf:
+            hits.append((doc_id, tf, heads))
+    hits.sort(key=lambda h: (-h[1], h[0]))
+    return {d: (tf, heads) for d, tf, heads in hits[:k]}
+
+
+def _batch_rows(df):
+    """{query_id: {doc_id: (phrase_tf, match_starts)}} of a batch."""
+    out = {}
+    for r in df.collect():
+        out.setdefault(r.query_id, {})[r.doc_id] = (
+            int(r.phrase_tf), list(r.match_starts)
+        )
+    return out
+
+
+def test_batch_phrase_equals_per_query(spark):
+    # Per query, the batch equals the chain twin. A half-width query
+    # term matches the full-width term the index holds, as
+    # search_phrase's does.
+    from myaku_spark.functions.widthnorm import normalize_char_width
+    from myaku_spark.operators.phrase import batch_phrase_search
+
+    docs = DOCS + [(6, "テスト a b テスト a")]
+    segs = _segments_for(spark, docs)
+    queries = [
+        ("p1", ["a", "b"]), ("p2", ["a", "b", "a"]), ("p3", ["b", "a"]),
+        ("h1", ["ﾃｽﾄ", "a"]),
+    ]
+    batch = _batch_rows(
+        batch_phrase_search(spark, segs, queries, k=10, gap=1)
+    )
+    assert batch.get("h1") == {6: (2, [0, 8])}, batch
+    for qid, terms in queries:
+        terms = [normalize_char_width(t) for t in terms]
+        assert batch.get(qid, {}) == _twin_topk(docs, terms, gap=1), qid
+
+
+def test_batch_phrase_slop_equals_per_query(spark):
+    from myaku_spark.operators.phrase import batch_phrase_search
+
+    segs = _segments_for(spark, DOCS)
+    queries = [("s1", ["a", "b"]), ("s2", ["b", "b"])]
+    batch = _batch_rows(
+        batch_phrase_search(spark, segs, queries, k=10, gap=1, slop=6)
+    )
+    for qid, terms in queries:
+        want = _twin_topk(DOCS, terms, gap=1, slop=6)
+        assert batch.get(qid, {}) == want and want, qid
+
+
 def test_batch_phrase_randomized_vs_python_twin(spark):
     # Property sweep: 40 random whitespace docs, 24 random phrase
     # queries (lengths 1-3, repeats allowed), gap=1 at slop 0 and 4 —
@@ -481,19 +475,11 @@ def test_batch_phrase_randomized_vs_python_twin(spark):
     ]
     segs = _segments_for(spark, docs)
     for slop in (0, 4):
-        got = {}
-        for r in batch_phrase_search(
-            spark, segs, queries, k=1000, gap=1, slop=slop
-        ).collect():
-            got.setdefault(r.query_id, {})[r.doc_id] = (
-                int(r.phrase_tf), list(r.match_starts)
-            )
+        got = _batch_rows(
+            batch_phrase_search(spark, segs, queries, k=1000, gap=1, slop=slop)
+        )
         for qid, terms in queries:
-            want = {}
-            for doc_id, text in docs:
-                tf, heads = _twin(_doc_positions(text, 1), terms, 1, slop)
-                if tf:
-                    want[doc_id] = (tf, heads)
+            want = _twin_topk(docs, terms, 1, slop, k=1000)
             assert got.get(qid, {}) == want, (slop, qid, terms)
 
 
@@ -560,291 +546,101 @@ def test_phrase_kernel_vs_python_twin(gap):
     assert phrase_topk({"a": none, "bb": postings["bb"]}, ["a", "bb"]) == []
 
 
-def test_merge_intervals():
-    from myaku_spark.operators.phrase import _merge_intervals
+@pytest.fixture(scope="module")
+def pidx(spark, tmp_path_factory):
+    """A 60-page index in 16-doc blocks, and 32 adjacent (gap 0) term
+    pairs of its docs as phrase queries: a rare term next to a frequent
+    one first, so that the rare term's doc range prunes blocks."""
+    from myaku_spark.plans.build_index import build_index
+    from myaku_spark.sources.pages import synth_pages_df
 
-    assert _merge_intervals([]) == []
-    assert _merge_intervals([(5, 9), (0, 3), (4, 6)]) == [(0, 9)]
-    assert _merge_intervals([(0, 3), (10, 12), (2, 7)]) == [(0, 7), (10, 12)]
-    assert _merge_intervals([(0, 1), (3, 4)]) == [(0, 1), (3, 4)]
-
-
-def test_batch_phrase_prune_drops_blocks_and_preserves_results(spark):
-    # r4 verdict #1: the batch path must decode only the intersection
-    # neighborhoods. Corpus: head term "the" in EVERY doc (range-blocked
-    # via a small block_doc_range), rare terms clustered in narrow
-    # doc-id bands — the prune must drop most of the head term's blocks
-    # for the batch while leaving results identical.
-    from myaku_spark.operators.phrase import (
-        _prune_blocks_for_queries,
-        batch_phrase_search,
+    d = str(tmp_path_factory.mktemp("phrase_idx"))
+    build_index(
+        spark, synth_pages_df(spark, 60, partitions=2), d,
+        n_groups=1, now="2026-08-01 00:00:00",
+        head_df_threshold=16, block_doc_range=16,
     )
+    occ = {}  # (doc, start) -> (term, end)
+    for r in decode_postings(spark.read.parquet(f"{d}/segments")).collect():
+        for st, ln in zip(r.starts, r.lens):
+            occ[(r.doc_id, st)] = (r.term, st + ln)
+    docs_of = {}  # term -> docs
+    for (doc, _), (t, _) in occ.items():
+        docs_of.setdefault(t, set()).add(doc)
+    pairs = {
+        (t, occ[(doc, end)][0])
+        for (doc, _), (t, end) in occ.items()
+        if (doc, end) in occ
+    }
 
-    docs = []
-    for d in range(200):
-        words = ["the", "filler%d" % (d % 7)]
-        if 20 <= d < 24:
-            words = ["the", "rare1"]
-        if 150 <= d < 153:
-            words = ["the", "rare2"]
-        docs.append((d, " ".join(words * 3)))
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    toks = explode_whitespace_tokens(df)
-    postings = toks.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).cast("int").alias("tf"),
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("start").cast("int").alias("start"),
-                    F.col("len").cast("int").alias("len"),
-                )
-            )
-        ).alias("positions"),
-    ).withColumn("score", F.col("tf"))
-    segs = build_segments(
-        postings, payload_col="score",
-        head_df_threshold=8, block_doc_range=16,
-    ).persist()
-    queries = [
-        ("q1", ["the", "rare1"]),
-        ("q2", ["rare2", "the"]),
-        ("q3", ["the", "nosuchterm"]),  # conjunctive: can't match
-    ]
-    all_terms = sorted({t for _, ts in queries for t in ts})
-    base = segs.filter(F.col("term").isin(all_terms))
-    n_unpruned = base.count()
-    # The small-volume guard would (correctly) skip pruning on a corpus
-    # this size — min_postings=0 (what prune=True forces at the entry
-    # points) exercises the prune machinery itself.
-    n_pruned = _prune_blocks_for_queries(
-        base, queries, min_postings=0
-    ).count()
-    assert n_pruned < n_unpruned  # head-term blocks actually dropped
-    # "the" spans 200/16 ≈ 13 blocks; the two rare bands overlap ≤ 2 of
-    # them (plus the rare terms' own blocks).
-    assert n_pruned <= 6
+    def rare_first(pair):
+        dfs = sorted(len(docs_of[t]) for t in pair)
+        return (dfs[0], -dfs[1], pair)
 
-    def rows(prune):
-        out = {}
-        for r in batch_phrase_search(
-            spark, segs, queries, k=100, gap=1, prune=prune
-        ).collect():
-            out.setdefault(r.query_id, {})[r.doc_id] = (
-                r.phrase_tf, list(r.match_starts)
-            )
-        return out
-
-    # prune=True FORCES the prune (guard bypassed); "auto" on a
-    # DataFrame source reaches the guard, which skips at this volume.
-    got_p, got_u, got_a = rows(True), rows(False), rows("auto")
-    assert got_p == got_u == got_a
-    assert "q3" not in got_p
-    assert set(got_p["q1"]) == set(range(20, 24))
-    assert set(got_p["q2"]) == set(range(150, 153))
-    # With the guard at its default this corpus skips the prune —
-    # segments pass through untouched.
-    assert _prune_blocks_for_queries(base, queries) is base
-    segs.unpersist()
+    pairs = sorted(pairs, key=rare_first)[:32]
+    return d, [(f"q{i}", list(p)) for i, p in enumerate(pairs)]
 
 
-def test_batch_phrase_prune_missing_all_and_headterm_queries(spark):
-    # Degenerate shapes: every query unprunable (single-term or rare
-    # term over MAX_RANGE_BLOCKS) keeps all blocks; all-absent-term
-    # batches decode nothing.
-    import myaku_spark.operators.phrase as ph
+def test_batch_phrase_prune_drops_blocks_and_preserves_results(
+    spark, pidx, monkeypatch
+):
+    # The batch's block prune is batch_search's rarest-term doc-range
+    # prefilter. On an index dir it drops blocks that cannot hold a
+    # match, and its auto gate (forced on here through the footprint
+    # bound) leaves every result as it is.
+    import myaku_spark.operators.batch_search as bs
+    from myaku_spark.operators.phrase import batch_phrase_search
+    from myaku_spark.plans import catalog
 
-    segs = _segments_for(spark, DOCS).persist()
-    base = segs.filter(F.col("term").isin(["a", "b"]))
-    # min_postings=0 = the forced-prune path (what prune=True resolves
-    # to at the entry points), past the small-volume skip.
-    # Single-term query → keep_all path, no range join.
-    kept = ph._prune_blocks_for_queries(base, [("q", ["a"])], min_postings=0)
-    assert kept.count() == base.filter(F.col("term") == "a").count()
-    # Rare term exceeding the block budget → keep_all for that query.
-    old = ph.MAX_RANGE_BLOCKS
-    ph.MAX_RANGE_BLOCKS = 0
-    try:
-        kept2 = ph._prune_blocks_for_queries(
-            base, [("q", ["a", "b"])], min_postings=0
+    d, queries = pidx
+    _, paths = catalog.resolve(d)
+
+    def n_blocks(prefilter):
+        rows, _, _ = bs._query_blocks(
+            spark, d, paths, queries, "and", prefilter
         )
-        assert kept2.count() == base.count()
-    finally:
-        ph.MAX_RANGE_BLOCKS = old
-    # Every query names an absent term → nothing decodes.
-    none = ph._prune_blocks_for_queries(
-        base, [("q", ["a", "zz"])], min_postings=0
-    )
-    assert none.count() == 0
-    segs.unpersist()
+        return rows.count()
+
+    assert n_blocks(True) < n_blocks(False)
+    off = _batch_rows(batch_phrase_search(spark, d, queries, k=100))
+    monkeypatch.setattr(bs, "PREFILTER_MIN_SEGMENT_BYTES", 0)
+    on = _batch_rows(batch_phrase_search(spark, d, queries, k=100))
+    assert on == off and len(off) == len(queries)
 
 
-def test_phrase_prune_auto_footprint(tmp_path):
-    # prune="auto" resolves via the on-disk footprint probe: tiny local
-    # segment dirs skip the prune, big (or unprobeable) ones keep it.
-    import myaku_spark.operators.phrase as ph
+def test_batch_phrase_plan_contract(spark, pidx, jobs_run_by):
+    # A list phrase batch plans with no job and runs in at most 4, the
+    # last of them the kernel stage alone, one task per core; each
+    # query's rows are the interactive phrase's.
+    from myaku_spark.operators.phrase import batch_phrase_search
+    from myaku_spark.operators.search import IndexSearcher
 
-    assert ph._resolve_prune(True, None) is True
-    assert ph._resolve_prune(False, "/nonexistent") is False
-    assert ph._resolve_prune("auto", None) is True  # DataFrame source
-    small = tmp_path / "segs"
-    small.mkdir()
-    (small / "part-0.parquet").write_bytes(b"x" * 1024)
-    assert ph._resolve_prune("auto", str(small)) is False
-    old = ph.PRUNE_MIN_SEGMENT_BYTES
-    ph.PRUNE_MIN_SEGMENT_BYTES = 512
-    try:
-        assert ph._resolve_prune("auto", str(small)) is True
-    finally:
-        ph.PRUNE_MIN_SEGMENT_BYTES = old
-    # absent dir (non-listable store) assumes large: prune stays on
-    assert ph._resolve_prune("auto", str(tmp_path / "missing")) is True
-
-
-def test_batch_phrase_gate_modes_identical(spark):
-    # bnlj (broadcast containment probe) and equi (exploded-term join +
-    # count match) conjunctive gates must be result-identical — 'auto'
-    # only ever changes the plan, never the rows.
-    from myaku_spark.operators.phrase import batch_phrase_match, decode_postings
-
-    segs = _segments_for(spark, DOCS)
-    postings = decode_postings(segs).persist()
-    qdf = spark.createDataFrame(
-        [("p1", ["a", "b"]), ("p2", ["a", "b", "a"]), ("p3", ["b"]),
-         ("p4", ["a", "zz"])],
-        "query_id string, terms array<string>",
-    )
-    def rows(mode):
-        return sorted(
-            (r.query_id, r.doc_id, r.phrase_tf, tuple(r.match_starts))
-            for r in batch_phrase_match(
-                postings, qdf, gap=1, gate_mode=mode
-            ).collect()
+    d, queries = pidx
+    width = spark.sparkContext.defaultParallelism
+    out, rows = [], []
+    assert jobs_run_by(
+        lambda: out.append(batch_phrase_search(spark, d, queries, k=10))
+    ) == {}
+    jobs = jobs_run_by(lambda: rows.extend(out[0].collect()))
+    assert len(jobs) <= 4 and jobs[max(jobs)] == [width], jobs
+    got = {}
+    for r in sorted(rows, key=lambda r: (r.query_id, r.rank)):
+        got.setdefault(r.query_id, []).append(
+            (r.doc_id, r.phrase_tf, list(r.match_starts))
         )
-    assert rows("bnlj") == rows("equi")
-    assert rows("bnlj") == rows("auto")
-    postings.unpersist()
+    s = IndexSearcher(spark, d)
+    for qid, terms in queries:
+        assert got[qid] == s.search_phrase(terms, k=10), qid
 
 
 def test_batch_phrase_empty_terms_query_dropped(spark):
-    # r5 advice: an empty terms array passed the bnlj containment gate
-    # vacuously (every doc a candidate), then the chain fold's
-    # slice(terms, 2, size-1) threw at runtime and failed the whole
-    # batch; the equi gate silently produced no rows. Both paths must
-    # drop the degenerate query and still answer the rest of the batch.
-    from myaku_spark.operators.phrase import batch_phrase_match, decode_postings
+    # An empty terms list yields no rows for its query, and the rest of
+    # the batch is still answered; a batch of only such queries is empty.
+    from myaku_spark.operators.phrase import batch_phrase_search
 
     segs = _segments_for(spark, DOCS)
-    postings = decode_postings(segs).persist()
-    qdf = spark.createDataFrame(
-        [("good", ["a", "b"]), ("empty", [])],
-        "query_id string, terms array<string>",
-    )
-    for mode in ("bnlj", "equi"):
-        got = batch_phrase_match(
-            postings, qdf, gap=1, gate_mode=mode
-        ).collect()
-        assert {r.query_id for r in got} == {"good"}, mode
-        assert len(got) > 0, mode
-    postings.unpersist()
-
-
-def test_single_phrase_prune_true_forces_below_threshold(spark, monkeypatch):
-    # r5 verdict #7: phrase_search(prune=True) must force the prune
-    # through PRUNE_MIN_POSTINGS exactly like the batch path — on a
-    # sub-threshold corpus (where "auto" declines) the forced call
-    # passes min_postings=0 into _prune_blocks_for_queries and the
-    # returned segment set genuinely shrinks, with results unchanged.
-    import myaku_spark.operators.phrase as ph
-
-    segs = _segments_for(spark, DOCS).persist()
-    want = sorted(
-        (r.doc_id, r.phrase_tf, tuple(r.match_starts))
-        for r in phrase_search(
-            spark, segs, ["a", "b"], k=100, gap=1, prune=False
-        ).collect()
-    )
-
-    calls = []
-    orig = ph._prune_blocks_for_queries
-
-    def spy(segments, queries, min_postings=None):
-        out = orig(segments, queries, min_postings=min_postings)
-        calls.append((min_postings, out is segments))
-        return out
-
-    monkeypatch.setattr(ph, "_prune_blocks_for_queries", spy)
-    got = sorted(
-        (r.doc_id, r.phrase_tf, tuple(r.match_starts))
-        for r in phrase_search(
-            spark, segs, ["a", "b"], k=100, gap=1, prune=True
-        ).collect()
-    )
-    assert got == want and got
-    # forced: min_postings=0 reached the prune, and the guard did NOT
-    # short-circuit back the unpruned segments
-    assert calls == [(0, False)]
-
-    # sanity: "auto" on this tiny cached corpus never even enters the
-    # prune — the plan-statistics probe (r7) sizes the DataFrame source
-    # below PRUNE_MIN_SEGMENT_BYTES without running a stats job, so
-    # _prune_blocks_for_queries is not called at all (results above
-    # already proved prune/no-prune parity).
-    calls.clear()
-    auto = sorted(
-        (r.doc_id, r.phrase_tf, tuple(r.match_starts))
-        for r in phrase_search(
-            spark, segs, ["a", "b"], k=100, gap=1, prune="auto"
-        ).collect()
-    )
-    assert auto == want
-    assert calls == []
-    segs.unpersist()
-
-
-def test_resolve_prune_logs_stats_fallback(caplog):
-    # A source without py4j plan statistics (no ``_jdf``, as under Spark
-    # Connect) falls back to "assume large" — and says so in the log.
-    import logging
-
-    from myaku_spark.operators.phrase import _resolve_prune
-
-    with caplog.at_level(logging.WARNING, "myaku_spark.operators.phrase"):
-        assert _resolve_prune("auto", None, segments=object()) is True
-    msgs = [r.getMessage() for r in caplog.records]
-    assert any("assume large" in m and "_jdf" in m for m in msgs), msgs
-
-
-def test_phrase_auto_prune_is_logged(spark, tmp_path, caplog):
-    # Each prune="auto" outcome is logged at INFO with the size it
-    # measured against PRUNE_MIN_SEGMENT_BYTES: the footprint of a
-    # segments dir, or the plan size of a DataFrame source.
-    import logging
-
-    from myaku_spark.operators.phrase import (
-        PRUNE_MIN_SEGMENT_BYTES,
-        _resolve_prune,
-    )
-
-    small = tmp_path / "segs"
-    small.mkdir()
-    (small / "part-0.parquet").write_bytes(b"x" * 1024)
-    df = _segments_for(spark, DOCS).persist()  # cached: exact plan size
-    df.count()
-    with caplog.at_level(logging.INFO, "myaku_spark.operators.phrase"):
-        assert _resolve_prune("auto", str(small)) is False
-        assert _resolve_prune("auto", str(tmp_path / "missing")) is True
-        assert _resolve_prune("auto", None, segments=df) is False
-        assert _resolve_prune(True, None) is True  # forced: not logged
-    msgs = [r.getMessage() for r in caplog.records]
-    assert len(msgs) == 3, msgs
-    limit = f"against PRUNE_MIN_SEGMENT_BYTES={PRUNE_MIN_SEGMENT_BYTES} B"
-    assert all(m.endswith(limit) for m in msgs), msgs
-    footprint, remote, plan = msgs
-    assert footprint.startswith(
-        "phrase prune=auto -> False: segment footprint 1024 B"
-    ), footprint
-    assert remote.startswith("phrase prune=auto -> True"), remote
-    assert "not a local dir; assume large" in remote
-    assert plan.startswith("phrase prune=auto -> False: plan size "), plan
-    assert 0 < int(plan.split("plan size ")[1].split(" B")[0])
-    df.unpersist()
+    got = batch_phrase_search(
+        spark, segs, [("good", ["a", "b"]), ("empty", [])], gap=1
+    ).collect()
+    assert {r.query_id for r in got} == {"good"} and got
+    assert batch_phrase_search(spark, segs, [("empty", [])]).collect() == []
