@@ -283,10 +283,10 @@ def main() -> None:
     ).count()
     timings["wand_batch_128q_prefilter"] = round(time.time() - t0, 3)
 
-    # 128 phrase queries in ONE constant-size plan (the phrase_topk
-    # kernel per query in applyInArrow):
-    # 64 real top-bigram phrases + 64 unlikely pairs over the documents
-    # corpus, evaluated against one decode of the union of their terms.
+    # 128 phrase queries in ONE constant-size plan: 64 real top-bigram
+    # phrases + 64 unlikely pairs over the documents corpus. Each query's
+    # term blocks are decoded and matched by phrase_topk inside its own
+    # query_id group of one applyInArrow.
     from pyspark.sql import Window as W3
 
     from myaku_spark.driver_queries import _tokens
